@@ -426,7 +426,12 @@ class SnapshotLog:
                         summary=dict(summary or {}),
                     )
                     self.snapshots.append(snap)
-                    self._write(expected_len=len(self.snapshots))
+                    try:
+                        self._write(expected_len=len(self.snapshots))
+                    except BaseException:
+                        # the head must stay what is on disk
+                        self.snapshots.pop()
+                        raise
                     return snap
             # conflict: another writer advanced the log since we loaded it
             retryable = operation in self.COMMUTATIVE_OPS or (

@@ -960,7 +960,7 @@ class LakehouseTable:
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
             return self._commit("replace", [], summary={"op": "delete_where"})
-        rows = self._read_files(touched)
+        rows = self._read_files_with_deletes(touched)
         # SQL DELETE removes rows where the predicate is TRUE; a NULL
         # predicate keeps the row (filter(~pred) would silently drop it)
         hit = F.coalesce(predicate, F.lit(False))
@@ -1017,7 +1017,7 @@ class LakehouseTable:
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
             return self._commit("replace", [], summary={"op": "update_where"})
-        rows = self._read_files(touched)
+        rows = self._read_files_with_deletes(touched)
         cols = []
         for name in schema.fieldNames():
             if name in assignments:
@@ -1220,8 +1220,9 @@ class LakehouseTable:
         equality deletes anti-joined — ``scan()``'s delete semantics
         restricted to ``files``.
 
-        Every maintenance rewrite that reads a SUBSET of live files
-        (``refresh_ann_indexes`` reads only index-stale files) must route
+        Every rewrite that reads a SUBSET of live files
+        (``refresh_ann_indexes`` reads only index-stale files,
+        ``delete_where``/``update_where`` only the touched ones) must route
         through this, not ``_read_files``: a rewrite's output files get
         ``added_in`` newer than every delete snapshot, so sequencing exempts
         them from those deletes — rows deleted after the source file was

@@ -54,6 +54,10 @@ def merge_keep_last(
     window's pick among untouched equals was an undocumented,
     nondeterministic dedup side effect (no order separated them), and
     every caller's table invariant is one row per key.
+    When the batch keys outgrow ``spark.sql.autoBroadcastJoinThreshold``
+    (64 MiB in session.py) the anti-join falls back to a sort-merge join,
+    which shuffles and sorts the whole table side on the keys: the
+    exchange the broadcast exists to avoid.
     """
     cols = current.columns
     order = [F.desc(order_col)] if order_col else [F.lit(1)]

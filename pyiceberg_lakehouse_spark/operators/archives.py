@@ -250,10 +250,9 @@ def decompress_auto(data: bytes) -> tuple[bytes, str]:
     """Undo a whole-file compression wrapper by magic bytes — the
     .tar.gz / .tar.xz / .tar.bz2 / .tar.zst forms corpora actually
     ship: gzip (multi-member, the concatenated-archive layout), xz,
-    bz2, and zstd (r15: the from-scratch RFC 8878 decoder in
-    operators/zstd.py — no stdlib zstd on this Python). Returns
-    (payload, codec) with codec 'none' for unwrapped input — safe to
-    call on anything."""
+    bz2, and zstd (pyarrow's bundled libzstd). Returns (payload,
+    codec) with codec 'none' for unwrapped input — safe to call on
+    anything."""
     import bz2 as _bz2
     import lzma as _lzma
 
@@ -279,9 +278,9 @@ def decompress_auto(data: bytes) -> tuple[bytes, str]:
         except OSError as exc:
             raise ValueError(f"corrupt bz2 wrapper: {exc}") from exc
     if data[:4] == b"\x28\xb5\x2f\xfd":
-        from pyiceberg_lakehouse_spark.operators.zstd import decompress
+        from pyiceberg_lakehouse_spark.operators.codec import decompress
 
-        return decompress(data), "zstd"
+        return decompress("zstd", data), "zstd"
     if data[:10] == b"\xff\x06\x00\x00sNaPpY":
         # .tar.sz / .sz: the snappy FRAMING stream (r17 — the chunked
         # CRC32C-guarded container, operators/snappy.py)

@@ -1,5 +1,5 @@
 """Avro Object Container Files (the Hadoop-era row format) — reader +
-writer, pure stdlib.
+writer.
 
 Implements the Avro 1.11 spec's binary encoding and container layout:
 the Obj\\x01 magic, file-metadata map carrying the writer schema JSON
@@ -9,10 +9,8 @@ records as field concatenation, arrays/maps in count-prefixed blocks
 (including the negative-count + block-size form writers may emit),
 unions as index + value, enums as index, fixed as raw bytes, and ALL SIX
 spec codecs: null, deflate, snappy AND zstandard both directions
-through the pure-Python codecs in operators/snappy.py and
-operators/zstd.py (each cross-validated against its reference
-implementation; snappy CRC32-checked per the spec), plus bzip2 + xz
-via stdlib.
+through pyarrow's bundled libsnappy and libzstd (snappy CRC32-checked
+per the spec), plus bzip2 + xz via stdlib.
 
 Schema support covers the tabular shapes lakehouse interchange actually
 uses: records of primitives, nullable-union columns, arrays, maps,
@@ -292,14 +290,9 @@ def encode_avro(
 
             body = _lzma.compress(body, format=_lzma.FORMAT_XZ)
         elif codec == "zstandard":
-            # both directions from scratch: operators/zstd.py's
-            # predefined-FSE compressor (libzstd-cross-validated) and
-            # its RFC 8878 decoder
-            from pyiceberg_lakehouse_spark.operators.zstd import (
-                compress as _zstd_c,
-            )
+            import pyarrow as _pa
 
-            body = _zstd_c(body)
+            body = _pa.Codec("zstd").compress(body, asbytes=True)
         out += _zigzag_encode(len(chunk))
         out += _zigzag_encode(len(body))
         out += body
@@ -382,11 +375,9 @@ def decode_avro(data: bytes) -> dict:
 
             body = _lzma.decompress(body, format=_lzma.FORMAT_XZ)
         elif codec == "zstandard":
-            from pyiceberg_lakehouse_spark.operators.zstd import (
-                decompress as _zstd,
-            )
+            from pyiceberg_lakehouse_spark.operators.codec import decompress
 
-            body = _zstd(body)
+            body = decompress("zstd", body)
         at = 0
         for _ in range(count):
             rec, at = _decode_value(body, at, schema)

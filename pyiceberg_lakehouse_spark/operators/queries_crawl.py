@@ -2006,9 +2006,8 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transfer-encoding framing, every HTTP branch, and ALL FIVE
     # representation codings (gzip, zlib-wrapped deflate, the
     # raw-deflate server bug under the 'deflate' label, and — r15 —
-    # br through the libbrotlidec binding and zstd through the
-    # from-scratch RFC 8878 decoder) are live in the driver-hashed
-    # corpus, including chunked-over-compressed bodies.
+    # br and zstd through pyarrow's libbrotlidec and libzstd) are live
+    # in the hashed corpus, including chunked-over-compressed bodies.
     """
     with base as (
       select doc_id, cast(doc_id as bigint) as d, 3 + doc_id % 4 as n
@@ -2186,9 +2185,8 @@ def scan_archive_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     restates names, sizes and byte sums closed-form — a block-padding
     slip, a wrong size field, a central-directory offset error, or a
     zip64 sentinel misread flips the hash. r15: the tar wrapper cycle
-    adds .tar.zst through the from-scratch RFC 8878 zstd decoder
-    (operators/zstd.py — FSE, 4-stream Huffman literals, repeat
-    offsets, xxh64), fed by libzstd-encoded frames across compression
+    adds .tar.zst, decoded through pyarrow's libzstd
+    (operators/codec.py) from frames encoded across compression
     levels. This is the first operator of every 'corpus ships as
     archives' ingest pipeline."""
     import pandas as pd
@@ -2254,9 +2252,8 @@ def scan_archive_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
 
                         blob = _b2.compress(blob)
                     elif wrapper == "zstd":
-                        # encoder: pyarrow's bundled libzstd (fixture
-                        # side); the read path is the from-scratch
-                        # RFC 8878 decoder in operators/zstd.py
+                        # pyarrow's bundled libzstd, encoded at a
+                        # level cycling with the doc id
                         import pyarrow as _pa
 
                         blob = _pa.Codec(
@@ -2266,7 +2263,6 @@ def scan_archive_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
                         # r17: the .tar.sz form — snappy FRAMING
                         # stream (chunked, masked-CRC32C) from
                         # operators/snappy.py, both directions
-                        # from scratch
                         from pyiceberg_lakehouse_spark.operators.snappy import (  # noqa: E501
                             frame_compress,
                         )
@@ -2491,9 +2487,9 @@ def text_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from-scratch reader/writer closing the repo's last gated tabular
     # source): per doc, records with long/string/nullable-double/
     # array/enum/map columns written at ALL SIX spec codecs —
-    # null/deflate/snappy/bzip2/xz/zstandard (snappy round-tripped by
-    # the pure-Python operators/snappy.py with the spec's CRC32 suffix;
-    # zstandard read by the from-scratch RFC 8878 operators/zstd.py) —
+    # null/deflate/snappy/bzip2/xz/zstandard (snappy and zstandard
+    # round-tripped through pyarrow's libsnappy and libzstd, snappy
+    # with the spec's CRC32 suffix) —
     # and 1 vs 3-row blocks, decoded back through the strict container
     # walk (sync markers, metadata map, zigzag varints). One row per
     # record with scalars + flattened collection features. Filter

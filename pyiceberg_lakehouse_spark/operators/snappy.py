@@ -1,35 +1,32 @@
-"""Snappy raw format AND framing format, pure Python — both
-directions.
+"""Snappy raw block codec and framing format.
 
 The Hadoop ecosystem's default block codec (Avro's common codec,
 parquet's legacy default). ``compress``/``decompress`` are the RAW
-format — a varint uncompressed length followed by literal /
-1-2-4-byte-offset copy tags. ``frame_compress``/``frame_decompress``
-(r17, VERDICT r16 task #7) are the FRAMING format from the public
-framing_format.txt spec — what ``.sz`` files and streaming producers
-emit: a stream-identifier chunk, then compressed (0x00) /
-uncompressed (0x01) chunks of <= 64 KiB uncompressed each, every
-payload guarded by a MASKED CRC32C (Castagnoli, reflected 0x82F63B78;
-mask = rotr15 + 0xa282ead8), padding (0xfe) and reserved-skippable
-(0x80-0xfd) chunks skipped, reserved-unskippable (0x02-0x7f)
-rejected.
+block format — a varint uncompressed length followed by literal /
+copy tags — through pyarrow's bundled libsnappy.
+``frame_compress``/``frame_decompress`` are the FRAMING format from
+the public framing_format.txt spec, which pyarrow does not ship —
+what ``.sz`` files and streaming producers emit: a stream-identifier
+chunk, then compressed (0x00) / uncompressed (0x01) chunks of <= 64 KiB
+uncompressed each, every payload guarded by a MASKED CRC32C
+(Castagnoli, reflected 0x82F63B78; mask = rotr15 + 0xa282ead8),
+padding (0xfe) and reserved-skippable (0x80-0xfd) chunks skipped,
+reserved-unskippable (0x02-0x7f) rejected.
 
-Validated against the reference implementation both ways: the raw
-decoder decodes every pyarrow-bundled-snappy frame in
-tests/test_snappy.py, and the raw compressor's output round-trips
-through pyarrow's decoder as well as this module's own. No snappy
-FRAMING implementation exists on this box, so the frame layer is
-validated structurally: the CRC32C kernel is pinned against the
-public check value crc32c(b"123456789") == 0xE3069283 plus the RFC
+No reference snappy FRAMING implementation is available to test
+against, so the frame layer is validated structurally: the CRC32C kernel is pinned against
+the public check value crc32c(b"123456789") == 0xE3069283 plus the RFC
 3720 all-zeros/all-ones vectors, and frame encode/decode round-trips
-compose with the externally-validated raw codec underneath.
-
-The compressor is the standard greedy scheme: 64 KiB blocks, a
-4-byte-sequence hash table, copy-1 tags for short near matches and
-copy-2 for the rest.
+compose with the raw codec underneath.
 """
 
 from __future__ import annotations
+
+import pyarrow as pa
+
+# the densest raw tag is a 3-byte copy of 64 bytes, so no block
+# decodes to more than 64/3 of its size past the preamble
+_MAX_EXPANSION = 22
 
 
 def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
@@ -49,8 +46,10 @@ def _uvarint(data: bytes, pos: int) -> tuple[int, int]:
 
 
 def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
-    """Raw snappy block -> bytes. Strict: truncated tags, offsets
-    before the start, and length mismatches raise."""
+    """Raw snappy block -> bytes. The output is sized from the block's
+    own varint preamble, which must fit ``max_output`` and what the
+    block's tags can encode; corrupt or truncated blocks raise
+    ValueError."""
     if data[:10] == b"\xff\x06\x00\x00sNaPpY":
         raise ValueError(
             "snappy FRAMING stream passed to the raw decoder — use"
@@ -59,133 +58,22 @@ def decompress(data: bytes, max_output: int = 1 << 31) -> bytes:
     n, pos = _uvarint(data, 0)
     if n > max_output:
         raise ValueError("snappy output exceeds the allowed maximum")
-    out = bytearray()
-    while pos < len(data):
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = (tag >> 2) + 1
-            if length > 60:
-                nbytes = length - 60
-                if pos + nbytes > len(data):
-                    raise ValueError("snappy literal length truncated")
-                length = int.from_bytes(
-                    data[pos : pos + nbytes], "little"
-                ) + 1
-                pos += nbytes
-            if pos + length > len(data):
-                raise ValueError("snappy literal overruns its input")
-            out += data[pos : pos + length]
-            pos += length
-            continue
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x7) + 4
-            if pos >= len(data):
-                raise ValueError("snappy copy-1 offset truncated")
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            if pos + 2 > len(data):
-                raise ValueError("snappy copy-2 offset truncated")
-            offset = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            if pos + 4 > len(data):
-                raise ValueError("snappy copy-4 offset truncated")
-            offset = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy copy offset outside the output")
-        start = len(out) - offset
-        for k in range(length):  # overlap-safe byte copy
-            out.append(out[start + k])
-        if len(out) > max_output:
-            raise ValueError("snappy output exceeds the allowed maximum")
-    if len(out) != n:
+    if n > _MAX_EXPANSION * (len(data) - pos):
         raise ValueError(
-            f"snappy header says {n} bytes, stream decoded {len(out)}"
+            f"snappy header says {n} bytes, more than a"
+            f" {len(data)}-byte block can encode"
         )
-    return bytes(out)
-
-
-# ------------------------------------------------------------ encoder --
-
-
-def _uvarint_encode(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
-def _emit_literal(out: bytearray, data: bytes, start: int, end: int) -> None:
-    n = end - start
-    if n <= 0:
-        return
-    if n <= 60:
-        out.append((n - 1) << 2)
-    else:
-        nb = max(1, ((n - 1).bit_length() + 7) // 8)
-        out.append((59 + nb) << 2)
-        out += (n - 1).to_bytes(nb, "little")
-    out += data[start:end]
-
-
-def _emit_copy(out: bytearray, offset: int, length: int) -> None:
-    # chunk long matches: leave >= 4 for the final tag (copy-1 needs
-    # length >= 4; copy-2 accepts any, but staying >= 4 mirrors the
-    # reference encoder and keeps every tag decodable by strict readers)
-    while length >= 68:
-        out.append((63 << 2) | 2)
-        out += offset.to_bytes(2, "little")
-        length -= 64
-    if length > 64:
-        out.append((59 << 2) | 2)
-        out += offset.to_bytes(2, "little")
-        length -= 60
-    if 4 <= length <= 11 and offset < 2048:
-        out.append((((length - 4) & 7) << 2) | ((offset >> 8) << 5) | 1)
-        out.append(offset & 0xFF)
-    else:
-        out.append(((length - 1) << 2) | 2)
-        out += offset.to_bytes(2, "little")
+    try:
+        return pa.Codec("snappy").decompress(
+            data, decompressed_size=n, asbytes=True
+        )
+    except OSError as exc:
+        raise ValueError(f"snappy: {exc}") from exc
 
 
 def compress(data: bytes) -> bytes:
-    """bytes -> raw snappy block (greedy hash matcher, 64 KiB blocks so
-    every copy offset fits the 2-byte form)."""
-    data = bytes(data)
-    out = bytearray(_uvarint_encode(len(data)))
-    BLOCK = 1 << 16
-    for base in range(0, len(data), BLOCK) or [0]:
-        end = min(len(data), base + BLOCK)
-        table: dict[bytes, int] = {}
-        i = base
-        lit_start = base
-        while i + 4 <= end:
-            key = data[i : i + 4]
-            cand = table.get(key)
-            table[key] = i
-            if cand is None or i - cand > 0xFFFF:
-                i += 1
-                continue
-            ml = 4
-            while i + ml < end and data[cand + ml] == data[i + ml]:
-                ml += 1
-            _emit_literal(out, data, lit_start, i)
-            _emit_copy(out, i - cand, ml)
-            i += ml
-            lit_start = i
-        _emit_literal(out, data, lit_start, end)
-    return bytes(out)
+    """bytes -> raw snappy block."""
+    return pa.Codec("snappy").compress(data, asbytes=True)
 
 
 # ----------------------------------------------------- framing format --

@@ -24,7 +24,8 @@ Content-Encoding (the REPRESENTATION coding, RFC 9110 §8.4)
 decodes gzip/x-gzip and deflate — including the widespread
 raw-deflate-without-zlib-wrapper server bug, handled browser-style
 (wrapped first, raw retry) — after de-chunking, the wire layering
-real servers use. br/zstd gate honestly (no codec here).
+real servers use; br and zstd decode through pyarrow's bundled
+libbrotlidec and libzstd.
 
 Honest gates: truncated records, bad version lines, missing
 separators, short blocks and malformed chunk framing raise
@@ -49,8 +50,8 @@ def build_http_response(
     Content-Length-framed — the raw-wire-bytes crawl layout.
     ``content_encoding`` gzip/deflate/deflate-raw/br/zstd compresses
     the body representation first (deflate-raw writes the widespread
-    no-zlib-wrapper server form under the 'deflate' label; br uses the
-    system libbrotlienc, zstd pyarrow's libzstd — fixture-side
+    no-zlib-wrapper server form under the 'deflate' label; br and zstd
+    use pyarrow's bundled libbrotlienc and libzstd — fixture-side
     encoders for the engine's decode paths)."""
     head = f"HTTP/1.1 {status} {reason}\r\n"
     hdrs = "".join(f"{k}: {v}\r\n" for k, v in headers)
@@ -63,26 +64,12 @@ def build_http_response(
         elif content_encoding == "deflate-raw":
             comp = zlib.compressobj(6, zlib.DEFLATED, -15)
             body = comp.compress(body) + comp.flush()
-        elif content_encoding == "zstd":
+        elif content_encoding in ("zstd", "br"):
             import pyarrow as _pa
 
-            body = _pa.Codec("zstd").compress(body, asbytes=True)
-        elif content_encoding == "br":
-            import ctypes as _ct
-
-            enc = _ct.CDLL("libbrotlienc.so.1")
-            enc.BrotliEncoderCompress.restype = _ct.c_int
-            enc.BrotliEncoderCompress.argtypes = [
-                _ct.c_int, _ct.c_int, _ct.c_int, _ct.c_size_t,
-                _ct.c_char_p, _ct.POINTER(_ct.c_size_t), _ct.c_char_p,
-            ]
-            out_len = _ct.c_size_t(len(body) + 1024)
-            out = _ct.create_string_buffer(out_len.value)
-            if not enc.BrotliEncoderCompress(
-                5, 22, 0, len(body), body, _ct.byref(out_len), out
-            ):
-                raise RuntimeError("BrotliEncoderCompress failed")
-            body = out.raw[: out_len.value]
+            codec = (_pa.Codec("zstd") if content_encoding == "zstd"
+                     else _pa.Codec("brotli", compression_level=5))
+            body = codec.compress(body, asbytes=True)
         else:
             raise ValueError(
                 f"unsupported content_encoding {content_encoding!r}"
@@ -188,12 +175,10 @@ def _decode_content_encoding(body: bytes, encoding: str) -> bytes:
     """Undo the REPRESENTATION coding on a stored response body
     (RFC 9110 §8.4): gzip/x-gzip and deflate — including the
     widespread raw-DEFLATE-without-zlib-wrapper server bug, handled
-    the way browsers do (try zlib-wrapped, retry raw), plus zstd via
-    the from-scratch RFC 8878 decoder (operators/zstd.py, r15) and br
-    via the system libbrotlidec binding (operators/brotli.py, r15 —
-    degrades to the honest gate where no library exists); unknown
-    codings raise rather than passing compressed bytes downstream as
-    text."""
+    the way browsers do (try zlib-wrapped, retry raw), plus zstd and
+    br through pyarrow's bundled libzstd and libbrotlidec
+    (operators/codec.py); unknown codings raise rather than passing
+    compressed bytes downstream as text."""
     codings = [c.strip().lower() for c in encoding.split(",") if c.strip()]
     for coding in reversed(codings):  # applied in reverse list order
         if coding == "identity":
@@ -205,26 +190,14 @@ def _decode_content_encoding(body: bytes, encoding: str) -> bytes:
                 body = zlib.decompress(body)
             except zlib.error:
                 body = zlib.decompress(body, -15)  # raw-deflate bug
-        elif coding == "zstd":
-            from pyiceberg_lakehouse_spark.operators.zstd import decompress
+        elif coding in ("zstd", "br"):
+            from pyiceberg_lakehouse_spark.operators.codec import decompress
 
+            name = "zstd" if coding == "zstd" else "brotli"
             try:
-                body = decompress(body)
+                body = decompress(name, body)
             except ValueError as exc:
-                raise ValueError(f"corrupt zstd body: {exc}") from exc
-        elif coding == "br":
-            from pyiceberg_lakehouse_spark.operators import brotli as _br
-
-            try:
-                body = _br.decompress(body)
-            except ValueError as exc:
-                raise ValueError(f"corrupt brotli body: {exc}") from exc
-        elif coding == "__br_gated__":
-            raise NotImplementedError(
-                f"Content-Encoding {coding} is not supported "
-                "(no codec available; refusing rather than emitting "
-                "compressed bytes as text)"
-            )
+                raise ValueError(f"corrupt {name} body: {exc}") from exc
         else:
             raise ValueError(f"unknown Content-Encoding {coding!r}")
     return body

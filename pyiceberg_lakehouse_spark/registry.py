@@ -511,7 +511,8 @@ _R16_WINDOW: tuple[str, ...] = (
     "text_unicode_nfc",
     # r15 first-timers, second-round hold (7 r15-new rows; the Avro
     # roundtrip's construction extends IN PLACE this round with the
-    # zstd/bzip2/xz codecs, so its r16 row hashes the extended oracle)
+    # zstd/bzip2/xz codecs (zstd through pyarrow's libzstd), so its r16
+    # row hashes the extended oracle)
     "multimodal_webp_lossy_decode",
     "text_pdf_images",
     "scan_avro_roundtrip",
@@ -600,8 +601,9 @@ _R15_WINDOW: tuple[str, ...] = (
     # represented; each slot is first in line for a NEW r15 row)
     "stream_stream_anti_join",
     # (stream_lh_text_search's keeper slot goes to the WARC-responses
-    # row, fresh again with br/zstd Content-Encoding decode through the
-    # NEW codec layers; streaming keeps anti_join + sink_hourly, and
+    # row, fresh again with br/zstd Content-Encoding decode through
+    # pyarrow's libbrotlidec/libzstd; streaming keeps anti_join +
+    # sink_hourly, and
     # the text-search index stays local-gated + pytest-pinned)
     "scan_warc_responses",
     # (stream_lh_neardup's keeper slot goes to the NEW BMP/ICO favicon
@@ -614,8 +616,8 @@ _R15_WINDOW: tuple[str, ...] = (
     # family stays local-gated + pytest-pinned)
     "scan_avro_roundtrip",
     # (lh_rollup_percentile's keeper slot goes to the archive-explosion
-    # row, fresh again with the .tar.zst wrapper through the NEW
-    # RFC 8878 zstd decoder; rollups stay covered by lh_cdf_feed's
+    # row, fresh again with the .tar.zst wrapper through pyarrow's
+    # libzstd; rollups stay covered by lh_cdf_feed's
     # commit-time path + local gates)
     "scan_archive_entries",
     # (dedup_simhash_selfcheck's keeper slot goes to the NEW scanned-PDF

@@ -390,14 +390,8 @@ class TestContentEncoding:
             _decode_content_encoding,
         )
 
-        from pyiceberg_lakehouse_spark.operators import brotli as _brm
-
-        if _brm.available():
-            with _pt.raises(ValueError, match="brotli"):
-                _decode_content_encoding(b"x", "br")
-        else:
-            with _pt.raises(NotImplementedError, match="br"):
-                _decode_content_encoding(b"x", "br")
+        with _pt.raises(ValueError, match="brotli"):
+            _decode_content_encoding(b"x", "br")
         with _pt.raises(ValueError, match="unknown Content-Encoding"):
             _decode_content_encoding(b"x", "sdch")
 

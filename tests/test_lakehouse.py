@@ -305,6 +305,53 @@ def test_delete_where_rewrites_only_overlapping_files(spark, warehouse, sf_dir):
     assert untouched, "delete_where rewrote files it could have skipped"
 
 
+@pytest.mark.parametrize("op", ["delete_where", "update_where"])
+def test_cow_rewrite_keeps_merge_on_read_deletes(spark, warehouse, nation_chunks, op):
+    """A copy-on-write rewrite of a file with live merge-on-read deletes
+    must not bring the deleted rows back: its output file is newer than
+    the delete, so the delete no longer applies to it."""
+    nation, _ = nation_chunks
+    lh = Lakehouse(spark, warehouse)
+    t = lh.create_table(f"ns.nation_{op}", SCHEMAS["nation"])
+    t.append(nation)
+    t.delete_keys(nation.filter(F.col("n_nationkey") == 5), ["n_nationkey"])
+    hit = F.col("n_nationkey") == 7
+    if op == "delete_where":
+        t.delete_where(hit)
+    else:
+        t.update_where(hit, {"n_name": "UPDATED"})
+    assert t.scan().filter(F.col("n_nationkey") == 5).count() == 0
+    expected = nation.count() - (2 if op == "delete_where" else 1)
+    assert t.scan().count() == expected
+
+
+def test_failed_log_write_keeps_head(tmp_path, monkeypatch):
+    """A commit whose log write fails leaves the in-memory head on the
+    on-disk snapshot, so the next commit gets the next id."""
+    from pyspark.sql import types as T
+
+    from pyiceberg_lakehouse_spark.lakehouse import log as log_mod
+    from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog
+
+    table_dir = str(tmp_path / "t")
+    log = SnapshotLog(table_dir)
+    log.init_table(T.StructType([T.StructField("id", T.LongType())]), [])
+    log.commit("append", [{"path": "a.parquet"}])
+    head = log.current_snapshot_id()
+
+    def fail(*_args, **_kwargs):
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(log_mod.os, "replace", fail)
+        with pytest.raises(OSError, match="disk full"):
+            log.commit("append", [{"path": "b.parquet"}])
+    assert log.current_snapshot_id() == head
+    assert SnapshotLog(table_dir).load().current_snapshot_id() == head
+    assert log.commit("append", [{"path": "b.parquet"}]).snapshot_id == head + 1
+    assert SnapshotLog(table_dir).load().current_snapshot_id() == head + 1
+
+
 def test_catalog_list_and_rename(spark, warehouse, nation_chunks):
     nation, chunks = nation_chunks
     lh = Lakehouse(spark, warehouse)

@@ -119,8 +119,10 @@ def test_truncated_valid_files_rejected_cleanly(cut):
 @given(data=st.binary(min_size=0, max_size=400))
 def test_r16_parsers_reject_garbage_cleanly(data):
     """The r16 decoders (MP3 Layer-III, Vorbis, Avro with the extended
-    codec set, snappy) under the same structured-rejection contract."""
+    codec set, snappy, zstd, brotli) under the same structured-rejection
+    contract."""
     from pyiceberg_lakehouse_spark.operators import avro, mp3, snappy, vorbis
+    from pyiceberg_lakehouse_spark.operators.codec import decompress
 
     for name, fn in (
         ("mp3", mp3.decode_mp3),
@@ -129,6 +131,8 @@ def test_r16_parsers_reject_garbage_cleanly(data):
         ("vorbis_ogg", vorbis.decode_ogg_vorbis),
         ("avro", avro.decode_avro),
         ("snappy", snappy.decompress),
+        ("zstd", lambda b: decompress("zstd", b)),
+        ("brotli", lambda b: decompress("brotli", b)),
     ):
         try:
             fn(data)
@@ -143,7 +147,12 @@ def test_r16_parsers_reject_garbage_cleanly(data):
 @settings(max_examples=25, deadline=None)
 @given(cut=st.integers(min_value=1, max_value=800))
 def test_r16_truncated_valid_rejected_cleanly(cut):
+    import random
+
+    import pyarrow as pa
+
     from pyiceberg_lakehouse_spark.operators import mp3, vorbis
+    from pyiceberg_lakehouse_spark.operators.codec import decompress
     from pyiceberg_lakehouse_spark.operators.ogg import make_ogg
 
     is1 = [0] * 576
@@ -161,9 +170,15 @@ def test_r16_truncated_valid_rejected_cleanly(cut):
     ogg_blob = make_ogg(vorbis.encode_vorbis_fixture(
         [{"y0": 30, "y1": 12, "classes": classes, "entries": entries}]
     ))
+    text = random.Random(16).randbytes(500) + b"row data " * 200
     for name, fn, full in (
         ("mp3", mp3.decode_mp3, blob),
         ("vorbis_ogg", vorbis.decode_ogg_vorbis, ogg_blob),
+        # a truncated stream never decodes, so these must always raise
+        ("zstd", lambda b: decompress("zstd", b),
+         pa.Codec("zstd").compress(text, asbytes=True)),
+        ("brotli", lambda b: decompress("brotli", b),
+         pa.Codec("brotli").compress(text, asbytes=True)),
     ):
         trunc = full[: max(0, len(full) - cut)]
         if not trunc:

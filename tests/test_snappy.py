@@ -59,6 +59,8 @@ def test_hostiles():
         snappy.decompress(b"\x05\x01\xff\xff\xff\xff\x00")  # bad offset
     with pytest.raises(ValueError, match="frame_decompress"):
         snappy.decompress(b"\xff\x06\x00\x00sNaPpY rest")
+    with pytest.raises(ValueError):  # 6 bytes claiming ~2 GB of output
+        snappy.decompress(b"\xfe\xff\xff\xff\x07\x00")
 
 
 def test_avro_snappy_codec():

@@ -178,6 +178,13 @@ def test_partition_scoped_upsert_constant_plan_size(spark, warehouse, orders):
     assert len(table_scans) == 1, plan[:2000]
     scans = re.findall(r"\(\d+\) Scan parquet", plan)
     assert len(scans) <= 3, plan[:2000]
+    # the table side reaches the merge through a broadcast anti-join, so
+    # it is never shuffled (merge_keep_last's sort-merge fallback would)
+    anti = [node for node in re.split(r"\n(?=\(\d+\) )", plan)
+            if "Join type: LeftAnti" in node]
+    assert anti, plan
+    assert all(node.split("\n")[0].endswith("BroadcastHashJoin")
+               for node in anti), plan
 
 
 def test_merge_into_clause_semantics(spark, tmp_path):
