@@ -7,8 +7,8 @@ Daft/Polars/Arrow/Ray), re-expressed Spark-first:
 - lakehouse lifecycle: create / append / transactional-append / overwrite /
   add_files / upsert / merge-on-read deletes / history / time-travel /
   compaction / snapshot expiry / schema evolution, backed by partitioned
-  Parquet plus a per-table JSON snapshot log with an O_EXCL commit lock and
-  multi-writer retry; scan-time file skipping via per-file min/max stats,
+  Parquet plus a per-table append-only JSON snapshot log with an flock
+  commit lock and multi-writer retry; scan-time file skipping via per-file min/max stats,
   bloom filters, and Z-order clustering; bucketed co-located joins
   (``lakehouse/``; reference: main-daft.py, main-polars.py, upsert.py),
 - a full relational query surface (scans, filters, aggregations incl. TPC-H

@@ -1,4 +1,4 @@
-"""Per-table JSON snapshot log with atomic-rename commits.
+"""Per-table JSON snapshot log: a base file plus one immutable entry per commit.
 
 The log is the table's entire metadata: schema, partition spec, and an
 ordered list of snapshots. Each snapshot records its operation and the data
@@ -8,10 +8,26 @@ layouts). The live file set at any snapshot is derived by replay: ``append``
 and ``add_files`` accumulate, ``overwrite`` resets, ``replace`` swaps a
 subset (used by partition-scoped upsert/compaction).
 
-Commit protocol (SURVEY.md §7 hard-part 3): serialize to a temp file in the
-same directory, ``os.replace`` onto the log path (atomic on POSIX), with an
-optimistic concurrency check on the expected snapshot count — same
-single-writer posture as the reference's SQLite catalog.
+On disk the log is a *base*, ``_snaplog.json`` (format v2: the table
+metadata and every snapshot up to some id), and a sibling directory
+``_snaplog.d/`` with one *entry* per later commit, ``<snapshot id>.json``:
+that commit's snapshot plus any table metadata it changed. Loading reads
+the base, then the entries above the base's last id in order — the Delta
+Lake transaction-log design (Armbrust et al., VLDB 2020). A log written
+before entries existed is a base with no entries.
+
+Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
+that its head's entry exists, the next id's does not, and the base is the
+file it last read. It then publishes one entry: a temp file in the same
+directory, ``os.replace``d into place (atomic on POSIX). It reads no
+snapshot content and writes only its own snapshot. When the tail's bytes
+reach the base's, the commit first *folds*: it rewrites the base with every
+snapshot and deletes the entries the base now covers, so fold writes sum to
+at most about twice the final log. Every whole-log rewrite (expiry, refs,
+properties, rename, fast-forward) is such a fold and leaves an empty
+marker entry under the head's id. A handle that fails the check falls back
+to a full load and the optimistic concurrency rules of
+``SnapshotLog.commit``.
 
 Mirrors: snapshot history read_history.py:10-11; metadata location
 read_history.py:8; one-snapshot-per-append vs transactional batching
@@ -21,6 +37,8 @@ main-daft.py:121-138 vs main-polars.py:165-186.
 from __future__ import annotations
 
 import contextlib
+import copy
+import fcntl
 import json
 import os
 import tempfile
@@ -54,35 +72,46 @@ def _v1_safe_unquote(v: str) -> str:
 
 
 @contextlib.contextmanager
-def _commit_lock(table_dir: str, timeout_s: float = 30.0, stale_s: float = 300.0):
-    """Exclusive inter-process lock via O_CREAT|O_EXCL on a lock file.
+def _commit_lock(table_dir: str, timeout_s: float = 30.0):
+    """Exclusive inter-process lock: ``flock`` on ``.commit.lock``.
 
-    Creation is atomic on POSIX (including NFS for open+excl on modern
-    kernels); a crashed writer's lock older than ``stale_s`` is broken.
+    The lock file is opened afresh on each acquisition, so every holder has
+    its own open file description and threads of one process exclude each
+    other too. The kernel releases the lock when its holder's descriptor
+    closes, including when the process dies, so a crashed writer never
+    blocks the next one. The file itself is never removed: unlinking it
+    would let a waiter lock an inode nobody else can see.
     """
     lock_path = os.path.join(table_dir, ".commit.lock")
-    deadline = time.monotonic() + timeout_s
-    while True:
-        try:
-            fd = os.open(lock_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            break
-        except FileExistsError:
-            try:
-                if time.time() - os.path.getmtime(lock_path) > stale_s:
-                    os.unlink(lock_path)  # break a dead writer's lock
-                    continue
-            except FileNotFoundError:
-                continue
-            if time.monotonic() > deadline:
-                raise TimeoutError(f"commit lock busy: {lock_path}")
-            time.sleep(0.05)
+    fd = os.open(lock_path, os.O_CREAT | os.O_RDWR, 0o644)
     try:
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
+        deadline = time.monotonic() + timeout_s
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except BlockingIOError:
+                if time.monotonic() > deadline:
+                    raise TimeoutError(f"commit lock busy: {lock_path}") from None
+                time.sleep(0.05)
         yield
     finally:
-        with contextlib.suppress(FileNotFoundError):
-            os.unlink(lock_path)
+        os.close(fd)
+
+
+def _replace(path: str, data: str) -> None:
+    """Write ``data`` to a temp file beside ``path``, then ``os.replace``
+    it onto ``path`` — readers see the old file or the new one, never a
+    partial write."""
+    fd, tmp = tempfile.mkstemp(prefix=".snaplog.", dir=os.path.dirname(path))
+    try:
+        with os.fdopen(fd, "w") as f:
+            f.write(data)
+        os.replace(tmp, path)  # atomic on POSIX
+    except BaseException:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+        raise
 
 
 def _winners_touch(
@@ -158,13 +187,15 @@ class Snapshot:
 class SnapshotLog:
     """Loads, mutates, and atomically commits one table's metadata.
 
-    ``branch`` selects an alternative log file (``_snaplog-branch-<name>``):
-    branches are full snapshot logs sharing the table's immutable data
-    files, so branch writes never touch main's metadata. All branches of a
-    table serialize through the same commit lock.
+    ``branch`` selects an alternative log (``_snaplog-branch-<name>.json``
+    and its ``.d`` entry directory): branches are full snapshot logs
+    sharing the table's immutable data files, so branch writes never touch
+    main's metadata. All branches of a table serialize through the same
+    commit lock.
     """
 
     FILENAME = "_snaplog.json"
+    BRANCH_PREFIX = "_snaplog-branch-"
 
     def __init__(self, table_dir: str, branch: str | None = None):
         self.table_dir = table_dir
@@ -172,14 +203,62 @@ class SnapshotLog:
         fname = (
             self.FILENAME
             if self.branch is None
-            else f"_snaplog-branch-{self.branch}.json"
+            else f"{self.BRANCH_PREFIX}{self.branch}.json"
         )
         self.path = os.path.join(table_dir, fname)
+        # entry names never end in .json, so no branch listing mistakes
+        # this directory for a branch's base
+        self.entry_dir = self.path[: -len(".json")] + ".d"
         self.schema_json: str | None = None
         self.partition_by: list[str] = []
         self.properties: dict[str, str] = {}
         self.snapshots: list[Snapshot] = []
         self.refs: dict[str, int] = {}  # named tags -> snapshot_id
+        # what this handle last read from or wrote to disk: the base's
+        # (inode, size, mtime_ns), its format version, the bytes of the
+        # entries above it, and the table metadata as persisted
+        self._base_stat: tuple[int, int, int] | None = None
+        self._base_version = 2
+        self._tail_bytes = 0
+        self._synced_meta: dict[str, Any] = {}
+
+    @classmethod
+    def branch_names(cls, table_dir: str) -> list[str]:
+        """Names of the branches whose base logs live in ``table_dir``."""
+        return sorted(
+            fn[len(cls.BRANCH_PREFIX) : -len(".json")]
+            for fn in os.listdir(table_dir)
+            if fn.startswith(cls.BRANCH_PREFIX) and fn.endswith(".json")
+        )
+
+    def _entry_name(self, snapshot_id: int) -> str:
+        # zero-padded so names sort by id; temp files start with "." and
+        # sort below every entry
+        return f"{snapshot_id:020d}.json"
+
+    def _meta(self) -> dict[str, Any]:
+        """The table metadata under the keys of the on-disk format."""
+        return {
+            "schema": self.schema_json,
+            "partition_by": self.partition_by,
+            "properties": self.properties,
+            "refs": self.refs,
+        }
+
+    def _set_meta(self, meta: dict[str, Any]) -> None:
+        if "schema" in meta:
+            self.schema_json = meta["schema"]
+        if "partition_by" in meta:
+            self.partition_by = list(meta["partition_by"])
+        if "properties" in meta:
+            self.properties = dict(meta["properties"])
+        if "refs" in meta:
+            self.refs = {k: int(v) for k, v in meta["refs"].items()}
+
+    def _mark_synced(self, base_stat: os.stat_result, tail_bytes: int) -> None:
+        self._base_stat = (base_stat.st_ino, base_stat.st_size, base_stat.st_mtime_ns)
+        self._tail_bytes = tail_bytes
+        self._synced_meta = {k: copy.copy(v) for k, v in self._meta().items()}
 
     # ------------------------------------------------------------- state --
 
@@ -187,13 +266,45 @@ class SnapshotLog:
         return os.path.exists(self.path)
 
     def load(self) -> "SnapshotLog":
-        with open(self.path) as f:
-            d = json.load(f)
-        self.schema_json = d["schema"]
-        self.partition_by = d.get("partition_by", [])
-        self.properties = d.get("properties", {})
+        """Read the base, then every entry above its last id, in id order.
+
+        The base is authoritative for every id it holds, so entries a
+        crashed fold left behind are never read. A fold that replaces the
+        base while this runs may delete entries under it; the base's inode
+        then no longer matches the open file's, and the read starts over.
+        """
+        while True:
+            with open(self.path) as f:
+                base = os.fstat(f.fileno())
+                d = json.load(f)
+                self._load_base(d)
+                sid = self.current_snapshot_id() or 0
+                tail_bytes = 0
+                while True:
+                    sid += 1
+                    try:
+                        with open(
+                            os.path.join(self.entry_dir, self._entry_name(sid))
+                        ) as ef:
+                            raw = ef.read()
+                    except FileNotFoundError:
+                        break
+                    if not raw:  # a newer base's marker: a fold is racing us
+                        break
+                    entry = json.loads(raw)
+                    self._set_meta(entry)
+                    self.snapshots.append(Snapshot.from_json(entry["snapshot"]))
+                    tail_bytes += len(raw)
+                with contextlib.suppress(FileNotFoundError):
+                    if os.stat(self.path).st_ino == base.st_ino:
+                        break
+        self._mark_synced(base, tail_bytes)
+        return self
+
+    def _load_base(self, d: dict[str, Any]) -> None:
+        self._set_meta({"partition_by": [], "properties": {}, "refs": {}, **d})
         self.snapshots = [Snapshot.from_json(s) for s in d.get("snapshots", [])]
-        self.refs = {k: int(v) for k, v in d.get("refs", {}).items()}
+        self._base_version = int(d.get("format_version", 1))
         # format_version 1 logs persisted partition dicts as Spark wrote the
         # path segments — percent-ENCODED keys and values (``a/b=c`` stored
         # as ``a%2Fb%3Dc``), so partition_filter with special-character
@@ -210,7 +321,7 @@ class SnapshotLog:
         # (ADVICE r8). A value that IS an exact encoder image (``a%2Fb``)
         # remains formally ambiguous between the two generations; we take
         # the decode, matching the dominant v1 population.
-        if int(d.get("format_version", 1)) < 2:
+        if self._base_version < 2:
             from urllib.parse import unquote
 
             for snap in self.snapshots:
@@ -221,7 +332,6 @@ class SnapshotLog:
                             unquote(k): _v1_safe_unquote(v)
                             for k, v in part.items()
                         }
-        return self
 
     def schema(self) -> T.StructType:
         assert self.schema_json is not None
@@ -306,14 +416,14 @@ class SnapshotLog:
             if snapshot_id not in [s.snapshot_id for s in on_disk.snapshots]:
                 raise KeyError(f"snapshot {snapshot_id} not found in {self.path}")
             on_disk.refs[name] = snapshot_id
-            on_disk._write(expected_len=None)
+            on_disk._write()
             self.load()
 
     def drop_ref(self, name: str) -> None:
         with _commit_lock(self.table_dir):
             on_disk = SnapshotLog(self.table_dir, self.branch).load()
             on_disk.refs.pop(name, None)
-            on_disk._write(expected_len=None)
+            on_disk._write()
             self.load()
 
     def set_properties(self, props: dict[str, str]) -> None:
@@ -323,7 +433,7 @@ class SnapshotLog:
         with _commit_lock(self.table_dir):
             on_disk = SnapshotLog(self.table_dir, self.branch).load()
             on_disk.properties.update({k: str(v) for k, v in props.items()})
-            on_disk._write(expected_len=None)
+            on_disk._write()
             self.load()
 
     # ------------------------------------------------------------ commits --
@@ -347,7 +457,7 @@ class SnapshotLog:
             )
         ]
         os.makedirs(self.table_dir, exist_ok=True)
-        self._write(expected_len=None)
+        self._write()
 
     # ops safe to auto-retry after refreshing to the winner's state: they
     # only ADD files, so their outcome doesn't depend on the state they were
@@ -368,11 +478,15 @@ class SnapshotLog:
     ) -> Snapshot:
         """Append one snapshot atomically.
 
-        The optimistic check + rewrite runs under an O_EXCL lock file so two
-        processes can't interleave check-then-replace (the rename alone is
-        atomic but last-write-wins). On conflict, commutative operations may
-        refresh to the winner's state and retry up to ``retry_conflicts``
-        times — the multi-writer append story; everything else raises.
+        The freshness check and the entry publish run under the commit lock,
+        so two processes can't interleave check-then-publish. A handle whose
+        head and base still match the disk reads nothing: it writes its
+        snapshot, plus any table metadata changed on this handle since it
+        was read, as one entry. Otherwise it loads the log; if the disk
+        holds other snapshots than this handle, that is a conflict:
+        commutative operations may refresh to the winner's state and retry
+        up to ``retry_conflicts`` times — the multi-writer append story;
+        everything else raises.
 
         ``touched_partitions`` narrows the conflict check for ``replace``
         commits (Iceberg-style overwrite validation): the replace was
@@ -392,18 +506,30 @@ class SnapshotLog:
         the original sequence numbers so merge-on-read delete ordering stays
         correct, all within this single atomic commit.
         """
+        # metadata edited on this handle (schema evolution, rollup cursors)
+        # rides in the entry; a refresh after a conflict keeps it
+        changes = {k: v for k, v in self._meta().items() if v != self._synced_meta.get(k)}
         attempts = 0
         while True:
             with _commit_lock(self.table_dir):
-                on_disk = SnapshotLog(self.table_dir, self.branch).load()
+                on_disk = None
+                if not self._fresh() or self._fold_due():
+                    on_disk = SnapshotLog(self.table_dir, self.branch).load()
                 # head id must match too: after expire_snapshots shrinks the
                 # log, a stale handle's cached LENGTH can alias the new length
                 # (expiry + N commits) even though its snapshot list is stale;
                 # ids are monotonic so the head id never aliases.
-                if (
+                if on_disk is None or (
                     len(on_disk.snapshots) == len(self.snapshots)
                     and on_disk.current_snapshot_id() == self.current_snapshot_id()
                 ):
+                    if on_disk is not None:
+                        self._adopt(on_disk)
+                        if self._fold_due():
+                            self._write()
+                        # a log written before entries existed has no directory
+                        os.makedirs(self.entry_dir, exist_ok=True)
+                        self._set_meta(changes)
                     snap_id = (self.current_snapshot_id() or 0) + 1
                     snap = Snapshot(
                         snapshot_id=snap_id,
@@ -425,13 +551,16 @@ class SnapshotLog:
                         ],
                         summary=dict(summary or {}),
                     )
+                    entry = json.dumps({**changes, "snapshot": snap.to_json()})
+                    # publishing the entry is the commit point; a failure
+                    # before it leaves the head, on disk and here, at the
+                    # previous snapshot
+                    _replace(os.path.join(self.entry_dir, self._entry_name(snap_id)), entry)
                     self.snapshots.append(snap)
-                    try:
-                        self._write(expected_len=len(self.snapshots))
-                    except BaseException:
-                        # the head must stay what is on disk
-                        self.snapshots.pop()
-                        raise
+                    self._tail_bytes += len(entry)
+                    self._synced_meta.update(
+                        {k: copy.copy(v) for k, v in changes.items()}
+                    )
                     return snap
             # conflict: another writer advanced the log since we loaded it
             retryable = operation in self.COMMUTATIVE_OPS or (
@@ -450,28 +579,77 @@ class SnapshotLog:
                     f"(head {on_disk.current_snapshot_id()})"
                 )
             attempts += 1
-            self.schema_json = on_disk.schema_json
-            self.partition_by = on_disk.partition_by
-            self.properties = on_disk.properties
-            self.snapshots = on_disk.snapshots
+            self._adopt(on_disk)
+            self._set_meta(changes)
 
-    def _write(self, expected_len: int | None) -> None:
+    def _fresh(self) -> bool:
+        """Is the disk still what this handle last read or wrote? Three
+        stats, no snapshot content. While the base stays put, each commit
+        adds the entry after the head, so the head is still ours iff that
+        entry is absent. A whole-log rewrite replaces the base and deletes
+        the entries below its head, so one that moved the head also removed
+        our head's entry. The base's inode, size and mtime can alias; the
+        entry checks do not rely on them, so a false "fresh" needs a rewrite
+        that kept the head id (or died before its cleanup). A false "stale"
+        only costs a load."""
+        if self._base_stat is None:
+            return False
+        head = self.current_snapshot_id() or 0
+        try:
+            base = os.stat(self.path)
+        except FileNotFoundError:
+            return False
+        entry = os.path.join(self.entry_dir, self._entry_name(head))
+        after = os.path.join(self.entry_dir, self._entry_name(head + 1))
+        return (
+            (base.st_ino, base.st_size, base.st_mtime_ns) == self._base_stat
+            and os.path.exists(entry)
+            and not os.path.exists(after)
+        )
+
+    def _fold_due(self) -> bool:
+        """Fold the tail into the base once it is as large as the base (or
+        the base predates format v2): the base then at least doubles per
+        fold, so fold writes sum to about twice the final log."""
+        assert self._base_stat is not None
+        return self._base_version < 2 or self._tail_bytes >= self._base_stat[1]
+
+    def _adopt(self, other: "SnapshotLog") -> None:
+        """Take ``other``'s state (a fresh load of this same log)."""
+        self._set_meta(other._meta())
+        self.snapshots = other.snapshots
+        self._base_stat = other._base_stat
+        self._base_version = other._base_version
+        self._tail_bytes = other._tail_bytes
+        self._synced_meta = other._synced_meta
+
+    def _write(self) -> None:
+        """Rewrite the base with every snapshot, then delete the entries it
+        covers, leaving an empty marker under the head's id (see
+        ``_fresh``)."""
         payload = {
             # v2: partition dicts are stored percent-DECODED (keys and
             # values); see the load() migration note
             "format_version": 2,
-            "schema": self.schema_json,
-            "partition_by": self.partition_by,
-            "properties": self.properties,
+            **self._meta(),
             "snapshots": [s.to_json() for s in self.snapshots],
-            "refs": self.refs,
         }
-        fd, tmp = tempfile.mkstemp(prefix=".snaplog.", dir=self.table_dir)
-        try:
-            with os.fdopen(fd, "w") as f:
-                json.dump(payload, f)
-            os.replace(tmp, self.path)  # atomic on POSIX
-        except BaseException:
-            if os.path.exists(tmp):
-                os.unlink(tmp)
-            raise
+        head = self._entry_name(self.current_snapshot_id() or 0)
+        os.makedirs(self.entry_dir, exist_ok=True)
+        names = os.listdir(self.entry_dir)
+        # entries above the new head (a dropped branch re-created, a table
+        # re-created in place) would read as the new base's tail
+        for name in names:
+            if name > head:
+                os.unlink(os.path.join(self.entry_dir, name))
+        _replace(self.path, json.dumps(payload))
+        base = os.stat(self.path)
+        # the base holds the head's content; its entry stays as an empty
+        # marker so a commit can check the head by name
+        _replace(os.path.join(self.entry_dir, head), "")
+        for name in names:
+            if name < head:  # covered by the base, or a crashed temp file
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(self.entry_dir, name))
+        self._base_version = 2
+        self._mark_synced(base, 0)

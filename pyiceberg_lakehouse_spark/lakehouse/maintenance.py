@@ -723,7 +723,7 @@ def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
     ]
     base.operation = "overwrite" if base.operation != "create" else "create"
     log.snapshots = log.snapshots[keep_from:]
-    log._write(expected_len=None)
+    log._write()
     for p in orphaned:
         if os.path.exists(p):
             os.unlink(p)
@@ -1492,7 +1492,7 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
                     else [d["path"]]
                 )
             ]
-    log._write(expected_len=None)
+    log._write()
     # unlink ONLY bytes this table owns: files outside table_dir may be
     # shared — registered via add_files, or referenced by a shallow clone
     # (or BE a clone's view of its source). The rewritten replacements
@@ -1579,5 +1579,5 @@ def shallow_clone(lh, source: LakehouseTable, identifier: str) -> LakehouseTable
     )
     if max_seq > snap.snapshot_id:
         snap.snapshot_id = max_seq
-        clone.log._write(expected_len=None)
+        clone.log._write()
     return clone

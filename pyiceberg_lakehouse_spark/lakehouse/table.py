@@ -27,6 +27,7 @@ import glob as _glob
 import json
 import os
 import re
+import shutil
 from functools import reduce
 from typing import Any
 
@@ -150,8 +151,6 @@ class Lakehouse:
         return LakehouseTable(self.spark, table_dir, branch=branch)
 
     def drop_table(self, identifier: str) -> None:
-        import shutil
-
         ns, name = self._split(identifier)
         if self.catalog:
             try:
@@ -275,12 +274,7 @@ class Lakehouse:
         os.rename(src_dir, dst_dir)
         prefix = src_dir.rstrip(os.sep) + os.sep
         pos_delete_paths: set[str] = set()
-        branch_logs = [None] + [
-            fn[len("_snaplog-branch-") : -len(".json")]
-            for fn in os.listdir(dst_dir)
-            if fn.startswith("_snaplog-branch-") and fn.endswith(".json")
-        ]
-        for branch in branch_logs:
+        for branch in [None, *SnapshotLog.branch_names(dst_dir)]:
             log = SnapshotLog(dst_dir, branch).load()
             for snap in log.snapshots:
                 for f in snap.added_files:
@@ -295,7 +289,7 @@ class Lakehouse:
                         d["path"] = os.path.join(dst_dir, d["path"][len(prefix):])
                     if d.get("kind") == "position":
                         pos_delete_paths.add(d["path"])
-            log._write(expected_len=None)
+            log._write()
         # Position-delete parquet CONTENT stores absolute data-file paths
         # (the scan anti-joins on _metadata.file_path): left at the old
         # prefix they would match nothing and every deleted row would
@@ -379,20 +373,17 @@ class LakehouseTable:
         dst.properties = dict(src.properties)
         dst.snapshots = src.snapshots
         dst.refs = dict(src.refs)
-        dst._write(expected_len=None)
+        dst._write()
         return LakehouseTable(self.spark, self.table_dir, branch=name)
 
     def branches(self) -> list[str]:
-        out = []
-        for fn in os.listdir(self.table_dir):
-            if fn.startswith("_snaplog-branch-") and fn.endswith(".json"):
-                out.append(fn[len("_snaplog-branch-") : -len(".json")])
-        return sorted(out)
+        return SnapshotLog.branch_names(self.table_dir)
 
     def drop_branch(self, name: str) -> None:
-        path = SnapshotLog(self.table_dir, name).path
-        if os.path.exists(path):
-            os.unlink(path)
+        log = SnapshotLog(self.table_dir, name)
+        if os.path.exists(log.path):
+            os.unlink(log.path)
+        shutil.rmtree(log.entry_dir, ignore_errors=True)
 
     def write_audit_publish(
         self,
@@ -450,7 +441,7 @@ class LakehouseTable:
             ours.properties = dict(theirs.properties)
             ours.snapshots = theirs.snapshots
             ours.refs = dict(theirs.refs)
-            ours._write(expected_len=None)
+            ours._write()
         self.log.load()
 
     # ---------------------------------------------------------- metadata --

@@ -113,13 +113,20 @@ def test_v1_snapshot_log_partitions_decode_on_load(spark, warehouse):
     )
     t = lh.create_table("ns.oldlog", df.schema, partition_by=["cat"])
     t.append(df)
-    # regress the on-disk log to the v1 format: re-encode partitions the
-    # way Spark's escaped path segments used to land in the log
+    # regress the table to a real v1 log: one file holding every snapshot,
+    # no entry directory, partitions re-encoded the way Spark's escaped
+    # path segments used to land in the log
+    import shutil
     from urllib.parse import quote
 
-    with open(t.log.path) as f:
-        d = json.load(f)
-    d["format_version"] = 1
+    d = {
+        "format_version": 1,
+        "schema": t.log.schema_json,
+        "partition_by": t.log.partition_by,
+        "properties": t.log.properties,
+        "snapshots": [s.to_json() for s in t.log.snapshots],
+        "refs": t.log.refs,
+    }
     for snap in d["snapshots"]:
         for fe in snap["added_files"]:
             if fe.get("partition"):
@@ -129,6 +136,7 @@ def test_v1_snapshot_log_partitions_decode_on_load(spark, warehouse):
                 }
     with open(t.log.path, "w") as f:
         json.dump(d, f)
+    shutil.rmtree(t.log.entry_dir)
     t2 = lh.load_table("ns.oldlog")
     got = t2.scan(partition_filter={"cat": "a/b=c"}).collect()
     assert [r.id for r in got] == [1]

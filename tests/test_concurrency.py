@@ -1,6 +1,6 @@
 """Two-PROCESS optimistic concurrency (VERDICT r5 task #5).
 
-The snapshot log's commit protocol is pure file I/O (O_EXCL lock +
+The snapshot log's commit protocol is pure file I/O (flock lock +
 optimistic head check + rebase-retry for commutative ops), so it must hold
 across real OS processes, not just threads sharing a GIL. Workers here run
 in subprocesses with no Spark: they commit fabricated append entries
