@@ -19,7 +19,8 @@ before entries existed is a base with no entries.
 Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
 that its head's entry exists, the next id's does not, and the base is the
 file it last read. It then publishes one entry: a temp file in the same
-directory, ``os.replace``d into place (atomic on POSIX). It reads no
+directory, fsynced and ``os.replace``d into place (atomic on POSIX), then
+the directory fsynced, so the publish survives a power loss. It reads no
 snapshot content and writes only its own snapshot. When the tail's bytes
 reach the base's, the commit first *folds*: it rewrites the base with every
 snapshot and deletes the entries the base now covers, so fold writes sum to
@@ -102,16 +103,26 @@ def _commit_lock(table_dir: str, timeout_s: float = 30.0):
 def _replace(path: str, data: str) -> None:
     """Write ``data`` to a temp file beside ``path``, then ``os.replace``
     it onto ``path`` — readers see the old file or the new one, never a
-    partial write."""
-    fd, tmp = tempfile.mkstemp(prefix=".snaplog.", dir=os.path.dirname(path))
+    partial write. The temp file is fsynced before the replace and the
+    directory after it, so after a power loss the name holds the old or
+    the new bytes, never an empty file, and the publish itself survives."""
+    dirname = os.path.dirname(path)
+    fd, tmp = tempfile.mkstemp(prefix=".snaplog.", dir=dirname)
     try:
         with os.fdopen(fd, "w") as f:
             f.write(data)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, path)  # atomic on POSIX
     except BaseException:
         if os.path.exists(tmp):
             os.unlink(tmp)
         raise
+    dfd = os.open(dirname, os.O_RDONLY)
+    try:
+        os.fsync(dfd)
+    finally:
+        os.close(dfd)
 
 
 def _winners_touch(

@@ -16,11 +16,24 @@ one partition while genuinely parallel work lists (file paths fanned out
 to executors) keep one row per slice exactly as before. Row order is
 preserved either way (``parallelize`` keeps list order across slices), so
 results are byte-identical to the stock path.
+
+``map_docs`` is the one harness for the per-document decode queries
+(multimodal codecs, crawl and text extraction): each query supplies only
+a row generator ``rows_for_doc(doc_id)`` and its output ``StructType``;
+the helper fans the id stream out with ``spread_ids`` and builds one
+pandas frame per Arrow batch. It needs no dtype code: Spark's Arrow
+serializer casts every pandas column to the type the schema declares
+(``spark.sql.execution.pandas.convertToArrowArraySafely``, on by
+default), so Python ints, numpy scalars and ``None`` land in the
+declared Spark types, and a value the declared type cannot hold (an int
+above 2**31 in an ``IntegerType`` column) raises instead of wrapping.
+One limit: pandas stores an integer column that holds a ``None`` as
+float64, so such a column carries integers exactly only below 2**53.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -99,3 +112,32 @@ def spread_ids(
     if max_width is not None:
         width = min(width, max_width)
     return df.repartition(width)
+
+
+def map_docs(
+    docs: DataFrame,
+    rows_for_doc: Callable[[int], Iterable[tuple]],
+    schema,
+    *,
+    sf_dir: str | None = None,
+    max_width: int | None = None,
+) -> DataFrame:
+    """Run ``rows_for_doc`` once per ``doc_id`` of the id-only frame
+    ``docs`` and collect the rows it yields (zero or more tuples, in
+    ``schema`` field order) into a frame of ``schema``. The ids fan out
+    with ``spread_ids(docs, max_width=max_width, sf_dir=sf_dir)``; the
+    declared schema types the output (see module docstring)."""
+    names = schema.fieldNames()
+
+    def batches(it):
+        import pandas as pd
+
+        for pdf in it:
+            yield pd.DataFrame(
+                [row for d in pdf["doc_id"] for row in rows_for_doc(int(d))],
+                columns=names,
+            )
+
+    return spread_ids(docs, max_width=max_width, sf_dir=sf_dir).mapInPandas(
+        batches, schema
+    )

@@ -3,6 +3,10 @@
 Moved verbatim out of operators/queries.py in the round-15 pure-move
 split (VERDICT r14 task #6) — no semantic changes; the registry imports
 all three modules, so query names and behavior are identical.
+
+Each per-document query is a row generator, ``rows_for_doc(doc_id)``,
+plus its output ``StructType``, run through ``localdf.map_docs``: the
+helper fans the doc ids out and the declared schema types the output.
 """
 
 from __future__ import annotations
@@ -10,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyiceberg_lakehouse_spark.localdf import spread_ids
+from pyiceberg_lakehouse_spark.localdf import map_docs
 
 from pyiceberg_lakehouse_spark.operators import text
 from pyiceberg_lakehouse_spark.registry import register
@@ -52,8 +56,6 @@ def scan_warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle restates every header closed-form; a digest-less revisit
     raises rather than passing an unusable dedup row. Arrow-batched
     mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import warc as _warc
@@ -74,59 +76,41 @@ def scan_warc_revisits(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("gzipped", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nr = 2 + d % 3
-                recs = [
-                    {
-                        "type": "response",
-                        "uri": f"http://r.ex/{d}/orig",
-                        "block": _warc.build_http_response(
-                            200, "OK",
-                            [("Content-Type", "text/html")],
-                            f"orig-{d}".encode(),
-                        ),
-                    }
-                ]
-                for i in range(nr):
-                    recs.append(
-                        {
-                            "type": "revisit",
-                            "uri": f"http://r.ex/{d}/{i}",
-                            "digest": f"sha1:DIG{d}X{i}",
-                            "refers_to": f"<urn:rec:{d}-{i}>",
-                            "date": (
-                                f"2020-03-{1 + (d + i) % 28:02d}"
-                                "T00:00:00Z"
-                            ),
-                            "profile": (
-                                "http://netpreserve.org/warc/1.1/"
-                                "revisit/identical-payload-digest"
-                            ),
-                            "block": b"HTTP/1.1 304 Not Modified\r\n\r\n",
-                        }
-                    )
-                gz = d % 2 == 1
-                payload = _warc.make_warc(recs, gzip_records=gz)
-                assert len(_warc.warc_responses(payload)) == 1
-                for i, r in enumerate(_warc.warc_revisits(payload)):
-                    rows.append(
-                        (
-                            d, i, r["uri"], r["digest"],
-                            r["refers_to"], r["date"], gz,
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["rec_idx"] = out["rec_idx"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        recs = [
+            {
+                "type": "response",
+                "uri": f"http://r.ex/{d}/orig",
+                "block": _warc.build_http_response(
+                    200, "OK",
+                    [("Content-Type", "text/html")],
+                    f"orig-{d}".encode(),
+                ),
+            }
+        ]
+        for i in range(2 + d % 3):
+            recs.append(
+                {
+                    "type": "revisit",
+                    "uri": f"http://r.ex/{d}/{i}",
+                    "digest": f"sha1:DIG{d}X{i}",
+                    "refers_to": f"<urn:rec:{d}-{i}>",
+                    "date": f"2020-03-{1 + (d + i) % 28:02d}T00:00:00Z",
+                    "profile": (
+                        "http://netpreserve.org/warc/1.1/"
+                        "revisit/identical-payload-digest"
+                    ),
+                    "block": b"HTTP/1.1 304 Not Modified\r\n\r\n",
+                }
+            )
+        gz = d % 2 == 1
+        payload = _warc.make_warc(recs, gzip_records=gz)
+        assert len(_warc.warc_responses(payload)) == 1
+        for i, r in enumerate(_warc.warc_revisits(payload)):
+            yield d, i, r["uri"], r["digest"], r["refers_to"], r["date"], gz
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -167,7 +151,6 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only."""
     import unicodedata
 
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -186,31 +169,17 @@ def text_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars_nfc", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                if d % 2 == 0:  # NFD: e + U+0301 COMBINING ACUTE
-                    raw = f"Cafe\u0301-{d} \ufb01ne-{d % 7}"
-                else:  # precomposed NFC e-acute
-                    raw = f"Caf\u00e9-{d} \ufb01ne-{d % 7}"
-                nfc = unicodedata.normalize("NFC", raw)
-                nfkc = unicodedata.normalize("NFKC", raw)
-                rows.append(
-                    (
-                        d, nfc, nfkc, d % 2 == 0, len(raw), len(nfc),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("n_chars_raw", "n_chars_nfc"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        if d % 2 == 0:  # NFD: e + U+0301 COMBINING ACUTE
+            raw = f"Cafe\u0301-{d} \ufb01ne-{d % 7}"
+        else:  # precomposed NFC e-acute
+            raw = f"Caf\u00e9-{d} \ufb01ne-{d % 7}"
+        nfc = unicodedata.normalize("NFC", raw)
+        nfkc = unicodedata.normalize("NFKC", raw)
+        yield d, nfc, nfkc, d % 2 == 0, len(raw), len(nfc)
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -262,8 +231,6 @@ def text_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     slip, an unstripped tag, or a swallowed second line flips the
     hash. This is the video->caption extraction path of a training
     pipeline; hostile inputs are pytest-pinned (tests/test_subtitles)."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import subtitles as sub
@@ -285,60 +252,41 @@ def text_subtitle_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_lines", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 3 + d % 5
-                fmt = "srt" if d % 2 == 0 else "vtt"
-                cues = []
-                for i in range(n):
-                    start = i * 2000 + (d % 7) * 100
-                    if fmt == "vtt" and d % 3 == 0:
-                        start += 3600000
-                    body = f"cue-{d}-{i}"
-                    if fmt == "srt" and i % 2 == 1:
-                        body += f"\nline2-{i}"
-                    if fmt == "vtt":
-                        body = f"<v Speaker{d % 3}>{body}</v>"
-                        if i % 3 == 2:
-                            body += " &lt;3"
-                    cues.append(
-                        {
-                            "start_ms": start,
-                            "end_ms": start + 1500 + (i % 3) * 200,
-                            "text": body,
-                            "cue_id": f"id-{i}"
-                            if fmt == "vtt" and i % 2 == 0
-                            else None,
-                            "settings": fmt == "vtt" and i % 2 == 1,
-                        }
-                    )
-                if fmt == "srt":
-                    parsed = sub.parse_srt(sub.make_srt(cues))
-                else:
-                    parsed = sub.parse_webvtt(sub.make_vtt(cues))
-                for i, c in enumerate(parsed):
-                    rows.append(
-                        (
-                            d, fmt, i, c.get("cue_id"),
-                            c["start_ms"], c["end_ms"], c["text"],
-                            c["text"].count("\n") + 1,
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("cue_idx", "int32"),
-                ("start_ms", "int64"), ("end_ms", "int64"),
-                ("n_lines", "int32"),
-            ):
-                out[c2] = out[c2].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        fmt = "srt" if d % 2 == 0 else "vtt"
+        cues = []
+        for i in range(3 + d % 5):
+            start = i * 2000 + (d % 7) * 100
+            if fmt == "vtt" and d % 3 == 0:
+                start += 3600000
+            body = f"cue-{d}-{i}"
+            if fmt == "srt" and i % 2 == 1:
+                body += f"\nline2-{i}"
+            if fmt == "vtt":
+                body = f"<v Speaker{d % 3}>{body}</v>"
+                if i % 3 == 2:
+                    body += " &lt;3"
+            cues.append(
+                {
+                    "start_ms": start,
+                    "end_ms": start + 1500 + (i % 3) * 200,
+                    "text": body,
+                    "cue_id": f"id-{i}" if fmt == "vtt" and i % 2 == 0 else None,
+                    "settings": fmt == "vtt" and i % 2 == 1,
+                }
+            )
+        if fmt == "srt":
+            parsed = sub.parse_srt(sub.make_srt(cues))
+        else:
+            parsed = sub.parse_webvtt(sub.make_vtt(cues))
+        for i, c in enumerate(parsed):
+            yield (
+                d, fmt, i, c.get("cue_id"), c["start_ms"], c["end_ms"],
+                c["text"], c["text"].count("\n") + 1,
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -516,8 +464,6 @@ def scan_robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form — a precedence slip flips a boolean. Completes the
     crawl-curation suite (WARC -> robots -> URL canonicalization ->
     HTML -> text)."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import robots as _rb
@@ -537,47 +483,34 @@ def scan_robots_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("delay_s", T.DoubleType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                bot = f"bot-{d % 4}"
-                txt = (
-                    f"# policy {d}\n"
-                    f"User-agent: {bot}\n"
-                    f"Disallow: /a/\n"
-                    f"Allow: /a/b{d % 3}/\n"
-                    f"Crawl-delay: {1 + d % 5}\n"
-                    f"\n"
-                    f"User-agent: *\n"
-                    f"Disallow: /x*y$\n"
-                )
-                p = _rb.parse_robots(txt)
-                probes = [
-                    (bot, "/a/q"),
-                    (bot, f"/a/b{d % 3}/z"),
-                    ("otherbot", "/x123y"),
-                    ("otherbot", "/x123yz"),
-                    (bot, "/free"),
-                ]
-                for i, (agent, path) in enumerate(probes):
-                    rows.append(
-                        (
-                            d, i, agent, path,
-                            _rb.is_allowed(p, agent, path),
-                            _rb.crawl_delay(p, agent),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["probe_idx"] = out["probe_idx"].astype("int32")
-            out["delay_s"] = out["delay_s"].astype("float64")
-            yield out
+    def rows_for_doc(d):
+        bot = f"bot-{d % 4}"
+        txt = (
+            f"# policy {d}\n"
+            f"User-agent: {bot}\n"
+            f"Disallow: /a/\n"
+            f"Allow: /a/b{d % 3}/\n"
+            f"Crawl-delay: {1 + d % 5}\n"
+            f"\n"
+            f"User-agent: *\n"
+            f"Disallow: /x*y$\n"
+        )
+        p = _rb.parse_robots(txt)
+        probes = [
+            (bot, "/a/q"),
+            (bot, f"/a/b{d % 3}/z"),
+            ("otherbot", "/x123y"),
+            ("otherbot", "/x123yz"),
+            (bot, "/free"),
+        ]
+        for i, (agent, path) in enumerate(probes):
+            yield (
+                d, i, agent, path, _rb.is_allowed(p, agent, path),
+                _rb.crawl_delay(p, agent),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -885,8 +818,6 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     entity decodes, whitespace collapse), the title, the decoded first
     href, and the exact tag count — extractor-semantics drift flips
     the hash on strings. Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import html as _html
@@ -906,7 +837,6 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_tags", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def page(d: int) -> str:
         np_, nl = 2 + d % 3, 1 + d % 2
@@ -924,25 +854,11 @@ def text_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"<style>.x{{color:red}}</style></body></html>"
         )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                r = _html.extract_html(page(d))
-                rows.append(
-                    (
-                        d, r["title"], r["text"], len(r["links"]),
-                        r["links"][0], r["n_tags"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["n_links"] = out["n_links"].astype("int32")
-            out["n_tags"] = out["n_tags"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        r = _html.extract_html(page(d))
+        yield d, r["title"], r["text"], len(r["links"]), r["links"][0], r["n_tags"]
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -993,8 +909,6 @@ def text_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     it), and extract each chapter through the deterministic HTML
     extractor. The oracle states the joined text closed-form.
     Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import office as _off
@@ -1016,47 +930,30 @@ def text_epub_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ncs = 1 + d % 3
-                chapters = [
-                    (
-                        f"Ch {d}-{i}",
-                        [
-                            f"para {d}-{i}-0 &amp; co",
-                            f"para {d}-{i}-1 &amp; co",
-                        ],
-                    )
-                    for i in range(ncs)
-                ]
-                blob = _off.make_epub(
-                    f"Book {d % 9}",
-                    f"Auth {d % 7}",
-                    ["en", "de", "fr"][d % 3],
-                    chapters,
-                    shuffle_zip_order=d % 2 == 0,
-                    streaming_zip=d % 5 < 2,
-                )
-                r = _off.extract_epub(blob)
-                rows.append(
-                    (
-                        d, r["title"], r["creator"], r["language"],
-                        len(r["chapters"]), r["n_entries"],
-                        r["text"], len(r["text"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("n_chapters", "n_entries", "n_chars"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        chapters = [
+            (
+                f"Ch {d}-{i}",
+                [f"para {d}-{i}-0 &amp; co", f"para {d}-{i}-1 &amp; co"],
+            )
+            for i in range(1 + d % 3)
+        ]
+        blob = _off.make_epub(
+            f"Book {d % 9}",
+            f"Auth {d % 7}",
+            ["en", "de", "fr"][d % 3],
+            chapters,
+            shuffle_zip_order=d % 2 == 0,
+            streaming_zip=d % 5 < 2,
+        )
+        r = _off.extract_epub(blob)
+        yield (
+            d, r["title"], r["creator"], r["language"], len(r["chapters"]),
+            r["n_entries"], r["text"], len(r["text"]),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1098,8 +995,6 @@ def text_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip and extract with a namespace-aware XML walk. The oracle
     states paragraph styles and the joined text closed-form.
     Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import office as _off
@@ -1120,46 +1015,24 @@ def text_docx_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                np_ = 2 + d % 4
-                paragraphs = [
-                    (
-                        "Heading1" if j == 0 else None,
-                        [
-                            f"line {d}-{j}",
-                            None,
-                            f"cont {d % 5}",
-                            "\t",
-                            f"end & {d % 7}",
-                        ],
-                    )
-                    for j in range(np_)
-                ]
-                blob = _off.make_docx(
-                    f"Doc {d % 11}", f"Auth {d % 5}", paragraphs
-                )
-                r = _off.extract_docx(blob)
-                rows.append(
-                    (
-                        d, r["title"], r["creator"],
-                        len(r["paragraphs"]),
-                        r["paragraphs"][0]["style"],
-                        r["text"], len(r["text"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("n_paragraphs", "n_chars"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        paragraphs = [
+            (
+                "Heading1" if j == 0 else None,
+                [f"line {d}-{j}", None, f"cont {d % 5}", "\t", f"end & {d % 7}"],
+            )
+            for j in range(2 + d % 4)
+        ]
+        r = _off.extract_docx(
+            _off.make_docx(f"Doc {d % 11}", f"Auth {d % 5}", paragraphs)
+        )
+        yield (
+            d, r["title"], r["creator"], len(r["paragraphs"]),
+            r["paragraphs"][0]["style"], r["text"], len(r["text"]),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1205,8 +1078,6 @@ def text_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     report the text + exact group count. The oracle states the string
     with its non-ASCII literals closed-form. Arrow-batched
     mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import rtf as _rtf
@@ -1225,38 +1096,23 @@ def text_rtf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                np_ = 2 + d % 3
-                paras = [
-                    f"line {d}-{j} café € — end {d % 7}\tq{d % 5}"
-                    for j in range(np_)
-                ]
-                blob = _rtf.make_rtf(
-                    paras,
-                    codepage=1252,
-                    with_fonttbl=d % 3 != 1,
-                    unicode_with_fallback=d % 2 == 0,
-                )
-                r = _rtf.extract_rtf(blob)
-                rows.append(
-                    (
-                        d, r["text"], r["codepage"], r["n_groups"],
-                        len(r["text"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("n_groups", "n_chars"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        paras = [
+            f"line {d}-{j} café € — end {d % 7}\tq{d % 5}"
+            for j in range(2 + d % 3)
+        ]
+        r = _rtf.extract_rtf(
+            _rtf.make_rtf(
+                paras,
+                codepage=1252,
+                with_fonttbl=d % 3 != 1,
+                unicode_with_fallback=d % 2 == 0,
+            )
+        )
+        yield d, r["text"], r["codepage"], r["n_groups"], len(r["text"])
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1300,8 +1156,6 @@ def text_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata), explode the zip and extract with a namespace-aware XML
     walk that expands the whitespace model. The oracle states the
     joined text closed-form. Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import office as _off
@@ -1322,47 +1176,27 @@ def text_odt_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                np_ = 2 + d % 3
-                paragraphs = [
-                    (
-                        "Heading" if j == 0 else None,
-                        [
-                            f"line {d}-{j}",
-                            None,
-                            f"cont {d % 5}",
-                            "\t",
-                            2,
-                            f"end & {d % 7}",
-                        ],
-                    )
-                    for j in range(np_)
-                ]
-                blob = _off.make_odt(
-                    f"Odt {d % 9}", f"Auth {d % 5}", paragraphs
-                )
-                r = _off.extract_odt(blob)
-                rows.append(
-                    (
-                        d, r["title"], r["creator"],
-                        len(r["paragraphs"]),
-                        r["paragraphs"][0]["style"],
-                        r["text"], len(r["text"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("n_paragraphs", "n_chars"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        paragraphs = [
+            (
+                "Heading" if j == 0 else None,
+                [
+                    f"line {d}-{j}", None, f"cont {d % 5}", "\t", 2,
+                    f"end & {d % 7}",
+                ],
+            )
+            for j in range(2 + d % 3)
+        ]
+        r = _off.extract_odt(
+            _off.make_odt(f"Odt {d % 9}", f"Auth {d % 5}", paragraphs)
+        )
+        yield (
+            d, r["title"], r["creator"], len(r["paragraphs"]),
+            r["paragraphs"][0]["style"], r["text"], len(r["text"]),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1404,8 +1238,6 @@ def text_ass_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped, not emitted as text. Parse it back and report the cue
     rows; the oracle states every stripped string and centisecond
     timestamp closed-form. Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import subtitles as _sub
@@ -1426,57 +1258,34 @@ def text_ass_cues(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("text", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nc = 2 + d % 4
-                cues = []
-                for i in range(nc):
-                    start = 1000 * i + 10 * (d % 100)
-                    end = start + 500 + 10 * (d % 50)
-                    if i == 1:
-                        raw = (
-                            f"draw-{d} {{\\p1}}m 0 0 l 10 0{{\\p0}}end"
-                        )
-                    else:
-                        raw = (
-                            f"{{\\b1}}line-{d}-{i}{{\\b0}}\\N"
-                            f"part, two {d % 7}"
-                        )
-                    cues.append(
-                        {
-                            "start_ms": start, "end_ms": end,
-                            "style": "Main" if i % 2 == 0 else "Alt",
-                            "name": f"spk-{(d + i) % 5}",
-                            "text": raw,
-                        }
-                    )
-                script = _sub.make_ass(
-                    cues,
-                    title=f"doc {d}",
-                    styles=["Main", "Alt"],
-                    extra_event_field=d % 3 == 0,
-                )
-                parsed = _sub.parse_ass(script)
-                for i, c in enumerate(parsed["cues"]):
-                    rows.append(
-                        (
-                            d, i, c["start_ms"], c["end_ms"],
-                            c["style"], c["name"], c["text"],
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["cue_idx"] = out["cue_idx"].astype("int32")
-            for cname in ("start_ms", "end_ms"):
-                out[cname] = out[cname].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        cues = []
+        for i in range(2 + d % 4):
+            start = 1000 * i + 10 * (d % 100)
+            end = start + 500 + 10 * (d % 50)
+            if i == 1:
+                raw = f"draw-{d} {{\\p1}}m 0 0 l 10 0{{\\p0}}end"
+            else:
+                raw = f"{{\\b1}}line-{d}-{i}{{\\b0}}\\Npart, two {d % 7}"
+            cues.append(
+                {
+                    "start_ms": start, "end_ms": end,
+                    "style": "Main" if i % 2 == 0 else "Alt",
+                    "name": f"spk-{(d + i) % 5}",
+                    "text": raw,
+                }
+            )
+        script = _sub.make_ass(
+            cues,
+            title=f"doc {d}",
+            styles=["Main", "Alt"],
+            extra_event_field=d % 3 == 0,
+        )
+        for i, c in enumerate(_sub.parse_ass(script)["cues"]):
+            yield d, i, c["start_ms"], c["end_ms"], c["style"], c["name"], c["text"]
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1544,8 +1353,6 @@ def text_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas — the bytes never shuffle, only typed rows do.
     Encrypted PDFs and non-Flate filters stay honestly gated (tests
     pin the refusals)."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import pdf as _pdf
@@ -1567,7 +1374,6 @@ def text_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_updates", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def page_lines(d: int, p: int) -> list[str]:
         lines = [
@@ -1580,44 +1386,29 @@ def text_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             lines.append(f"tm {(d + p) % 3}")
         return lines
 
-    def batches(it):
-        for pdf_batch in it:
-            rows = []
-            for doc_id in pdf_batch["doc_id"]:
-                d = int(doc_id)
-                np_ = 1 + d % 3
-                upd = d % 4 == 1
-                xs = d % 3 != 0
-                objstm = xs and d % 4 >= 2
-                base_pages = [page_lines(d, p) for p in range(np_)]
-                extra = page_lines(d, np_) if upd else None
-                blob = _pdf.encode_pdf(
-                    base_pages,
-                    compress=d % 2 == 0,
-                    xref_stream=xs,
-                    object_streams=objstm,
-                    hex_strings=d % 5 < 2,
-                    xref_predictor=12 if (xs and d % 2 == 0) else None,
-                    incremental_extra_page=extra,
-                )
-                r = _pdf.extract_pdf_text(blob)
-                rows.append(
-                    (
-                        d,
-                        "\n\n".join(r["pages"]),
-                        sum(len(p) for p in r["pages"])
-                        + 2 * (len(r["pages"]) - 1),
-                        r["n_pages"], r["n_objects"], r["xref_kind"],
-                        r["has_objstm"], r["n_updates"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in ("n_chars", "n_pages", "n_objects", "n_updates"):
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        np_ = 1 + d % 3
+        upd = d % 4 == 1
+        xs = d % 3 != 0
+        blob = _pdf.encode_pdf(
+            [page_lines(d, p) for p in range(np_)],
+            compress=d % 2 == 0,
+            xref_stream=xs,
+            object_streams=xs and d % 4 >= 2,
+            hex_strings=d % 5 < 2,
+            xref_predictor=12 if (xs and d % 2 == 0) else None,
+            incremental_extra_page=page_lines(d, np_) if upd else None,
+        )
+        r = _pdf.extract_pdf_text(blob)
+        yield (
+            d,
+            "\n\n".join(r["pages"]),
+            sum(len(p) for p in r["pages"]) + 2 * (len(r["pages"]) - 1),
+            r["n_pages"], r["n_objects"], r["xref_kind"],
+            r["has_objstm"], r["n_updates"],
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1671,8 +1462,6 @@ def text_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     the detected charset and its source. The oracle states the decoded
     string closed-form; any sniffing-precedence drift flips the hash.
     Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import html as _html
@@ -1691,7 +1480,6 @@ def text_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_chars", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def make(d: int) -> tuple[bytes, str | None]:
         k = d % 6
@@ -1721,20 +1509,11 @@ def text_charset_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         return f"Doc {d} plain".encode(), None
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                body, ct = make(d)
-                text, charset, source = _html.decode_html_bytes(body, ct)
-                rows.append((d, text, charset, source, len(text)))
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["n_chars"] = out["n_chars"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        text, charset, source = _html.decode_html_bytes(*make(d))
+        yield d, text, charset, source, len(text)
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1787,7 +1566,6 @@ def text_html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only."""
     import json as _json
 
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1814,7 +1592,6 @@ def text_html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("img_alts", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def page(d: int) -> str:
         lang = ["en", "de", "fr"][d % 3]
@@ -1852,33 +1629,21 @@ def text_html_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"</head><body><h1>Doc {d}</h1>{imgs}</body></html>"
         )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                m = _html.extract_metadata(page(d))
-                assert "decoy" not in m["og"], "script decoy leaked"
-                ld = _json.loads(m["json_ld"][0]) if m["json_ld"] else {}
-                rows.append(
-                    (
-                        d, m["lang"], m["canonical"],
-                        m["og"].get("title"), m["og"].get("image"),
-                        m["og"].get("description"),
-                        m["meta"].get("description"),
-                        ld.get("@type"), ld.get("headline"),
-                        ld.get("wordCount"),
-                        len(m["images"]),
-                        "|".join(alt for _src, alt in m["images"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["ld_wordcount"] = out["ld_wordcount"].astype("int32")
-            out["n_images"] = out["n_images"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        m = _html.extract_metadata(page(d))
+        assert "decoy" not in m["og"], "script decoy leaked"
+        ld = _json.loads(m["json_ld"][0]) if m["json_ld"] else {}
+        yield (
+            d, m["lang"], m["canonical"],
+            m["og"].get("title"), m["og"].get("image"),
+            m["og"].get("description"),
+            m["meta"].get("description"),
+            ld.get("@type"), ld.get("headline"), ld.get("wordCount"),
+            len(m["images"]),
+            "|".join(alt for _src, alt in m["images"]),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1922,8 +1687,6 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle rebuilds the extracted text in SQL and measures it, so a
     drift ANYWHERE in the four-layer chain flips the hash. Map-only:
     archives never shuffle, only typed curation rows do."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import html as _html
@@ -1945,7 +1708,6 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("keep", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def page_html(d: int, i: int) -> bytes:
         return (
@@ -1956,45 +1718,29 @@ def pipeline_crawl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"<p>para-{d}-{i}-1 &amp; co</p></body></html>"
         ).encode()
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 2 + d % 3
-                recs = []
-                for i in range(n):
-                    body = page_html(d, i)
-                    status = 404 if (d + i) % 4 == 3 else 200
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://site-{d % 5}.com/{d}/{i}",
-                            "block": _warc.build_http_response(
-                                status, "X",
-                                [("Content-Type", "text/html")], body,
-                            ),
-                        }
-                    )
-                payload = _warc.make_warc(recs, gzip_records=True)
-                for i, r in enumerate(_warc.warc_responses(payload)):
-                    ex = _html.extract_html(r["body"].decode())
-                    rows.append(
-                        (
-                            d, i, r["uri"], r["status"], ex["title"],
-                            len(ex["text"]),
-                            r["status"] == 200 and len(ex["text"]) >= 30,
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("page_idx", "int32"),
-                ("status", "int32"), ("text_len", "int32"),
-            ):
-                out[c2] = out[c2].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        recs = []
+        for i in range(2 + d % 3):
+            status = 404 if (d + i) % 4 == 3 else 200
+            recs.append(
+                {
+                    "type": "response",
+                    "uri": f"http://site-{d % 5}.com/{d}/{i}",
+                    "block": _warc.build_http_response(
+                        status, "X",
+                        [("Content-Type", "text/html")], page_html(d, i),
+                    ),
+                }
+            )
+        payload = _warc.make_warc(recs, gzip_records=True)
+        for i, r in enumerate(_warc.warc_responses(payload)):
+            ex = _html.extract_html(r["body"].decode())
+            yield (
+                d, i, r["uri"], r["status"], ex["title"], len(ex["text"]),
+                r["status"] == 200 and len(ex["text"]) >= 30,
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2049,8 +1795,6 @@ def scan_warc_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
     servers layer them (chunks carry the COMPRESSED bytes). The oracle
     restates every uri/status/content-type/body closed-form; a framing
     or decoding slip flips the hash."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import warc as _warc
@@ -2074,66 +1818,40 @@ def scan_warc_responses(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("content_encoding", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     statuses = (200, 404, 301)
     codings = (None, "gzip", "deflate", "deflate-raw", "br", "zstd", None)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 3 + d % 4
-                gz = d % 2 == 1
-                recs = []
-                for i in range(n):
-                    body = f"body-{d}-{i}".encode()
-                    http = _warc.build_http_response(
-                        statuses[(d + i) % 3], "X",
-                        [
-                            (
-                                "Content-Type",
-                                "text/html" if i % 2 == 0 else "text/plain",
-                            )
-                        ],
-                        body,
-                        chunk_size=5 if (d + i) % 4 == 1 else None,
-                        content_encoding=codings[(d + 2 * i) % 7],
-                    )
-                    recs.append(
-                        {
-                            "type": "response",
-                            "uri": f"http://ex.com/{d}/{i}",
-                            "block": http,
-                        }
-                    )
-                    if i == 0:
-                        recs.append(
-                            {
-                                "type": "request",
-                                "uri": f"http://ex.com/{d}/0",
-                                "block": b"GET / HTTP/1.1\r\n\r\n",
-                            }
-                        )
-                payload = _warc.make_warc(recs, gzip_records=gz)
-                for i, r in enumerate(_warc.warc_responses(payload)):
-                    rows.append(
-                        (
-                            d, i, r["uri"], r["status"], r["content_type"],
-                            r["body"].decode(), len(r["body"]), gz,
-                            (d + i) % 4 == 1,
-                            r["headers"].get("content-encoding"),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("rec_idx", "int32"),
-                ("status", "int32"), ("body_len", "int32"),
-            ):
-                out[c2] = out[c2].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        gz = d % 2 == 1
+        recs = []
+        for i in range(3 + d % 4):
+            http = _warc.build_http_response(
+                statuses[(d + i) % 3], "X",
+                [("Content-Type", "text/html" if i % 2 == 0 else "text/plain")],
+                f"body-{d}-{i}".encode(),
+                chunk_size=5 if (d + i) % 4 == 1 else None,
+                content_encoding=codings[(d + 2 * i) % 7],
+            )
+            recs.append(
+                {"type": "response", "uri": f"http://ex.com/{d}/{i}", "block": http}
+            )
+            if i == 0:
+                recs.append(
+                    {
+                        "type": "request",
+                        "uri": f"http://ex.com/{d}/0",
+                        "block": b"GET / HTTP/1.1\r\n\r\n",
+                    }
+                )
+        payload = _warc.make_warc(recs, gzip_records=gz)
+        for i, r in enumerate(_warc.warc_responses(payload)):
+            yield (
+                d, i, r["uri"], r["status"], r["content_type"],
+                r["body"].decode(), len(r["body"]), gz, (d + i) % 4 == 1,
+                r["headers"].get("content-encoding"),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2189,8 +1907,6 @@ def scan_archive_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/codec.py) from frames encoded across compression
     levels. This is the first operator of every 'corpus ships as
     archives' ingest pipeline."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import archives as _ar
@@ -2216,98 +1932,80 @@ def scan_archive_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("wrapper", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 3 + d % 5
-                entries = [
-                    {
-                        "name": f"dir-{d % 3}/file-{i}.bin",
-                        "data": _cf_bytes(d + i, 7, 20 + (d + 3 * i) % 40),
-                    }
-                    for i in range(n)
-                ]
-                zip64 = False
-                streaming = False
-                wrapper = "none"
-                if d % 2 == 0:
-                    fmt = "tar"
-                    wrapper = ["none", "gzip", "xz", "bz2", "zstd",
-                               "snappy-framed"][(d // 2) % 6]
-                    blob = _ar.make_tar(entries)
-                    if wrapper == "gzip":
-                        import gzip as _gz
+    def rows_for_doc(d):
+        entries = [
+            {
+                "name": f"dir-{d % 3}/file-{i}.bin",
+                "data": _cf_bytes(d + i, 7, 20 + (d + 3 * i) % 40),
+            }
+            for i in range(3 + d % 5)
+        ]
+        zip64 = False
+        streaming = False
+        wrapper = "none"
+        if d % 2 == 0:
+            fmt = "tar"
+            wrapper = ["none", "gzip", "xz", "bz2", "zstd",
+                       "snappy-framed"][(d // 2) % 6]
+            blob = _ar.make_tar(entries)
+            if wrapper == "gzip":
+                import gzip as _gz
 
-                        blob = _gz.compress(blob)
-                    elif wrapper == "xz":
-                        import lzma as _lz
+                blob = _gz.compress(blob)
+            elif wrapper == "xz":
+                import lzma as _lz
 
-                        blob = _lz.compress(blob)
-                    elif wrapper == "bz2":
-                        import bz2 as _b2
+                blob = _lz.compress(blob)
+            elif wrapper == "bz2":
+                import bz2 as _b2
 
-                        blob = _b2.compress(blob)
-                    elif wrapper == "zstd":
-                        # pyarrow's bundled libzstd, encoded at a
-                        # level cycling with the doc id
-                        import pyarrow as _pa
+                blob = _b2.compress(blob)
+            elif wrapper == "zstd":
+                # pyarrow's bundled libzstd, encoded at a
+                # level cycling with the doc id
+                import pyarrow as _pa
 
-                        blob = _pa.Codec(
-                            "zstd", compression_level=1 + d % 19
-                        ).compress(blob, asbytes=True)
-                    elif wrapper == "snappy-framed":
-                        # r17: the .tar.sz form — snappy FRAMING
-                        # stream (chunked, masked-CRC32C) from
-                        # operators/snappy.py, both directions
-                        from pyiceberg_lakehouse_spark.operators.snappy import (  # noqa: E501
-                            frame_compress,
-                        )
+                blob = _pa.Codec(
+                    "zstd", compression_level=1 + d % 19
+                ).compress(blob, asbytes=True)
+            elif wrapper == "snappy-framed":
+                # the .tar.sz form — snappy FRAMING
+                # stream (chunked, masked-CRC32C) from
+                # operators/snappy.py, both directions
+                from pyiceberg_lakehouse_spark.operators.snappy import (
+                    frame_compress,
+                )
 
-                        blob = frame_compress(blob)
-                    unwrapped, got_codec = _ar.decompress_auto(blob)
-                    assert got_codec == wrapper, (got_codec, wrapper)
-                    parsed = _ar.parse_tar(unwrapped)
-                    deflated = False
-                else:
-                    fmt = "zip"
-                    method = 0 if d % 3 == 0 else 8
-                    zip64 = d % 7 >= 4
-                    streaming = not zip64 and d % 11 < 4
-                    encrypted = (
-                        not zip64 and not streaming and d % 13 < 5
-                    )
-                    pw = b"pw-%d" % d if encrypted else None
-                    parsed = _ar.parse_zip(
-                        _ar.make_zip(
-                            entries, method=method, zip64=zip64,
-                            streaming=streaming, password=pw,
-                        ),
-                        password=pw,
-                    )
-                    deflated = method == 8
-                for i, e in enumerate(parsed):
-                    rows.append(
-                        (
-                            d, fmt, i, e["name"],
-                            len(e["data"]), sum(e["data"]), deflated,
-                            zip64, streaming,
-                            fmt == "zip" and bool(e.get("encrypted")),
-                            wrapper,
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("entry_idx", "int32"),
-                ("size_bytes", "int32"), ("byte_sum", "int64"),
-            ):
-                out[c2] = out[c2].astype(dt)
-            yield out
+                blob = frame_compress(blob)
+            unwrapped, got_codec = _ar.decompress_auto(blob)
+            assert got_codec == wrapper, (got_codec, wrapper)
+            parsed = _ar.parse_tar(unwrapped)
+            deflated = False
+        else:
+            fmt = "zip"
+            method = 0 if d % 3 == 0 else 8
+            zip64 = d % 7 >= 4
+            streaming = not zip64 and d % 11 < 4
+            encrypted = not zip64 and not streaming and d % 13 < 5
+            pw = b"pw-%d" % d if encrypted else None
+            parsed = _ar.parse_zip(
+                _ar.make_zip(
+                    entries, method=method, zip64=zip64,
+                    streaming=streaming, password=pw,
+                ),
+                password=pw,
+            )
+            deflated = method == 8
+        for i, e in enumerate(parsed):
+            yield (
+                d, fmt, i, e["name"], len(e["data"]), sum(e["data"]),
+                deflated, zip64, streaming,
+                fmt == "zip" and bool(e.get("encrypted")),
+                wrapper,
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2370,7 +2068,6 @@ def text_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     every image, and report per-image pixel statistics the oracle
     restates closed-form. Arrow-batched mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -2394,91 +2091,66 @@ def text_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf_batch in it:
-            rows = []
-            for doc_id in pdf_batch["doc_id"]:
-                d = int(doc_id)
-                npages = 1 + d % 2
-                images: dict[int, list[dict]] = {}
-                planted: dict[tuple[int, int], tuple] = {}
-                for pg in range(npages):
-                    specs = []
-                    for i in range((d + pg) % 2 + 1):
-                        w = 9 + (d + 2 * pg) % 12
-                        h = 6 + (d + 3 * i) % 9
-                        codec = ("g4", "g3", "flate", "raw")[
-                            (d + 2 * pg + i) % 4
-                        ]
-                        if codec in ("g4", "g3"):
-                            y, x = np.ogrid[0:h, 0:w]
-                            bits = ((d + pg + 3 * x + 5 * y) % 2).astype(
-                                np.uint8
-                            )
-                            data = np.packbits(bits, axis=1).tobytes()
-                            specs.append(
-                                {
-                                    "width": w, "height": h, "codec": codec,
-                                    "data": data,
-                                    "blackis1": (d + pg + i) % 3 != 0,
-                                }
-                            )
-                            planted[(pg, i)] = (codec, bits)
-                        else:
-                            data = bytes(
-                                (d * 7 + 13 * pg + 11 * j) % 256
-                                for j in range(w * h)
-                            )
-                            specs.append(
-                                {
-                                    "width": w, "height": h,
-                                    "codec": codec, "data": data,
-                                }
-                            )
-                            planted[(pg, i)] = (codec, data)
-                    images[pg] = specs
-                blob = _pdf.encode_pdf(
-                    [[f"scan {d} page {pg}"] for pg in range(npages)],
-                    compress=d % 2 == 0,
-                    xref_stream=d % 3 == 0,
-                    images=images,
-                )
-                for im in _pdf.extract_pdf_images(blob):
-                    pg, name = im["page"], im["name"]
-                    i = int(name[2:])  # Im0 / Im1
-                    codec, want = planted[(pg, i)]
-                    if codec in ("g4", "g3"):
-                        rb = (im["width"] + 7) // 8
-                        got = np.unpackbits(
-                            np.frombuffer(
-                                im["pixels"], dtype=np.uint8
-                            ).reshape(im["height"], rb),
-                            axis=1,
-                        )[:, : im["width"]]
-                        value = int(got.sum())
-                        exact = bool((got == want).all())
-                    else:
-                        value = sum(im["pixels"])
-                        exact = im["pixels"] == want
-                    rows.append(
-                        (
-                            d, pg, i, im["width"], im["height"], im["bpc"],
-                            im["filter"], value, exact,
-                        )
+    def rows_for_doc(d):
+        npages = 1 + d % 2
+        images: dict[int, list[dict]] = {}
+        planted: dict[tuple[int, int], tuple] = {}
+        for pg in range(npages):
+            specs = []
+            for i in range((d + pg) % 2 + 1):
+                w = 9 + (d + 2 * pg) % 12
+                h = 6 + (d + 3 * i) % 9
+                codec = ("g4", "g3", "flate", "raw")[(d + 2 * pg + i) % 4]
+                if codec in ("g4", "g3"):
+                    y, x = np.ogrid[0:h, 0:w]
+                    bits = ((d + pg + 3 * x + 5 * y) % 2).astype(np.uint8)
+                    specs.append(
+                        {
+                            "width": w, "height": h, "codec": codec,
+                            "data": np.packbits(bits, axis=1).tobytes(),
+                            "blackis1": (d + pg + i) % 3 != 0,
+                        }
                     )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("page", "int32"),
-                ("img_idx", "int32"), ("width", "int32"),
-                ("height", "int32"), ("bpc", "int32"),
-                ("value_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+                    planted[(pg, i)] = (codec, bits)
+                else:
+                    data = bytes(
+                        (d * 7 + 13 * pg + 11 * j) % 256 for j in range(w * h)
+                    )
+                    specs.append(
+                        {"width": w, "height": h, "codec": codec, "data": data}
+                    )
+                    planted[(pg, i)] = (codec, data)
+            images[pg] = specs
+        blob = _pdf.encode_pdf(
+            [[f"scan {d} page {pg}"] for pg in range(npages)],
+            compress=d % 2 == 0,
+            xref_stream=d % 3 == 0,
+            images=images,
+        )
+        for im in _pdf.extract_pdf_images(blob):
+            pg, name = im["page"], im["name"]
+            i = int(name[2:])  # Im0 / Im1
+            codec, want = planted[(pg, i)]
+            if codec in ("g4", "g3"):
+                rb = (im["width"] + 7) // 8
+                got = np.unpackbits(
+                    np.frombuffer(im["pixels"], dtype=np.uint8).reshape(
+                        im["height"], rb
+                    ),
+                    axis=1,
+                )[:, : im["width"]]
+                value = int(got.sum())
+                exact = bool((got == want).all())
+            else:
+                value = sum(im["pixels"])
+                exact = im["pixels"] == want
+            yield (
+                d, pg, i, im["width"], im["height"], im["bpc"], im["filter"],
+                value, exact,
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2529,8 +2201,6 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back with the strict decoder, and emit one row per record with the
     collection features flattened to scalars. The oracle restates every
     value closed-form. Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import avro as _avro
@@ -2554,7 +2224,6 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_blocks", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     avro_schema = {
         "type": "record", "name": "Doc", "fields": [
             {"name": "id", "type": "long"},
@@ -2569,55 +2238,31 @@ def scan_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     }
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 2 + d % 4
-                recs = []
-                for r in range(n):
-                    recs.append(
-                        {
-                            "id": d * 100 + r,
-                            "name": f"name-{d}-{r}",
-                            "score": (
-                                None if (d + r) % 3 == 0
-                                else (d % 97) * 0.5 + r
-                            ),
-                            "tags": [f"t{j}" for j in range((d + r) % 4)],
-                            "status": ("NEW", "OK", "BAD")[(d + 2 * r) % 3],
-                            "attrs": {
-                                f"k{j}": (d + r + j) % 11
-                                for j in range((d + r) % 3)
-                            },
-                        }
-                    )
-                codec = ("null", "deflate", "snappy", "bzip2", "xz",
-                         "zstandard")[d % 6]
-                blob = _avro.encode_avro(
-                    recs, avro_schema, codec=codec,
-                    block_records=3 if d % 3 == 0 else 0,
-                )
-                out = _avro.decode_avro(blob)
-                assert out["codec"] == codec
-                for r, rec in enumerate(out["records"]):
-                    rows.append(
-                        (
-                            d, r, rec["id"], rec["name"], rec["score"],
-                            len(rec["tags"]), rec["status"],
-                            sum(rec["attrs"].values()), codec,
-                            out["n_blocks"],
-                        )
-                    )
-            out_pdf = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("rec_idx", "int32"), ("id", "int64"),
-                ("n_tags", "int32"), ("attr_sum", "int64"),
-                ("n_blocks", "int32"),
-            ):
-                out_pdf[cname] = out_pdf[cname].astype(dt)
-            out_pdf["score"] = out_pdf["score"].astype("float64")
-            yield out_pdf
+    def rows_for_doc(d):
+        recs = [
+            {
+                "id": d * 100 + r,
+                "name": f"name-{d}-{r}",
+                "score": None if (d + r) % 3 == 0 else (d % 97) * 0.5 + r,
+                "tags": [f"t{j}" for j in range((d + r) % 4)],
+                "status": ("NEW", "OK", "BAD")[(d + 2 * r) % 3],
+                "attrs": {f"k{j}": (d + r + j) % 11 for j in range((d + r) % 3)},
+            }
+            for r in range(2 + d % 4)
+        ]
+        codec = ("null", "deflate", "snappy", "bzip2", "xz", "zstandard")[d % 6]
+        out = _avro.decode_avro(
+            _avro.encode_avro(
+                recs, avro_schema, codec=codec,
+                block_records=3 if d % 3 == 0 else 0,
+            )
+        )
+        assert out["codec"] == codec
+        for r, rec in enumerate(out["records"]):
+            yield (
+                d, r, rec["id"], rec["name"], rec["score"], len(rec["tags"]),
+                rec["status"], sum(rec["attrs"].values()), codec,
+                out["n_blocks"],
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)

@@ -3,6 +3,10 @@
 Moved verbatim out of operators/queries.py in the round-15 pure-move
 split (VERDICT r14 task #6) — no semantic changes; the registry imports
 all three modules, so query names and behavior are identical.
+
+Each per-document query is a row generator, ``rows_for_doc(doc_id)``,
+plus its output ``StructType``, run through ``localdf.map_docs``: the
+helper fans the doc ids out and the declared schema types the output.
 """
 
 from __future__ import annotations
@@ -10,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyiceberg_lakehouse_spark.localdf import spread_ids
+from pyiceberg_lakehouse_spark.localdf import map_docs
 
 from pyiceberg_lakehouse_spark.operators import multimodal
 from pyiceberg_lakehouse_spark.registry import register
@@ -166,7 +170,6 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     and decode happen where the (synthesized) bytes live, only typed
     features shuffle."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -186,35 +189,16 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "width", "height", "channels",
-                                    "filter_type", "value_sum")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 3 + d % 6, 2 + d % 4
-                ch = (1, 3, 4)[d % 3]
-                y, x, c = np.ogrid[0:h, 0:w, 0:ch]
-                px = ((d * 31 + y * 7 + x * 3 + c * 11) % 256).astype(np.uint8)
-                payload = multimodal.encode_png(px, filter_type=d % 5)
-                out = multimodal.decode_png(payload)
-                rows["doc_id"].append(d)
-                rows["width"].append(out.shape[1])
-                rows["height"].append(out.shape[0])
-                rows["channels"].append(out.shape[2])
-                rows["filter_type"].append(d % 5)
-                rows["value_sum"].append(int(out.astype(np.int64).sum()))
-            yield pd.DataFrame(rows)
+    def rows_for_doc(d):
+        w, h = 3 + d % 6, 2 + d % 4
+        ch = (1, 3, 4)[d % 3]
+        y, x, c = np.ogrid[0:h, 0:w, 0:ch]
+        px = ((d * 31 + y * 7 + x * 3 + c * 11) % 256).astype(np.uint8)
+        out = multimodal.decode_png(multimodal.encode_png(px, filter_type=d % 5))
+        h, w, ch = out.shape
+        yield d, w, h, ch, d % 5, int(out.astype(np.int64).sum())
 
-    out = spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
-    return out.select(
-        "doc_id",
-        F.col("width").cast("int"),
-        F.col("height").cast("int"),
-        F.col("channels").cast("int"),
-        F.col("filter_type").cast("int"),
-        F.col("value_sum").cast("long"),
-    )
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 # JPEG is lossy, so unlike PNG the decoded pixel SUM has no closed form —
@@ -244,7 +228,6 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel-error flag pins the lossy path against a generous ceiling (mean
     abs error < 20 — measured ~6 on worst-case uniform noise)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -265,35 +248,21 @@ def multimodal_jpeg_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "n_components", "err_within_bound")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 3 + d % 6, 2 + d % 4
-                if d % 2 == 0:
-                    y, x = np.ogrid[0:h, 0:w]
-                    px = ((d * 37 + y * 11 + x * 5) % 256).astype(np.uint8)
-                else:
-                    y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                    px = ((d * 37 + y * 11 + x * 5 + c * 3) % 256).astype(
-                        np.uint8
-                    )
-                payload = _jpeg.encode_jpeg(px, quality=90)
-                pw, ph, ncomp = _jpeg.jpeg_header(payload)
-                out = _jpeg.decode_jpeg(payload)
-                err = float(
-                    np.abs(out.astype(np.int64) - px.astype(np.int64)).mean()
-                )
-                rows["doc_id"].append(d)
-                rows["width"].append(pw)
-                rows["height"].append(ph)
-                rows["n_components"].append(ncomp)
-                rows["err_within_bound"].append(bool(err < 20.0))
-            yield pd.DataFrame(rows)
+    def rows_for_doc(d):
+        w, h = 3 + d % 6, 2 + d % 4
+        if d % 2 == 0:
+            y, x = np.ogrid[0:h, 0:w]
+            px = ((d * 37 + y * 11 + x * 5) % 256).astype(np.uint8)
+        else:
+            y, x, c = np.ogrid[0:h, 0:w, 0:3]
+            px = ((d * 37 + y * 11 + x * 5 + c * 3) % 256).astype(np.uint8)
+        payload = _jpeg.encode_jpeg(px, quality=90)
+        pw, ph, ncomp = _jpeg.jpeg_header(payload)
+        out = _jpeg.decode_jpeg(payload)
+        err = float(np.abs(out.astype(np.int64) - px.astype(np.int64)).mean())
+        yield d, pw, ph, ncomp, err < 20.0
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 # chroma-subsampled JPEG: dims and the declared sampling scheme are
@@ -322,11 +291,11 @@ def multimodal_jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error bound (mean abs error < 20; measured ~2-5 on
     these gradients)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import jpeg as _jpeg
+    from pyiceberg_lakehouse_spark.operators import jpeg_progressive as _prog
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -344,44 +313,29 @@ def multimodal_jpeg_subsampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        from pyiceberg_lakehouse_spark.operators import jpeg_progressive as _prog
+    def rows_for_doc(d):
+        w, h = 10 + d % 9, 9 + d % 7
+        ss = "4:2:0" if d % 2 == 1 else "4:2:2"
+        y, x = np.mgrid[0:h, 0:w]
+        px = np.stack(
+            [
+                128 + 60 * np.sin((y + d % 13) / 9.0) * np.cos(x / 7.0),
+                128 + 50 * np.cos((x + d % 7) / 8.0),
+                128 + 55 * np.sin((y + x) / 11.0),
+            ],
+            axis=-1,
+        ).clip(0, 255).astype(np.uint8)
+        payload = _jpeg.encode_jpeg(px, quality=92, subsampling=ss)
+        pw, ph, _nc = _jpeg.jpeg_header(payload)
+        out = _jpeg.decode_jpeg(payload)
+        err = float(np.abs(out.astype(np.int64) - px.astype(np.int64)).mean())
+        pp = _prog.encode_progressive(px, quality=92, subsampling=ss)
+        yield (
+            d, pw, ph, _jpeg.jpeg_sampling(payload), err < 20.0,
+            bool(np.array_equal(_prog.decode_progressive(pp), out)),
+        )
 
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "sampling", "err_within_bound",
-                                    "prog_matches_baseline")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 10 + d % 9, 9 + d % 7
-                ss = "4:2:0" if d % 2 == 1 else "4:2:2"
-                y, x = np.mgrid[0:h, 0:w]
-                px = np.stack(
-                    [
-                        128 + 60 * np.sin((y + d % 13) / 9.0) * np.cos(x / 7.0),
-                        128 + 50 * np.cos((x + d % 7) / 8.0),
-                        128 + 55 * np.sin((y + x) / 11.0),
-                    ],
-                    axis=-1,
-                ).clip(0, 255).astype(np.uint8)
-                payload = _jpeg.encode_jpeg(px, quality=92, subsampling=ss)
-                pw, ph, _nc = _jpeg.jpeg_header(payload)
-                out = _jpeg.decode_jpeg(payload)
-                err = float(
-                    np.abs(out.astype(np.int64) - px.astype(np.int64)).mean()
-                )
-                rows["doc_id"].append(d)
-                rows["width"].append(pw)
-                rows["height"].append(ph)
-                rows["sampling"].append(_jpeg.jpeg_sampling(payload))
-                rows["err_within_bound"].append(bool(err < 20.0))
-                pp = _prog.encode_progressive(px, quality=92, subsampling=ss)
-                rows["prog_matches_baseline"].append(
-                    bool(np.array_equal(_prog.decode_progressive(pp), out))
-                )
-            yield pd.DataFrame(rows)
-
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -742,8 +696,6 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     codec. Arrow-batched mapInPandas: audio bytes never shuffle, only
     typed features do. Rice method 1 and variable-blocksize streams
     stay honestly gated (tests pin the refusals)."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import flac as _flac
@@ -768,7 +720,6 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("subframe_types", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def wave(d: int, n: int, c: int, a: int, b: int, scale: int):
         return [
@@ -776,68 +727,51 @@ def multimodal_flac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in range(n)
         ]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 96 + (d % 5) * 32
-                nch = 1 + d % 2
-                scale = 2 if d % 6 == 5 else 1
-                chans = [wave(d, n, d % 256 - 128, 7, 3, scale)]
-                if nch == 2:
-                    chans.append(
-                        wave(d, n, (3 * d) % 256 - 128, 5, 11, scale)
-                    )
-                mode = (
-                    ["independent", "left_side", "right_side", "mid_side"][
-                        ((d - 1) // 2) % 4
-                    ]
-                    if nch == 2
-                    else "independent"
-                )
-                if d % 7 == 0:
-                    sub = "verbatim"
-                elif d % 11 == 0:
-                    sub = "constant"
-                elif d % 3 == 0:
-                    sub = "lpc"
-                else:
-                    sub = "fixed"
-                blob = _flac.encode_flac(
-                    chans,
-                    stereo_mode=mode,
-                    subframe=sub,
-                    fixed_order=d % 5,
-                    lpc_coeffs=[3, -2],
-                    lpc_shift=1,
-                    part_order=d % 3,
-                    rice_param=5 + d % 4,
-                    escape_rawbits=18 if d % 9 == 4 else None,
-                    tags={"TITLE": f"doc {d}"},
-                )
-                got, meta = _flac.decode_flac(blob)
-                rows.append(
-                    (
-                        d, meta["total_samples"], meta["channels"],
-                        meta["bits"], meta["sample_rate"],
-                        meta["n_frames"], meta["md5_match"],
-                        sum(sum(ch) for ch in got),
-                        meta["tags"].get("title"),
-                        ",".join(meta["stereo_modes"]),
-                        ",".join(meta["subframe_types"]),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in (
-                "n_samples", "channels", "bits", "sample_rate", "n_frames",
-            ):
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["sample_sum"] = out["sample_sum"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        n = 96 + (d % 5) * 32
+        nch = 1 + d % 2
+        scale = 2 if d % 6 == 5 else 1
+        chans = [wave(d, n, d % 256 - 128, 7, 3, scale)]
+        if nch == 2:
+            chans.append(wave(d, n, (3 * d) % 256 - 128, 5, 11, scale))
+        mode = (
+            ["independent", "left_side", "right_side", "mid_side"][
+                ((d - 1) // 2) % 4
+            ]
+            if nch == 2
+            else "independent"
+        )
+        if d % 7 == 0:
+            sub = "verbatim"
+        elif d % 11 == 0:
+            sub = "constant"
+        elif d % 3 == 0:
+            sub = "lpc"
+        else:
+            sub = "fixed"
+        blob = _flac.encode_flac(
+            chans,
+            stereo_mode=mode,
+            subframe=sub,
+            fixed_order=d % 5,
+            lpc_coeffs=[3, -2],
+            lpc_shift=1,
+            part_order=d % 3,
+            rice_param=5 + d % 4,
+            escape_rawbits=18 if d % 9 == 4 else None,
+            tags={"TITLE": f"doc {d}"},
+        )
+        got, meta = _flac.decode_flac(blob)
+        yield (
+            d, meta["total_samples"], meta["channels"], meta["bits"],
+            meta["sample_rate"], meta["n_frames"], meta["md5_match"],
+            sum(sum(ch) for ch in got),
+            meta["tags"].get("title"),
+            ",".join(meta["stereo_modes"]),
+            ",".join(meta["subframe_types"]),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 _IMA_STEPS_SQL = (
@@ -990,7 +924,6 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     animated GIFs (disposal/transparency) stays honestly out of scope —
     frames decode raw with their geometry."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1013,43 +946,18 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        cols = [
-            "doc_id", "width", "height", "n_colors", "interlaced",
-            "value_sum", "exact_roundtrip",
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 5 + d % 8, 4 + d % 6
-                nc = (4, 16, 64)[d % 3]
-                interlace = d % 2 == 1
-                y, x = np.ogrid[0:h, 0:w]
-                px = (d * 7 + y * 5 + x * 3) % nc
-                enc = _gif.encode_gif(px, interlace=interlace)
-                dec = _gif.decode_gif(enc)
-                f = dec["frames"][0]
-                rows.append(
-                    (
-                        d, w, h, nc, f["interlace"],
-                        int(f["indices"].sum()),
-                        bool(
-                            f["indices"].shape == px.shape
-                            and (f["indices"] == px).all()
-                        ),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("n_colors", "int32"), ("interlaced", "bool"),
-                ("value_sum", "int64"), ("exact_roundtrip", "bool"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 5 + d % 8, 4 + d % 6
+        nc = (4, 16, 64)[d % 3]
+        y, x = np.ogrid[0:h, 0:w]
+        px = (d * 7 + y * 5 + x * 3) % nc
+        f = _gif.decode_gif(_gif.encode_gif(px, interlace=d % 2 == 1))["frames"][0]
+        yield (
+            d, w, h, nc, f["interlace"], int(f["indices"].sum()),
+            bool(f["indices"].shape == px.shape and (f["indices"] == px).all()),
+        )
 
-    return spread_ids(docs, max_width=8, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir, max_width=8)
 
 
 @register(
@@ -1111,7 +1019,6 @@ def multimodal_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     splice did not break the pixel decoder (markers skip by length).
     The oracle restates every field closed-form from doc_id."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1142,66 +1049,47 @@ def multimodal_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("still_decodes", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                px = ((d + np.arange(64).reshape(8, 8) * 3) % 256).astype(
-                    np.uint8
-                )
-                gps = None
-                if d % 4 != 3:
-                    gps = {
-                        "lat": (
-                            d % 90, d % 60, (37 * d) % 6000,
-                            "N" if d % 2 == 0 else "S",
-                        ),
-                        "lon": (
-                            d % 180, (3 * d) % 60, (53 * d) % 6000,
-                            "W" if d % 3 == 0 else "E",
-                        ),
-                        "alt": (d % 9000, 10) if d % 5 < 3 else None,
-                    }
-                tagged = _exif.insert_app1(
-                    _jpeg.encode_jpeg(px),
-                    _exif.build_exif_app1(
-                        orientation=1 + d % 8,
-                        make=f"cam-{d % 5}",
-                        model=f"model-{d % 11}",
-                        datetime=f"2020:01:{1 + d % 28:02d} 12:00:00",
-                        iso=100 + (d % 8) * 50,
-                        exposure=(1, 60 + d % 200),
-                        pixel_xy=(8, 8),
-                        big_endian=d % 2 == 1,
-                        gps=gps,
-                    ),
-                )
-                m = _exif.parse_exif(tagged)
-                decoded = _jpeg.decode_jpeg(tagged)
-                rows.append(
-                    (
-                        d, m["orientation"], m["make"], m["model"],
-                        m["datetime"], m["iso"],
-                        m["exposure"][0], m["exposure"][1],
-                        m["pixel_x"], m["pixel_y"], m["big_endian"],
-                        m.get("gps_lat"), m.get("gps_lon"),
-                        m.get("gps_alt"),
-                        bool(decoded.shape == (8, 8)),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in (
-                "orientation", "iso", "exposure_num", "exposure_den",
-                "pixel_x", "pixel_y",
-            ):
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        px = ((d + np.arange(64).reshape(8, 8) * 3) % 256).astype(np.uint8)
+        gps = None
+        if d % 4 != 3:
+            gps = {
+                "lat": (
+                    d % 90, d % 60, (37 * d) % 6000,
+                    "N" if d % 2 == 0 else "S",
+                ),
+                "lon": (
+                    d % 180, (3 * d) % 60, (53 * d) % 6000,
+                    "W" if d % 3 == 0 else "E",
+                ),
+                "alt": (d % 9000, 10) if d % 5 < 3 else None,
+            }
+        tagged = _exif.insert_app1(
+            _jpeg.encode_jpeg(px),
+            _exif.build_exif_app1(
+                orientation=1 + d % 8,
+                make=f"cam-{d % 5}",
+                model=f"model-{d % 11}",
+                datetime=f"2020:01:{1 + d % 28:02d} 12:00:00",
+                iso=100 + (d % 8) * 50,
+                exposure=(1, 60 + d % 200),
+                pixel_xy=(8, 8),
+                big_endian=d % 2 == 1,
+                gps=gps,
+            ),
+        )
+        m = _exif.parse_exif(tagged)
+        decoded = _jpeg.decode_jpeg(tagged)
+        yield (
+            d, m["orientation"], m["make"], m["model"], m["datetime"],
+            m["iso"], m["exposure"][0], m["exposure"][1],
+            m["pixel_x"], m["pixel_y"], m["big_endian"],
+            m.get("gps_lat"), m.get("gps_lon"), m.get("gps_alt"),
+            decoded.shape == (8, 8),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1248,7 +1136,6 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     scanned-document ingest path of an OCR corpus; LZW/tiles/planar-2
     stay honestly gated (tests pin the refusals)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1272,47 +1159,29 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 6 + d % 9, 5 + d % 7
-                ch = 1 + 2 * (d % 2)
-                c = np.arange(ch)
-                y, x = np.ogrid[0:h, 0:w]
-                px = (
-                    (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                enc = _tiff.encode_tiff(
-                    px,
-                    big_endian=d % 4 >= 2,
-                    compression=1 if d % 3 == 0 else 32773,
-                    rows_per_strip=2 + d % 3,
-                )
-                got, meta = _tiff.decode_tiff(enc)
-                rows.append(
-                    (
-                        d, meta["width"], meta["height"], meta["channels"],
-                        meta["big_endian"], meta["compression"],
-                        meta["n_strips"],
-                        int(got.astype(np.int64).sum()),
-                        bool(got.shape == px.shape and (got == px).all()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("channels", "int32"), ("compression", "int32"),
-                ("n_strips", "int32"), ("value_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 6 + d % 9, 5 + d % 7
+        c = np.arange(1 + 2 * (d % 2))
+        y, x = np.ogrid[0:h, 0:w]
+        px = (
+            (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c) % 256
+        ).astype(np.uint8)
+        enc = _tiff.encode_tiff(
+            px,
+            big_endian=d % 4 >= 2,
+            compression=1 if d % 3 == 0 else 32773,
+            rows_per_strip=2 + d % 3,
+        )
+        got, meta = _tiff.decode_tiff(enc)
+        yield (
+            d, meta["width"], meta["height"], meta["channels"],
+            meta["big_endian"], meta["compression"], meta["n_strips"],
+            int(got.astype(np.int64).sum()),
+            bool(got.shape == px.shape and (got == px).all()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1364,7 +1233,6 @@ def multimodal_tiff_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
     CCITT/JPEG-in-TIFF/tiles stay honestly gated (tests pin the
     refusals)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1388,48 +1256,30 @@ def multimodal_tiff_lzw(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 6 + d % 9, 5 + d % 7
-                ch = 1 + 2 * (d % 2)
-                c = np.arange(ch)
-                y, x = np.ogrid[0:h, 0:w]
-                px = (
-                    (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                enc = _tiff.encode_tiff(
-                    px,
-                    big_endian=d % 4 >= 2,
-                    compression=5,
-                    rows_per_strip=2 + d % 5,
-                    predictor=1 if d % 3 == 0 else 2,
-                )
-                got, meta = _tiff.decode_tiff(enc)
-                rows.append(
-                    (
-                        d, meta["width"], meta["height"], meta["channels"],
-                        meta["big_endian"], meta["predictor"],
-                        meta["n_strips"],
-                        int(got.astype(np.int64).sum()),
-                        bool(got.shape == px.shape and (got == px).all()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("channels", "int32"), ("predictor", "int32"),
-                ("n_strips", "int32"), ("value_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 6 + d % 9, 5 + d % 7
+        c = np.arange(1 + 2 * (d % 2))
+        y, x = np.ogrid[0:h, 0:w]
+        px = (
+            (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c) % 256
+        ).astype(np.uint8)
+        enc = _tiff.encode_tiff(
+            px,
+            big_endian=d % 4 >= 2,
+            compression=5,
+            rows_per_strip=2 + d % 5,
+            predictor=1 if d % 3 == 0 else 2,
+        )
+        got, meta = _tiff.decode_tiff(enc)
+        yield (
+            d, meta["width"], meta["height"], meta["channels"],
+            meta["big_endian"], meta["predictor"], meta["n_strips"],
+            int(got.astype(np.int64).sum()),
+            bool(got.shape == px.shape and (got == px).all()),
+        )
 
-    return spread_ids(docs, max_width=8, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir, max_width=8)
 
 
 @register(
@@ -1488,7 +1338,6 @@ def multimodal_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched mapInPandas: codec work happens where the bytes
     live, only typed features shuffle."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1513,51 +1362,32 @@ def multimodal_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 17 + d % 23, 14 + d % 19
-                ch = 1 + 2 * (d % 2)
-                c = np.arange(ch)
-                y, x = np.ogrid[0:h, 0:w]
-                px = (
-                    (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c)
-                    % 256
-                ).astype(np.uint8)
-                tw = 32 if d % 3 == 1 else 16
-                tl = 32 if d % 3 == 2 else 16
-                enc = _tiff.encode_tiff(
-                    px,
-                    big_endian=d % 7 < 4,
-                    compression=[1, 5, 8, 32773][d % 4],
-                    predictor=2 if d % 5 < 3 else 1,
-                    tile=(tw, tl),
-                )
-                got, meta = _tiff.decode_tiff(enc)
-                rows.append(
-                    (
-                        d, meta["width"], meta["height"], meta["channels"],
-                        meta["big_endian"], meta["compression"],
-                        meta["predictor"], meta["n_tiles"],
-                        int(got.astype(np.int64).sum()),
-                        bool(got.shape == px.shape and (got == px).all()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("channels", "int32"), ("compression", "int32"),
-                ("predictor", "int32"), ("n_tiles", "int32"),
-                ("value_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 17 + d % 23, 14 + d % 19
+        c = np.arange(1 + 2 * (d % 2))
+        y, x = np.ogrid[0:h, 0:w]
+        px = (
+            (d + 3 * x[:, :, None] + 5 * y[:, :, None] + 7 * c) % 256
+        ).astype(np.uint8)
+        tw = 32 if d % 3 == 1 else 16
+        tl = 32 if d % 3 == 2 else 16
+        enc = _tiff.encode_tiff(
+            px,
+            big_endian=d % 7 < 4,
+            compression=[1, 5, 8, 32773][d % 4],
+            predictor=2 if d % 5 < 3 else 1,
+            tile=(tw, tl),
+        )
+        got, meta = _tiff.decode_tiff(enc)
+        yield (
+            d, meta["width"], meta["height"], meta["channels"],
+            meta["big_endian"], meta["compression"], meta["predictor"],
+            meta["n_tiles"], int(got.astype(np.int64).sum()),
+            bool(got.shape == px.shape and (got == px).all()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1602,8 +1432,9 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle restates boundary positions from the shot-length arithmetic
     and the exact 51-per-channel-pixel cut energy. Arrow-batched
     mapInPandas, map-only."""
+    import struct
+
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1621,52 +1452,34 @@ def multimodal_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_frames", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ns = 2 + d % 3
-                w, h = 8 + d % 5, 6 + d % 4
-                lengths = [4 + (d + s) % 3 for s in range(ns)]
-                n = sum(lengths)
-                frames = bytearray()
-                f_global = 0
-                for s, ln in enumerate(lengths):
-                    for _ in range(ln):
-                        v = (10 + 50 * s + f_global) % 256
-                        frames += bytes([v]) * (w * h * 3)
-                        f_global += 1
-                import struct as _st
+    def rows_for_doc(d):
+        ns = 2 + d % 3
+        w, h = 8 + d % 5, 6 + d % 4
+        lengths = [4 + (d + s) % 3 for s in range(ns)]
+        n = sum(lengths)
+        frames = bytearray()
+        f_global = 0
+        for s, ln in enumerate(lengths):
+            for _ in range(ln):
+                v = (10 + 50 * s + f_global) % 256
+                frames += bytes([v]) * (w * h * 3)
+                f_global += 1
+        clip = struct.pack("<4sHHHH", b"RVID", w, h, n, 8) + bytes(frames)
+        # decode every frame and detect boundaries
+        prev = None
+        thresh = 10 * w * h * 3
+        k = 0
+        for f in range(n):
+            fr = multimodal._rawvid_frame(clip, f).astype(np.int64)
+            if prev is not None:
+                energy = int(np.abs(fr - prev).sum())
+                if energy > thresh:
+                    yield d, k, f, energy, n
+                    k += 1
+            prev = fr
 
-                clip = _st.pack(
-                    "<4sHHHH", b"RVID", w, h, n, 8
-                ) + bytes(frames)
-                # decode every frame and detect boundaries
-                prev = None
-                thresh = 10 * w * h * 3
-                cuts = []
-                for f in range(n):
-                    fr = multimodal._rawvid_frame(clip, f).astype(
-                        np.int64
-                    )
-                    if prev is not None:
-                        energy = int(np.abs(fr - prev).sum())
-                        if energy > thresh:
-                            cuts.append((f, energy))
-                    prev = fr
-                for k, (f, energy) in enumerate(cuts):
-                    rows.append((d, k, f, energy, n))
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["diff_energy"] = out["diff_energy"].astype("int64")
-            for cname in ("cut_idx", "frame_idx", "n_frames"):
-                out[cname] = out[cname].astype("int32")
-            yield out
-
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1721,7 +1534,6 @@ def multimodal_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     every integer closed-form — the audio_quality sibling for the
     image pipeline. Arrow-batched mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1743,36 +1555,18 @@ def multimodal_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("n_bright", T.IntegerType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 12 + d % 9, 9 + d % 7
-                y, x = np.ogrid[0:h, 0:w]
-                px = ((d + 11 * x + 5 * y) % 256).astype(np.uint8)
-                got = multimodal.decode_png(multimodal.encode_png(px))
-                a = got.astype(np.int64)
-                rows.append(
-                    (
-                        d, w, h, int(a.sum()), int((a * a).sum()),
-                        int(a.min()), int(a.max()),
-                        int((a < 16).sum()), int((a >= 240).sum()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            for cname in ("value_sum", "value_sum_sq"):
-                out[cname] = out[cname].astype("int64")
-            for cname in (
-                "width", "height", "v_min", "v_max", "n_dark", "n_bright",
-            ):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        w, h = 12 + d % 9, 9 + d % 7
+        y, x = np.ogrid[0:h, 0:w]
+        px = ((d + 11 * x + 5 * y) % 256).astype(np.uint8)
+        a = multimodal.decode_png(multimodal.encode_png(px)).astype(np.int64)
+        yield (
+            d, w, h, int(a.sum()), int((a * a).sum()), int(a.min()),
+            int(a.max()), int((a < 16).sum()), int((a >= 240).sum()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1831,8 +1625,6 @@ def multimodal_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed-form from the waveform formula — any slip anywhere in the
     encode/decode/measure chain flips the hash. Arrow-batched
     mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import flac as _flac
@@ -1853,47 +1645,29 @@ def multimodal_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("md5_match", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 128 + (d % 3) * 64
-                c = (d % 200) - 100
-                clipped = d % 3 == 0
-                body_end = n - 16 if clipped else n
-                sig = [
-                    c if t < 64 else ((d * 7 + 3 * t) % 2048) - 1024
-                    for t in range(body_end)
-                ]
-                if clipped:
-                    sig += [
-                        32767 if t % 2 == 0 else -32767
-                        for t in range(16)
-                    ]
-                blob = _flac.encode_flac([sig], rice_param=7)
-                got, meta = _flac.decode_flac(blob)
-                (samples,) = got
-                rows.append(
-                    (
-                        d, meta["total_samples"],
-                        sum(s * s for s in samples),
-                        max(abs(s) for s in samples),
-                        sum(1 for s in samples if abs(s) < 256),
-                        sum(1 for s in samples if abs(s) == 32767),
-                        meta["md5_match"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["sum_sq"] = out["sum_sq"].astype("int64")
-            for cname in ("n_samples", "peak", "n_quiet", "n_clipped"):
-                out[cname] = out[cname].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        n = 128 + (d % 3) * 64
+        c = (d % 200) - 100
+        clipped = d % 3 == 0
+        body_end = n - 16 if clipped else n
+        sig = [
+            c if t < 64 else ((d * 7 + 3 * t) % 2048) - 1024
+            for t in range(body_end)
+        ]
+        if clipped:
+            sig += [32767 if t % 2 == 0 else -32767 for t in range(16)]
+        (samples,), meta = _flac.decode_flac(_flac.encode_flac([sig], rice_param=7))
+        yield (
+            d, meta["total_samples"],
+            sum(s * s for s in samples),
+            max(abs(s) for s in samples),
+            sum(1 for s in samples if abs(s) < 256),
+            sum(1 for s in samples if abs(s) == 32767),
+            meta["md5_match"],
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -1955,7 +1729,6 @@ def dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy key — no pairwise comparisons ever. Arrow-batched
     mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -1974,39 +1747,23 @@ def dedup_image_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("is_twin", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                b = d - (d % 5) if d % 5 < 2 else d
-                w, h = 16 + b % 13, 12 + b % 11
-                y, x = np.ogrid[0:h, 0:w]
-                px = (
-                    (b + 7 * x * x + 3 * y + (x * y) % 5) % 256
-                ).astype(np.uint8)
-                if d % 5 == 1:  # twin: perturb NON-sampled pixels only
-                    xi = set(((np.arange(9) * w) // 9).tolist())
-                    yi = set(((np.arange(8) * h) // 8).tolist())
-                    mask = np.ones((h, w), dtype=bool)
-                    mask[np.ix_(sorted(yi), sorted(xi))] = False
-                    px = px.copy()
-                    px[mask] = (px[mask].astype(np.int64) + 1) % 256
-                decoded = multimodal.decode_png(multimodal.encode_png(px))
-                hv = multimodal.image_dhash(decoded)
-                rows.append(
-                    (d, w, h, f"{hv:016x}", b, d % 5 == 1)
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["pair_base"] = out["pair_base"].astype("int64")
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        b = d - (d % 5) if d % 5 < 2 else d
+        w, h = 16 + b % 13, 12 + b % 11
+        y, x = np.ogrid[0:h, 0:w]
+        px = ((b + 7 * x * x + 3 * y + (x * y) % 5) % 256).astype(np.uint8)
+        if d % 5 == 1:  # twin: perturb NON-sampled pixels only
+            xi = set(((np.arange(9) * w) // 9).tolist())
+            yi = set(((np.arange(8) * h) // 8).tolist())
+            mask = np.ones((h, w), dtype=bool)
+            mask[np.ix_(sorted(yi), sorted(xi))] = False
+            px = px.copy()
+            px[mask] = (px[mask].astype(np.int64) + 1) % 256
+        hv = multimodal.image_dhash(multimodal.decode_png(multimodal.encode_png(px)))
+        yield d, w, h, f"{hv:016x}", b, d % 5 == 1
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2059,7 +1816,6 @@ def multimodal_mp4_itunes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cover's pixel sum closed-form. Arrow-batched mapInPandas,
     map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -2084,54 +1840,38 @@ def multimodal_mp4_itunes(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("plain_meta", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                cover = None
-                if d % 3 != 1:
-                    w, h = 4 + d % 5, 3 + d % 4
-                    y, x = np.ogrid[0:h, 0:w]
-                    px = ((d + 3 * x + 5 * y) % 256).astype(np.uint8)
-                    cover = multimodal.encode_png(px)
-                blob = multimodal.make_mp4_itunes(
-                    {
-                        "title": f"T {d}",
-                        "artist": f"Art {d % 7}",
-                        "album": f"Alb {d % 5}",
-                        "year": str(1970 + d % 50),
-                        "genre": f"G{d % 9}",
-                    },
-                    track=(1 + d % 20, 10 + d % 5)
-                    if d % 4 != 2
-                    else None,
-                    cover=cover,
-                    cover_fmt="png",
-                    plain_meta=d % 2 == 0,
-                )
-                r = multimodal.parse_mp4_itunes(blob)
-                csum = None
-                if "cover" in r:
-                    decoded = multimodal.decode_png(r["cover"])
-                    csum = int(
-                        np.asarray(decoded, dtype=np.int64).sum()
-                    )
-                rows.append(
-                    (
-                        d, r["title"], r["artist"], r["album"],
-                        r["year"], r["genre"], r.get("track"),
-                        r.get("track_total"), "cover" in r,
-                        r.get("cover_fmt"), csum, d % 2 == 0,
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        cover = None
+        if d % 3 != 1:
+            w, h = 4 + d % 5, 3 + d % 4
+            y, x = np.ogrid[0:h, 0:w]
+            cover = multimodal.encode_png(((d + 3 * x + 5 * y) % 256).astype(np.uint8))
+        blob = multimodal.make_mp4_itunes(
+            {
+                "title": f"T {d}",
+                "artist": f"Art {d % 7}",
+                "album": f"Alb {d % 5}",
+                "year": str(1970 + d % 50),
+                "genre": f"G{d % 9}",
+            },
+            track=(1 + d % 20, 10 + d % 5) if d % 4 != 2 else None,
+            cover=cover,
+            cover_fmt="png",
+            plain_meta=d % 2 == 0,
+        )
+        r = multimodal.parse_mp4_itunes(blob)
+        csum = None
+        if "cover" in r:
+            decoded = multimodal.decode_png(r["cover"])
+            csum = int(np.asarray(decoded, dtype=np.int64).sum())
+        yield (
+            d, r["title"], r["artist"], r["album"], r["year"], r["genre"],
+            r.get("track"), r.get("track_total"), "cover" in r,
+            r.get("cover_fmt"), csum, d % 2 == 0,
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2201,8 +1941,6 @@ def multimodal_mkv_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     payloads (VP8/VP9/AV1/Opus frames) honestly out of scope — the
     demux-probe layer, same split as MP4/Ogg. Arrow-batched
     mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import ebml as _ebml
@@ -2232,69 +1970,50 @@ def multimodal_mkv_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("uuid_hex", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                has_audio = d % 4 != 1
-                tracks = [
-                    {
-                        "number": 1, "type": "video",
-                        "codec_id": ["V_VP8", "V_VP9", "V_AV01"][d % 3],
-                        "width": 16 * (2 + d % 40),
-                        "height": 16 * (1 + d % 30),
-                    }
-                ]
-                if has_audio:
-                    tracks.append(
-                        {
-                            "number": 2, "type": "audio",
-                            "codec_id": "A_OPUS" if d % 2 == 0
-                            else "A_VORBIS",
-                            "language": ["eng", "fre", "deu"][d % 3],
-                            "sampling_frequency": 48000.0
-                            if d % 2 == 0 else 44100.0,
-                            "channels": 1 + d % 2,
-                            "bit_depth": 16,
-                        }
-                    )
-                blob = _ebml.make_matroska(
-                    doc_type="webm" if d % 2 == 0 else "matroska",
-                    duration=float(1000 * (1 + d % 60)),
-                    muxing_app=f"mux-{d % 9}",
-                    writing_app=f"wri-{d % 11}",
-                    tracks=tracks,
-                    n_clusters=d % 5,
-                    unknown_segment_size=d % 6 == 2,
-                    segment_uuid=bytes((d * 7 + i) % 256 for i in range(16)),
-                )
-                r = _ebml.probe_matroska(blob)
-                video = r["tracks"][0]
-                audio = r["tracks"][1] if len(r["tracks"]) > 1 else {}
-                rows.append(
-                    (
-                        d, r["doc_type"], r["duration_s"],
-                        r["timestamp_scale"], len(r["tracks"]),
-                        video["codec_id"], video["width"],
-                        video["height"], video["language"],
-                        audio.get("codec_id"), audio.get("language"),
-                        audio.get("channels"),
-                        audio.get("sampling_frequency"),
-                        r["n_clusters"], r["unknown_segment_size"],
-                        r["segment_uuid"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in ("n_tracks", "width", "height", "n_clusters"):
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["timestamp_scale"] = out["timestamp_scale"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        tracks = [
+            {
+                "number": 1, "type": "video",
+                "codec_id": ["V_VP8", "V_VP9", "V_AV01"][d % 3],
+                "width": 16 * (2 + d % 40),
+                "height": 16 * (1 + d % 30),
+            }
+        ]
+        if d % 4 != 1:
+            tracks.append(
+                {
+                    "number": 2, "type": "audio",
+                    "codec_id": "A_OPUS" if d % 2 == 0 else "A_VORBIS",
+                    "language": ["eng", "fre", "deu"][d % 3],
+                    "sampling_frequency": 48000.0 if d % 2 == 0 else 44100.0,
+                    "channels": 1 + d % 2,
+                    "bit_depth": 16,
+                }
+            )
+        blob = _ebml.make_matroska(
+            doc_type="webm" if d % 2 == 0 else "matroska",
+            duration=float(1000 * (1 + d % 60)),
+            muxing_app=f"mux-{d % 9}",
+            writing_app=f"wri-{d % 11}",
+            tracks=tracks,
+            n_clusters=d % 5,
+            unknown_segment_size=d % 6 == 2,
+            segment_uuid=bytes((d * 7 + i) % 256 for i in range(16)),
+        )
+        r = _ebml.probe_matroska(blob)
+        video = r["tracks"][0]
+        audio = r["tracks"][1] if len(r["tracks"]) > 1 else {}
+        yield (
+            d, r["doc_type"], r["duration_s"], r["timestamp_scale"],
+            len(r["tracks"]), video["codec_id"], video["width"],
+            video["height"], video["language"],
+            audio.get("codec_id"), audio.get("language"),
+            audio.get("channels"), audio.get("sampling_frequency"),
+            r["n_clusters"], r["unknown_segment_size"], r["segment_uuid"],
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2357,7 +2076,6 @@ def multimodal_tiff_bilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     with EOL prefixes) join the cycle via operators/ccitt.py; T.4 2-D
     (K>0) stays honestly gated — G4 covers 2-D coding."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -2383,60 +2101,36 @@ def multimodal_tiff_bilevel(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 19 + d % 21, 11 + d % 17
-                y, x = np.ogrid[0:h, 0:w]
-                px = (((d + 3 * x + 5 * y) % 2) * 255).astype(np.uint8)[
-                    :, :, None
-                ]
-                pm = 0 if d % 3 == 0 else 1
-                tiled = d % 4 < 2
-                kw = (
-                    {"tile": (16, 16)}
-                    if tiled
-                    else {"rows_per_strip": 3 + d % 4}
-                )
-                comp = [1, 5, 8, 32773, 4, 2, 3][d % 7]
-                enc = _tiff.encode_tiff(
-                    px,
-                    big_endian=d % 2 == 0,
-                    compression=comp,
-                    bits=1,
-                    photometric=pm,
-                    # Compression 3 alternates pure 1-D and the K>0
-                    # mixed 1-D/2-D form (T4Options bit 0) — the oracle
-                    # sees identical pixels either way, exact_roundtrip
-                    # pins the decode
-                    t4_two_d=comp == 3 and (d // 7) % 2 == 0,
-                    **kw,
-                )
-                got, meta = _tiff.decode_tiff(enc)
-                rows.append(
-                    (
-                        d, meta["width"], meta["height"], meta["bits"],
-                        meta["photometric"], meta["compression"],
-                        meta["tiled"], meta["n_strips"], meta["n_tiles"],
-                        int(got.astype(np.int64).sum()),
-                        bool(got.shape == px.shape and (got == px).all()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("bits", "int32"), ("photometric", "int32"),
-                ("compression", "int32"), ("n_strips", "int32"),
-                ("n_tiles", "int32"), ("value_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 19 + d % 21, 11 + d % 17
+        y, x = np.ogrid[0:h, 0:w]
+        px = (((d + 3 * x + 5 * y) % 2) * 255).astype(np.uint8)[:, :, None]
+        kw = {"tile": (16, 16)} if d % 4 < 2 else {"rows_per_strip": 3 + d % 4}
+        comp = [1, 5, 8, 32773, 4, 2, 3][d % 7]
+        enc = _tiff.encode_tiff(
+            px,
+            big_endian=d % 2 == 0,
+            compression=comp,
+            bits=1,
+            photometric=0 if d % 3 == 0 else 1,
+            # Compression 3 alternates pure 1-D and the K>0
+            # mixed 1-D/2-D form (T4Options bit 0) — the oracle
+            # sees identical pixels either way, exact_roundtrip
+            # pins the decode
+            t4_two_d=comp == 3 and (d // 7) % 2 == 0,
+            **kw,
+        )
+        got, meta = _tiff.decode_tiff(enc)
+        yield (
+            d, meta["width"], meta["height"], meta["bits"],
+            meta["photometric"], meta["compression"], meta["tiled"],
+            meta["n_strips"], meta["n_tiles"],
+            int(got.astype(np.int64).sum()),
+            bool(got.shape == px.shape and (got == px).all()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2509,7 +2203,6 @@ def multimodal_apng_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
     dispose model. The OVER integer arithmetic is property-tested
     against a float reference (tests/test_apng.py)."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -2533,65 +2226,47 @@ def multimodal_apng_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value_sum", T.LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     patch_at = ((0, 2), (3, 2), (6, 2), (0, 5), (3, 5))
     # (blend_op, dispose_op, checkerboard) per patch frame
     plan = (
         (1, 0, True), (0, 0, True), (1, 2, False), (1, 1, True), (1, 0, False),
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 9 + d % 6, 9 + d % 4
-                nc = (16, 64, 256)[d % 3]
-                y, x = np.ogrid[0:h, 0:w]
-                base = np.zeros((h, w, 4), dtype=np.uint8)
-                base[:, :, 0] = (d + 3 * x + 5 * y) % nc
-                base[:, :, 3] = 255
-                frames = [{"pixels": base, "delay_num": 1}]
-                for k, ((pl, pt), (bop, dop, checker)) in enumerate(
-                    zip(patch_at, plan), start=1
-                ):
-                    ck = (d + 2 * k) % nc
-                    px = np.zeros((2, 2, 4), dtype=np.uint8)
-                    px[:, :, 0] = ck
-                    px[:, :, 3] = 255
-                    if checker:
-                        even = (
-                            np.arange(2)[:, None] + np.arange(2)
-                        ) % 2 == 0
-                        px[even] = 0
-                    frames.append(
-                        {
-                            "pixels": px, "x": pl, "y": pt,
-                            "blend_op": bop, "dispose_op": dop,
-                            "delay_num": 1 + k,
-                        }
-                    )
-                enc = _apng.encode_apng(frames, num_plays=d % 3)
-                dec = _apng.decode_apng(enc)
-                for r in _apng.compose_apng(dec):
-                    cv = r["canvas"]
-                    visible = cv[:, :, 3] == 255
-                    rows.append(
-                        (
-                            d, r["frame_idx"], w, h, nc, r["delay_num"],
-                            dec["num_plays"],
-                            int((cv[:, :, 3] == 0).sum()),
-                            int(cv[:, :, 0][visible].astype(np.int64).sum()),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in cols[1:-1]:
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["value_sum"] = out["value_sum"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        w, h = 9 + d % 6, 9 + d % 4
+        nc = (16, 64, 256)[d % 3]
+        y, x = np.ogrid[0:h, 0:w]
+        base = np.zeros((h, w, 4), dtype=np.uint8)
+        base[:, :, 0] = (d + 3 * x + 5 * y) % nc
+        base[:, :, 3] = 255
+        frames = [{"pixels": base, "delay_num": 1}]
+        for k, ((pl, pt), (bop, dop, checker)) in enumerate(
+            zip(patch_at, plan), start=1
+        ):
+            px = np.zeros((2, 2, 4), dtype=np.uint8)
+            px[:, :, 0] = (d + 2 * k) % nc
+            px[:, :, 3] = 255
+            if checker:
+                even = (np.arange(2)[:, None] + np.arange(2)) % 2 == 0
+                px[even] = 0
+            frames.append(
+                {
+                    "pixels": px, "x": pl, "y": pt,
+                    "blend_op": bop, "dispose_op": dop,
+                    "delay_num": 1 + k,
+                }
+            )
+        dec = _apng.decode_apng(_apng.encode_apng(frames, num_plays=d % 3))
+        for r in _apng.compose_apng(dec):
+            cv = r["canvas"]
+            visible = cv[:, :, 3] == 255
+            yield (
+                d, r["frame_idx"], w, h, nc, r["delay_num"], dec["num_plays"],
+                int((cv[:, :, 3] == 0).sum()),
+                int(cv[:, :, 0][visible].astype(np.int64).sum()),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2622,8 +2297,6 @@ def multimodal_mp4_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the caption stream). Cue end = next sample's dts per the 3GPP
     contract. The oracle restates timestamps (timescale 1000 -> ms
     passthrough) and texts closed-form."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import multimodal as mm
@@ -2644,61 +2317,42 @@ def multimodal_mp4_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("text", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     styl = (8).to_bytes(4, "big") + b"styl"
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                n = 4 + d % 4
-                delta = 800 + (d % 3) * 100
-                text_samples = [
-                    sub.encode_tx3g_sample(f"sub-{d}-{i}")
-                    + (styl if i % 3 == 0 else b"")
-                    for i in range(n)
-                ]
-                payload = mm.make_mp4_media_multi(
-                    [
-                        {
-                            "samples": [b"v" * 10] * 3,
-                            "stts_runs": [(3, 100)],
-                            "handler": "vide",
-                        },
-                        {
-                            "samples": [b"a" * 6] * 4,
-                            "stts_runs": [(4, 64)],
-                            "handler": "soun",
-                        },
-                        {
-                            "samples": text_samples,
-                            "stts_runs": [(n, delta)],
-                            "handler": "text",
-                            "codec": "tx3g",
-                            "sync_every": None,
-                        },
-                    ],
-                    timescale=1000,
-                )
-                tracks = mm.demux_mp4_tracks(payload)
-                for c in sub.mp4_text_cues(tracks):
-                    rows.append(
-                        (
-                            d, c["track_id"], c["idx"],
-                            c["start_ms"], c["end_ms"], c["text"],
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("track_id", "int32"),
-                ("cue_idx", "int32"), ("start_ms", "int64"),
-                ("end_ms", "int64"),
-            ):
-                out[c2] = out[c2].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        n = 4 + d % 4
+        text_samples = [
+            sub.encode_tx3g_sample(f"sub-{d}-{i}") + (styl if i % 3 == 0 else b"")
+            for i in range(n)
+        ]
+        payload = mm.make_mp4_media_multi(
+            [
+                {
+                    "samples": [b"v" * 10] * 3,
+                    "stts_runs": [(3, 100)],
+                    "handler": "vide",
+                },
+                {
+                    "samples": [b"a" * 6] * 4,
+                    "stts_runs": [(4, 64)],
+                    "handler": "soun",
+                },
+                {
+                    "samples": text_samples,
+                    "stts_runs": [(n, 800 + (d % 3) * 100)],
+                    "handler": "text",
+                    "codec": "tx3g",
+                    "sync_every": None,
+                },
+            ],
+            timescale=1000,
+        )
+        for c in sub.mp4_text_cues(mm.demux_mp4_tracks(payload)):
+            yield (
+                d, c["track_id"], c["idx"], c["start_ms"], c["end_ms"], c["text"],
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2775,8 +2429,6 @@ def multimodal_ogg_packets(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums proving reassembly sliced the right body bytes across page
     AND link boundaries. granule = the value stamped where each packet
     completes."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import ogg as _ogg
@@ -2802,60 +2454,38 @@ def multimodal_ogg_packets(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("byte_sum", T.LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                ms = 2 + d % 4
-                link_packets = [
-                    [
-                        _cf_bytes(
-                            d * 5 + i * 11, 13,
-                            510 if (d + i) % 5 == 0
-                            else 100 + (d + 37 * i) % 400,
-                        )
-                        for i in range(3 + d % 4)
-                    ],
-                    [
-                        _cf_bytes(
-                            d * 7 + i * 17, 19,
-                            255 if (d + i) % 5 == 1
-                            else 60 + (d + 29 * i) % 350,
-                        )
-                        for i in range(2 + d % 3)
-                    ],
-                ]
-                chain = b"".join(
-                    _ogg.make_ogg(pk, serial=li + 1, max_segments=ms)
-                    for li, pk in enumerate(link_packets)
+    def rows_for_doc(d):
+        link_packets = [
+            [
+                _cf_bytes(
+                    d * 5 + i * 11, 13,
+                    510 if (d + i) % 5 == 0 else 100 + (d + 37 * i) % 400,
                 )
-                for li, stream in enumerate(_ogg.parse_ogg_chain(chain)):
-                    for p in stream["packets"]:
-                        rows.append(
-                            (
-                                d, li, stream["serial"],
-                                p["idx"], p["size"],
-                                p["size"] // 255 + 1,
-                                p["first_page"], p["last_page"],
-                                p["first_page"] != p["last_page"],
-                                p["granule"], sum(p["data"]),
-                            )
-                        )
-            out2 = pd.DataFrame(rows, columns=cols)
-            for c2, dt in (
-                ("doc_id", "int64"), ("link", "int32"), ("serial", "int32"),
-                ("pkt_idx", "int32"),
-                ("size", "int32"), ("n_segments", "int32"),
-                ("first_page", "int32"), ("last_page", "int32"),
-                ("granule", "int64"), ("byte_sum", "int64"),
-            ):
-                out2[c2] = out2[c2].astype(dt)
-            yield out2
+                for i in range(3 + d % 4)
+            ],
+            [
+                _cf_bytes(
+                    d * 7 + i * 17, 19,
+                    255 if (d + i) % 5 == 1 else 60 + (d + 29 * i) % 350,
+                )
+                for i in range(2 + d % 3)
+            ],
+        ]
+        chain = b"".join(
+            _ogg.make_ogg(pk, serial=li + 1, max_segments=2 + d % 4)
+            for li, pk in enumerate(link_packets)
+        )
+        for li, stream in enumerate(_ogg.parse_ogg_chain(chain)):
+            for p in stream["packets"]:
+                yield (
+                    d, li, stream["serial"], p["idx"], p["size"],
+                    p["size"] // 255 + 1, p["first_page"], p["last_page"],
+                    p["first_page"] != p["last_page"],
+                    p["granule"], sum(p["data"]),
+                )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -2888,8 +2518,6 @@ def multimodal_webp_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe back dimensions + curation-filter flags. Same honesty split
     as the MP4/MP3 probes: header parsing is real, VP8 pixel decode
     stays gated. The oracle restates every field closed-form."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     docs = (
@@ -2907,34 +2535,18 @@ def multimodal_webp_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("animated", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                variant = ("VP8 ", "VP8L", "VP8X")[d % 3]
-                w, h = 10 + d % 500, 8 + d % 300
-                payload = multimodal.make_webp(
-                    w, h, variant,
-                    has_alpha=variant == "VP8X" and d % 2 == 1,
-                    animated=variant == "VP8X" and d % 5 == 0,
-                )
-                m = multimodal.probe_webp(payload)
-                rows.append(
-                    (
-                        d, m["variant"], m["width"], m["height"],
-                        m["has_alpha"], m["animated"],
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["width"] = out["width"].astype("int32")
-            out["height"] = out["height"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        variant = ("VP8 ", "VP8L", "VP8X")[d % 3]
+        payload = multimodal.make_webp(
+            10 + d % 500, 8 + d % 300, variant,
+            has_alpha=variant == "VP8X" and d % 2 == 1,
+            animated=variant == "VP8X" and d % 5 == 0,
+        )
+        m = multimodal.probe_webp(payload)
+        yield d, m["variant"], m["width"], m["height"], m["has_alpha"], m["animated"]
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -3006,7 +2618,6 @@ def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     only typed features shuffle. Lossy VP8 pixels stay honestly
     gated."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -3030,7 +2641,6 @@ def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     combos = ("none", "sg", "pred", "sg+pred", "palette", "meta")
     tf_of = {
         "none": (), "sg": ("subtract-green",), "pred": ("predictor",),
@@ -3038,70 +2648,52 @@ def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "palette": ("palette",), "meta": (),
     }
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 5 + d % 8, 4 + d % 6
-                combo = combos[d % 6]
-                y, x = np.ogrid[0:h, 0:w]
-                if combo == "palette":
-                    nc = (2, 4, 16)[d % 3]
-                    i = np.arange(nc)
-                    pal = np.stack(
-                        [
-                            (d + 17 * i) % 256,
-                            (d * 5 + 29 * i) % 256,
-                            (d * 7 + 13 * i) % 256,
-                        ],
-                        axis=-1,
-                    ).astype(np.uint8)
-                    px = pal[(d + 3 * x + 5 * y) % nc]
-                else:
-                    xr = x // 3  # runs of 3 so LZ77 fires
-                    px = np.dstack(
-                        [
-                            (d * 3 + y * 7 + xr * 11) % 256,
-                            (d * 5 + y * 3 + xr * 17) % 256,
-                            (d * 7 + y * 11 + xr * 5) % 256,
-                        ]
-                    ).astype(np.uint8)
-                cache = 4 if d % 3 == 0 and combo != "meta" else 0
-                enc = _vp8l.wrap_webp_lossless(
-                    _vp8l.encode_vp8l(
-                        px,
-                        transforms=tf_of[combo],
-                        predictor_mode=1 + d % 13,
-                        predictor_bits=2 + d % 3,
-                        cache_bits=cache,
-                        meta_split=combo == "meta",
-                    )
-                )
-                got, meta = _vp8l.decode_webp(enc)
-                rgb = got[:, :, :3].astype(np.int64)
-                rows.append(
-                    (
-                        d, meta["width"], meta["height"], combo, cache,
-                        int(rgb[:, :, 0].sum()),
-                        int(rgb[:, :, 1].sum()),
-                        int(rgb[:, :, 2].sum()),
-                        bool(
-                            got.shape[:2] == px.shape[:2]
-                            and (got[:, :, :3] == px).all()
-                        ),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("cache_bits", "int32"), ("r_sum", "int64"),
-                ("g_sum", "int64"), ("b_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 5 + d % 8, 4 + d % 6
+        combo = combos[d % 6]
+        y, x = np.ogrid[0:h, 0:w]
+        if combo == "palette":
+            nc = (2, 4, 16)[d % 3]
+            i = np.arange(nc)
+            pal = np.stack(
+                [
+                    (d + 17 * i) % 256,
+                    (d * 5 + 29 * i) % 256,
+                    (d * 7 + 13 * i) % 256,
+                ],
+                axis=-1,
+            ).astype(np.uint8)
+            px = pal[(d + 3 * x + 5 * y) % nc]
+        else:
+            xr = x // 3  # runs of 3 so LZ77 fires
+            px = np.dstack(
+                [
+                    (d * 3 + y * 7 + xr * 11) % 256,
+                    (d * 5 + y * 3 + xr * 17) % 256,
+                    (d * 7 + y * 11 + xr * 5) % 256,
+                ]
+            ).astype(np.uint8)
+        cache = 4 if d % 3 == 0 and combo != "meta" else 0
+        enc = _vp8l.wrap_webp_lossless(
+            _vp8l.encode_vp8l(
+                px,
+                transforms=tf_of[combo],
+                predictor_mode=1 + d % 13,
+                predictor_bits=2 + d % 3,
+                cache_bits=cache,
+                meta_split=combo == "meta",
+            )
+        )
+        got, meta = _vp8l.decode_webp(enc)
+        rgb = got[:, :, :3].astype(np.int64)
+        yield (
+            d, meta["width"], meta["height"], combo, cache,
+            int(rgb[:, :, 0].sum()), int(rgb[:, :, 1].sum()),
+            int(rgb[:, :, 2].sum()),
+            bool(got.shape[:2] == px.shape[:2] and (got[:, :, :3] == px).all()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -3194,7 +2786,6 @@ def multimodal_webp_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a wrong offset halving, flag bit, blend branch, or disposal rect
     flips the hash. Lossy (VP8/ALPH) frames stay honestly gated."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -3221,90 +2812,71 @@ def multimodal_webp_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("alpha_sum", T.LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                cw, ch = 8 + d % 6, 8 + d % 4
-                y0, x0 = np.ogrid[0:ch, 0:cw]
-                base = np.dstack(
-                    [
-                        (d + 3 * x0 + 5 * y0) % 256,
-                        (d * 5 + x0 + 7 * y0) % 256,
-                        (d * 7 + 11 * x0 + y0) % 256,
-                        np.full((ch, cw), 255),
-                    ]
-                ).astype(np.uint8)
-                j1, i1 = np.ogrid[0:2, 0:4]
-                f1 = np.dstack(
-                    [
-                        (d + 13 * i1 + 17 * j1 + 1) % 256,
-                        (d * 3 + 7 * i1 + 5 * j1 + 2) % 256,
-                        (d * 9 + 3 * i1 + j1 + 3) % 256,
-                        np.where((i1 + j1) % 2 == 0, 255, 0),
-                    ]
-                ).astype(np.uint8)
-                f2 = np.dstack(
-                    [
-                        (d * 2 + 5 * i1 + 3 * j1) % 256,
-                        (d * 6 + i1 + 9 * j1) % 256,
-                        (d * 8 + 7 * i1 + 2 * j1) % 256,
-                        np.where((i1 + j1) % 3 == 0, 0, 255),
-                    ]
-                ).astype(np.uint8)
-                j3, i3 = np.ogrid[0:2, 0:2]
-                f3 = np.dstack(
-                    [
-                        (d * 4 + i3 + j3 + 4) % 256,
-                        (d * 2 + 3 * i3 + j3 + 5) % 256,
-                        (d * 3 + i3 + 2 * j3 + 6) % 256,
-                        np.full((2, 2), 255),
-                    ]
-                ).astype(np.uint8)
-                dur = 40 + 10 * (d % 4)
-                spec = [
-                    {"x": 0, "y": 0, "pixels": base, "duration_ms": dur,
-                     "blend": "source"},
-                    {"x": 2, "y": 2, "pixels": f1, "duration_ms": dur + 1,
-                     "blend": "over"},
-                    {"x": 4, "y": 0, "pixels": f2, "duration_ms": dur + 2,
-                     "blend": "source", "dispose": "background"},
-                    {"x": 0, "y": 4, "pixels": f3, "duration_ms": dur + 3,
-                     "blend": "over"},
-                ]
-                payload = _vp8l.encode_webp_animation(
-                    spec, cw, ch,
-                    background=(d % 256, d * 3 % 256, d * 7 % 256, 255),
-                    loop_count=d % 5,
-                    transforms=("subtract-green",),
-                )
-                dec = _vp8l.decode_webp_animation(payload)
-                rendered = _vp8l.compose_webp_animation(dec)
-                for f, r in zip(dec["frames"], rendered):
-                    canvas = r["canvas"].astype(np.int64)
-                    rows.append(
-                        (
-                            d, r["frame_idx"], f["x"], f["y"],
-                            f["width"], f["height"], f["duration_ms"],
-                            f["blend"], f["dispose"], dec["loop_count"],
-                            int(canvas[:, :, :3].sum()),
-                            int(canvas[:, :, 3].sum()),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("frame_idx", "int32"), ("x", "int32"),
-                ("y", "int32"), ("width", "int32"), ("height", "int32"),
-                ("duration_ms", "int64"), ("loop_count", "int32"),
-                ("rgb_sum", "int64"), ("alpha_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        cw, ch = 8 + d % 6, 8 + d % 4
+        y0, x0 = np.ogrid[0:ch, 0:cw]
+        base = np.dstack(
+            [
+                (d + 3 * x0 + 5 * y0) % 256,
+                (d * 5 + x0 + 7 * y0) % 256,
+                (d * 7 + 11 * x0 + y0) % 256,
+                np.full((ch, cw), 255),
+            ]
+        ).astype(np.uint8)
+        j1, i1 = np.ogrid[0:2, 0:4]
+        f1 = np.dstack(
+            [
+                (d + 13 * i1 + 17 * j1 + 1) % 256,
+                (d * 3 + 7 * i1 + 5 * j1 + 2) % 256,
+                (d * 9 + 3 * i1 + j1 + 3) % 256,
+                np.where((i1 + j1) % 2 == 0, 255, 0),
+            ]
+        ).astype(np.uint8)
+        f2 = np.dstack(
+            [
+                (d * 2 + 5 * i1 + 3 * j1) % 256,
+                (d * 6 + i1 + 9 * j1) % 256,
+                (d * 8 + 7 * i1 + 2 * j1) % 256,
+                np.where((i1 + j1) % 3 == 0, 0, 255),
+            ]
+        ).astype(np.uint8)
+        j3, i3 = np.ogrid[0:2, 0:2]
+        f3 = np.dstack(
+            [
+                (d * 4 + i3 + j3 + 4) % 256,
+                (d * 2 + 3 * i3 + j3 + 5) % 256,
+                (d * 3 + i3 + 2 * j3 + 6) % 256,
+                np.full((2, 2), 255),
+            ]
+        ).astype(np.uint8)
+        dur = 40 + 10 * (d % 4)
+        spec = [
+            {"x": 0, "y": 0, "pixels": base, "duration_ms": dur,
+             "blend": "source"},
+            {"x": 2, "y": 2, "pixels": f1, "duration_ms": dur + 1,
+             "blend": "over"},
+            {"x": 4, "y": 0, "pixels": f2, "duration_ms": dur + 2,
+             "blend": "source", "dispose": "background"},
+            {"x": 0, "y": 4, "pixels": f3, "duration_ms": dur + 3,
+             "blend": "over"},
+        ]
+        payload = _vp8l.encode_webp_animation(
+            spec, cw, ch,
+            background=(d % 256, d * 3 % 256, d * 7 % 256, 255),
+            loop_count=d % 5,
+            transforms=("subtract-green",),
+        )
+        dec = _vp8l.decode_webp_animation(payload)
+        for f, r in zip(dec["frames"], _vp8l.compose_webp_animation(dec)):
+            canvas = r["canvas"].astype(np.int64)
+            yield (
+                d, r["frame_idx"], f["x"], f["y"], f["width"], f["height"],
+                f["duration_ms"], f["blend"], f["dispose"], dec["loop_count"],
+                int(canvas[:, :, :3].sum()), int(canvas[:, :, 3].sum()),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -3633,7 +3205,6 @@ def multimodal_gif_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode/decode/compose all happen where the bytes live, only typed
     features shuffle."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -3657,69 +3228,48 @@ def multimodal_gif_animation(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value_sum", T.LongType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     patch_at = ((0, 2), (3, 2), (6, 2), (0, 5))
     disposal = (1, 2, 3, 0)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 9 + d % 6, 9 + d % 4
-                nc = (4, 16, 64)[d % 3]
-                t = nc - 1
-                y, x = np.ogrid[0:h, 0:w]
-                base = (d + 3 * x + 5 * y) % nc
-                frames = [
-                    {
-                        "indices": base,
-                        "delay_cs": 10,
-                        "disposal": 1,
-                        "interlace": d % 2 == 1,
-                    }
-                ]
-                for k, ((pl, pt), disp) in enumerate(
-                    zip(patch_at, disposal), start=1
-                ):
-                    ck = (d + 2 * k) % (nc - 1)
-                    patch = np.where(
-                        (np.arange(2)[:, None] + np.arange(2)) % 2 == 0,
-                        t,
-                        ck,
-                    )
-                    frames.append(
-                        {
-                            "indices": patch,
-                            "left": pl,
-                            "top": pt,
-                            "disposal": disp,
-                            "delay_cs": 10 + k,
-                            "transparent_index": t,
-                        }
-                    )
-                enc = _gif.encode_gif_animation(
-                    frames, screen=(w, h), loop_count=d % 4
-                )
-                dec = _gif.decode_gif(enc)
-                for r in _gif.compose_frames(dec):
-                    cv = r["canvas"]
-                    rows.append(
-                        (
-                            d, r["frame_idx"], w, h, nc, r["delay_cs"],
-                            dec["loop_count"],
-                            int((cv < 0).sum()),
-                            int(cv[cv >= 0].sum()),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in cols[1:-1]:
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["value_sum"] = out["value_sum"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        w, h = 9 + d % 6, 9 + d % 4
+        nc = (4, 16, 64)[d % 3]
+        t = nc - 1
+        y, x = np.ogrid[0:h, 0:w]
+        frames = [
+            {
+                "indices": (d + 3 * x + 5 * y) % nc,
+                "delay_cs": 10,
+                "disposal": 1,
+                "interlace": d % 2 == 1,
+            }
+        ]
+        for k, ((pl, pt), disp) in enumerate(zip(patch_at, disposal), start=1):
+            patch = np.where(
+                (np.arange(2)[:, None] + np.arange(2)) % 2 == 0,
+                t,
+                (d + 2 * k) % (nc - 1),
+            )
+            frames.append(
+                {
+                    "indices": patch,
+                    "left": pl,
+                    "top": pt,
+                    "disposal": disp,
+                    "delay_cs": 10 + k,
+                    "transparent_index": t,
+                }
+            )
+        enc = _gif.encode_gif_animation(frames, screen=(w, h), loop_count=d % 4)
+        dec = _gif.decode_gif(enc)
+        for r in _gif.compose_frames(dec):
+            cv = r["canvas"]
+            yield (
+                d, r["frame_idx"], w, h, nc, r["delay_cs"], dec["loop_count"],
+                int((cv < 0).sum()), int(cv[cv >= 0].sum()),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -3864,7 +3414,6 @@ def multimodal_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
     predictor, category-coding, restart-reset, or reconstruction slip
     flips the hash, not just a tolerance."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -3888,50 +3437,28 @@ def multimodal_jpeg_lossless(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        cols = [
-            "doc_id", "width", "height", "n_components", "predictor",
-            "restart_interval", "pixel_sum", "exact_roundtrip",
-        ]
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 6 + d % 9, 5 + d % 7
-                nc = 3 if d % 2 == 0 else 1
-                predictor = 1 + d % 7
-                ri = (d % 4) * 3
-                y, x, c = np.ogrid[0:h, 0:w, 0:nc]
-                px = ((d * 5 + y * 11 + x * 3 + c * 17) % 256).astype(
-                    np.uint8
-                )
-                if nc == 1:
-                    px = px[:, :, 0]
-                enc = _jpeg.encode_jpeg_lossless(
-                    px,
-                    predictor=predictor,
-                    restart_interval=ri,
-                    interleaved=d % 3 > 0,
-                )
-                dec = _jpeg.decode_jpeg(enc)  # via the SOF3 dispatch
-                rows.append(
-                    (
-                        d, w, h, nc, predictor, ri,
-                        int(dec.astype(np.int64).sum()),
-                        bool(dec.shape == px.shape and (dec == px).all()),
-                    )
-                )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("n_components", "int32"), ("predictor", "int32"),
-                ("restart_interval", "int32"),
-                ("pixel_sum", "int64"), ("exact_roundtrip", "bool"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        w, h = 6 + d % 9, 5 + d % 7
+        nc = 3 if d % 2 == 0 else 1
+        predictor = 1 + d % 7
+        ri = (d % 4) * 3
+        y, x, c = np.ogrid[0:h, 0:w, 0:nc]
+        px = ((d * 5 + y * 11 + x * 3 + c * 17) % 256).astype(np.uint8)
+        if nc == 1:
+            px = px[:, :, 0]
+        enc = _jpeg.encode_jpeg_lossless(
+            px,
+            predictor=predictor,
+            restart_interval=ri,
+            interleaved=d % 3 > 0,
+        )
+        dec = _jpeg.decode_jpeg(enc)  # via the SOF3 dispatch
+        yield (
+            d, w, h, nc, predictor, ri, int(dec.astype(np.int64).sum()),
+            bool(dec.shape == px.shape and (dec == px).all()),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -3958,7 +3485,6 @@ def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error must sit under the lossy ceiling. Header dims
     ride the SOF2 probe."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -3981,38 +3507,22 @@ def multimodal_jpeg_progressive(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def batches(it):
-        for pdf in it:
-            rows = {k: [] for k in ("doc_id", "width", "height",
-                                    "n_components", "matches_baseline",
-                                    "err_within_bound")}
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                w, h = 3 + d % 6, 2 + d % 4
-                if d % 2 == 0:
-                    y, x = np.ogrid[0:h, 0:w]
-                    px = ((d * 37 + y * 11 + x * 5) % 256).astype(np.uint8)
-                else:
-                    y, x, c = np.ogrid[0:h, 0:w, 0:3]
-                    px = ((d * 37 + y * 11 + x * 5 + c * 3) % 256).astype(
-                        np.uint8
-                    )
-                payload = _prog.encode_progressive(px, quality=90)
-                pw, ph, ncomp = _prog.progressive_header(payload)
-                out = _jpeg.decode_jpeg(payload)  # via the SOF2 dispatch
-                twin = _jpeg.decode_jpeg(_jpeg.encode_jpeg(px, quality=90))
-                err = float(
-                    np.abs(out.astype(np.int64) - px.astype(np.int64)).mean()
-                )
-                rows["doc_id"].append(d)
-                rows["width"].append(pw)
-                rows["height"].append(ph)
-                rows["n_components"].append(ncomp)
-                rows["matches_baseline"].append(bool(np.array_equal(out, twin)))
-                rows["err_within_bound"].append(bool(err < 20.0))
-            yield pd.DataFrame(rows)
+    def rows_for_doc(d):
+        w, h = 3 + d % 6, 2 + d % 4
+        if d % 2 == 0:
+            y, x = np.ogrid[0:h, 0:w]
+            px = ((d * 37 + y * 11 + x * 5) % 256).astype(np.uint8)
+        else:
+            y, x, c = np.ogrid[0:h, 0:w, 0:3]
+            px = ((d * 37 + y * 11 + x * 5 + c * 3) % 256).astype(np.uint8)
+        payload = _prog.encode_progressive(px, quality=90)
+        pw, ph, ncomp = _prog.progressive_header(payload)
+        out = _jpeg.decode_jpeg(payload)  # via the SOF2 dispatch
+        twin = _jpeg.decode_jpeg(_jpeg.encode_jpeg(px, quality=90))
+        err = float(np.abs(out.astype(np.int64) - px.astype(np.int64)).mean())
+        yield d, pw, ph, ncomp, bool(np.array_equal(out, twin)), err < 20.0
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4106,7 +3616,6 @@ def multimodal_webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_vp8.py. Arrow-batched mapInPandas: codec work happens
     where the bytes live, only typed features shuffle."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -4132,75 +3641,56 @@ def multimodal_webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_match", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     qis = (0, 10, 26, 44, 63, 80, 101, 127)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nmb = 1 + d % 3
-                qi = qis[d % 8]
-                nparts = 2 if d % 2 == 0 else 1
-                specs = []
-                for k in range(nmb):
-                    specs.append(
-                        {
-                            "ymode": (d + k) % 4,
-                            "uvmode": ((d // 4) + k) % 4,
-                            "y2_dc": 1 + (d + 5 * k) % 4,
-                            "u_dc": (d + 2 * k) % 3,
-                            "v_dc": (d + 2 * k + 1) % 3,
-                        }
-                    )
-                payload = _vp8.encode_vp8_keyframe(
-                    specs, 1, nmb, qi, n_partitions=nparts
-                )
-                rgba, meta = _vp8l.decode_webp(_vp8.wrap_webp_lossy(payload))
-                del rgba  # RGB path exercised; sums pin the YUV planes
-                out = _vp8.decode_vp8_frame(payload)
-                ymods = [s["ymode"] for s in specs]
-                umods = [s["uvmode"] for s in specs]
-                vy = _vp8.predict_uniform_chain(
-                    ymods, [_vp8.y2_dc_add(s["y2_dc"], qi) for s in specs]
-                )
-                vu = _vp8.predict_uniform_chain(
-                    umods, [_vp8.uv_dc_add(s["u_dc"], qi) for s in specs]
-                )
-                vv = _vp8.predict_uniform_chain(
-                    umods, [_vp8.uv_dc_add(s["v_dc"], qi) for s in specs]
-                )
-                y, u, v = out["y"], out["u"], out["v"]
-                exact = bool(
-                    all(
-                        (y[16 * k : 16 * k + 16, :] == vy[k]).all()
-                        and (u[8 * k : 8 * k + 8, :] == vu[k]).all()
-                        and (v[8 * k : 8 * k + 8, :] == vv[k]).all()
-                        for k in range(nmb)
-                    )
-                    and meta["codec"] == "vp8"
-                )
-                rows.append(
-                    (
-                        d, 16, 16 * nmb, nmb, qi, nparts,
-                        int(y.astype(np.int64).sum()),
-                        int(u.astype(np.int64).sum()),
-                        int(v.astype(np.int64).sum()),
-                        exact,
-                    )
-                )
-            out_pdf = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("width", "int32"), ("height", "int32"),
-                ("mb_count", "int32"), ("qindex", "int32"),
-                ("partitions", "int32"), ("y_sum", "int64"),
-                ("u_sum", "int64"), ("v_sum", "int64"),
-            ):
-                out_pdf[cname] = out_pdf[cname].astype(dt)
-            yield out_pdf
+    def rows_for_doc(d):
+        nmb = 1 + d % 3
+        qi = qis[d % 8]
+        nparts = 2 if d % 2 == 0 else 1
+        specs = [
+            {
+                "ymode": (d + k) % 4,
+                "uvmode": ((d // 4) + k) % 4,
+                "y2_dc": 1 + (d + 5 * k) % 4,
+                "u_dc": (d + 2 * k) % 3,
+                "v_dc": (d + 2 * k + 1) % 3,
+            }
+            for k in range(nmb)
+        ]
+        payload = _vp8.encode_vp8_keyframe(specs, 1, nmb, qi, n_partitions=nparts)
+        # RGB path exercised; sums pin the YUV planes
+        _rgba, meta = _vp8l.decode_webp(_vp8.wrap_webp_lossy(payload))
+        out = _vp8.decode_vp8_frame(payload)
+        ymods = [s["ymode"] for s in specs]
+        umods = [s["uvmode"] for s in specs]
+        vy = _vp8.predict_uniform_chain(
+            ymods, [_vp8.y2_dc_add(s["y2_dc"], qi) for s in specs]
+        )
+        vu = _vp8.predict_uniform_chain(
+            umods, [_vp8.uv_dc_add(s["u_dc"], qi) for s in specs]
+        )
+        vv = _vp8.predict_uniform_chain(
+            umods, [_vp8.uv_dc_add(s["v_dc"], qi) for s in specs]
+        )
+        y, u, v = out["y"], out["u"], out["v"]
+        exact = bool(
+            all(
+                (y[16 * k : 16 * k + 16, :] == vy[k]).all()
+                and (u[8 * k : 8 * k + 8, :] == vu[k]).all()
+                and (v[8 * k : 8 * k + 8, :] == vv[k]).all()
+                for k in range(nmb)
+            )
+            and meta["codec"] == "vp8"
+        )
+        yield (
+            d, 16, 16 * nmb, nmb, qi, nparts,
+            int(y.astype(np.int64).sum()),
+            int(u.astype(np.int64).sum()),
+            int(v.astype(np.int64).sum()),
+            exact,
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4248,8 +3738,6 @@ def multimodal_ogg_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the real page writer (CRCs, lacing, BOS/EOS), then walk the
     chain back with the strict parser and emit one row per tag field.
     Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import ogg as _ogg
@@ -4270,58 +3758,42 @@ def multimodal_ogg_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("value", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
     keys = ("TITLE", "ARTIST", "ALBUM", "DATE", "TRACKNUMBER", "GENRE")
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                payload = b""
-                for li in range(1 + d % 2):
-                    vendor = f"lh-ref-{(d*3 + li) % 7}"
-                    tags = [
-                        (
-                            keys[(d + 2 * li + i) % 6],
-                            f"v{(d*7 + 11*li + 3*i) % 1000}",
-                        )
-                        for i in range(1 + (d + li) % 4)
-                    ]
-                    if (d + li) % 2 == 0:
-                        ident = (
-                            b"\x01vorbis" + b"\x00" * 4 + bytes([2])
-                            + (44100).to_bytes(4, "little") + b"\x00" * 13
-                        )
-                        comment = _ogg.make_vorbis_comment_packet(vendor, tags)
-                        packets = [
-                            ident, comment, b"\x05vorbis-setup",
-                            b"audio-%d" % d,
-                        ]
-                    else:
-                        ident = (
-                            b"OpusHead" + bytes([1, 2])
-                            + (312).to_bytes(2, "little")
-                            + (48000).to_bytes(4, "little") + b"\x00" * 3
-                        )
-                        comment = _ogg.make_opus_tags_packet(vendor, tags)
-                        packets = [ident, comment, b"audio-%d" % d]
-                    payload += _ogg.make_ogg(
-                        packets, serial=100 + li, max_segments=3 + d % 5
-                    )
-                for entry in _ogg.extract_ogg_tags(payload):
-                    for i, (k, v) in enumerate(entry["tags"]):
-                        rows.append(
-                            (d, entry["link"], entry["codec"],
-                             entry["vendor"], i, k, v)
-                        )
-            out = pd.DataFrame(rows, columns=cols)
-            out["doc_id"] = out["doc_id"].astype("int64")
-            out["link"] = out["link"].astype("int32")
-            out["tag_idx"] = out["tag_idx"].astype("int32")
-            yield out
+    def rows_for_doc(d):
+        payload = b""
+        for li in range(1 + d % 2):
+            vendor = f"lh-ref-{(d*3 + li) % 7}"
+            tags = [
+                (
+                    keys[(d + 2 * li + i) % 6],
+                    f"v{(d*7 + 11*li + 3*i) % 1000}",
+                )
+                for i in range(1 + (d + li) % 4)
+            ]
+            if (d + li) % 2 == 0:
+                ident = (
+                    b"\x01vorbis" + b"\x00" * 4 + bytes([2])
+                    + (44100).to_bytes(4, "little") + b"\x00" * 13
+                )
+                comment = _ogg.make_vorbis_comment_packet(vendor, tags)
+                packets = [ident, comment, b"\x05vorbis-setup", b"audio-%d" % d]
+            else:
+                ident = (
+                    b"OpusHead" + bytes([1, 2])
+                    + (312).to_bytes(2, "little")
+                    + (48000).to_bytes(4, "little") + b"\x00" * 3
+                )
+                comment = _ogg.make_opus_tags_packet(vendor, tags)
+                packets = [ident, comment, b"audio-%d" % d]
+            payload += _ogg.make_ogg(
+                packets, serial=100 + li, max_segments=3 + d % 5
+            )
+        for entry in _ogg.extract_ogg_tags(payload):
+            for i, (k, v) in enumerate(entry["tags"]):
+                yield d, entry["link"], entry["codec"], entry["vendor"], i, k, v
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4387,7 +3859,6 @@ def multimodal_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     mask), decode everything back, and report per-channel pixel sums the
     oracle predicts closed-form. Arrow-batched mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -4412,7 +3883,6 @@ def multimodal_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_roundtrip", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def _raster(d, m, w, h, alpha_parity):
         y, x = np.ogrid[0:h, 0:w]
@@ -4425,65 +3895,46 @@ def multimodal_ico_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             a = np.full((h, w), 255)
         return np.dstack([r, g, b, a]).astype(np.uint8)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                decoded = []
-                if d % 2 == 0:
-                    bpp = (8, 24, 32)[(d // 2) % 3]
-                    form = {8: "bmp8", 24: "bmp24", 32: "bmp32"}[bpp]
-                    w, h = 4 + d % 9, 3 + d % 7
-                    px = _raster(d, 0, w, h, alpha_parity=bpp == 32)
-                    if bpp == 8:
-                        px[:, :, 0] = px[:, :, 2] = px[:, :, 1]
-                    enc = _bmp.encode_bmp(px, bpp=bpp, top_down=d % 3 == 0)
-                    got, meta = _bmp.decode_bmp(enc)
-                    want = px.copy()
-                    if bpp != 32:
-                        want[:, :, 3] = 255
-                    decoded.append((0, form, got, want))
-                else:
-                    specs = []
-                    wants = []
-                    forms = []
-                    for m in range(d % 3 + 1):
-                        w, h = 4 + (d + m) % 9, 3 + (d + 2 * m) % 7
-                        px = _raster(d, m, w, h, alpha_parity=True)
-                        form = "ico-dib" if (d + m) % 2 == 0 else "ico-png"
-                        specs.append(
-                            {
-                                "rgba": px,
-                                "form": "dib" if form == "ico-dib" else "png",
-                            }
-                        )
-                        wants.append(px)
-                        forms.append(form)
-                    ico = _bmp.encode_ico(specs)
-                    for m, got in enumerate(_bmp.decode_ico(ico)):
-                        decoded.append((m, forms[m], got["rgba"], wants[m]))
-                for m, form, got, want in decoded:
-                    g64 = got.astype(np.int64)
-                    rows.append(
-                        (
-                            d, m, form, got.shape[1], got.shape[0],
-                            int(g64[:, :, 0].sum()), int(g64[:, :, 1].sum()),
-                            int(g64[:, :, 2].sum()), int(g64[:, :, 3].sum()),
-                            bool(got.shape == want.shape and (got == want).all()),
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname, dt in (
-                ("doc_id", "int64"), ("member_idx", "int32"),
-                ("width", "int32"), ("height", "int32"),
-                ("r_sum", "int64"), ("g_sum", "int64"),
-                ("b_sum", "int64"), ("a_sum", "int64"),
-            ):
-                out[cname] = out[cname].astype(dt)
-            yield out
+    def rows_for_doc(d):
+        decoded = []
+        if d % 2 == 0:
+            bpp = (8, 24, 32)[(d // 2) % 3]
+            form = {8: "bmp8", 24: "bmp24", 32: "bmp32"}[bpp]
+            w, h = 4 + d % 9, 3 + d % 7
+            px = _raster(d, 0, w, h, alpha_parity=bpp == 32)
+            if bpp == 8:
+                px[:, :, 0] = px[:, :, 2] = px[:, :, 1]
+            enc = _bmp.encode_bmp(px, bpp=bpp, top_down=d % 3 == 0)
+            got, _ = _bmp.decode_bmp(enc)
+            want = px.copy()
+            if bpp != 32:
+                want[:, :, 3] = 255
+            decoded.append((0, form, got, want))
+        else:
+            specs = []
+            wants = []
+            forms = []
+            for m in range(d % 3 + 1):
+                w, h = 4 + (d + m) % 9, 3 + (d + 2 * m) % 7
+                px = _raster(d, m, w, h, alpha_parity=True)
+                form = "ico-dib" if (d + m) % 2 == 0 else "ico-png"
+                specs.append(
+                    {"rgba": px, "form": "dib" if form == "ico-dib" else "png"}
+                )
+                wants.append(px)
+                forms.append(form)
+            for m, got in enumerate(_bmp.decode_ico(_bmp.encode_ico(specs))):
+                decoded.append((m, forms[m], got["rgba"], wants[m]))
+        for m, form, got, want in decoded:
+            g64 = got.astype(np.int64)
+            yield (
+                d, m, form, got.shape[1], got.shape[0],
+                int(g64[:, :, 0].sum()), int(g64[:, :, 1].sum()),
+                int(g64[:, :, 2].sum()), int(g64[:, :, 3].sum()),
+                bool(got.shape == want.shape and (got == want).all()),
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4529,8 +3980,6 @@ def multimodal_avif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     per item with type, bound ispe dimensions and the located payload
     size. The modern crawl's image-routing step for .avif/.heic
     content. Arrow-batched mapInPandas, map-only."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import multimodal as _mm
@@ -4552,52 +4001,38 @@ def multimodal_avif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("brand", T.StringType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nimg = 1 + d % 3
-                brand = b"avif" if d % 2 == 0 else b"heic"
-                items = []
-                for i in range(nimg):
-                    size = 20 + (d * 3 + 7 * i) % 29
-                    items.append(
-                        {
-                            "id": i + 1, "type": b"av01",
-                            "width": 64 + (d + 5 * i) % 13 * 16,
-                            "height": 48 + (d + 3 * i) % 11 * 16,
-                            "data": bytes((d + i + k) % 256 for k in range(size)),
-                            "primary": i == 0,
-                        }
-                    )
-                if d % 4 == 1:
-                    items.append(
-                        {
-                            "id": nimg + 1, "type": b"Exif",
-                            "width": 0, "height": 0,
-                            "data": b"Exif\x00\x00II*\x00\x08\x00\x00\x00",
-                        }
-                    )
-                blob = _mm.make_avif(items, brand=brand)
-                probe = _mm.probe_avif(blob)
-                for entry in probe["items"]:
-                    rows.append(
-                        (
-                            d, entry["id"], entry["type"], entry["width"],
-                            entry["height"], entry["size"],
-                            entry["is_primary"], probe["brand"],
-                        )
-                    )
-            out = pd.DataFrame(rows, columns=cols)
-            for cname in ("item_id", "width", "height", "payload_size"):
-                out[cname] = out[cname].astype("int32")
-            out["doc_id"] = out["doc_id"].astype("int64")
-            yield out
+    def rows_for_doc(d):
+        nimg = 1 + d % 3
+        items = []
+        for i in range(nimg):
+            size = 20 + (d * 3 + 7 * i) % 29
+            items.append(
+                {
+                    "id": i + 1, "type": b"av01",
+                    "width": 64 + (d + 5 * i) % 13 * 16,
+                    "height": 48 + (d + 3 * i) % 11 * 16,
+                    "data": bytes((d + i + k) % 256 for k in range(size)),
+                    "primary": i == 0,
+                }
+            )
+        if d % 4 == 1:
+            items.append(
+                {
+                    "id": nimg + 1, "type": b"Exif",
+                    "width": 0, "height": 0,
+                    "data": b"Exif\x00\x00II*\x00\x08\x00\x00\x00",
+                }
+            )
+        blob = _mm.make_avif(items, brand=b"avif" if d % 2 == 0 else b"heic")
+        probe = _mm.probe_avif(blob)
+        for entry in probe["items"]:
+            yield (
+                d, entry["id"], entry["type"], entry["width"], entry["height"],
+                entry["size"], entry["is_primary"], probe["brand"],
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4675,7 +4110,6 @@ def multimodal_mp3_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     LAME-encoded file pinned in tests/test_mp3.py. Arrow-batched
     mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -4699,7 +4133,6 @@ def multimodal_mp3_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_match", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def _granule_spec(d: int, g: int, sb: int) -> dict:
         is_ = [0] * 576
@@ -4786,48 +4219,31 @@ def multimodal_mp3_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
                 pcm.extend(out.tolist())
         return np.array(pcm)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                nf = 1 + d % 2
-                sb = 1 + d % 22
-                specs = [_granule_spec(d, g, sb) for g in range(2 * nf)]
-                planted = [list(s["is"]) for s in specs]
-                blob = _mp3.encode_mp3(
-                    specs, sample_rate=44100, bitrate_kbps=128
-                )
-                out = _mp3.decode_mp3(blob)
-                got = [gr[0] for gr in out["spectra"]]
-                spec_ok = got == planted
-                spec_sum = sum(
-                    v * (i + 1) for g_is in got for i, v in enumerate(g_is)
-                )
-                e = out["subband_energy"]
-                peak = max(range(32), key=lambda s: e[s])
-                ref = _numpy_reference(specs, 44100)
-                pcm = np.array(out["pcm"][0])
-                exact = bool(
-                    spec_ok
-                    and len(pcm) == len(ref)
-                    and np.allclose(pcm, ref, rtol=1e-9, atol=1e-12)
-                )
-                rows.append(
-                    (
-                        d, nf, 2 * nf, out["sample_rate"],
-                        out["n_samples"], sb, spec_sum, peak, exact,
-                    )
-                )
-            out_pdf = pd.DataFrame(rows, columns=cols)
-            for cname in ("n_frames", "n_granules", "sample_rate",
-                          "target_subband", "peak_subband"):
-                out_pdf[cname] = out_pdf[cname].astype("int32")
-            for cname in ("doc_id", "n_samples", "spec_sum"):
-                out_pdf[cname] = out_pdf[cname].astype("int64")
-            yield out_pdf
+    def rows_for_doc(d):
+        nf = 1 + d % 2
+        sb = 1 + d % 22
+        specs = [_granule_spec(d, g, sb) for g in range(2 * nf)]
+        planted = [list(s["is"]) for s in specs]
+        out = _mp3.decode_mp3(
+            _mp3.encode_mp3(specs, sample_rate=44100, bitrate_kbps=128)
+        )
+        got = [gr[0] for gr in out["spectra"]]
+        spec_sum = sum(v * (i + 1) for g_is in got for i, v in enumerate(g_is))
+        e = out["subband_energy"]
+        peak = max(range(32), key=lambda s: e[s])
+        ref = _numpy_reference(specs, 44100)
+        pcm = np.array(out["pcm"][0])
+        exact = bool(
+            got == planted
+            and len(pcm) == len(ref)
+            and np.allclose(pcm, ref, rtol=1e-9, atol=1e-12)
+        )
+        yield (
+            d, nf, 2 * nf, out["sample_rate"], out["n_samples"], sb,
+            spec_sum, peak, exact,
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -4919,7 +4335,6 @@ def multimodal_ogg_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent NumPy matrix pipeline. Arrow-batched mapInPandas,
     map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -4944,7 +4359,6 @@ def multimodal_ogg_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_match", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def _audio_spec(d: int, g: int) -> dict:
         classes = [1 if (d + g + p) % 3 == 0 else 0 for p in range(16)]
@@ -4986,47 +4400,32 @@ def multimodal_ogg_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
             prev = y[n2:]
         return np.array(pcm)
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                na = 3 + d % 3
-                m = 1 + d % 4
-                specs = [_audio_spec(d, g) for g in range(na)]
-                packets = _vorbis.encode_vorbis_fixture(
-                    specs, rate=8000, multiplier=m
-                )
-                out = _vorbis.decode_ogg_vorbis(make_ogg(packets))
-                floor_db_sum = sum(sum(c) for c in out["floor_db"])
-                post_sum = sum(sum(fp) for fp in out["floors"])
-                residue_wsum = 0
-                for res in out["residues"]:
-                    for i, v in enumerate(res):
-                        iv = int(v)
-                        assert iv == v, "residue values must be integer"
-                        residue_wsum += iv * (i + 1)
-                ref = _numpy_reference(specs, m)
-                pcm = np.array(out["pcm"])
-                exact = bool(
-                    len(pcm) == len(ref)
-                    and np.allclose(pcm, ref, rtol=1e-9, atol=1e-12)
-                )
-                rows.append(
-                    (
-                        d, na, out["n_samples"], out["blocksize"], m,
-                        floor_db_sum, post_sum, residue_wsum, exact,
-                    )
-                )
-            out_pdf = pd.DataFrame(rows, columns=cols)
-            for cname in ("n_audio_packets", "blocksize", "multiplier"):
-                out_pdf[cname] = out_pdf[cname].astype("int32")
-            for cname in ("doc_id", "n_samples", "floor_db_sum",
-                          "post_sum", "residue_wsum"):
-                out_pdf[cname] = out_pdf[cname].astype("int64")
-            yield out_pdf
+    def rows_for_doc(d):
+        na = 3 + d % 3
+        m = 1 + d % 4
+        specs = [_audio_spec(d, g) for g in range(na)]
+        packets = _vorbis.encode_vorbis_fixture(specs, rate=8000, multiplier=m)
+        out = _vorbis.decode_ogg_vorbis(make_ogg(packets))
+        floor_db_sum = sum(sum(c) for c in out["floor_db"])
+        post_sum = sum(sum(fp) for fp in out["floors"])
+        residue_wsum = 0
+        for res in out["residues"]:
+            for i, v in enumerate(res):
+                iv = int(v)
+                assert iv == v, "residue values must be integer"
+                residue_wsum += iv * (i + 1)
+        ref = _numpy_reference(specs, m)
+        pcm = np.array(out["pcm"])
+        exact = bool(
+            len(pcm) == len(ref)
+            and np.allclose(pcm, ref, rtol=1e-9, atol=1e-12)
+        )
+        yield (
+            d, na, out["n_samples"], out["blocksize"], m,
+            floor_db_sum, post_sum, residue_wsum, exact,
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -5147,7 +4546,6 @@ def multimodal_ogg_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers — not the decoder's incremental formula). Arrow-batched
     mapInPandas, map-only."""
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -5171,7 +4569,6 @@ def multimodal_ogg_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("exact_match", T.BooleanType()),
         ]
     )
-    cols = [f.name for f in schema.fields]
 
     def _specs(d: int, na: int) -> list[dict]:
         modes = [(d + g) % 2 for g in range(na)]
@@ -5286,52 +4683,36 @@ def multimodal_ogg_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
                 out[ch][start:start + n] += yv
         return [o[first_c:last_c] for o in out]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                na = 4 + d % 3
-                m = 1 + d % 3
-                specs = _specs(d, na)
-                packets = _vorbis.encode_vorbis_fixture_stereo(
-                    specs, multiplier=m
-                )
-                out = _vorbis.decode_ogg_vorbis(make_ogg(packets))
-                assert out["channels"] == 2
-                n_long = sum(1 for n in out["block_sizes"] if n == 512)
-                floor_db_sum = sum(
-                    sum(cv) for pkt in out["floor_db"] for cv in pkt
-                )
-                residue_wsum = 0
-                for pkt in out["residues"]:
-                    for ch, vec in enumerate(pkt):
-                        for i, v in enumerate(vec):
-                            iv = int(v)
-                            assert iv == v, "residues must be integer"
-                            residue_wsum += iv * (i + 1) * (ch + 1)
-                ref = _numpy_reference(specs, m)
-                exact = bool(
-                    len(out["pcm"][0]) == len(ref[0])
-                    and all(
-                        np.allclose(out["pcm"][ch], ref[ch],
-                                    rtol=1e-9, atol=1e-12)
-                        for ch in range(2)
-                    )
-                )
-                rows.append(
-                    (d, na, out["n_samples"], m, n_long,
-                     floor_db_sum, residue_wsum, exact)
-                )
-            out_pdf = pd.DataFrame(rows, columns=cols)
-            for cname in ("n_audio_packets", "multiplier", "n_long"):
-                out_pdf[cname] = out_pdf[cname].astype("int32")
-            for cname in ("doc_id", "n_samples", "floor_db_sum",
-                          "residue_wsum"):
-                out_pdf[cname] = out_pdf[cname].astype("int64")
-            yield out_pdf
+    def rows_for_doc(d):
+        na = 4 + d % 3
+        m = 1 + d % 3
+        specs = _specs(d, na)
+        packets = _vorbis.encode_vorbis_fixture_stereo(specs, multiplier=m)
+        out = _vorbis.decode_ogg_vorbis(make_ogg(packets))
+        assert out["channels"] == 2
+        n_long = sum(1 for n in out["block_sizes"] if n == 512)
+        floor_db_sum = sum(sum(cv) for pkt in out["floor_db"] for cv in pkt)
+        residue_wsum = 0
+        for pkt in out["residues"]:
+            for ch, vec in enumerate(pkt):
+                for i, v in enumerate(vec):
+                    iv = int(v)
+                    assert iv == v, "residues must be integer"
+                    residue_wsum += iv * (i + 1) * (ch + 1)
+        ref = _numpy_reference(specs, m)
+        exact = bool(
+            len(out["pcm"][0]) == len(ref[0])
+            and all(
+                np.allclose(out["pcm"][ch], ref[ch], rtol=1e-9, atol=1e-12)
+                for ch in range(2)
+            )
+        )
+        yield (
+            d, na, out["n_samples"], m, n_long, floor_db_sum, residue_wsum,
+            exact,
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 _OPUS_CFG_VALUES = """
@@ -5434,8 +4815,6 @@ def multimodal_opus_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: built + probed inside one mapInPandas pass (map-only,
     Arrow-batched) — no shuffle, embarrassingly parallel over docs."""
-    import pandas as pd
-
     from pyspark.sql import types as T
 
     from pyiceberg_lakehouse_spark.operators import opus as _opus
@@ -5465,73 +4844,61 @@ def multimodal_opus_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("channels", T.IntegerType()),
         T.StructField("pre_skip", T.IntegerType()),
     ])
-    cols = [f.name for f in schema.fields]
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                channels = 1 + d % 2
-                pre_skip = 100 + d % 500
-                head = _opus.build_opus_head(
-                    channels=channels, pre_skip=pre_skip,
-                    input_rate=[48000, 44100, 16000, 8000][d % 4],
-                    output_gain_q8=(d % 7 - 3) * 256,
-                )
-                tags = make_opus_tags_packet(
-                    "lh-opus", [("TITLE", f"doc-{d}")]
-                )
-                audio = []
-                for i in range(3 + d % 5):
-                    config = (d * 7 + i * 13) % 32
-                    variant = (d + i) % 4
-                    stereo = (d + i) % 2 == 1
-                    if variant == 0:
-                        frames = [b"\x5a" * (20 + (d + 3 * i) % 200)]
-                        pad = 0
-                    elif variant == 1:
-                        L = 15 + (d + 5 * i) % 100
-                        frames = [b"\x5a" * L] * 2
-                        pad = 0
-                    elif variant == 2:
-                        frames = [
-                            b"\x5a" * (10 + (d + i) % 40),
-                            b"\x5a" * (60 + (d * 3 + i) % 150),
-                        ]
-                        pad = 0
-                    else:
-                        frames = [
-                            b"\x5a" * (10 + (d + i) % 40),
-                            b"\x5a" * (60 + (d * 3 + i) % 150),
-                        ]
-                        pad = 1 + (d + i) % 8
-                    audio.append(_opus.build_opus_packet(
-                        config, frames, stereo=stereo, padding=pad,
-                    ))
-                blob = _opus.make_ogg_opus(
-                    head, tags, audio, max_segments=3 + d % 5
-                )
-                # the probe walks the REAL container: framing rules +
-                # final-granule/TOC cross-check enforced inside
-                pr = _opus.probe_ogg_opus(blob)
-                assert pr["n_packets"] == len(audio)
-                assert pr["channels"] == channels
-                cum = pre_skip
-                for i, pkt in enumerate(audio):
-                    info = _opus.parse_opus_packet(pkt)
-                    cum += info["samples48"]
-                    rows.append((
-                        d, i, info["config"], info["mode"],
-                        info["bandwidth"], info["frame_us"],
-                        info["stereo"], info["code"],
-                        info["n_frames"], info["vbr"],
-                        info["padding"], info["samples48"], cum,
-                        channels, pre_skip,
-                    ))
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_for_doc(d):
+        channels = 1 + d % 2
+        pre_skip = 100 + d % 500
+        head = _opus.build_opus_head(
+            channels=channels, pre_skip=pre_skip,
+            input_rate=[48000, 44100, 16000, 8000][d % 4],
+            output_gain_q8=(d % 7 - 3) * 256,
+        )
+        tags = make_opus_tags_packet("lh-opus", [("TITLE", f"doc-{d}")])
+        audio = []
+        for i in range(3 + d % 5):
+            config = (d * 7 + i * 13) % 32
+            variant = (d + i) % 4
+            stereo = (d + i) % 2 == 1
+            if variant == 0:
+                frames = [b"\x5a" * (20 + (d + 3 * i) % 200)]
+                pad = 0
+            elif variant == 1:
+                L = 15 + (d + 5 * i) % 100
+                frames = [b"\x5a" * L] * 2
+                pad = 0
+            elif variant == 2:
+                frames = [
+                    b"\x5a" * (10 + (d + i) % 40),
+                    b"\x5a" * (60 + (d * 3 + i) % 150),
+                ]
+                pad = 0
+            else:
+                frames = [
+                    b"\x5a" * (10 + (d + i) % 40),
+                    b"\x5a" * (60 + (d * 3 + i) % 150),
+                ]
+                pad = 1 + (d + i) % 8
+            audio.append(_opus.build_opus_packet(
+                config, frames, stereo=stereo, padding=pad,
+            ))
+        blob = _opus.make_ogg_opus(head, tags, audio, max_segments=3 + d % 5)
+        # the probe walks the REAL container: framing rules +
+        # final-granule/TOC cross-check enforced inside
+        pr = _opus.probe_ogg_opus(blob)
+        assert pr["n_packets"] == len(audio)
+        assert pr["channels"] == channels
+        cum = pre_skip
+        for i, pkt in enumerate(audio):
+            info = _opus.parse_opus_packet(pkt)
+            cum += info["samples48"]
+            yield (
+                d, i, info["config"], info["mode"], info["bandwidth"],
+                info["frame_us"], info["stereo"], info["code"],
+                info["n_frames"], info["vbr"], info["padding"],
+                info["samples48"], cum, channels, pre_skip,
+            )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -5629,7 +4996,7 @@ def multimodal_ogg_floor0(spark: SparkSession, sf_dir: str) -> DataFrame:
     (exact_match, tolerance 1e-9).
 
     Scale: one mapInPandas pass, map-only."""
-    import pandas as pd
+    import numpy as np
 
     from pyspark.sql import types as T
 
@@ -5654,7 +5021,6 @@ def multimodal_ogg_floor0(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("n_samples", T.LongType()),
         T.StructField("exact_match", T.BooleanType()),
     ])
-    cols = [f.name for f in schema.fields]
 
     LSP_MULT = [(i * 7) % 16 for i in range(32)]
     RES_VALS = [(i * 5) % 16 - 4 for i in range(32)]
@@ -5677,131 +5043,111 @@ def multimodal_ogg_floor0(spark: SparkSession, sf_dir: str) -> DataFrame:
                         "multiplicands": LSP_MULT}},
         ]
 
-    def batches(it):
-        import numpy as np
+    n, n2 = 256, 128
+    i_ = np.arange(n)
+    k_ = np.arange(n2)
+    basis = np.cos(2 * np.pi / n * (i_[:, None] + 0.5 + n / 4)
+                   * (k_[None, :] + 0.5))
+    win = np.sin(np.pi / 2 * np.sin(np.pi / n * (i_ + 0.5)) ** 2)
 
-        n, n2 = 256, 128
-        i_ = np.arange(n)
-        k_ = np.arange(n2)
-        basis = np.cos(2 * np.pi / n * (i_[:, None] + 0.5 + n / 4)
-                       * (k_[None, :] + 0.5))
-        win = np.sin(np.pi / 2
-                     * np.sin(np.pi / n * (i_ + 0.5)) ** 2)
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                order = 4 + d % 4
-                amp = 1 + d % 63
-                npk = 2 + d % 3
-                f0 = {"ftype": 0, "order": order, "rate": 8000,
-                      "bark_map_size": 77, "amplitude_bits": 6,
-                      "amplitude_offset": 120, "book_list": [3]}
-                lsp_entries = [(d + t) % 16
-                               for t in range((order + 1) // 2)]
-                classes = [1 if (d + p) % 3 == 0 else 0
-                           for p in range(16)]
-                entries = [
-                    [(d + p) % 8, (d + 3 * p + 2) % 8]
-                    if classes[p] else [] for p in range(16)
-                ]
-                outs = {}
-                for rtype in (0, 1):
-                    res = {"rtype": rtype, "begin": 0, "end": 128,
-                           "partition_size": 8, "classifications": 2,
-                           "classbook": 0, "cascade": [0, 1],
-                           "books": [[-1] * 8, [1] + [-1] * 7]}
-                    setup = _V.write_setup_header_full(
-                        _books(), [f0], [res],
-                        [{"submaps": [{"floor": 0, "residue": 0}],
-                          "mux": [0], "coupling": []}],
-                        [{"blockflag": 0, "mapping": 0}], nch=1)
-                    bks = _V.read_setup_header(setup, 1)["books"]
-                    pkts = [
-                        _V.write_id_header(1, 8000, 256),
-                        make_vorbis_comment_packet("v", []),
-                        setup,
-                    ]
-                    for _ in range(npk):
-                        w = _V.LsbWriter()
-                        w.write(0, 1)
-                        _V.encode_floor0(w, f0, bks, amp, 0,
-                                         lsp_entries)
-                        _V.encode_residue01_mono(w, res, bks,
-                                                 classes, entries)
-                        pkts.append(w.to_bytes())
-                    outs[rtype] = _V.decode_vorbis(pkts)
-                # ---- independent numpy dual-derivation ----
-                coeffs, last = [], 0.0
-                for e in lsp_entries:
-                    for j in range(2):
-                        coeffs.append(
-                            1 / 16 + LSP_MULT[e * 2 + j] / 8 + last
-                        )
-                    last = coeffs[-1]
-                coeffs = coeffs[:order]
-                coeff_sum16 = round(16 * sum(coeffs))
-                mp = np.array(_V.floor0_map(8000, 77, n2))
-                z = np.exp(-1j * np.pi * mp / 77)
-                if order % 2:
-                    P = (1 - z ** 2)
-                    Q = np.ones_like(z)
-                else:
-                    P = (1 - z)
-                    Q = (1 + z)
-                for t, c in enumerate(coeffs):
-                    f = 1 - 2 * np.cos(c) * z + z ** 2
-                    if t % 2:
-                        P = P * f
-                    else:
-                        Q = Q * f
-                pq = (np.abs(P) ** 2 + np.abs(Q) ** 2) / 4
-                # same saturation clamp as floor0_curve (the decoder's
-                # robustness guard) so both derivations agree at any
-                # doc-derived envelope
-                lin = np.exp(np.minimum(
-                    0.11512925 * (amp * 120 / (63 * np.sqrt(pq)) - 120),
-                    700.0,
-                ))
-                wsums = {}
-                ok = True
-                for rtype in (0, 1):
-                    rv = np.zeros(n2)
-                    for p in range(16):
-                        if not classes[p]:
-                            continue
-                        for i2, e in enumerate(entries[p]):
-                            for j in range(4):
-                                pos = (p * 8 + i2 + j * 2 if rtype == 0
-                                       else p * 8 + i2 * 4 + j)
-                                rv[pos] += RES_VALS[e * 4 + j]
-                    wsums[rtype] = int(
-                        sum((i3 + 1) * rv[i3] for i3 in range(n2))
-                    )
-                    got_rv = np.array(outs[rtype]["residues"][0])
-                    ok &= np.array_equal(got_rv, rv)
-                    got_cv = np.array(outs[rtype]["floor_db"][0])
-                    ok &= bool(np.allclose(got_cv, lin, rtol=1e-9))
-                    yw = (basis @ (lin * rv)) * win
-                    want = np.concatenate(
-                        [yw[n2:] + yw[:n2]] * (npk - 1)
-                    )
-                    got_pcm = np.array(outs[rtype]["pcm"])
-                    # scale-relative: curves may legally sit many
-                    # orders above unity (saturation-guarded)
-                    scale = max(1.0, float(np.abs(want).max()))
-                    ok &= bool(np.allclose(
-                        got_pcm / scale, want / scale, atol=1e-9
-                    ))
-                    ok &= outs[rtype]["floors"] == [amp] * npk
-                rows.append((
-                    d, order, amp, coeff_sum16,
-                    wsums[0], wsums[1], wsums[0] != wsums[1],
-                    (npk - 1) * n2, bool(ok),
-                ))
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_for_doc(d):
+        order = 4 + d % 4
+        amp = 1 + d % 63
+        npk = 2 + d % 3
+        f0 = {"ftype": 0, "order": order, "rate": 8000,
+              "bark_map_size": 77, "amplitude_bits": 6,
+              "amplitude_offset": 120, "book_list": [3]}
+        lsp_entries = [(d + t) % 16 for t in range((order + 1) // 2)]
+        classes = [1 if (d + p) % 3 == 0 else 0 for p in range(16)]
+        entries = [
+            [(d + p) % 8, (d + 3 * p + 2) % 8] if classes[p] else []
+            for p in range(16)
+        ]
+        outs = {}
+        for rtype in (0, 1):
+            res = {"rtype": rtype, "begin": 0, "end": 128,
+                   "partition_size": 8, "classifications": 2,
+                   "classbook": 0, "cascade": [0, 1],
+                   "books": [[-1] * 8, [1] + [-1] * 7]}
+            setup = _V.write_setup_header_full(
+                _books(), [f0], [res],
+                [{"submaps": [{"floor": 0, "residue": 0}],
+                  "mux": [0], "coupling": []}],
+                [{"blockflag": 0, "mapping": 0}], nch=1)
+            bks = _V.read_setup_header(setup, 1)["books"]
+            pkts = [
+                _V.write_id_header(1, 8000, 256),
+                make_vorbis_comment_packet("v", []),
+                setup,
+            ]
+            for _ in range(npk):
+                w = _V.LsbWriter()
+                w.write(0, 1)
+                _V.encode_floor0(w, f0, bks, amp, 0, lsp_entries)
+                _V.encode_residue01_mono(w, res, bks, classes, entries)
+                pkts.append(w.to_bytes())
+            outs[rtype] = _V.decode_vorbis(pkts)
+        # ---- independent numpy dual-derivation ----
+        coeffs, last = [], 0.0
+        for e in lsp_entries:
+            for j in range(2):
+                coeffs.append(1 / 16 + LSP_MULT[e * 2 + j] / 8 + last)
+            last = coeffs[-1]
+        coeffs = coeffs[:order]
+        coeff_sum16 = round(16 * sum(coeffs))
+        mp = np.array(_V.floor0_map(8000, 77, n2))
+        z = np.exp(-1j * np.pi * mp / 77)
+        if order % 2:
+            P = (1 - z ** 2)
+            Q = np.ones_like(z)
+        else:
+            P = (1 - z)
+            Q = (1 + z)
+        for t, c in enumerate(coeffs):
+            f = 1 - 2 * np.cos(c) * z + z ** 2
+            if t % 2:
+                P = P * f
+            else:
+                Q = Q * f
+        pq = (np.abs(P) ** 2 + np.abs(Q) ** 2) / 4
+        # same saturation clamp as floor0_curve (the decoder's
+        # robustness guard) so both derivations agree at any
+        # doc-derived envelope
+        lin = np.exp(np.minimum(
+            0.11512925 * (amp * 120 / (63 * np.sqrt(pq)) - 120),
+            700.0,
+        ))
+        wsums = {}
+        ok = True
+        for rtype in (0, 1):
+            rv = np.zeros(n2)
+            for p in range(16):
+                if not classes[p]:
+                    continue
+                for i2, e in enumerate(entries[p]):
+                    for j in range(4):
+                        pos = (p * 8 + i2 + j * 2 if rtype == 0
+                               else p * 8 + i2 * 4 + j)
+                        rv[pos] += RES_VALS[e * 4 + j]
+            wsums[rtype] = int(sum((i3 + 1) * rv[i3] for i3 in range(n2)))
+            got_rv = np.array(outs[rtype]["residues"][0])
+            ok &= np.array_equal(got_rv, rv)
+            got_cv = np.array(outs[rtype]["floor_db"][0])
+            ok &= bool(np.allclose(got_cv, lin, rtol=1e-9))
+            yw = (basis @ (lin * rv)) * win
+            want = np.concatenate([yw[n2:] + yw[:n2]] * (npk - 1))
+            got_pcm = np.array(outs[rtype]["pcm"])
+            # scale-relative: curves may legally sit many
+            # orders above unity (saturation-guarded)
+            scale = max(1.0, float(np.abs(want).max()))
+            ok &= bool(np.allclose(got_pcm / scale, want / scale, atol=1e-9))
+            ok &= outs[rtype]["floors"] == [amp] * npk
+        yield (
+            d, order, amp, coeff_sum16, wsums[0], wsums[1],
+            wsums[0] != wsums[1], (npk - 1) * n2, bool(ok),
+        )
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)
 
 
 @register(
@@ -5861,7 +5207,6 @@ def multimodal_mp3_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
     import math
 
     import numpy as np
-    import pandas as pd
 
     from pyspark.sql import types as T
 
@@ -5881,7 +5226,6 @@ def multimodal_mp3_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("n_samples", T.LongType()),
         T.StructField("exact_match", T.BooleanType()),
     ])
-    cols = [f.name for f in schema.fields]
     SR = 44100
 
     def _gr_specs(d, me):
@@ -5997,40 +5341,26 @@ def multimodal_mp3_stereo(spark: SparkSession, sf_dir: str) -> DataFrame:
             pcms.append(np.array(pcm))
         return pcms
 
-    def batches(it):
-        for pdf in it:
-            rows = []
-            for doc_id in pdf["doc_id"]:
-                d = int(doc_id)
-                me = 1 + d % 3
-                pair, sfl_r = _gr_specs(d, me)
-                blob = _mp3.encode_mp3_stereo(
-                    [pair, [dict(pair[0]), dict(pair[1])]],
-                    sample_rate=SR, mode_ext=me,
-                )
-                out = _mp3.decode_mp3(blob)
-                assert out["nch"] == 2
-                wsum = [0, 0]
-                for gr in out["spectra"]:
-                    for ch in range(2):
-                        wsum[ch] += sum(
-                            v * (i + 1)
-                            for i, v in enumerate(gr[ch]) if v
-                        )
-                want = _dual_pcm(d, me, sfl_r)
-                ok = True
-                for ch in range(2):
-                    got = np.array(out["pcm"][ch])
-                    ok &= got.shape == want[ch].shape
-                    ok &= bool(np.allclose(
-                        got, want[ch], atol=1e-9
-                    ))
-                ips = sum((d + b) % 8 for b in range(21)) \
-                    if me in (1, 3) else 0
-                rows.append((
-                    d, me, wsum[0], wsum[1], ips,
-                    out["n_samples"], bool(ok),
-                ))
-            yield pd.DataFrame(rows, columns=cols)
+    def rows_for_doc(d):
+        me = 1 + d % 3
+        pair, sfl_r = _gr_specs(d, me)
+        blob = _mp3.encode_mp3_stereo(
+            [pair, [dict(pair[0]), dict(pair[1])]],
+            sample_rate=SR, mode_ext=me,
+        )
+        out = _mp3.decode_mp3(blob)
+        assert out["nch"] == 2
+        wsum = [0, 0]
+        for gr in out["spectra"]:
+            for ch in range(2):
+                wsum[ch] += sum(v * (i + 1) for i, v in enumerate(gr[ch]) if v)
+        want = _dual_pcm(d, me, sfl_r)
+        ok = True
+        for ch in range(2):
+            got = np.array(out["pcm"][ch])
+            ok &= got.shape == want[ch].shape
+            ok &= bool(np.allclose(got, want[ch], atol=1e-9))
+        ips = sum((d + b) % 8 for b in range(21)) if me in (1, 3) else 0
+        yield d, me, wsum[0], wsum[1], ips, out["n_samples"], bool(ok)
 
-    return spread_ids(docs, sf_dir=sf_dir).mapInPandas(batches, schema)
+    return map_docs(docs, rows_for_doc, schema, sf_dir=sf_dir)

@@ -10,6 +10,7 @@ head + 1.
 from __future__ import annotations
 
 import os
+import stat
 import subprocess
 import sys
 
@@ -118,3 +119,43 @@ def test_log_survives_death(tmp_path, action, point):
     again = SnapshotLog(table_dir).load()
     assert [s.snapshot_id for s in again.snapshots] == ids + [head + 1]
     assert again.live_files()[-1]["path"] == "/fake/next.parquet"
+
+
+def _trace_publishes(monkeypatch) -> list[tuple[str, str]]:
+    """Record every ``os.fsync`` (of a file or a directory) and
+    ``os.replace`` (by destination) in call order."""
+    events: list[tuple[str, str]] = []
+    real_fsync, real_replace = os.fsync, os.replace
+
+    def fsync(fd):
+        events.append(("fsync", "dir" if stat.S_ISDIR(os.fstat(fd).st_mode) else "file"))
+        real_fsync(fd)
+
+    def replace(src, dst):
+        real_replace(src, dst)
+        events.append(("replace", dst))
+
+    monkeypatch.setattr(os, "fsync", fsync)
+    monkeypatch.setattr(os, "replace", replace)
+    return events
+
+
+def test_publishes_are_durable(tmp_path, monkeypatch):
+    """Each publish fsyncs its temp file, then replaces, then fsyncs the
+    directory: a fresh commit's entry, and a whole-log rewrite's base and
+    head marker."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.init_table(T.StructType([T.StructField("id", T.LongType())]), [])
+    assert not log._fold_due()
+    entry = os.path.join(log.entry_dir, log._entry_name(log.current_snapshot_id() + 1))
+
+    events = _trace_publishes(monkeypatch)
+    log.commit("append", [{"path": "/fake/a.parquet", "partition": {}, "rows": 1}])
+    assert events == [("fsync", "file"), ("replace", entry), ("fsync", "dir")]
+
+    events.clear()
+    log._write()
+    assert events == [
+        ("fsync", "file"), ("replace", log.path), ("fsync", "dir"),
+        ("fsync", "file"), ("replace", entry), ("fsync", "dir"),
+    ]
