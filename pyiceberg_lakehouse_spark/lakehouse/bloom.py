@@ -9,66 +9,98 @@ distributed pass over the freshly written files at commit time.
 
 Hashing is Spark's ``xxhash64`` (JVM-side, whole-stage codegen) with the
 Kirsch-Mitzenmacher double-hashing scheme: position_i = (h1 + i*h2) mod m,
-h1 = xxhash64(col), h2 = xxhash64(col, 'bloom2'). The probe computes the
-same positions through a 1-row Spark job, so build and probe can never
-disagree on the hash function.
+h1 = xxhash64(col), h2 = xxhash64(col, 'bloom2'). The probe hashes its
+value through a 1-row Spark job and reduces the two hashes mod each
+file's m on the driver, so build and probe can never disagree on the hash
+function, and one job serves every filter size.
 
-Sizing: the default m=8192 bits (1 KiB/file/column) at k=4 holds ~1%
-false positives up to ~800 distinct keys per file and saturates (FP -> 1,
-no pruning) past a few thousand — size ``write.bloom-bits`` to ~10x the
-expected distinct keys per file (and optionally ``write.bloom-hashes``).
-At 100 TB with 512 MB files of ~500k distinct keys that's m ~ 5M bits =
-640 KiB/file/column → ~120 GB of bloom metadata per column across 200k
-files, which no longer fits one driver JSON log comfortably — at that
-scale store blooms per-file-sidecar and load lazily; within this repo's
-metadata budget the dial covers the tested range honestly.
+Sizing: each file's filter is sized to its own row count (``bloom_bits``):
+m is the smallest power of two at or above 8 bits per row, at least 64
+bits and at most ``write.bloom-bits`` (default 8192 = 1 KiB/file/column).
+A file holds at most as many distinct keys as rows, so at k=4 the
+false-positive rate stays at or below 2.4% while the ceiling is not
+reached, and a 4-row file carries 8 bytes of bitmap instead of 1 KiB.
+Past ceiling/8 rows the filter fills up: at the 8192 default FP is ~1% up
+to ~800 distinct keys per file and saturates (FP -> 1, no pruning) past a
+few thousand, so raise ``write.bloom-bits`` to ~10x the distinct keys of a
+full-size file (and optionally ``write.bloom-hashes``). At 100 TB with
+512 MB files of ~500k distinct keys that's m ~ 5M bits = 640 KiB/file/
+column → ~120 GB of bloom metadata per column across 200k files, which no
+longer fits one driver JSON log comfortably — at that scale store blooms
+per-file-sidecar and load lazily; within this repo's metadata budget the
+dial covers the tested range honestly. Every descriptor records its own m,
+so filters written under another size rule probe unchanged.
 """
 
 from __future__ import annotations
 
 import base64
+from functools import reduce
 from typing import Any
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from pyiceberg_lakehouse_spark.localdf import local_rows_df
 from pyspark.sql import functions as F
 
 DEFAULT_M = 8192
 DEFAULT_K = 4
+MIN_M = 64
 
 
-def _positions(col: F.Column, m: int, k: int) -> F.Column:
-    """Array of k bit positions for each value (double hashing).
+def bloom_bits(rows: int, max_m: int = DEFAULT_M) -> int:
+    """Filter size for a file of ``rows`` rows: the smallest power of two
+    at or above ``8 * rows``, clamped to [MIN_M, max_m]."""
+    return min(max_m, max(MIN_M, 1 << (8 * rows - 1).bit_length()))
+
+
+def _positions(col: Column, m: Column, k: int) -> Column:
+    """Array of k bit positions for each value (double hashing), for the
+    filter size in column ``m``.
 
     The combination runs entirely mod m — (h1 mod m) + i*(h2 mod m) stays
     below k*m, so ANSI mode never sees a long overflow.
     """
-    h1 = F.pmod(F.xxhash64(col), F.lit(m))
-    h2 = F.pmod(F.xxhash64(col, F.lit("bloom2")), F.lit(m))
-    return F.array(*[F.pmod(h1 + F.lit(i) * h2, F.lit(m)) for i in range(k)])
+    h1 = F.pmod(F.xxhash64(col), m)
+    h2 = F.pmod(F.xxhash64(col, F.lit("bloom2")), m)
+    return F.array(*[F.pmod(h1 + F.lit(i) * h2, m) for i in range(k)])
 
 
 def build_file_blooms(
     spark: SparkSession,
-    paths: list[str],
+    files: list[dict[str, Any]],
     columns: list[str],
-    m: int = DEFAULT_M,
+    max_m: int = DEFAULT_M,
     k: int = DEFAULT_K,
 ) -> dict[str, dict[str, dict[str, Any]]]:
     """path -> {col -> bloom descriptor} in one distributed pass.
 
-    The pass is a scan of the just-written files projecting only the bloom
-    columns, a map-side explode to (file, col, position), and a distinct —
-    at most ``files * cols * m`` rows survive to the driver (positions are
-    deduplicated executor-side), so driver memory is bounded by the bitmap
-    size, not the row count.
+    ``files`` are log entries (``path`` and footer-exact ``rows``); each
+    file's m is ``bloom_bits(rows, max_m)``. Files of one size are read by
+    one scan that carries their m as a literal column, and the scans are
+    unioned, so every file is read once in one job however many sizes
+    occur. The pass projects only the bloom columns, explodes map-side to
+    (file, col, position) and takes a distinct — at most ``files * cols *
+    m`` rows survive to the driver (positions are deduplicated
+    executor-side), so driver memory is bounded by the bitmap size, not
+    the row count.
     """
-    if not paths or not columns:
+    if not files or not columns:
         return {}
-    df = spark.read.parquet(*paths).select(
-        F.input_file_name().alias("_file"), *columns
+    by_m: dict[int, list[str]] = {}
+    for f in files:
+        by_m.setdefault(bloom_bits(f["rows"], max_m), []).append(f["path"])
+    # infer the schema once (a Spark job per read otherwise)
+    schema = spark.read.parquet(*[f["path"] for f in files]).select(*columns).schema
+    df = reduce(
+        DataFrame.unionByName,
+        [
+            spark.read.schema(schema).parquet(*paths).select(
+                F.input_file_name().alias("_file"), F.lit(m).alias("_m"), *columns
+            )
+            for m, paths in sorted(by_m.items())
+        ],
     )
     # xxhash64 hashes int and bigint (and float/double) DIFFERENTLY for the
     # same numeric value, so the probe must cast its literal to the column's
@@ -78,16 +110,19 @@ def build_file_blooms(
         *[
             F.struct(
                 F.lit(c).alias("col"),
-                _positions(F.col(c), m, k).alias("pos_arr"),
+                _positions(F.col(c), F.col("_m"), k).alias("pos_arr"),
             )
             for c in columns
         ]
     )
     exploded = (
-        df.select("_file", F.explode(pos_structs).alias("s"))
-        .select("_file", F.col("s.col").alias("col"), F.explode("s.pos_arr").alias("pos"))
+        df.select("_file", "_m", F.explode(pos_structs).alias("s"))
+        .select(
+            "_file", "_m", F.col("s.col").alias("col"),
+            F.explode("s.pos_arr").alias("pos"),
+        )
         .distinct()
-        .groupBy("_file", "col")
+        .groupBy("_file", "_m", "col")
         .agg(F.collect_list("pos").alias("positions"))
     )
     out: dict[str, dict[str, dict[str, Any]]] = {}
@@ -96,6 +131,7 @@ def build_file_blooms(
         # log entries store plain filesystem paths
         parsed = urlparse(row["_file"])
         path = unquote(parsed.path) if parsed.scheme else row["_file"]
+        m = row["_m"]
         bits = bytearray((m + 7) // 8)
         for p in row["positions"]:
             bits[p // 8] |= 1 << (p % 8)
@@ -108,21 +144,73 @@ def build_file_blooms(
     return out
 
 
+def add_table_blooms(table: Any, entries: list[dict[str, Any]]) -> None:
+    """Attach the table's configured blooms to freshly written file
+    entries, in place: ``write.bloom-columns`` names the columns (those
+    that are data columns), ``write.bloom-bits`` caps m and
+    ``write.bloom-hashes`` sets k."""
+    props = table.log.properties
+    data_cols = {f.name for f in table._data_schema().fields}
+    columns = [
+        c.strip()
+        for c in props.get("write.bloom-columns", "").split(",")
+        if c.strip() in data_cols
+    ]
+    blooms = build_file_blooms(
+        table.spark,
+        entries,
+        columns,
+        max_m=int(props.get("write.bloom-bits", DEFAULT_M)),
+        k=int(props.get("write.bloom-hashes", DEFAULT_K)),
+    )
+    for e in entries:
+        if e["path"] in blooms:
+            e["bloom"] = blooms[e["path"]]
+
+
+def _probe_positions(h1: int, h2: int, m: int, k: int) -> list[int]:
+    """``_positions`` on the driver, from a value's two raw xxhash64s.
+    Python's ``%`` is Spark's ``pmod`` for m > 0 and the sums stay exact,
+    so each position equals the build's bit for bit."""
+    a, b = h1 % m, h2 % m
+    return [(a + i * b) % m for i in range(k)]
+
+
+def _raw_hashes(col: Column) -> list[Column]:
+    return [F.xxhash64(col).alias("h1"), F.xxhash64(col, F.lit("bloom2")).alias("h2")]
+
+
 def probe_positions(
-    spark: SparkSession, value: Any, m: int, k: int, dtype: str | None = None
-) -> list[int]:
-    """Bit positions for a probe value — same Spark hash path as the build."""
+    spark: SparkSession,
+    value: Any,
+    shapes: list[tuple[int, int]],
+    dtype: str | None = None,
+) -> dict[tuple[int, int], list[int]]:
+    """(m, k) -> bit positions of one probe value for every filter shape
+    in ``shapes``, from ONE 1-row Spark job that hashes the value (Spark's
+    xxhash64, the build's hash function); the modular arithmetic is done
+    on the driver, so the job is the same whatever the filter sizes."""
     lit = F.lit(value)
     if dtype is not None:
         lit = lit.cast(dtype)
-    row = spark.range(1).select(_positions(lit, m, k).alias("pos")).collect()[0]
-    return list(row["pos"])
+    h1, h2 = spark.range(1).select(*_raw_hashes(lit)).collect()[0]
+    return {(m, k): _probe_positions(h1, h2, m, k) for m, k in shapes}
 
 
 def might_contain(bloom: dict[str, Any], positions: list[int]) -> bool:
     """True unless some probed bit is unset (definite absence)."""
     bits = base64.b64decode(bloom["bits"])
     return all(bits[p // 8] & (1 << (p % 8)) for p in positions)
+
+
+def _shapes_by_type(
+    blooms: list[dict[str, Any]],
+) -> dict[str | None, list[tuple[int, int]]]:
+    """Probe type -> the distinct (m, k) of the descriptors of that type."""
+    shapes: dict[str | None, set[tuple[int, int]]] = {}
+    for b in blooms:
+        shapes.setdefault(b.get("type"), set()).add((b["m"], b["k"]))
+    return {dtype: sorted(s) for dtype, s in shapes.items()}
 
 
 def prune_files_bloom(
@@ -133,27 +221,24 @@ def prune_files_bloom(
     """Drop files whose bloom filter proves a probed key is absent.
 
     ``probes`` maps column -> equality value. Files without a bloom for a
-    probed column are kept (skipping must stay conservative). Probe hashes
-    are computed once per (column, m, k) combination, not per file.
+    probed column are kept (skipping must stay conservative). The probe
+    value is hashed in one Spark job per (column, type), whatever the
+    filter sizes, never per file.
     """
-    pos_cache: dict[tuple, list[int]] = {}
+    positions: dict[tuple, list[int]] = {}
+    for col, value in probes.items():
+        blooms = [f["bloom"][col] for f in files if col in (f.get("bloom") or {})]
+        for dtype, shapes in _shapes_by_type(blooms).items():
+            for (m, k), pos in probe_positions(spark, value, shapes, dtype).items():
+                positions[(col, m, k, dtype)] = pos
     out = []
     for f in files:
         blooms = f.get("bloom") or {}
-        keep = True
-        for col, value in probes.items():
-            b = blooms.get(col)
-            if b is None:
-                continue
-            key = (col, b["m"], b["k"], b.get("type"))
-            if key not in pos_cache:
-                pos_cache[key] = probe_positions(
-                    spark, value, b["m"], b["k"], b.get("type")
-                )
-            if not might_contain(b, pos_cache[key]):
-                keep = False
-                break
-        if keep:
+        if all(
+            might_contain(b, positions[(col, b["m"], b["k"], b.get("type"))])
+            for col, b in blooms.items()
+            if col in probes
+        ):
             out.append(f)
     return out
 
@@ -161,25 +246,26 @@ def prune_files_bloom(
 def probe_positions_many(
     spark: SparkSession,
     values: list[Any],
-    m: int,
-    k: int,
+    shapes: list[tuple[int, int]],
     dtype: str | None = None,
-) -> dict[Any, list[int]]:
-    """value -> bit positions for a SET of probe values, in ONE Spark job.
+) -> dict[tuple[int, int], dict[Any, list[int]]]:
+    """(m, k) -> value -> bit positions for a SET of probe values and
+    every filter shape in ``shapes``, in ONE Spark job.
 
     The join-driven probe (`prune_files_bloom_any`) hashes every dim key;
     doing that one key at a time would cost a Spark job per key. The values
-    ride a single local DataFrame instead — same ``_positions`` expression
-    as the build, so hashes can never diverge."""
+    ride a single local DataFrame instead — same xxhash64 as the build, so
+    hashes can never diverge."""
     if not values:
-        return {}
+        return {shape: {} for shape in shapes}
     df = local_rows_df(
         spark, [(v,) for v in values], f"value {dtype or 'bigint'}"
     )
-    rows = df.select(
-        "value", _positions(F.col("value"), m, k).alias("pos")
-    ).collect()
-    return {r["value"]: list(r["pos"]) for r in rows}
+    rows = df.select("value", *_raw_hashes(F.col("value"))).collect()
+    return {
+        (m, k): {r["value"]: _probe_positions(r["h1"], r["h2"], m, k) for r in rows}
+        for m, k in shapes
+    }
 
 
 def prune_files_bloom_any(
@@ -195,20 +281,19 @@ def prune_files_bloom_any(
     (bounded) key set probes each fact file's bloom, so files holding none
     of the keys are never planned, let alone read. Files without a bloom
     for ``col`` are kept — skipping stays conservative and the join owns
-    correctness. Probe hashes are computed once per (m, k, type) descriptor
-    shape, one Spark job each, never per file."""
-    pos_cache: dict[tuple, dict[Any, list[int]]] = {}
+    correctness. The keys are hashed in one Spark job per descriptor type,
+    whatever the filter sizes, never per file."""
+    blooms = [f["bloom"][col] for f in files if col in (f.get("bloom") or {})]
+    positions: dict[tuple, dict[Any, list[int]]] = {}
+    for dtype, shapes in _shapes_by_type(blooms).items():
+        for (m, k), pos in probe_positions_many(spark, values, shapes, dtype).items():
+            positions[(m, k, dtype)] = pos
     out = []
     for f in files:
         b = (f.get("bloom") or {}).get(col)
-        if b is None:
-            out.append(f)
-            continue
-        key = (b["m"], b["k"], b.get("type"))
-        if key not in pos_cache:
-            pos_cache[key] = probe_positions_many(
-                spark, values, b["m"], b["k"], b.get("type")
-            )
-        if any(might_contain(b, pos) for pos in pos_cache[key].values()):
+        if b is None or any(
+            might_contain(b, pos)
+            for pos in positions[(b["m"], b["k"], b.get("type"))].values()
+        ):
             out.append(f)
     return out

@@ -14,6 +14,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
 from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
 from pyiceberg_lakehouse_spark.localdf import local_rows_df
 
@@ -878,27 +879,7 @@ def _ordered_purge_rewrite(
         "rows": file_row_count(new_path),
         "stats": collect_file_stats(new_path),
     }]
-    bloom_cols = [
-        c.strip()
-        for c in table.log.properties.get("write.bloom-columns", "").split(",")
-        if c.strip()
-    ]
-    if bloom_cols:
-        from pyiceberg_lakehouse_spark.lakehouse.bloom import (
-            DEFAULT_K,
-            DEFAULT_M,
-            build_file_blooms,
-        )
-
-        data_cols = {f.name for f in table._data_schema().fields}
-        blooms = build_file_blooms(
-            table.spark, [new_path],
-            [c for c in bloom_cols if c in data_cols],
-            m=int(table.log.properties.get("write.bloom-bits", DEFAULT_M)),
-            k=int(table.log.properties.get("write.bloom-hashes", DEFAULT_K)),
-        )
-        if new_path in blooms:
-            reps[0]["bloom"] = blooms[new_path]
+    add_table_blooms(table, reps)
     # the URI form a future scan's _metadata.file_path reports for the
     # new file — observed, not predicted (one footer-scale read)
     new_uri = (
@@ -995,12 +976,6 @@ def _batched_ordered_purge_rewrite(
         .partitionBy("__lh_src")
         .parquet(out_dir)
     )
-    bloom_cols = [
-        c.strip()
-        for c in table.log.properties.get("write.bloom-columns", "").split(",")
-        if c.strip()
-    ]
-    data_cols = {f.name for f in table._data_schema().fields}
     out: dict[str, tuple[list[dict], tuple]] = {}
     new_paths_by_canon: dict[str, str] = {}
     for i, canon in enumerate(canon_sorted):
@@ -1025,25 +1000,10 @@ def _batched_ordered_purge_rewrite(
             "rows": file_row_count(new_path),
             "stats": collect_file_stats(new_path),
         }
-        if bloom_cols:
-            from pyiceberg_lakehouse_spark.lakehouse.bloom import (
-                DEFAULT_K,
-                DEFAULT_M,
-                build_file_blooms,
-            )
-
-            blooms = build_file_blooms(
-                table.spark, [new_path],
-                [c for c in bloom_cols if c in data_cols],
-                m=int(table.log.properties.get(
-                    "write.bloom-bits", DEFAULT_M)),
-                k=int(table.log.properties.get(
-                    "write.bloom-hashes", DEFAULT_K)),
-            )
-            if new_path in blooms:
-                rep["bloom"] = blooms[new_path]
         out[entry["path"]] = ([rep], (purged, new_path))
         new_paths_by_canon[canon] = new_path
+    # one bloom pass over every replacement
+    add_table_blooms(table, [r for reps, _ in out.values() for r in reps])
     # observe the URI form a future scan reports for every new file
     # (one footer-scale job over all replacements)
     if new_paths_by_canon:

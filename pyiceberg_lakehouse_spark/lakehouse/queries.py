@@ -638,9 +638,6 @@ def lh_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ns.orders_pe",
         SCHEMAS["orders"],
         partition_by=["month(o_orderdate)"],
-        # hash distribution: one writer task per partition value, so the
-        # example commits ~1 file per month/day instead of tasks x partitions
-        properties={"write.distribution-mode": "hash"},
     )
     t.append(orders.filter(F.col("o_orderkey") % 2 == 0))
     t.update_partition_spec(["day(o_orderdate)"])

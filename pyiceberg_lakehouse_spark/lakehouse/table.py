@@ -51,6 +51,22 @@ from pyiceberg_lakehouse_spark.lakehouse.transforms import (
 
 _HIVE_SEG = re.compile(r"([^/=]+)=([^/]+)")
 
+# analysed-plan nodes that fix an input's distribution or order
+_LAYOUT_NODES = {"Sort", "RepartitionByExpression", "RebalancePartitions"}
+
+
+def _has_caller_layout(df: DataFrame) -> bool:
+    """True when ``df``'s analysed plan, below its Projects, is a sort, a
+    keyed repartition, a rebalance or a coalesce: the caller chose how its
+    rows are spread over tasks. A round-robin ``repartition(n)`` fixes only
+    a task count and spreads every partition value over all n tasks, so it
+    does not count."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.nodeName() == "Project":
+        node = node.child()
+    name = node.nodeName()
+    return name in _LAYOUT_NODES or (name == "Repartition" and not node.shuffle())
+
 
 def _parse_hive_partition(rel_path: str) -> dict[str, str]:
     """key=value partition segments from a path, PERCENT-DECODED.
@@ -1611,17 +1627,30 @@ class LakehouseTable:
         # write distribution (Iceberg's write.distribution-mode): without it,
         # EVERY task holding rows of a partition writes its own file there —
         # a 1000-task write into 100 partitions can shed 100k small files.
-        # "hash" co-locates each partition's rows on one task (one shuffle);
-        # "range" range-partitions on partition + sort columns, which also
-        # pre-orders data for tight file bounds.
-        dist_mode = self.log.properties.get("write.distribution-mode", "none")
+        # "hash", the default for partitioned tables (as in Iceberg's Spark
+        # writer), rebalances rows by the partition columns: with AQE each
+        # partition value lands on as few tasks as its size needs (small
+        # ones share a task, a skewed one splits across several), so a
+        # commit writes a few full files per partition. An input whose plan
+        # already fixes its distribution or order (compact's repartition,
+        # the clustered rewrites' range partitioning + sort, a caller's
+        # orderBy) keeps it: a rebalance on top would make Spark drop that
+        # layout. "range" range-partitions on partition + sort columns,
+        # which also pre-orders data for tight file bounds.
+        dist_mode = self.log.properties.get(
+            "write.distribution-mode", "hash" if self.log.partition_by else "none"
+        )
         sort_cols_prop = [
             c.strip()
             for c in self.log.properties.get("write.sort-order", "").split(",")
             if c.strip()
         ]
-        if dist_mode == "hash" and self.log.partition_by:
-            df = df.repartition(*self.partition_names)
+        if (
+            dist_mode == "hash"
+            and self.log.partition_by
+            and not _has_caller_layout(df)
+        ):
+            df = df.hint("rebalance", *self.partition_names)
         elif dist_mode == "range":
             range_cols = [*self.partition_names, *sort_cols_prop]
             if range_cols:
@@ -1707,34 +1736,9 @@ class LakehouseTable:
             entries = list(pool.map(_entry, paths))
         # opt-in per-file bloom filters (point-lookup skipping where min/max
         # can't prune): one distributed pass over the new files
-        bloom_cols = [
-            c.strip()
-            for c in self.log.properties.get("write.bloom-columns", "").split(",")
-            if c.strip()
-        ]
-        if bloom_cols and entries:
-            from pyiceberg_lakehouse_spark.lakehouse.bloom import build_file_blooms
+        from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
 
-            data_cols = {f.name for f in self._data_schema().fields}
-            from pyiceberg_lakehouse_spark.lakehouse.bloom import (
-                DEFAULT_K,
-                DEFAULT_M,
-            )
-
-            blooms = build_file_blooms(
-                self.spark,
-                [e["path"] for e in entries],
-                [c for c in bloom_cols if c in data_cols],
-                # size to the expected per-file key cardinality:
-                # write.bloom-bits ~ 10x the distinct keys per file keeps
-                # FP ~1% at k=4; the 8 KiB default saturates past ~1k
-                # distinct keys/file and stops pruning
-                m=int(self.log.properties.get("write.bloom-bits", DEFAULT_M)),
-                k=int(self.log.properties.get("write.bloom-hashes", DEFAULT_K)),
-            )
-            for e in entries:
-                if e["path"] in blooms:
-                    e["bloom"] = blooms[e["path"]]
+        add_table_blooms(self, entries)
         return entries
 
     def _write_change_data(self, changes: DataFrame) -> list[dict[str, Any]]:

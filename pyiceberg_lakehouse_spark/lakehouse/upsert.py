@@ -15,6 +15,12 @@ Two physical strategies:
   else is untouched metadata. The partition list comes from the (small) new
   batch via distinct+collect, so the rewrite cost is proportional to the
   touched data, not the table.
+
+The merge itself never shuffles the table side (``merge_keep_last``). On a
+partitioned table the rewritten rows then pass through one write exchange:
+the table's default hash distribution rebalances them by the partition
+columns, so each rewritten partition lands as a few full files instead of
+one small file per merge task.
 """
 
 from __future__ import annotations
@@ -57,7 +63,11 @@ def merge_keep_last(
     When the batch keys outgrow ``spark.sql.autoBroadcastJoinThreshold``
     (64 MiB in session.py) the anti-join falls back to a sort-merge join,
     which shuffles and sorts the whole table side on the keys: the
-    exchange the broadcast exists to avoid.
+    exchange the broadcast exists to avoid. The merged rows of a
+    partitioned table still cross one exchange when they are written (the
+    write path's rebalance by partition columns); that one is sized by the
+    touched partitions, and it is what keeps the rewrite to a few files
+    per partition.
     """
     cols = current.columns
     order = [F.desc(order_col)] if order_col else [F.lit(1)]

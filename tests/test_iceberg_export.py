@@ -44,6 +44,9 @@ def exported(spark, warehouse):
     t = lh.create_table(
         "ns.exp_orders", SCHEMAS["orders"],
         partition_by=["o_orderstatus"],
+        # keeps each append's own files through the copy-on-write delete,
+        # so files differ in their o_orderkey bounds (the pruning check)
+        properties={"write.distribution-mode": "none"},
     )
     orders = load_table(spark, SF, "orders")
     t.append(orders.filter(F.col("o_orderkey") % 2 == 0))

@@ -231,3 +231,61 @@ def test_prune_files_uses_partition_values_for_equality():
     assert got == {"/b", "/c"}
     got = {f["path"] for f in prune_files(files, {"d": ("<", "5")})}
     assert got == {"/a", "/b", "/c"}
+
+
+@pytest.fixture()
+def mixed_bloom_table(spark, warehouse, sf_dir):
+    """One 4-row file and one 1,011-row file, each with an o_orderkey bloom."""
+    orders = load_table(spark, sf_dir, "orders")
+    t = Lakehouse(spark, warehouse).create_table(
+        "ns.orders_bloom_mixed",
+        SCHEMAS["orders"],
+        properties={"write.bloom-columns": "o_orderkey"},
+    )
+    t.append(orders.filter(F.col("o_orderkey") < 4))
+    t.append(orders.filter(F.col("o_orderkey") >= 4).limit(1011))
+    files = sorted(t.log.live_files(), key=lambda f: f["rows"])
+    assert [f["rows"] for f in files] == [4, 1011]
+    return files
+
+
+def test_bloom_bits_sized_to_file_rows(mixed_bloom_table):
+    """m is the smallest power of two >= 8 bits per row, floored at 64 and
+    capped by write.bloom-bits (default 8192)."""
+    assert [f["bloom"]["o_orderkey"]["m"] for f in mixed_bloom_table] == [64, 8192]
+
+
+def _jobs_run(spark, fn):
+    """fn's result and the number of Spark jobs it ran."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"bloom-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bloom_probe_mixed_sizes_one_job(spark, mixed_bloom_table):
+    """Files with different m probe in ONE Spark job, and every file that
+    holds a probed key is kept."""
+    from pyiceberg_lakehouse_spark.lakehouse.bloom import prune_files_bloom_any
+
+    files = mixed_bloom_table
+    keys = [
+        spark.read.parquet(f["path"]).first()["o_orderkey"] for f in files
+    ]
+    for key, f in zip(keys, files):
+        kept, jobs = _jobs_run(
+            spark, lambda: prune_files_bloom(spark, files, {"o_orderkey": key})
+        )
+        assert jobs == 1
+        assert f in kept
+    kept, jobs = _jobs_run(
+        spark, lambda: prune_files_bloom_any(spark, files, "o_orderkey", keys)
+    )
+    assert jobs == 1
+    assert kept == files
