@@ -264,6 +264,25 @@ def _collect_stats_distributed(
     return out
 
 
+def _iceberg_operation(s) -> str:
+    """The Iceberg snapshot operation of one log snapshot. The spec's
+    ``replace`` promises unchanged data, so a rewrite keeps it only when
+    it is data-change=false (compaction, z-order); a rewrite that changed
+    rows (partition-scoped upsert, ``delete_where``, ``update_where``) and
+    a ``delete`` that also adds data files (``apply_changes``) are
+    ``overwrite``s. Metadata-only commits stay ``replace``."""
+    if s.operation in ("create", "append", "add_files"):
+        return "append"
+    if s.operation == "delete":
+        return "overwrite" if s.added_files else "delete"
+    if (
+        s.operation in ("replace", "overwrite")
+        and s.summary.get("data-change") is not False
+    ):
+        return "overwrite"
+    return "replace"
+
+
 def export_iceberg_table(
     table, dest_dir: str | None = None, with_stats: bool = True
 ) -> str:
@@ -403,18 +422,15 @@ def export_iceberg_table(
         snap: dict[str, Any] = {
             "snapshot_id": int(s.snapshot_id),
             "timestamp_ms": int(s.timestamp_ms),
-            "operation": {
-                "create": "append", "append": "append",
-                "add_files": "append", "overwrite": "overwrite",
-                "delete": "delete", "replace": "replace",
-            }.get(s.operation, "replace"),
+            "operation": _iceberg_operation(s),
             "files": [_entry(f) for f in s.added_files],
-            "deleted": [
-                p for p in s.removed_paths if p in exported_paths
-            ],
+            # a log overwrite replaces the whole file set without listing
+            # what it removes
+            "deleted": sorted(exported_paths) if s.operation == "overwrite"
+            else [p for p in s.removed_paths if p in exported_paths],
         }
-        exported_paths |= {f["path"] for f in s.added_files}
         exported_paths -= set(snap["deleted"])
+        exported_paths |= {f["path"] for f in s.added_files}
         pos, eq = [], []
         for d in s.added_deletes:
             import pyarrow.parquet as pq

@@ -838,8 +838,9 @@ def lh_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lh_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC round trip: a change batch (upserts for key%11, deletes for
-    key%13) applies through apply_changes — upserts via partition-scoped
-    rewrite, deletes as merge-on-read equality deletes (metadata-only)."""
+    key%13) applies through apply_changes — one merge-on-read commit: the
+    upsert rows as new data files plus one equality-delete file of every
+    batch key; no existing file is rewritten."""
     from pyiceberg_lakehouse_spark.lakehouse.upsert import apply_changes
 
     orders = load_table(spark, sf_dir, "orders")

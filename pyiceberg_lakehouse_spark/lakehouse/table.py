@@ -1090,20 +1090,44 @@ class LakehouseTable:
 
         Sequencing matches Iceberg's: a delete applies only to data files
         committed strictly BEFORE it, so re-inserting a deleted key later is
-        visible. ``compact()`` (a replace) materializes deletes away.
+        visible. Keys match NULL-safely (the spec's rule): a NULL key
+        deletes the NULL-key rows. ``compact()`` (a replace) materializes
+        deletes away.
         """
+        return self._commit_key_deletes(
+            keys.select(*key_cols).distinct(), key_cols, {"key_cols": key_cols}
+        )
+
+    def _commit_key_deletes(
+        self,
+        keys: DataFrame,
+        key_cols: list[str],
+        summary: dict[str, Any],
+        rows: DataFrame | None = None,
+    ) -> Snapshot:
+        """One ``delete`` snapshot: ``keys`` (one row per key) as an
+        equality-delete file, plus ``rows`` as data files when given.
+
+        The added rows carry the snapshot's own id as ``added_in``, so the
+        sequencing rule (a delete applies to files added strictly before
+        it) exempts them from the commit's own delete: deleting a key and
+        adding its new row is one atomic merge-on-read upsert."""
         import uuid
 
+        files: list[dict[str, Any]] = []
+        if rows is not None:
+            self._validate_constraints(rows)
+            files = self._write_data(rows)
         del_dir = os.path.join(
             self.table_dir, "deletes", f"d-{(self.log.current_snapshot_id() or 0) + 1}-{uuid.uuid4().hex[:8]}"
         )
-        keys.select(*key_cols).distinct().write.mode("error").parquet(del_dir)
+        keys.write.mode("error").parquet(del_dir)
         paths = sorted(_glob.glob(os.path.join(del_dir, "*.parquet")))
         return self._commit(
             "delete",
-            [],
+            files,
             added_deletes=[{"path": p, "key_cols": key_cols} for p in paths],
-            summary={"key_cols": key_cols},
+            summary=summary,
         )
 
     def delete_where_positions(self, condition) -> Snapshot:
@@ -1267,14 +1291,13 @@ class LakehouseTable:
                 cur = tuple(self._forward_names(list(hist), deletes[i]["snapshot_id"]))
                 by_keys.setdefault((hist, cur), []).append(deletes[i]["path"])
             for (hist, cur), paths in sorted(by_keys.items()):
-                dkeys = (
-                    self.spark.read.parquet(*paths)
-                    .select(
-                        *[F.col(h).alias(c) for h, c in zip(hist, cur)]
-                    )
-                    .distinct()
+                # no distinct(): a key listed twice removes nothing more
+                # from an anti-join, and dropping it saves a shuffle per
+                # delete class
+                dkeys = self.spark.read.parquet(*paths).select(
+                    *[F.col(h).alias(c) for h, c in zip(hist, cur)]
                 )
-                df = df.join(dkeys, on=list(cur), how="left_anti")
+                df = anti_join_keys(df, dkeys, list(cur))
             if pos_paths:
                 # position deletes: anti-join on the scan's own row
                 # identity — (file path, ordinal) as Spark's _metadata
@@ -1964,6 +1987,19 @@ class LakehouseTable:
             retry_conflicts,
             touched_partitions=touched_partitions,
         )
+
+
+def anti_join_keys(df: DataFrame, keys: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Rows of ``df`` whose ``key_cols`` match no row of ``keys``, with
+    NULL-safe key equality: a NULL key matches a NULL key, as the Iceberg
+    spec applies equality deletes. A small ``keys`` side broadcasts, so
+    ``df`` is never shuffled."""
+    tagged = keys.select(*[F.col(k).alias(f"_ak_{k}") for k in key_cols])
+    cond = reduce(
+        lambda a, b: a & b,
+        [F.col(k).eqNullSafe(F.col(f"_ak_{k}")) for k in key_cols],
+    )
+    return df.join(tagged, on=cond, how="left_anti")
 
 
 def _partitions_of(files: list[dict[str, Any]]) -> list[dict[str, str]]:

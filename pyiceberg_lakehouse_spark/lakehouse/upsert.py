@@ -6,7 +6,7 @@ THEN INSERT *``. The reference's "last wins" depends on pandas concat file
 order (upsert.py:53); we make it deterministic with an explicit source
 priority column ordered in a row_number window (SURVEY.md §7 hard-part 1).
 
-Two physical strategies:
+Three physical strategies:
 
 - ``upsert``: full-table merge + overwrite. One shuffle on the key. Fine for
   small tables; at 100 TB it rewrites everything.
@@ -15,12 +15,16 @@ Two physical strategies:
   else is untouched metadata. The partition list comes from the (small) new
   batch via distinct+collect, so the rewrite cost is proportional to the
   touched data, not the table.
+- ``apply_changes`` (op-tagged CDC batches): merge-on-read. One snapshot
+  adds the batch's upsert rows and an equality-delete file of every batch
+  key; nothing in the table is rewritten, and reads anti-join the keys
+  until ``compact()``.
 
-The merge itself never shuffles the table side (``merge_keep_last``). On a
-partitioned table the rewritten rows then pass through one write exchange:
-the table's default hash distribution rebalances them by the partition
-columns, so each rewritten partition lands as a few full files instead of
-one small file per merge task.
+The copy-on-write merge never shuffles the table side
+(``merge_keep_last``). On a partitioned table the rewritten rows then pass
+through one write exchange: the table's default hash distribution
+rebalances them by the partition columns, so each rewritten partition
+lands as a few full files instead of one small file per merge task.
 """
 
 from __future__ import annotations
@@ -30,7 +34,10 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
+from pyiceberg_lakehouse_spark.lakehouse.table import (
+    LakehouseTable,
+    anti_join_keys,
+)
 
 
 def merge_keep_last(
@@ -38,7 +45,6 @@ def merge_keep_last(
     new: DataFrame,
     key_cols: list[str],
     order_col: str | None = None,
-    materialize_new: bool = True,
 ) -> DataFrame:
     """Deterministic last-wins merge of two frames on ``key_cols``.
 
@@ -78,25 +84,11 @@ def merge_keep_last(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    if materialize_new:
-        # the reduced batch feeds BOTH the anti-join keys and the union;
-        # cut the lineage so its source is scanned once, not per branch
-        # (checkpointing the small side only — never the table side).
-        # Callers whose batch is already cached (apply_changes) pass
-        # False: re-reading a cache hit is cheaper than materializing.
-        new_one = new_one.localCheckpoint(eager=False)
-    cur = current.select(*cols)
-    new_keys = new_one.select(
-        *[F.col(k).alias(f"_mk_{k}") for k in key_cols]
-    )
-    survivors = cur.join(
-        new_keys,
-        on=reduce(
-            lambda a, b: a & b,
-            [F.col(k).eqNullSafe(F.col(f"_mk_{k}")) for k in key_cols],
-        ),
-        how="left_anti",
-    )
+    # the reduced batch feeds BOTH the anti-join keys and the union;
+    # cut the lineage so its source is scanned once, not per branch
+    # (checkpointing the small side only — never the table side)
+    new_one = new_one.localCheckpoint(eager=False)
+    survivors = anti_join_keys(current.select(*cols), new_one, key_cols)
     return survivors.unionByName(new_one)
 
 
@@ -105,13 +97,9 @@ def upsert(
     new: DataFrame,
     key_cols: list[str],
     order_col: str | None = None,
-    materialize_new: bool = True,
 ):
     """Full merge-overwrite (matches upsert.py:58-86 exactly)."""
-    merged = merge_keep_last(
-        table.scan(), new, key_cols, order_col,
-        materialize_new=materialize_new,
-    )
+    merged = merge_keep_last(table.scan(), new, key_cols, order_col)
     return table.overwrite(merged, summary={"op": "upsert", "keys": key_cols})
 
 
@@ -120,17 +108,13 @@ def upsert_partitioned(
     new: DataFrame,
     key_cols: list[str],
     order_col: str | None = None,
-    touched: list[dict[str, str]] | None = None,
-    materialize_new: bool = True,
 ):
     """Partition-scoped upsert: rewrite only partitions touched by ``new``.
 
     Requires the table to be partitioned. The distinct partition values of
     the new batch are collected driver-side (low cardinality by construction
     — identity partition columns, main-polars.py:113) and drive both the
-    pruned scan and the replace commit. A caller that already knows the
-    batch's partition values (``apply_changes`` collects them in its
-    op-counting job) passes ``touched`` to skip the extra batch scan.
+    pruned scan and the replace commit.
     """
     pfs = table.partition_fields
     if not pfs:
@@ -138,11 +122,9 @@ def upsert_partitioned(
     _guard_single_spec(table, [pf.name for pf in pfs])
     # derive partition values (identity or transform) of the new batch —
     # hidden partitioning keeps this transparent to the caller
-    if touched is None:
-        touched = _touched_partitions(table, new)
+    touched = _touched_partitions(table, new)
     merged, touched = _merged_for_upsert(
-        table, new, key_cols, order_col, touched,
-        materialize_new=materialize_new,
+        table, new, key_cols, order_col, touched
     )
     return table.replace_partitions(merged, touched)
 
@@ -153,7 +135,6 @@ def _merged_for_upsert(
     key_cols: list[str],
     order_col: str | None,
     touched: list[dict[str, str]],
-    materialize_new: bool = True,
 ):
     """Build the replacement frame for a partition-scoped upsert.
 
@@ -168,10 +149,7 @@ def _merged_for_upsert(
         else table.scan().limit(0)
     )
     return (
-        merge_keep_last(
-            current, new, key_cols, order_col,
-            materialize_new=materialize_new,
-        ),
+        merge_keep_last(current, new, key_cols, order_col),
         touched,
     )
 
@@ -186,83 +164,54 @@ def apply_changes(
     """CDC apply: merge a change stream ('upsert'/'delete' ops) into the
     table — the consumer side of ``read_incremental``.
 
-    The batch first reduces to one final action per key (``order_col``
-    descending breaks intra-batch ties, e.g. a change-log sequence number);
-    surviving upserts merge via the partition-scoped rewrite when the table
-    is partitioned, and deletes commit as merge-on-read equality deletes —
-    no data rewrite for the delete half, which at 100 TB is the difference
-    between a metadata commit and rewriting every touched partition.
+    The batch first reduces to one final action per key: ``order_col``
+    descending picks it (e.g. a change-log sequence number), and at a tie
+    — or with no ``order_col`` — a delete outranks an upsert. The whole
+    batch then lands as ONE merge-on-read ``delete`` snapshot: the
+    surviving upsert rows as data files, and every key of the batch,
+    upserts and deletes alike, as one equality-delete file. The delete
+    hides each key's older rows wherever they live (a key that moved
+    partition included); the commit's own rows are exempt from it by
+    sequencing. Nothing already in the table is rewritten, so the write
+    cost tracks the batch, not the partitions it touches; reads anti-join
+    the keys until ``compact()`` folds them away. Returns the committed
+    snapshots: one, or none for a batch with no upserts or deletes.
     """
-    from pyiceberg_lakehouse_spark.lakehouse.transforms import derived_column_typed
-
-    w_order = [F.desc(order_col)] if order_col else []
-    if w_order:
-        w = Window.partitionBy(*key_cols).orderBy(*w_order)
-        latest = (
-            changes.withColumn("_cdc_rn", F.row_number().over(w))
-            .filter(F.col("_cdc_rn") == 1)
-            .drop("_cdc_rn")
-        )
-    else:
-        latest = changes  # caller guarantees one action per key
-    # one cached materialization of the reduced batch + ONE deciding job
-    # for BOTH commits — not two isEmpty() jobs that each re-run the
-    # key-reduction window (and would run it twice more in the merge
-    # paths). r19: the same job also collects the upsert half's distinct
-    # (derived) partition values, so the partition-scoped merge skips its
-    # own full pass over the batch (_touched_partitions) — three batch
-    # scans became one.
-    pfs = table.partition_fields if table.log.partition_by else []
-    schema = table.schema()
-    part_src = latest
-    for pf in pfs:
-        if not pf.is_identity:
-            part_src = part_src.withColumn(
-                pf.name,
-                derived_column_typed(pf, schema[pf.source].dataType.simpleString()),
-            )
-    pnames = [pf.name for pf in pfs]
-    latest = latest.cache()
+    order = [F.desc(order_col)] if order_col else []
+    w = Window.partitionBy(*key_cols).orderBy(
+        *order, F.desc(F.col(op_col) == "delete")
+    )
+    latest = (
+        changes.withColumn("_cdc_rn", F.row_number().over(w))
+        .filter(F.col("_cdc_rn") == 1)
+        .drop("_cdc_rn")
+        .filter(F.col(op_col).isin("upsert", "delete"))
+        .cache()
+    )
     try:
-        agg_cols = [
+        # one job over the cached batch decides what the commit holds
+        counts = latest.agg(
             F.count(F.when(F.col(op_col) == "upsert", 1)).alias("ups"),
             F.count(F.when(F.col(op_col) == "delete", 1)).alias("dels"),
-        ]
-        if pnames:
-            agg_cols.append(
-                F.collect_set(
-                    F.when(
-                        F.col(op_col) == "upsert", F.struct(*pnames)
-                    )
-                ).alias("parts")
-            )
-        counts = part_src.agg(*agg_cols).collect()[0]
-        ups = latest.filter(F.col(op_col) == "upsert").drop(op_col)
-        if order_col:
-            ups = ups.drop(order_col) if order_col not in table.schema().fieldNames() else ups
-        dels = latest.filter(F.col(op_col) == "delete").select(*key_cols)
-        snaps = []
+        ).collect()[0]
+        if not (counts["ups"] or counts["dels"]):
+            return []
+        ups = None
         if counts["ups"]:
-            if table.log.partition_by:
-                touched = [
-                    {p: str(r[p]) for p in pnames} for r in counts["parts"]
-                ]
-                snaps.append(
-                    upsert_partitioned(
-                        table, ups, key_cols, order_col=None,
-                        touched=touched, materialize_new=False,
-                    )
-                )
-            else:
-                snaps.append(
-                    upsert(
-                        table, ups, key_cols, order_col=None,
-                        materialize_new=False,
-                    )
-                )
-        if counts["dels"]:
-            snaps.append(table.delete_keys(dels, key_cols))
-        return snaps
+            ups = latest.filter(F.col(op_col) == "upsert").drop(op_col)
+        return [
+            table._commit_key_deletes(
+                latest.select(*key_cols).coalesce(1),
+                key_cols,
+                {
+                    "op": "apply_changes",
+                    "key_cols": key_cols,
+                    "upserts": counts["ups"],
+                    "deletes": counts["dels"],
+                },
+                rows=ups,
+            )
+        ]
     finally:
         latest.unpersist()
 
@@ -297,7 +246,7 @@ def merge_into(
     and unpartitioned tables. On a partitioned table use
     ``merge_into_partitioned`` (same clause semantics, cost proportional
     to the touched partitions); for op-tagged change batches prefer
-    ``apply_changes`` (metadata-only deletes).
+    ``apply_changes`` (merge-on-read: no table rewrite).
     """
     cols = table.schema().fieldNames()
     changes = None

@@ -557,7 +557,9 @@ def stream_lh_datasource_partitioned(spark: SparkSession, sf_dir: str) -> DataFr
 def stream_lh_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC consumption end to end: a change stream (upsert +
     delete ops) applied to a lakehouse table via foreachBatch ->
-    ``apply_changes`` (keyed merge + merge-on-read deletes). The oracle
+    ``apply_changes`` (one merge-on-read commit per micro-batch: the
+    upsert rows plus an equality-delete file of the batch's keys; a key
+    both upserted and deleted in one batch ends deleted). The oracle
     states the expected final table directly over the source."""
     import os
 

@@ -412,7 +412,7 @@ def bench_mutations(spark, b: Bench, tmp: str) -> None:
         b.run(f"mor_read_16del_{tag}", lambda: drain(t.scan()), reps=REPS, warmup=True)
 
         # batch CDC: ~4% upserts + ~3% deletes through apply_changes
-        # (partition-scoped rewrite + equality-delete commit)
+        # (one merge-on-read commit: upsert rows + a key-delete file)
         ups = (
             mock.filter(F.col("id") % 23 == 0)
             .withColumn("value2", F.col("value2") + 1)
