@@ -293,7 +293,11 @@ def export_iceberg_table(
     The FULL snapshot history exports 1:1 — snapshot ids, parents,
     timestamps and operations are the lakehouse log's own, so Iceberg
     time travel to any exported snapshot matches
-    ``table.scan(snapshot_id=...)``. Merge-on-read history maps to the
+    ``table.scan(snapshot_id=...)``. Each snapshot's sequence number is
+    its id, and a file or delete keeps the id of the snapshot that wrote
+    it (``added_in`` / ``snapshot_id``), so the files and deletes a
+    rollback re-lists, or an expiry carries into its base, keep their
+    merge-on-read ordering. Merge-on-read history maps to the
     spec's delete files: position-delete files (already (file_path,
     pos) parquet, the spec's own column names) become content=1
     entries; key deletes become content=2 equality deletes with
@@ -416,42 +420,60 @@ def export_iceberg_table(
             " unreachable history first"
         )
 
+    # sequence numbers are the log's snapshot ids, so a file or delete
+    # re-listed by a rollback, or carried into an expiry's base, keeps the
+    # number of the snapshot that wrote it
+    def _sequenced(out: dict, written_in: int, snapshot_id: int) -> dict:
+        if written_in != snapshot_id:
+            out.update(sequence_number=written_in, snapshot_id=written_in)
+        return out
+
     snapshots: list[dict] = []
     exported_paths: set[str] = set()
+    exported_deletes: set[str] = set()
     for s in log.snapshots:
-        snap: dict[str, Any] = {
-            "snapshot_id": int(s.snapshot_id),
-            "timestamp_ms": int(s.timestamp_ms),
-            "operation": _iceberg_operation(s),
-            "files": [_entry(f) for f in s.added_files],
-            # a log overwrite replaces the whole file set without listing
-            # what it removes
-            "deleted": sorted(exported_paths) if s.operation == "overwrite"
-            else [p for p in s.removed_paths if p in exported_paths],
-        }
-        exported_paths -= set(snap["deleted"])
-        exported_paths |= {f["path"] for f in s.added_files}
+        files = [
+            _sequenced(_entry(f), f.get("added_in", s.snapshot_id), s.snapshot_id)
+            for f in s.added_files
+        ]
         pos, eq = [], []
         for d in s.added_deletes:
             import pyarrow.parquet as pq
 
-            n = pq.ParquetFile(d["path"]).metadata.num_rows
+            out = {
+                "path": d["path"],
+                "records": pq.ParquetFile(d["path"]).metadata.num_rows,
+            }
             if d.get("kind") == "position":
-                pos.append({"path": d["path"], "records": n})
-            else:
-                try:
-                    ids = [
-                        by_name[c]["id"] for c in d["key_cols"]
-                    ]
-                except KeyError as exc:
-                    raise ValueError(
-                        f"delete key column {exc} not in the data"
-                        " schema"
-                    ) from exc
-                eq.append({
-                    "path": d["path"], "records": n,
-                    "equality_ids": ids,
-                })
+                pos.append(_sequenced(out, d["snapshot_id"], s.snapshot_id))
+                continue
+            try:
+                out["equality_ids"] = [by_name[c]["id"] for c in d["key_cols"]]
+            except KeyError as exc:
+                raise ValueError(
+                    f"delete key column {exc} not in the data schema"
+                ) from exc
+            eq.append(_sequenced(out, d["snapshot_id"], s.snapshot_id))
+        if s.operation == "overwrite":
+            # a log overwrite replaces the whole file set, deletes
+            # included, without listing what it removes; what a rollback
+            # re-lists stays
+            relisted = {f["path"] for f in files + pos + eq if "sequence_number" in f}
+            deleted = sorted((exported_paths | exported_deletes) - relisted)
+        else:
+            deleted = [p for p in s.removed_paths if p in exported_paths]
+        exported_paths = (exported_paths - set(deleted)) | {f["path"] for f in files}
+        exported_deletes = (exported_deletes - set(deleted)) | {
+            d["path"] for d in pos + eq
+        }
+        snap: dict[str, Any] = {
+            "snapshot_id": int(s.snapshot_id),
+            "sequence_number": int(s.snapshot_id),
+            "timestamp_ms": int(s.timestamp_ms),
+            "operation": _iceberg_operation(s),
+            "files": files,
+            "deleted": deleted,
+        }
         if pos:
             snap["pos_deletes"] = pos
         if eq:

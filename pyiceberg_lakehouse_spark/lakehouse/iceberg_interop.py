@@ -203,13 +203,16 @@ def write_iceberg_metadata(
 
     ``snapshots``: [{"files": [{"path", "records", "size"?,
     "partition"?: {field: value}}],
-    "deleted"?: [paths removed in this snapshot],
+    "deleted"?: [data or delete files removed in this snapshot],
     "pos_deletes"?: [{"path", "records"}]  (content=1 parquet files of
     (file_path, pos) rows), "eq_deletes"?: [{"path", "records",
     "equality_ids": [field ids]}] (content=2)}] — cumulative state is
     derived here the way Iceberg's manifests express it (ADDED entries
     in the new manifest, EXISTING carried forward, DELETED tombstones;
     delete files live in their own content=1 manifest per the spec).
+    A data or delete file that also carries ``sequence_number`` and
+    ``snapshot_id`` is re-listed: an EXISTING entry keeping the
+    sequence number it was first written with.
 
     ``partition_fields``: [(name, "long"|"string")] types the spec's
     r102 partition struct in every manifest entry and derives an
@@ -228,8 +231,9 @@ def write_iceberg_metadata(
     Export-grade extensions (r18, VERDICT r17 task #2): each snapshot
     dict may carry ``snapshot_id`` / ``timestamp_ms`` / ``operation``
     (preserved verbatim — how ``export_iceberg_table`` keeps a native
-    lakehouse table's history ids); data files may carry
-    ``value_counts`` / ``null_value_counts``; manifests and the
+    lakehouse table's history ids) and an increasing
+    ``sequence_number`` (default: the previous one plus 1); data files
+    may carry ``value_counts`` / ``null_value_counts``; manifests and the
     manifest list embed the spec's Avro container metadata keys
     (``schema`` / ``partition-spec`` / ``partition-spec-id`` /
     ``format-version`` / ``content``) and every Avro field carries its
@@ -276,15 +280,41 @@ def write_iceberg_metadata(
     live_del: dict[str, dict] = {}
     seq = 0
     prev_snap_id: int | None = None
+
+    def _list(f: dict, df: dict, live_map: dict, key: str, out: list) -> None:
+        """Make ``df`` live under ``key`` and list it in this
+        snapshot: ADDED, inheriting the manifest's sequence number,
+        or — a file re-listed with its original ``sequence_number``
+        and ``snapshot_id`` — EXISTING with those."""
+        relisted = "sequence_number" in f
+        fseq = int(f["sequence_number"]) if relisted else seq
+        fsnap = int(f["snapshot_id"]) if relisted else snap_id
+        live_map[key] = {"df": df, "seq": fseq, "snap_id": fsnap,
+                         "listed": seq}
+        out.append(
+            {
+                "status": _STATUS_EXISTING if relisted else _STATUS_ADDED,
+                "snapshot_id": fsnap,
+                # null: inherited from the manifest
+                "sequence_number": fseq if relisted else None,
+                "file_sequence_number": fseq if relisted else None,
+                "data_file": df,
+            }
+        )
+
     for si, snap in enumerate(snapshots):
-        seq += 1
+        seq = int(snap.get("sequence_number", seq + 1))
         snap_id = int(snap.get("snapshot_id", 1000 + si))
         entries = []
+        del_entries = []
         for path in snap.get("deleted", []):
-            if path not in live:
+            if path in live:
+                prev, out = live.pop(path), entries
+            elif path in live_del:
+                prev, out = live_del.pop(path), del_entries
+            else:
                 raise ValueError(f"snapshot {si} deletes unknown {path}")
-            prev = live.pop(path)
-            entries.append(
+            out.append(
                 {
                     "status": _STATUS_DELETED,
                     "snapshot_id": snap_id,
@@ -334,19 +364,9 @@ def write_iceberg_metadata(
                 df["partition"] = {
                     n: part.get(n) for n, _t in partition_fields
                 }
-            live[f["path"]] = {"df": df, "seq": seq,
-                                "snap_id": snap_id}
-            entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,  # inherited from the manifest
-                    "file_sequence_number": None,
-                    "data_file": df,
-                }
-            )
+            _list(f, df, live, f["path"], entries)
         for path, prev in live.items():
-            if prev["seq"] != seq:  # carried forward
+            if prev["listed"] != seq:  # carried forward
                 entries.append(
                     {
                         "status": _STATUS_EXISTING,
@@ -358,7 +378,6 @@ def write_iceberg_metadata(
                     }
                 )
         # ---- content=1 delete manifest (position + equality files) ----
-        del_entries = []
         for f in snap.get("pos_deletes", []):
             df = {
                 "content": 1,
@@ -381,17 +400,7 @@ def write_iceberg_metadata(
                           content_size_in_bytes=None)
             if partition_fields:
                 df["partition"] = {n: None for n, _t in partition_fields}
-            live_del[f["path"]] = {"df": df, "seq": seq,
-                                    "snap_id": snap_id}
-            del_entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": df,
-                }
-            )
+            _list(f, df, live_del, f["path"], del_entries)
         for f in snap.get("dv_deletes", []):
             # v3 deletion vector: content=1, PUFFIN, blob range +
             # referenced data file; record_count = DV cardinality
@@ -419,18 +428,8 @@ def write_iceberg_metadata(
             }
             if partition_fields:
                 df["partition"] = {n: None for n, _t in partition_fields}
-            live_del[f["path"] + "#" + df["referenced_data_file"]] = {
-                "df": df, "seq": seq, "snap_id": snap_id,
-            }
-            del_entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": df,
-                }
-            )
+            _list(f, df, live_del,
+                  f["path"] + "#" + df["referenced_data_file"], del_entries)
         for f in snap.get("eq_deletes", []):
             df = {
                 "content": 2,
@@ -453,19 +452,9 @@ def write_iceberg_metadata(
                           content_size_in_bytes=None)
             if partition_fields:
                 df["partition"] = {n: None for n, _t in partition_fields}
-            live_del[f["path"]] = {"df": df, "seq": seq,
-                                    "snap_id": snap_id}
-            del_entries.append(
-                {
-                    "status": _STATUS_ADDED,
-                    "snapshot_id": snap_id,
-                    "sequence_number": None,
-                    "file_sequence_number": None,
-                    "data_file": df,
-                }
-            )
+            _list(f, df, live_del, f["path"], del_entries)
         for path, prev in live_del.items():
-            if prev["seq"] != seq:  # carried forward
+            if prev["listed"] != seq:  # carried forward
                 del_entries.append(
                     {
                         "status": _STATUS_EXISTING,

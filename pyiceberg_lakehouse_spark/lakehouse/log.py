@@ -16,6 +16,15 @@ the base, then the entries above the base's last id in order — the Delta
 Lake transaction-log design (Armbrust et al., VLDB 2020). A log written
 before entries existed is a base with no entries.
 
+Entries and base store each snapshot *packed* (``Snapshot.packed``): a
+snapshot's ``removed_paths``, ``added_deletes`` and ``summary`` are left
+out when empty, a file's ``partition`` when it is ``{}`` and its ``rows``
+when null, and a file's ``added_in`` or a delete's ``snapshot_id`` when it
+is the snapshot's own id (a rollback's or an expiry base's re-listed
+entries keep theirs). ``Snapshot.from_json`` restores every one, so the
+snapshots in memory and ``to_json()`` have the full form. Logs written in
+the full form, or mixing both, load unchanged.
+
 Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
 that its head's entry exists, the next id's does not, and the base is the
 file it last read. It then publishes one entry: a temp file in the same
@@ -155,6 +164,25 @@ def _winners_touch(
     return False
 
 
+# Snapshot fields the log leaves out when empty, and the per-file and
+# per-delete fields it leaves out when they hold these defaults;
+# ``Snapshot.from_json`` puts every one back.
+_OMITTED_EMPTY = ("removed_paths", "added_deletes", "summary")
+
+
+def _file_defaults(snapshot_id: int) -> dict[str, Any]:
+    return {"partition": {}, "rows": None, "added_in": snapshot_id}
+
+
+def _delete_defaults(snapshot_id: int) -> dict[str, Any]:
+    return {"snapshot_id": snapshot_id}
+
+
+def _without(d: dict[str, Any], omit: dict[str, Any]) -> dict[str, Any]:
+    """``d`` less the keys of ``omit`` whose value equals ``omit``'s."""
+    return {k: v for k, v in d.items() if k not in omit or v != omit[k]}
+
+
 @dataclass
 class Snapshot:
     snapshot_id: int
@@ -181,16 +209,28 @@ class Snapshot:
             "summary": self.summary,
         }
 
+    def packed(self) -> dict[str, Any]:
+        """``to_json()`` without the default-valued fields ``from_json``
+        restores: the form both the entries and the base store."""
+        sid = self.snapshot_id
+        d = self.to_json()
+        d["added_files"] = [_without(f, _file_defaults(sid)) for f in self.added_files]
+        d["added_deletes"] = [_without(x, _delete_defaults(sid)) for x in self.added_deletes]
+        return {k: v for k, v in d.items() if k not in _OMITTED_EMPTY or v}
+
     @staticmethod
     def from_json(d: dict[str, Any]) -> "Snapshot":
+        sid = d["snapshot_id"]
         return Snapshot(
-            snapshot_id=d["snapshot_id"],
+            snapshot_id=sid,
             parent_id=d.get("parent_id"),
             operation=d["operation"],
             timestamp_ms=d["timestamp_ms"],
-            added_files=d.get("added_files", []),
+            added_files=[{**_file_defaults(sid), **f} for f in d.get("added_files", [])],
             removed_paths=d.get("removed_paths", []),
-            added_deletes=d.get("added_deletes", []),
+            added_deletes=[
+                {**_delete_defaults(sid), **x} for x in d.get("added_deletes", [])
+            ],
             summary=d.get("summary", {}),
         )
 
@@ -562,7 +602,7 @@ class SnapshotLog:
                         ],
                         summary=dict(summary or {}),
                     )
-                    entry = json.dumps({**changes, "snapshot": snap.to_json()})
+                    entry = json.dumps({**changes, "snapshot": snap.packed()})
                     # publishing the entry is the commit point; a failure
                     # before it leaves the head, on disk and here, at the
                     # previous snapshot
@@ -643,7 +683,7 @@ class SnapshotLog:
             # values); see the load() migration note
             "format_version": 2,
             **self._meta(),
-            "snapshots": [s.to_json() for s in self.snapshots],
+            "snapshots": [s.packed() for s in self.snapshots],
         }
         head = self._entry_name(self.current_snapshot_id() or 0)
         os.makedirs(self.entry_dir, exist_ok=True)

@@ -587,7 +587,9 @@ def refresh_ann_indexes(
 
 
 def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> list[str]:
-    """Delete data files under the table dir that no snapshot references.
+    """Delete data files under the table dir that no snapshot references,
+    and the snapshot log's temp files (``.snaplog.*``, beside a base or in
+    an entry directory) a writer that died before publishing left behind.
 
     Orphans come from crashed writers (files written, commit never issued)
     and failed tasks. The age guard keeps in-flight writes safe: a writer
@@ -610,6 +612,10 @@ def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> 
         os.path.join(table.table_dir, "data", "**", "*.parquet"), recursive=True
     ) + _glob.glob(
         os.path.join(table.table_dir, "deletes", "**", "*.parquet"), recursive=True
+    ) + _glob.glob(
+        os.path.join(table.table_dir, ".snaplog.*")
+    ) + _glob.glob(
+        os.path.join(table.table_dir, "_snaplog*.d", ".snaplog.*")
     )
     for path in candidates:
         if path in referenced:

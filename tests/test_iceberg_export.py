@@ -20,16 +20,19 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pyiceberg_lakehouse_spark.lakehouse import Lakehouse
 from pyiceberg_lakehouse_spark.lakehouse import iceberg_interop as I
 from pyiceberg_lakehouse_spark.lakehouse.iceberg_export import (
     export_iceberg_table,
 )
+from pyiceberg_lakehouse_spark.lakehouse.maintenance import expire_snapshots
 from pyiceberg_lakehouse_spark.operators.avro import decode_avro
 from pyiceberg_lakehouse_spark.sources.testdata import SCHEMAS, load_table
 
 SF = "/root/testdata/sf0.001"
+KV = T.StructType([T.StructField("k", T.LongType()), T.StructField("v", T.StringType())])
 
 
 def _rows(df, cols=("o_orderkey", "o_custkey")):
@@ -291,3 +294,61 @@ def test_distributed_stats_many_files(spark, warehouse):
         mp, predicates=[("o_orderkey", ">", 10 ** 9)]
     )
     assert plan["n_pruned"] == plan["n_candidates"] >= 65
+
+
+def test_rollback_exports_original_sequence_numbers(spark, warehouse):
+    """``rollback_to`` re-lists the target's files and deletes; they
+    export as EXISTING entries with the sequence numbers they had at the
+    target, so the target's deletes still apply to them and later
+    deletes drop out. The read-back equals the native scan at every
+    snapshot."""
+    t = Lakehouse(spark, warehouse).create_table("ns.exp_rollback", KV)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], KV))
+    deleted = t.delete_keys(spark.createDataFrame([(1,), (2,), (3,)], "k long"), ["k"])
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10, 15)], KV))
+    to_delete = t.rollback_to(deleted.snapshot_id)
+    t.delete_keys(spark.createDataFrame([(4,)], "k long"), ["k"])
+    to_append = t.rollback_to(2)
+    assert t.scan().count() == 10
+    mp = export_iceberg_table(t)
+    for s in t.log.snapshots:
+        assert _rows(
+            I.read_iceberg_table(spark, mp, snapshot_id=s.snapshot_id), ("k", "v")
+        ) == _rows(t.scan(snapshot_id=s.snapshot_id), ("k", "v")), s.snapshot_id
+    for rollback, target in ((to_delete, deleted.snapshot_id), (to_append, 2)):
+        got, want = (I.iceberg_live_files(mp, sid) for sid in (rollback.snapshot_id, target))
+        for key in ("files", "delete_files"):
+            assert sorted((f["path"], f["seq"]) for f in got[key]) == sorted(
+                (f["path"], f["seq"]) for f in want[key]
+            )
+    head = next(
+        s for s in json.load(open(mp))["snapshots"]
+        if s["snapshot-id"] == to_delete.snapshot_id
+    )
+    statuses = {
+        e["data_file"]["file_path"]: e["status"]
+        for m in decode_avro(open(head["manifest-list"], "rb").read())["records"]
+        for e in decode_avro(open(m["manifest_path"], "rb").read())["records"]
+    }
+    relisted = [f["path"] for f in t.log.live_files(deleted.snapshot_id)]
+    relisted += [d["path"] for d in t.log.live_deletes(deleted.snapshot_id)]
+    assert {statuses[os.path.abspath(p)] for p in relisted} == {I._STATUS_EXISTING}
+
+
+def test_expired_history_keeps_delete_sequencing(spark, warehouse):
+    """``expire_snapshots`` squashes the files and the deletes in effect
+    into one base snapshot; exported, each keeps the sequence number of
+    the snapshot that wrote it, so the deletes still apply."""
+    t = Lakehouse(spark, warehouse).create_table("ns.exp_expired", KV)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], KV))
+    t.delete_keys(spark.createDataFrame([(1,), (2,)], "k long"), ["k"])
+    t.delete_where_positions(F.col("k") == 3)
+    for lo in (10, 12):
+        t.append(spark.createDataFrame([(i, f"v{i}") for i in (lo, lo + 1)], KV))
+    expire_snapshots(t, keep_last=2)
+    assert t.log.live_deletes()
+    mp = export_iceberg_table(t)
+    for s in t.log.snapshots:
+        assert _rows(
+            I.read_iceberg_table(spark, mp, snapshot_id=s.snapshot_id), ("k", "v")
+        ) == _rows(t.scan(snapshot_id=s.snapshot_id), ("k", "v")), s.snapshot_id

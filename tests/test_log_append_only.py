@@ -89,7 +89,7 @@ def test_fresh_commit_writes_one_entry_and_reads_no_snapshot(tmp_path, monkeypat
     assert set(before) <= set(after)  # nothing deleted
     assert _sig(log.path) == base_before  # base untouched
     size = os.path.getsize(os.path.join(log.entry_dir, after[snap.snapshot_id]))
-    one_snapshot = len(json.dumps(snap.to_json()))
+    one_snapshot = len(json.dumps(snap.packed()))
     assert one_snapshot <= size < one_snapshot + 64
     assert SnapshotLog(log.table_dir).load().current_snapshot_id() == snap.snapshot_id
 

@@ -159,3 +159,40 @@ def test_publishes_are_durable(tmp_path, monkeypatch):
         ("fsync", "file"), ("replace", log.path), ("fsync", "dir"),
         ("fsync", "file"), ("replace", entry), ("fsync", "dir"),
     ]
+
+
+@pytest.mark.parametrize(
+    "action,point,where",
+    [("set_properties", "before-base-replace", ""), ("commit", "before-entry-replace", "_snaplog.d")],
+    ids=["base-temp", "entry-temp"],
+)
+def test_remove_orphan_files_sweeps_crashed_temp_files(tmp_path, action, point, where):
+    """A writer that dies before its ``os.replace`` leaves its ``.snaplog.*``
+    temp file behind; ``remove_orphan_files`` deletes it once it is older
+    than the age guard, and the log still loads and commits."""
+    from types import SimpleNamespace
+
+    from pyiceberg_lakehouse_spark.lakehouse.maintenance import remove_orphan_files
+
+    table_dir = str(tmp_path / "t")
+    before = _build(table_dir, fold_due=False)
+    child = subprocess.run(
+        [sys.executable, "-c", _CHILD.format(repo=REPO, died=DIED), table_dir, action, point],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert child.returncode == DIED, f"fault point not reached: {child.stderr}"
+    temp_dir = os.path.join(table_dir, where)
+    temps = [os.path.join(temp_dir, n) for n in os.listdir(temp_dir) if n.startswith(".snaplog.")]
+    assert len(temps) == 1
+
+    table = SimpleNamespace(table_dir=table_dir, log=SnapshotLog(table_dir))
+    assert remove_orphan_files(table) == []  # younger than the age guard
+    assert remove_orphan_files(table, older_than_s=0.0) == temps
+    assert not os.path.exists(temps[0])
+    log = SnapshotLog(table_dir).load()
+    assert log.current_snapshot_id() == before.current_snapshot_id()
+    assert log.commit("append", [{"path": "/fake/next.parquet", "rows": 1}]).snapshot_id == (
+        before.current_snapshot_id() + 1
+    )
