@@ -16,12 +16,14 @@ resolved BY NAME from the manifest records, unknown fields are ignored
 out of the live set while ``EXISTING``/``ADDED`` stay, sequence
 numbers inherit from the manifest-list entry when null. v2
 merge-on-read DELETE FILES are applied at read time: position deletes
-(content=1) and equality deletes (content=2) become anti-joins against
-the data scan with the spec's sequence-number applicability rules
-(position: delete seq >= data seq; equality: strictly >), using
-Spark's ``_metadata.file_path``/``row_index`` hidden columns for row
-addressing — the same MoR machinery the engine's own lakehouse scan
-uses (lh_delete_positions / lh_merge_on_read_delete).
+(content=1, and v3 deletion vectors) and equality deletes (content=2)
+go through ``mor.apply_deletes``, the one anti-join per delete kind that
+the engine's own lakehouse scan uses too, with the spec's
+sequence-number applicability rules (position: delete seq >= data seq;
+equality: strictly >). Rows are addressed by Spark's
+``_metadata.file_path``/``row_index`` hidden columns, and each data and
+delete row gets its file's sequence number from the manifests by
+``mor.with_sequence``.
 
 ``write_iceberg_metadata`` is the fixture-grade writer: it emits
 spec-shaped metadata.json + manifest-list + manifest files around
@@ -38,10 +40,12 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.localdf import local_rows_df
 
 from pyiceberg_lakehouse_spark.operators.avro import decode_avro, encode_avro
@@ -769,56 +773,6 @@ def iceberg_live_files(
     }
 
 
-def _norm_path(col, decode: bool = False):
-    """file:///x, file:/x and /x all normalize to /x so the engine's
-    ``_metadata.file_path`` URI joins against manifest-recorded paths.
-    ``decode=True`` additionally percent-decodes (Spark reports the
-    Hadoop URI form, e.g. %20 for a space; manifests record the raw
-    string) — only the Spark ``_metadata`` side is decoded, manifest
-    and delete-file strings stay raw. Non-ASCII escapes decode
-    per byte (ASCII-safe); a residual mismatch surfaces as a LOUD
-    null-sequence error downstream, never as silently resurrected
-    rows."""
-    from pyspark.sql import functions as F
-
-    from pyiceberg_lakehouse_spark.functions.urls import percent_decode
-
-    out = F.regexp_replace(col, "^file:/+", "/")
-    return percent_decode(out) if decode else out
-
-
-# Unresolved Column expressions are immutable and reusable across plans;
-# the decode=True form costs ~25 py4j round-trips to BUILD (the
-# percent-decode transform chain), and read_iceberg_table builds it for
-# the same three fixed input columns on every call — cache per
-# (column name, decode) so plan construction pays it once per process
-# (guide §1.2: per-task work includes the driver's plan-building time).
-_NORM_PATH_CACHE: dict = {}
-
-
-def _norm_path_cached(name: str, decode: bool = False):
-    """Memoized percent-decode normalize Column (~25 py4j round-trips to
-    build). Cached Columns wrap JVM expression handles, so entries are
-    keyed by the live SparkContext's identity (ADVICE r18): a session
-    restart / new gateway gets fresh expressions instead of stale JVM
-    handles. Classic local PySpark keeps one context for the process, so
-    the fast path is a plain dict hit."""
-    from pyspark import SparkContext
-    from pyspark.sql import functions as F
-
-    sc = SparkContext._active_spark_context
-    key = (id(sc), name, decode)
-    col = _NORM_PATH_CACHE.get(key)
-    if col is None:
-        # pop(), not del: concurrent read constructions (the export
-        # query builds its three arms in a thread pool) may race the
-        # eviction; a benign double-build stores the same expression
-        for k in [k for k in list(_NORM_PATH_CACHE) if k[0] != id(sc)]:
-            _NORM_PATH_CACHE.pop(k, None)  # drop handles of dead contexts
-        col = _NORM_PATH_CACHE[key] = _norm_path(F.col(name), decode)
-    return col
-
-
 _ICE_TO_SPARK = {
     "boolean": "boolean", "int": "int", "long": "bigint",
     "float": "float", "double": "double", "string": "string",
@@ -1040,14 +994,9 @@ def plan_iceberg_scan(
     return resolved
 
 
-# MoR delete-application strategy threshold: delete sets whose
-# manifest-declared record counts sum at or under this broadcast
-# (hash anti-join, no shuffle of the data side); above it the
-# anti-join falls back to Spark's shuffle strategy — the path a
-# 100 TB table with years of accumulated deletes takes. Module-level
-# so the scale bench and plan-pin tests can exercise BOTH strategies
-# on one fixture (BENCH_SCALE mor_delete arms).
-BROADCAST_DELETE_ROWS = 4_000_000
+# read at call time, so the scale bench and plan-pin tests can set it here
+# to exercise both delete-join strategies on one fixture
+BROADCAST_DELETE_ROWS = mor.BROADCAST_DELETE_ROWS
 
 
 def _partition_python_value(v, ice_type: str):
@@ -1105,7 +1054,7 @@ def _identity_projection_df(spark, resolved, missing_fields):
             vals.append(_partition_python_value(raw, mf["type"]))
         rows.append((os.path.abspath(f["path"]), *vals))
     schema = T.StructType(
-        [T.StructField("__ice_path", T.StringType(), False)]
+        [T.StructField(mor.PATH, T.StringType(), False)]
         + [
             T.StructField(
                 mf["name"],
@@ -1129,8 +1078,8 @@ def read_iceberg_table(
 ) -> DataFrame:
     """One Catalyst parquet scan over the snapshot's live file list —
     the engine-native ``iceberg_scan`` — with v2 merge-on-read deletes
-    applied as anti-joins (the engine's own MoR machinery, the pattern
-    behind lh_delete_positions / lh_merge_on_read_delete):
+    applied by ``mor.apply_deletes``, the anti-join the lakehouse scan
+    uses too:
 
     - position deletes (content=1; parquet rows of (file_path, pos))
       remove a data row when the delete file's data sequence number is
@@ -1142,8 +1091,9 @@ def read_iceberg_table(
 
     Scale posture: the delete sides carry manifest record counts, so a
     small delete set (the overwhelmingly common case) is broadcast; the
-    data side stays one Catalyst parquet scan with per-file sequence
-    numbers attached by a broadcast join on ``_metadata.file_path``.
+    data side stays one Catalyst parquet scan, and each delete kind (each
+    equality-column set) one scan, with per-file sequence numbers
+    attached by a broadcast join on ``_metadata.file_path``.
 
     ``partition_filter``: a predicate over the manifest-recorded r102
     partition-struct values (identity transforms) applied at METADATA
@@ -1190,9 +1140,11 @@ def read_iceberg_table(
         # cannot address ORC rows — gated below; equality deletes
         # (value+sequence semantics) apply fine.
         readers.append((spark.read.orc(*orc_paths), False))
-    reader = readers[0][0]
-    for r, _h in readers[1:]:
-        reader = reader.unionByName(r, allowMissingColumns=True)
+
+    def union(dfs):
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
+
+    reader = union([r for r, _h in readers])
     if orc_paths and any(
         d["content"] == 1 for d in resolved["delete_files"]
     ):
@@ -1216,61 +1168,35 @@ def read_iceberg_table(
         return reader
     schema_order = [f["name"] for f in resolved["schema_fields"]]
 
-    # data rows + their file's data sequence number (metadata-scale map,
-    # broadcast) + row position within the file. The Spark-side path is
-    # percent-DECODED to the manifests' raw form; any residual
-    # normalization mismatch must surface loudly (raise), because a
-    # NULL sequence number would make every delete predicate NULL and
-    # silently RESURRECT deleted rows through the anti-joins.
+    # data rows + their file's path (the Spark-side URI percent-DECODED to
+    # the manifests' raw form) + row position within the file.
     # _metadata is a per-scan pseudo-column: attach it on each
     # format's reader BEFORE the union (it does not resolve through a
     # Union node). ORC scans carry a NULL ordinal — the gate above
     # keeps ordinal-addressed deletes off them.
-    metas = []
-    for r, has_rowidx in readers:
-        metas.append(r.select(
+    base = union([
+        r.select(
             "*",
-            _norm_path_cached("_metadata.file_path", decode=True)
-            .alias("__ice_path"),
+            mor.norm_path().alias(mor.PATH),
             (F.col("_metadata.row_index") if has_rowidx
-             else F.lit(None).cast("long")).alias("__ice_pos"),
-        ))
-    base = metas[0]
-    for m in metas[1:]:
-        base = base.unionByName(m, allowMissingColumns=True)
+             else F.lit(None).cast("long")).alias(mor.POS),
+        )
+        for r, has_rowidx in readers
+    ])
     if missing:
         base = base.join(
             F.broadcast(_identity_projection_df(spark, resolved, missing)),
-            "__ice_path",
+            mor.PATH,
             "left",
         )
     if not resolved["delete_files"]:
-        return base.drop("__ice_path", "__ice_pos").select(*schema_order)
-
-    seq_rows = [
-        (os.path.abspath(f["path"]), int(f["seq"]))
-        for f in resolved["files"]
-    ]
-    seq_df = local_rows_df(spark, seq_rows, "__ice_path string, __ice_seq long")
-    data = (
-        base
-        .join(F.broadcast(seq_df), "__ice_path", "left")
-        .withColumn(
-            "__ice_seq",
-            F.when(
-                F.col("__ice_seq").isNotNull(), F.col("__ice_seq")
-            ).otherwise(
-                F.raise_error(
-                    F.concat(
-                        F.lit("iceberg: data path not in the manifest"
-                              " sequence map (URI normalization"
-                              " mismatch): "),
-                        F.col("__ice_path"),
-                    )
-                ).cast("long")
-            ),
-        )
+        return base.drop(mor.PATH, mor.POS).select(*schema_order)
+    data = mor.with_sequence(
+        base, {f["path"]: int(f["seq"]) for f in resolved["files"]}
     )
+
+    def small(df, group):
+        return mor.small(df, sum(d["records"] for d in group), BROADCAST_DELETE_ROWS)
 
     pos_files = [
         d for d in resolved["delete_files"]
@@ -1280,137 +1206,95 @@ def read_iceberg_table(
         d for d in resolved["delete_files"]
         if d["content"] == 1 and "referenced_data_file" in d
     ]
-    if pos_files or dv_files:
-        parts = []
-        # one scan per distinct sequence number, not per delete file: the
-        # schema is the spec's fixed (file_path string, pos long) pair
-        # (fields 2147483546/2147483545), so same-seq files — the common
-        # shape, one delete commit emitting several part files — share a
-        # single read with no per-file footer-inference round-trip.
-        # Writer-tolerance assumption (ADVICE r18): a spec-noncompliant
-        # external writer that stored pos as int32 is handled by Spark's
-        # parquet int32->bigint type widening under this explicit schema
-        # (verified: vectorized reader upcasts physical INT32 to a
-        # requested LongType), so the old read-untyped + cast('long')
-        # path's tolerance is preserved without its footer inference.
-        pos_by_seq: dict[int, list[str]] = {}
-        for d in pos_files:
-            pos_by_seq.setdefault(int(d["seq"]), []).append(d["path"])
-        for seq in sorted(pos_by_seq):
-            parts.append(
-                spark.read.schema("file_path string, pos bigint")
-                .parquet(*pos_by_seq[seq])
-                .select(
-                    _norm_path_cached("file_path").alias("__del_path"),
-                    F.col("pos").alias("__del_pos"),
-                    F.lit(seq).alias("__del_seq"),
+    parts = []
+    if pos_files:
+        # one scan under the spec's fixed (file_path string, pos long)
+        # schema (fields 2147483546/2147483545): no footer inference, and
+        # Spark widens a noncompliant writer's int32 pos to the requested
+        # bigint. The referenced paths are raw manifest strings.
+        parts.append(mor.read_sequenced(
+            spark.read.schema("file_path string, pos bigint"),
+            {d["path"]: int(d["seq"]) for d in pos_files},
+            [mor.norm_path("file_path", decode=False).alias(mor.PATH),
+             F.col("pos").alias(mor.POS)],
+        ))
+    if dv_files:
+        # v3 DELETION VECTORS: one Puffin-framed roaring bitmap
+        # per data file (the spec's one-DV-per-file invariant,
+        # enforced), exploded to (path, pos) rows EXECUTOR-side —
+        # positions are never collected in one process, so a 100 TB
+        # table's accumulated DVs decode in parallel next to the
+        # scan they filter
+        seen: set[str] = set()
+        for d in dv_files:
+            if d["referenced_data_file"] in seen:
+                raise ValueError(
+                    "iceberg v3: multiple deletion vectors"
+                    " reference one data file:"
+                    f" {d['referenced_data_file']}"
                 )
-            )
-        if dv_files:
-            # v3 DELETION VECTORS: one Puffin-framed roaring bitmap
-            # per data file (the spec's one-DV-per-file invariant,
-            # enforced), exploded to (path, pos) rows EXECUTOR-side —
-            # the driver never materializes positions, so a 100 TB
-            # table's accumulated DVs decode in parallel next to the
-            # scan they filter
-            seen: set[str] = set()
-            for d in dv_files:
-                if d["referenced_data_file"] in seen:
-                    raise ValueError(
-                        "iceberg v3: multiple deletion vectors"
-                        " reference one data file:"
-                        f" {d['referenced_data_file']}"
-                    )
-                seen.add(d["referenced_data_file"])
-            desc = local_rows_df(spark,
-                [(d["path"], int(d["content_offset"]),
-                  int(d["content_size_in_bytes"]),
-                  d["referenced_data_file"], int(d["seq"]))
-                 for d in dv_files],
-                "puffin string, off long, size long,"
-                " ref string, seq long",
-            )
-
-            def _explode_dv(it):
-                import pandas as pd
-
-                from pyiceberg_lakehouse_spark.lakehouse.puffin import (
-                    decode_deletion_vector,
-                    read_puffin_blob,
-                )
-
-                for pdf in it:
-                    for row in pdf.itertuples():
-                        pos = decode_deletion_vector(
-                            read_puffin_blob(
-                                row.puffin, row.off, row.size
-                            )
-                        )
-                        yield pd.DataFrame({
-                            "__del_path": row.ref,
-                            "__del_pos": pd.Series(pos, dtype="int64"),
-                            "__del_seq": row.seq,
-                        })
-
-            parts.append(
-                desc.repartition(min(len(dv_files), 64))
-                .mapInPandas(
-                    _explode_dv,
-                    "__del_path string, __del_pos long, __del_seq long",
-                )
-                .select(
-                    _norm_path_cached("__del_path").alias("__del_path"),
-                    "__del_pos", "__del_seq",
-                )
-            )
-        dels = parts[0]
-        for p in parts[1:]:
-            dels = dels.unionByName(p)
-        if sum(
-            d["records"] for d in pos_files + dv_files
-        ) <= BROADCAST_DELETE_ROWS:
-            dels = F.broadcast(dels)
-        data = data.join(
-            dels,
-            (F.col("__ice_path") == F.col("__del_path"))
-            & (F.col("__ice_pos") == F.col("__del_pos"))
-            & (F.col("__ice_seq") <= F.col("__del_seq")),
-            "left_anti",
+            seen.add(d["referenced_data_file"])
+        desc = local_rows_df(spark,
+            [(d["path"], int(d["content_offset"]),
+              int(d["content_size_in_bytes"]),
+              d["referenced_data_file"], int(d["seq"]))
+             for d in dv_files],
+            "puffin string, off long, size long,"
+            " ref string, seq long",
         )
 
-    eq_files = [d for d in resolved["delete_files"] if d["content"] == 2]
-    if eq_files:
-        id_to_name = {
-            int(f["id"]): f["name"] for f in resolved["schema_fields"]
-        }
-        by_cols: dict[tuple[str, ...], list[dict]] = {}
-        for d in eq_files:
-            try:
-                cols = tuple(id_to_name[int(i)] for i in d["equality_ids"])
-            except KeyError as exc:
-                raise ValueError(
-                    f"equality_ids {d['equality_ids']} not in the table"
-                    " schema"
-                ) from exc
-            by_cols.setdefault(cols, []).append(d)
-        for cols, group in by_cols.items():
-            parts = []
-            for d in group:
-                parts.append(
-                    spark.read.parquet(d["path"]).select(
-                        *[F.col(c).alias(f"__del_{c}") for c in cols],
-                        F.lit(int(d["seq"])).alias("__del_seq"),
-                    )
-                )
-            dels = parts[0]
-            for p in parts[1:]:
-                dels = dels.unionByName(p)
-            if sum(d["records"] for d in group) <= BROADCAST_DELETE_ROWS:
-                dels = F.broadcast(dels)
-            cond = F.col("__ice_seq") < F.col("__del_seq")
-            for c in cols:
-                cond = cond & F.col(c).eqNullSafe(F.col(f"__del_{c}"))
-            data = data.join(dels, cond, "left_anti")
+        def _explode_dv(it):
+            import pandas as pd
 
-    data = data.drop("__ice_path", "__ice_pos", "__ice_seq")
+            from pyiceberg_lakehouse_spark.lakehouse.puffin import (
+                decode_deletion_vector,
+                read_puffin_blob,
+            )
+
+            for pdf in it:
+                for row in pdf.itertuples():
+                    pos = decode_deletion_vector(
+                        read_puffin_blob(
+                            row.puffin, row.off, row.size
+                        )
+                    )
+                    yield pd.DataFrame({
+                        "ref": row.ref,
+                        "pos": pd.Series(pos, dtype="int64"),
+                        "seq": row.seq,
+                    })
+
+        parts.append(
+            desc.repartition(min(len(dv_files), 64))
+            .mapInPandas(_explode_dv, "ref string, pos long, seq long")
+            .select(
+                mor.norm_path("ref", decode=False).alias(mor.PATH),
+                F.col("pos").alias(mor.POS),
+                F.col("seq").alias(mor.SEQ),
+            )
+        )
+    positions = small(union(parts), pos_files + dv_files) if parts else None
+
+    id_to_name = {int(f["id"]): f["name"] for f in resolved["schema_fields"]}
+    by_cols: dict[tuple[str, ...], list[dict]] = {}
+    for d in resolved["delete_files"]:
+        if d["content"] != 2:
+            continue
+        try:
+            cols = tuple(id_to_name[int(i)] for i in d["equality_ids"])
+        except KeyError as exc:
+            raise ValueError(
+                f"equality_ids {d['equality_ids']} not in the table"
+                " schema"
+            ) from exc
+        by_cols.setdefault(cols, []).append(d)
+    equality = [
+        (list(cols), small(mor.read_sequenced(
+            spark.read,
+            {d["path"]: int(d["seq"]) for d in group},
+            [F.col(c) for c in cols],
+        ), group))
+        for cols, group in by_cols.items()
+    ]
+    data = mor.apply_deletes(data, positions, equality)
     return data.select(*schema_order) if missing else data

@@ -10,13 +10,21 @@ from __future__ import annotations
 
 import math
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
 from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
-from pyiceberg_lakehouse_spark.localdf import local_rows_df
+
+
+def _canon(uri: str) -> str:
+    """A file URI as Spark's ``_metadata.file_path`` reports it -> the
+    plain path the log records (a plain path passes through)."""
+    pr = urlparse(uri)
+    return unquote(pr.path) if pr.scheme else uri
 
 
 def compact(
@@ -942,12 +950,6 @@ def _batched_ordered_purge_rewrite(
         .agg(F.sort_array(F.collect_list("__lh_pos")).alias("ords"))
         .collect()
     )
-    from urllib.parse import unquote, urlparse
-
-    def _canon(uri: str) -> str:
-        pr = urlparse(uri)
-        return unquote(pr.path) if pr.scheme else uri
-
     ords_by_canon = {
         _canon(r["__lh_fp"]): [int(o) for o in r["ords"]]
         for r in ord_rows
@@ -959,27 +961,24 @@ def _batched_ordered_purge_rewrite(
             f"purge scan surfaced files outside the entry list:"
             f" {sorted(unknown)[:3]}"
         )
-    # source index map (broadcast, metadata-scale)
+    # each surviving row's source index (its file's position in
+    # canon_sorted), by the broadcast file-path join reads use for
+    # sequence numbers
     canon_sorted = sorted(entry_by_canon)
-    fp_rows = src.select("__lh_fp").distinct().collect()
-    uri_by_canon = {_canon(r["__lh_fp"]): r["__lh_fp"] for r in fp_rows}
-    map_df = local_rows_df(table.spark,
-        [(uri_by_canon[c], i) for i, c in enumerate(canon_sorted)
-         if c in uri_by_canon],
-        "__lh_fp string, __lh_src int",
-    )
     out_dir = os.path.join(
         table.table_dir, "data", f"purge-{_uuid.uuid4().hex[:8]}"
     )
     (
-        src.filter(~hit)
-        .join(F.broadcast(map_df), "__lh_fp")
-        .repartition(max(len(canon_sorted), 1), "__lh_src")
-        .sortWithinPartitions("__lh_src", "__lh_pos")
-        .drop("__lh_fp", "__lh_pos")
+        mor.with_sequence(
+            src.filter(~hit).withColumn(mor.PATH, mor.norm_path("__lh_fp")),
+            {c: i for i, c in enumerate(canon_sorted)},
+        )
+        .repartition(max(len(canon_sorted), 1), mor.SEQ)
+        .sortWithinPartitions(mor.SEQ, "__lh_pos")
+        .drop(mor.PATH, "__lh_fp", "__lh_pos")
         .write.mode("error")
         .option("compression", "zstd")
-        .partitionBy("__lh_src")
+        .partitionBy(mor.SEQ)
         .parquet(out_dir)
     )
     out: dict[str, tuple[list[dict], tuple]] = {}
@@ -987,7 +986,7 @@ def _batched_ordered_purge_rewrite(
     for i, canon in enumerate(canon_sorted):
         entry = entry_by_canon[canon]
         purged = ords_by_canon.get(canon, [])
-        part_dir = os.path.join(out_dir, f"__lh_src={i}")
+        part_dir = os.path.join(out_dir, f"{mor.SEQ}={i}")
         paths = [
             pth
             for pth in sorted(
@@ -1080,8 +1079,6 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
     ``shared_files_kept``, and a nonzero value means the OWNING table must
     be purged too before the bytes are truly gone.
     """
-    from urllib.parse import unquote, urlparse
-
     log = table.log
     if table.branches():
         raise RuntimeError(
@@ -1128,10 +1125,6 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
             "the evolution point first"
         )
     hit = F.coalesce(predicate, F.lit(False))
-
-    def _canon(uri: str) -> str:
-        p = urlparse(uri)
-        return unquote(p.path) if p.scheme else uri
 
     # one entry per unique path referenced ANYWHERE in history
     by_path: dict[str, dict] = {}

@@ -1,0 +1,122 @@
+"""Merge-on-read delete application, shared by the lakehouse scan
+(``LakehouseTable._read_files_with_deletes``) and ``read_iceberg_table``.
+
+Data rows carry their file's normalised path (``PATH``), their ordinal
+in it (``POS``) and their file's sequence number (``SEQ``); delete rows
+carry their delete file's ``SEQ``. Each delete kind (each key-column set
+for equality deletes) is then one anti-join over the whole scan, by the
+Iceberg v2 spec's rules: a position delete removes rows of files whose
+``SEQ`` is at most its own, an equality delete (NULL-safe key equality)
+rows of files whose ``SEQ`` is strictly below its own.
+
+The lakehouse log numbers a data file by its ``added_in`` and a delete by
+its ``snapshot_id``, and applies a delete only to files added strictly
+before it. The ``<=`` for positions gives the same answer: only
+``delete_where_positions`` writes position deletes, its commit adds no
+data file and names only files already live, and rollback, expiry and
+shallow clone keep both numbers.
+"""
+
+from __future__ import annotations
+
+import base64
+import os
+from functools import reduce
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
+
+PATH, POS, SEQ = "__mor_path", "__mor_pos", "__mor_seq"
+
+# A delete set of at most this many rows broadcasts (hash anti-join, the
+# data side never shuffles); a larger one takes Spark's shuffle strategy —
+# the path a 100 TB table with years of accumulated deletes takes.
+BROADCAST_DELETE_ROWS = 4_000_000
+
+
+def norm_path(name: str = "_metadata.file_path", decode: bool = True) -> Column:
+    """Column ``name`` with file:///x, file:/x and /x all normalised to
+    /x. ``decode`` also percent-decodes Spark's URI form of a path (%20
+    for a space, %25 for '%'; a '+' stays a '+') to the raw string
+    metadata records; a raw string must not be decoded."""
+    out = f"regexp_replace({name}, '^file:/+', '/')"
+    return F.expr(f"url_decode(replace({out}, '+', '%2B'))" if decode else out)
+
+
+def with_sequence(df: DataFrame, seqs: dict[str, int], path: str = PATH) -> DataFrame:
+    """``df`` plus ``SEQ``, the number ``seqs`` (keyed by paths as metadata
+    records them) gives the file named by ``df``'s normalised ``path``
+    column, joined by broadcast. A path missing from ``seqs`` fails the
+    query: a NULL sequence number would silently bring deleted rows back.
+    The map is an inline table (paths base64-quoted), built in one call
+    whatever its size."""
+    rows = ", ".join(
+        f"(cast(unbase64('{base64.b64encode(os.path.abspath(p).encode()).decode()}')"
+        f" as string), {int(s)}L)"
+        for p, s in seqs.items()
+    )
+    seq_df = df.sparkSession.sql(f"VALUES {rows} AS m({path}, {SEQ})")
+    return df.join(F.broadcast(seq_df), path, "left").withColumn(
+        SEQ,
+        F.expr(
+            f"coalesce({SEQ}, cast(raise_error(concat("
+            f"'merge-on-read: file not in the sequence map: ', {path})) as bigint))"
+        ),
+    )
+
+
+def read_sequenced(reader, seqs: dict[str, int], cols: list[Column]) -> DataFrame:
+    """``cols`` of every row of the delete files ``seqs`` names, read in
+    one parquet scan by ``reader``, plus each row's file's ``SEQ``."""
+    return with_sequence(
+        reader.parquet(*seqs).select(*cols, norm_path().alias("__mor_file")),
+        seqs,
+        "__mor_file",
+    ).drop("__mor_file")
+
+
+def small(df: DataFrame, rows: int, limit: int = BROADCAST_DELETE_ROWS) -> DataFrame:
+    """A delete set ``df`` of ``rows`` rows, marked for broadcast when
+    ``rows`` is at most ``limit``."""
+    return F.broadcast(df) if rows <= limit else df
+
+
+def anti_join_keys(
+    df: DataFrame, keys: DataFrame, key_cols: list[str], seq: str | None = None
+) -> DataFrame:
+    """Rows of ``df`` whose ``key_cols`` match no row of ``keys``, with
+    NULL-safe key equality: a NULL key matches a NULL key, as the Iceberg
+    spec applies equality deletes. With ``seq`` (a column both sides
+    carry), a key removes only rows whose ``seq`` is strictly below its
+    own. A small ``keys`` side broadcasts, so ``df`` is never shuffled."""
+    cols = [*key_cols, seq] if seq else key_cols
+    tagged = keys.select(*[F.col(k).alias(f"_ak_{k}") for k in cols])
+    conds = [F.col(k).eqNullSafe(F.col(f"_ak_{k}")) for k in key_cols]
+    if seq:
+        conds.append(F.col(seq) < F.col(f"_ak_{seq}"))
+    return df.join(tagged, on=reduce(lambda a, b: a & b, conds), how="left_anti")
+
+
+def apply_deletes(
+    data: DataFrame,
+    positions: DataFrame | None = None,
+    equality: list[tuple[list[str], DataFrame]] = (),
+) -> DataFrame:
+    """``data`` (carrying ``PATH``, ``POS``, ``SEQ``) less the rows the
+    deletes remove, without the helper columns. ``positions`` carries
+    ``PATH`` (the referenced data file, normalised like ``data``'s),
+    ``POS`` and ``SEQ``; each ``equality`` entry is a key-column list and
+    a frame of those columns plus ``SEQ``. One anti-join per kind and
+    key-column set, by the rules in the module docstring."""
+    if positions is not None:
+        dpos = positions.select(*[F.col(c).alias(f"_d{c}") for c in (PATH, POS, SEQ)])
+        data = data.join(
+            dpos,
+            (F.col(PATH) == F.col(f"_d{PATH}"))
+            & (F.col(POS) == F.col(f"_d{POS}"))
+            & (F.col(SEQ) <= F.col(f"_d{SEQ}")),
+            "left_anti",
+        )
+    for key_cols, keys in equality:
+        data = anti_join_keys(data, keys, key_cols, seq=SEQ)
+    return data.drop(PATH, POS, SEQ)

@@ -37,6 +37,7 @@ from pyiceberg_lakehouse_spark.localdf import local_rows_df
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.lakehouse.log import (
     SnapshotLog,
     Snapshot,
@@ -1247,9 +1248,10 @@ class LakehouseTable:
     def _read_files_with_deletes(
         self, files: list[dict[str, Any]], snapshot_id: int | None = None
     ) -> DataFrame:
-        """Read a file list with the snapshot's applicable merge-on-read
-        equality deletes anti-joined — ``scan()``'s delete semantics
-        restricted to ``files``.
+        """``scan()``'s merge-on-read read restricted to ``files``: one read
+        of them, one per delete kind, and ``mor.apply_deletes`` with each
+        file's ``added_in`` and each delete's ``snapshot_id`` as sequence
+        numbers.
 
         Every rewrite that reads a SUBSET of live files
         (``refresh_ann_indexes`` reads only index-stale files,
@@ -1259,62 +1261,56 @@ class LakehouseTable:
         them from those deletes — rows deleted after the source file was
         added would otherwise permanently resurrect in the rewrite.
         """
-        deletes = self.log.live_deletes(snapshot_id)
+        from pyiceberg_lakehouse_spark.lakehouse.stats import file_row_count
+
+        # a delete no newer than the oldest of the files applies to none of them
+        oldest = min((f.get("added_in", 0) for f in files), default=None)
+        deletes = [
+            d for d in self.log.live_deletes(snapshot_id)
+            if oldest is not None and oldest < d["snapshot_id"]
+        ]
         if not deletes:
             return self._read_files(files)
-        # sequence-aware merge-on-read: a delete applies only to files added
-        # strictly before it. Files are classed by their applicable-delete
-        # set; each class anti-joins its deletes, classes union.
-        classes: dict[tuple, list] = {}
-        for f in files:
-            applicable = tuple(
-                i for i, d in enumerate(deletes) if f.get("added_in", 0) < d["snapshot_id"]
-            )
-            classes.setdefault(applicable, []).append(f)
-        result = None
-        for applicable, flist in sorted(classes.items()):
-            pos_paths = [
-                deletes[i]["path"]
-                for i in applicable
-                if deletes[i].get("kind") == "position"
+
+        def read(ds: list[dict[str, Any]], cols: list, reader=self.spark.read):
+            return mor.read_sequenced(reader, {d["path"]: d["snapshot_id"] for d in ds}, cols)
+
+        def small(df: DataFrame, ds: list[dict[str, Any]]) -> DataFrame:
+            return mor.small(df, sum(file_row_count(d["path"]) for d in ds))
+
+        data = mor.with_sequence(
+            self._read_files(files, with_pos=True)
+            .withColumn(mor.PATH, mor.norm_path("__lh_fp"))
+            .withColumnsRenamed({"__lh_pos": mor.POS})
+            .drop("__lh_fp"),
+            {f["path"]: f.get("added_in", 0) for f in files},
+        )
+        pos = [d for d in deletes if d.get("kind") == "position"]
+        # (file_path, pos) rows, paths as the scan's _metadata reported them
+        positions = small(
+            read(
+                pos,
+                [mor.norm_path("file_path").alias(mor.PATH), F.col("pos").alias(mor.POS)],
+                self.spark.read.schema("file_path string, pos bigint"),
+            ),
+            pos,
+        ) if pos else None
+        # a delete file holds its key columns under their names AS OF its
+        # commit; a later rename_column maps them to the current schema
+        by_keys: dict[tuple, dict[tuple, list]] = {}
+        for d in deletes:
+            if d.get("kind") != "position":
+                cur = tuple(self._forward_names(d["key_cols"], d["snapshot_id"]))
+                by_keys.setdefault(cur, {}).setdefault(tuple(d["key_cols"]), []).append(d)
+        equality = []
+        for cur, by_hist in by_keys.items():
+            reads = [
+                read(ds, [F.col(h).alias(c) for h, c in zip(hist, cur)])
+                for hist, ds in by_hist.items()
             ]
-            df = self._read_files(flist, with_pos=bool(pos_paths))
-            # delete files carry the key column names AS OF their commit; a
-            # later rename_column means the anti-join key must be mapped
-            # forward to the current schema (hist name in the file, current
-            # name in df) — group by both so unrenamed tables batch as before
-            by_keys: dict[tuple, list[str]] = {}
-            for i in applicable:
-                if deletes[i].get("kind") == "position":
-                    continue
-                hist = tuple(deletes[i]["key_cols"])
-                cur = tuple(self._forward_names(list(hist), deletes[i]["snapshot_id"]))
-                by_keys.setdefault((hist, cur), []).append(deletes[i]["path"])
-            for (hist, cur), paths in sorted(by_keys.items()):
-                # no distinct(): a key listed twice removes nothing more
-                # from an anti-join, and dropping it saves a shuffle per
-                # delete class
-                dkeys = self.spark.read.parquet(*paths).select(
-                    *[F.col(h).alias(c) for h, c in zip(hist, cur)]
-                )
-                df = anti_join_keys(df, dkeys, list(cur))
-            if pos_paths:
-                # position deletes: anti-join on the scan's own row
-                # identity — (file path, ordinal) as Spark's _metadata
-                # reports them, stored verbatim by delete_where_positions
-                dpos = (
-                    self.spark.read.parquet(*pos_paths)
-                    .select(
-                        F.col("file_path").alias("__lh_fp"),
-                        F.col("pos").alias("__lh_pos"),
-                    )
-                    .distinct()
-                )
-                df = df.join(
-                    dpos, on=["__lh_fp", "__lh_pos"], how="left_anti"
-                ).drop("__lh_fp", "__lh_pos")
-            result = df if result is None else result.unionByName(df)
-        return result if result is not None else self._read_files(files)
+            keys = small(reduce(DataFrame.unionByName, reads), sum(by_hist.values(), []))
+            equality.append((list(cur), keys))
+        return mor.apply_deletes(data, positions, equality)
 
     def read_snapshot(self, snapshot_id: int) -> DataFrame:
         """Time travel to an exact snapshot (Q5 variant)."""
@@ -1568,6 +1564,7 @@ class LakehouseTable:
             os.path.getsize(f["path"]) for f in files if os.path.exists(f["path"])
         ]
         rows = [f.get("rows") for f in files]
+        deletes = self.log.live_deletes()
         return {
             "files": len(files),
             "bytes": sum(sizes),
@@ -1577,7 +1574,8 @@ class LakehouseTable:
             else None,
             "partitions": len({tuple(sorted(f["partition"].items())) for f in files}),
             "snapshots": len(self.log.snapshots),
-            "equality_deletes": len(self.log.live_deletes()),
+            "equality_deletes": sum(d.get("kind") != "position" for d in deletes),
+            "position_deletes": sum(d.get("kind") == "position" for d in deletes),
         }
 
     def metadata_count(self, snapshot_id: int | None = None) -> int | None:
@@ -1987,19 +1985,6 @@ class LakehouseTable:
             retry_conflicts,
             touched_partitions=touched_partitions,
         )
-
-
-def anti_join_keys(df: DataFrame, keys: DataFrame, key_cols: list[str]) -> DataFrame:
-    """Rows of ``df`` whose ``key_cols`` match no row of ``keys``, with
-    NULL-safe key equality: a NULL key matches a NULL key, as the Iceberg
-    spec applies equality deletes. A small ``keys`` side broadcasts, so
-    ``df`` is never shuffled."""
-    tagged = keys.select(*[F.col(k).alias(f"_ak_{k}") for k in key_cols])
-    cond = reduce(
-        lambda a, b: a & b,
-        [F.col(k).eqNullSafe(F.col(f"_ak_{k}")) for k in key_cols],
-    )
-    return df.join(tagged, on=cond, how="left_anti")
 
 
 def _partitions_of(files: list[dict[str, Any]]) -> list[dict[str, str]]:

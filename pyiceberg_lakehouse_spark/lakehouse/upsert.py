@@ -34,10 +34,8 @@ from functools import reduce
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyiceberg_lakehouse_spark.lakehouse.table import (
-    LakehouseTable,
-    anti_join_keys,
-)
+from pyiceberg_lakehouse_spark.lakehouse.mor import anti_join_keys
+from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
 
 
 def merge_keep_last(

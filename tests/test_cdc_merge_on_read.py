@@ -105,6 +105,32 @@ def test_key_moving_partition_keeps_one_row(spark, warehouse):
     assert t.scan().count() == 3
 
 
+def test_scan_plan_does_not_grow_with_cdc_batches(spark, warehouse):
+    """Every batch adds a data file and an equality delete newer than the
+    older files, yet the scan plans one data read and one delete read."""
+    t = _table(spark, warehouse, "cdc_plan", [(i, "a", f"v{i}") for i in range(20)])
+
+    def batch(b):
+        apply_changes(
+            t,
+            spark.createDataFrame(
+                [(b, "a", f"u{b}", "upsert"), (10 + b, None, None, "delete")],
+                CHANGE_DDL,
+            ),
+            key_cols=["k"],
+        )
+        return t.scan()._jdf.queryExecution().executedPlan().toString().count("FileScan ")
+
+    assert batch(0) == 2
+    for b in range(1, 5):
+        batch(b)
+    assert batch(5) == 2
+    assert _rows(t.scan()) == sorted(
+        [(k, "a", f"u{k}") for k in range(6)]
+        + [(k, "a", f"v{k}") for k in (*range(6, 10), *range(16, 20))]
+    )
+
+
 def test_null_key_upsert_replaces_the_null_key_row(spark, warehouse):
     t = _table(spark, warehouse, "cdc_null", [(None, "a", "old"), (1, "a", "one")])
     changes = spark.createDataFrame([(None, "a", "new", "upsert")], CHANGE_DDL)
@@ -126,9 +152,10 @@ def test_null_key_delete_matches_iceberg_read_back(spark, warehouse):
 def test_export_operations_follow_the_spec(spark, warehouse):
     """append -> append; partition-scoped upsert -> overwrite (data
     changed); compact -> replace (data-change false); apply_changes ->
-    overwrite (a delete that adds files); delete_keys -> delete; a
-    full-table upsert -> overwrite that drops every earlier file. The
-    read-back equals the native scan at every snapshot."""
+    overwrite (a delete that adds files); delete_keys, a position delete
+    and a second delete_keys -> delete; a full-table upsert -> overwrite
+    that drops every earlier file. The read-back equals the native
+    snapshot read at every snapshot."""
     t = _table(
         spark, warehouse, "exp_ops",
         [(i, "ab"[i % 2], f"v{i}") for i in range(12)], partition_by=["p"],
@@ -145,14 +172,19 @@ def test_export_operations_follow_the_spec(spark, warehouse):
         key_cols=["k"],
     )
     t.delete_keys(spark.createDataFrame([(6,)], "k int"), ["k"])
+    # k=4's live row is in the apply_changes file, k=8's in compact's
+    t.delete_where_positions(F.col("k").isin(4, 8))
+    t.delete_keys(spark.createDataFrame([(9,)], "k int"), ["k"])
     upsert(t, spark.createDataFrame([(7, "b", "w7")], SCHEMA), ["k"])
     mp = export_iceberg_table(t)
     meta = json.load(open(mp))
     ops = {s["snapshot-id"]: s["summary"]["operation"] for s in meta["snapshots"]}
     assert [ops[s.snapshot_id] for s in t.log.snapshots[1:]] == [
-        "append", "overwrite", "replace", "overwrite", "delete", "overwrite",
+        "append", "overwrite", "replace", "overwrite", "delete", "delete",
+        "delete", "overwrite",
     ]
     for s in t.log.snapshots:
         assert _rows(
             I.read_iceberg_table(spark, mp, snapshot_id=s.snapshot_id)
-        ) == _rows(t.scan(snapshot_id=s.snapshot_id)), s.operation
+        ) == _rows(t.read_snapshot(s.snapshot_id)), s.operation
+    assert [k for k, _p, _v in _rows(t.scan())] == [0, 1, 2, 3, 7, 10, 11]

@@ -78,6 +78,17 @@ def test_mixed_equality_and_position_deletes(spark, lh):
     assert t.scan().count() == exp
 
 
+def test_stats_counts_each_delete_kind(spark, lh):
+    b1, _ = _batches(spark)
+    t = lh.create_table("ns.st", SCHEMAS["orders"])
+    t.append(b1)
+    pos = t.delete_where_positions(F.col("o_orderstatus") == "F")
+    eq = t.delete_keys(b1.limit(3).select("o_orderkey"), ["o_orderkey"])
+    s = t.stats()
+    assert s["position_deletes"] == len(pos.added_deletes) >= 1
+    assert s["equality_deletes"] == len(eq.added_deletes) >= 1
+
+
 def test_purge_over_position_deletes_remaps(spark, lh):
     """r17: purge_rows no longer refuses position-delete history — it
     remaps ordinals through an order-preserving rewrite (full coverage
