@@ -194,7 +194,8 @@ class Snapshot:
     added_deletes: list[dict[str, Any]] = field(default_factory=list)
     # ^ merge-on-read delete files: equality form {"path", "key_cols",
     #   "snapshot_id"} or position form {"path", "kind": "position",
-    #   "snapshot_id"} — (file_path, pos) rows as _metadata reports them
+    #   "snapshot_id"} — (file_path, pos) rows, file_path the data file's
+    #   path as this log records it (older files hold Spark's file: URI)
     summary: dict[str, Any] = field(default_factory=dict)
 
     def to_json(self) -> dict[str, Any]:

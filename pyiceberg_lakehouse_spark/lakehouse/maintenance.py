@@ -8,23 +8,18 @@ in via a ``replace`` snapshot, so readers never see a partial state.
 
 from __future__ import annotations
 
+import glob
 import math
 import os
-from urllib.parse import unquote, urlparse
+import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
+from pyiceberg_lakehouse_spark.lakehouse.stats import collect_file_stats, file_row_count
 from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
-
-
-def _canon(uri: str) -> str:
-    """A file URI as Spark's ``_metadata.file_path`` reports it -> the
-    plain path the log records (a plain path passes through)."""
-    pr = urlparse(uri)
-    return unquote(pr.path) if pr.scheme else uri
 
 
 def compact(
@@ -594,9 +589,22 @@ def refresh_ann_indexes(
     )
 
 
+def _referenced_paths(snapshots) -> set[str]:
+    """Every data, delete and change-data file ``snapshots`` name."""
+    return {
+        f["path"]
+        for s in snapshots
+        for f in [
+            *s.added_files,
+            *s.added_deletes,
+            *(s.summary.get("change-data-files") or []),
+        ]
+    }
+
+
 def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> list[str]:
-    """Delete data files under the table dir that no snapshot references,
-    and the snapshot log's temp files (``.snaplog.*``, beside a base or in
+    """Delete data, delete and change-data files under the table dir that
+    no snapshot references, and the snapshot log's temp files (``.snaplog.*``, beside a base or in
     an entry directory) a writer that died before publishing left behind.
 
     Orphans come from crashed writers (files written, commit never issued)
@@ -606,23 +614,24 @@ def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> 
     work, no data reads — same maintenance posture as Iceberg's
     remove_orphan_files action.
     """
-    import glob as _glob
     import time as _time
 
     table.log.load()
-    referenced = {f["path"] for s in table.log.snapshots for f in s.added_files}
-    referenced |= {d["path"] for s in table.log.snapshots for d in s.added_deletes}
+    referenced = _referenced_paths(table.log.snapshots)
     cutoff = _time.time() - older_than_s
     deleted = []
-    # deletes/ holds merge-on-read equality-delete files — they orphan the
-    # same way data files do (crashed delete_keys, dropped by overwrite)
-    candidates = _glob.glob(
-        os.path.join(table.table_dir, "data", "**", "*.parquet"), recursive=True
-    ) + _glob.glob(
-        os.path.join(table.table_dir, "deletes", "**", "*.parquet"), recursive=True
-    ) + _glob.glob(
+    # deletes/ holds merge-on-read delete files and _change_data/ the
+    # change feed's files — they orphan the same way data files do
+    # (crashed delete_keys or CDF commit, dropped by overwrite)
+    candidates = [
+        p
+        for d in ("data", "deletes", "_change_data")
+        for p in glob.glob(
+            os.path.join(table.table_dir, d, "**", "*.parquet"), recursive=True
+        )
+    ] + glob.glob(
         os.path.join(table.table_dir, ".snaplog.*")
-    ) + _glob.glob(
+    ) + glob.glob(
         os.path.join(table.table_dir, "_snaplog*.d", ".snaplog.*")
     )
     for path in candidates:
@@ -640,7 +649,8 @@ def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> 
 
 def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
     """Drop history older than the last ``keep_last`` snapshots and delete
-    data files no longer reachable from any retained snapshot state.
+    data and delete files no longer reachable from any retained snapshot
+    state, and the change-data files only dropped snapshots name.
 
     Tags are RETENTION ROOTS: ``read_tag`` promises the same rows forever,
     so every snapshot from the oldest tagged one forward is kept (and its
@@ -669,18 +679,16 @@ def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
             keep_from = min(keep_from, id_pos[sid])
     if keep_from <= 0:
         return []
-    # files reachable from any retained snapshot's replayed state
+    # files reachable from any retained snapshot's replayed state, plus
+    # every file a retained snapshot names (its change-data files too)
     retained_ids = [s.snapshot_id for s in log.snapshots[keep_from:]]
-    reachable: set[str] = set()
+    reachable = _referenced_paths(log.snapshots[keep_from:])
     for sid in retained_ids:
         reachable.update(f["path"] for f in log.live_files(sid))
-    # every file ever added — including equality-delete files, which
-    # otherwise accumulate forever once overwrite/expiry drops them
-    all_paths = {f["path"] for s in log.snapshots for f in s.added_files}
-    all_paths |= {d["path"] for s in log.snapshots for d in s.added_deletes}
-    for sid in retained_ids:
         reachable.update(d["path"] for d in log.live_deletes(sid))
-    orphaned = sorted(all_paths - reachable)
+    # every file ever added — including delete and change-data files,
+    # which otherwise accumulate forever once overwrite/expiry drops them
+    orphaned = sorted(_referenced_paths(log.snapshots) - reachable)
     # squash: keep a synthetic base snapshot carrying the oldest retained
     # state — including the merge-on-read deletes in effect there, so
     # deleted keys cannot resurrect after history is dropped
@@ -791,189 +799,98 @@ def ensure_ann_fresh(
     return {**report, "action": rec}
 
 
-def _ordered_purge_rewrite(
-    table: LakehouseTable, entry: dict, hit: F.Column, cap: int
-) -> tuple[list[dict], tuple]:
-    """Rewrite ONE data file without the matching rows, PRESERVING
-    survivor row order, so position-delete ordinals stay remappable:
-    new_pos = old_pos - |{purged p < old_pos}|.
-
-    The write bypasses ``_write_data`` deliberately: its distribution
-    mode / partitionBy machinery may reorder rows, and ordinals are row
-    IDENTITY here. One repartition(1) + local sort on the scan's own
-    row_index writes the survivors in order; partition values carry
-    over from the original entry (purge never moves rows between
-    partitions), stats and blooms rebuild like any rewrite.
-
-    Returns (replacement entries, (sorted purged ordinals, new file's
-    ``_metadata.file_path`` URI or None when no survivor file exists)).
-    The purged-ordinal set is driver-collected — bounded by the erasure
-    subject's row count in this one file, capped loudly at ``cap``
-    (a predicate matching millions of rows per file is a bulk delete,
-    not an erasure request: compact() first)."""
-    import glob as _glob
-    import uuid as _uuid
-
-    from pyiceberg_lakehouse_spark.lakehouse.stats import (
-        collect_file_stats,
-        file_row_count,
-    )
-
-    src = table._read_files([entry], with_pos=True)
-    # Three-valued logic: a NULL-valued predicate must mean KEEP, not
-    # vanish — filter(hit) and filter(~hit) would both drop such rows,
-    # silently losing data AND shifting every downstream ordinal.
-    # Coalesce once so purged/kept exactly partition the file.
-    hit = F.coalesce(hit, F.lit(False))
-
-    def _collect_purged() -> list[int]:
-        return sorted(
-            r["__lh_pos"]
-            for r in src.filter(hit).select("__lh_pos").limit(cap + 1).collect()
-        )
-
-    def _write_kept() -> str:
-        kept = (
-            src.filter(~hit)
-            .repartition(1)
-            .sortWithinPartitions("__lh_pos")
-            .drop("__lh_fp", "__lh_pos")
-        )
-        d = os.path.join(
-            table.table_dir, "data", f"purge-{_uuid.uuid4().hex[:8]}"
-        )
-        kept.write.mode("error").option("compression", "zstd").parquet(d)
-        return d
-
-    # the purged-ordinal collect and the survivor write read the same
-    # file independently — overlap the two jobs (guide §2.6); the cap
-    # check lands before any result of the write is used. Any failure
-    # past this point (including the over-cap refusal) must not leave
-    # the already-written, never-committed purge-* directory behind in
-    # the table's data dir (VERDICT r18 what's-wrong #4).
-    import shutil as _shutil
-    from concurrent.futures import ThreadPoolExecutor as _TPE2
-
-    out_dir = None
-    try:
-        with _TPE2(max_workers=2) as _pool:
-            _f_purged = _pool.submit(_collect_purged)
-            _f_out = _pool.submit(_write_kept)
-            try:
-                purged = _f_purged.result()
-            finally:
-                # even when the collect fails, the write future has been
-                # submitted — wait for it so the cleanup below sees the dir
-                try:
-                    out_dir = _f_out.result()
-                except Exception:
-                    pass
-        if len(purged) > cap:
-            raise NotImplementedError(
-                f"purge matches more than {cap} rows in one position-"
-                "referenced file — materialize deletes with compact() and "
-                "expire_snapshots first"
-            )
-    except BaseException:
-        if out_dir:
-            _shutil.rmtree(out_dir, ignore_errors=True)
-        raise
-    paths = [
+def _nonempty_parquet(out_dir: str) -> list[str]:
+    """The parquet files a write left in ``out_dir`` that hold rows."""
+    return [
         p
-        for p in sorted(_glob.glob(os.path.join(out_dir, "*.parquet")))
+        for p in sorted(glob.glob(os.path.join(out_dir, "*.parquet")))
         if file_row_count(p) > 0
     ]
-    if not paths:
-        return [], (purged, None)
-    assert len(paths) == 1, paths
-    new_path = paths[0]
-    reps = [{
-        "path": new_path,
-        "partition": dict(entry.get("partition") or {}),
-        "rows": file_row_count(new_path),
-        "stats": collect_file_stats(new_path),
-    }]
-    add_table_blooms(table, reps)
-    # the URI form a future scan's _metadata.file_path reports for the
-    # new file — observed, not predicted (one footer-scale read)
-    new_uri = (
-        table.spark.read.parquet(new_path)
-        .select(F.col("_metadata.file_path").alias("u"))
-        .first()["u"]
-    )
-    return reps, (purged, new_uri)
 
 
-def _batched_ordered_purge_rewrite(
-    table: LakehouseTable, entries: list[dict], hit: F.Column, cap: int
-) -> dict[str, tuple[list[dict], tuple]]:
-    """Batched form of ``_ordered_purge_rewrite`` (r18, VERDICT r17
-    task #6): a subject spread across MANY position-referenced files
-    rewrites them in ONE Spark job instead of one job per file —
-    read all affected files in one scan, repartition by source file,
-    ``sortWithinPartitions`` on (source, ordinal) to preserve each
-    file's row order, and ``partitionBy`` the writer so every source
-    file yields exactly one replacement file (all rows of a source
-    hash to one task; the task writes one part file per source value).
-    Ordinal identity per file is untouched — the remap math is the
-    same as the sequential path's.
+def _purge_dir(table: LakehouseTable, kind: str) -> str:
+    """A fresh ``purge-*`` directory under the table's ``kind`` dir."""
+    return os.path.join(table.table_dir, kind, f"purge-{uuid.uuid4().hex[:8]}")
 
-    Returns {original entry path: (replacement entries,
-    (sorted purged ordinals, new file URI or None))}."""
-    import glob as _glob
-    import uuid as _uuid
 
-    from pyiceberg_lakehouse_spark.lakehouse.stats import (
-        collect_file_stats,
-        file_row_count,
-    )
+def _write_purged(
+    table: LakehouseTable, df: DataFrame, kind: str, codec: str | None = None
+) -> list[str]:
+    """Write ``df`` as one file into a fresh ``purge-*`` dir under the
+    table's ``kind`` dir (``_change_data`` or ``deletes``), compressed with
+    ``codec`` (Spark's default when None); return the files holding rows."""
+    out_dir = _purge_dir(table, kind)
+    writer = df.coalesce(1).write.mode("error")
+    (writer.option("compression", codec) if codec else writer).parquet(out_dir)
+    return _nonempty_parquet(out_dir)
 
-    hit = F.coalesce(hit, F.lit(False))
-    src = table._read_files(entries, with_pos=True)
-    # one job: per-file purge counts (cap check BEFORE materializing
-    # ordinal lists — a predicate matching millions of rows per file
-    # is a bulk delete, not an erasure request)
-    counts = (
-        src.filter(hit).groupBy("__lh_fp")
-        .agg(F.count(F.lit(1)).alias("n")).collect()
-    )
-    over = [r for r in counts if r["n"] > cap]
-    if over:
+
+def _check_purge_cap(counts: list[int], cap: int) -> None:
+    """Refuse a purge matching more than ``cap`` rows in one position-
+    referenced file: its purged ordinals are driver-collected, and a
+    predicate matching millions of rows per file is a bulk delete, not an
+    erasure request."""
+    if any(n > cap for n in counts):
         raise NotImplementedError(
             f"purge matches more than {cap} rows in one position-"
             "referenced file — materialize deletes with compact() and "
             "expire_snapshots first"
         )
-    # one job: the purged-ordinal sets (bounded by the cap per file)
-    ord_rows = (
-        src.filter(hit).groupBy("__lh_fp")
-        .agg(F.sort_array(F.collect_list("__lh_pos")).alias("ords"))
+
+
+def _ordered_purge_rewrite(
+    table: LakehouseTable, entries: list[dict], hit: F.Column, cap: int
+) -> dict[str, tuple[list[dict], tuple]]:
+    """Rewrite the data files ``entries`` without the rows ``hit`` matches,
+    PRESERVING each file's survivor row order, so the position-delete
+    ordinals pointing into it stay remappable:
+    new_pos = old_pos - |{purged p < old_pos}|.
+
+    One scan reads every file and one write rewrites them all. The write
+    bypasses ``_write_data`` deliberately: its distribution mode may
+    reorder rows, and ordinals are row IDENTITY here. Rows repartition by
+    source file, sort on (source, ordinal) within each partition, and the
+    writer ``partitionBy``s the source index, so each source file yields
+    exactly one replacement. Partition values carry over from the entry
+    (purge never moves rows between partitions); stats and blooms rebuild
+    like any rewrite.
+
+    Returns {entry path: (replacement entries, (sorted purged ordinals,
+    replacement's path or None when no row survives))}. Each file's match
+    count is checked against ``cap`` before anything is written, and at
+    most ``cap`` ordinals per file reach the driver."""
+    # Three-valued logic: a NULL-valued predicate must mean KEEP, not
+    # vanish — filter(hit) and filter(~hit) would both drop such rows,
+    # silently losing data AND shifting every downstream ordinal.
+    hit = F.coalesce(hit, F.lit(False))
+    src = table._read_files(entries, with_pos=True).withColumn(
+        mor.PATH, mor.norm_path("__lh_fp")
+    )
+    rows = (
+        src.filter(hit)
+        .groupBy(mor.PATH)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.slice(F.sort_array(F.collect_list("__lh_pos")), 1, cap).alias("ords"),
+        )
         .collect()
     )
-    ords_by_canon = {
-        _canon(r["__lh_fp"]): [int(o) for o in r["ords"]]
-        for r in ord_rows
-    }
-    entry_by_canon = {_canon(e["path"]): e for e in entries}
-    unknown = set(ords_by_canon) - set(entry_by_canon)
+    _check_purge_cap([r["n"] for r in rows], cap)
+    ords = {r[mor.PATH]: [int(o) for o in r["ords"]] for r in rows}
+    unknown = set(ords) - {e["path"] for e in entries}
     if unknown:
         raise ValueError(
             f"purge scan surfaced files outside the entry list:"
             f" {sorted(unknown)[:3]}"
         )
-    # each surviving row's source index (its file's position in
-    # canon_sorted), by the broadcast file-path join reads use for
-    # sequence numbers
-    canon_sorted = sorted(entry_by_canon)
-    out_dir = os.path.join(
-        table.table_dir, "data", f"purge-{_uuid.uuid4().hex[:8]}"
-    )
+    # each surviving row's source index (its entry's position), by the
+    # broadcast file-path join reads use for sequence numbers
+    out_dir = _purge_dir(table, "data")
     (
         mor.with_sequence(
-            src.filter(~hit).withColumn(mor.PATH, mor.norm_path("__lh_fp")),
-            {c: i for i, c in enumerate(canon_sorted)},
+            src.filter(~hit), {e["path"]: i for i, e in enumerate(entries)}
         )
-        .repartition(max(len(canon_sorted), 1), mor.SEQ)
+        .repartition(len(entries), mor.SEQ)
         .sortWithinPartitions(mor.SEQ, "__lh_pos")
         .drop(mor.PATH, "__lh_fp", "__lh_pos")
         .write.mode("error")
@@ -982,54 +899,23 @@ def _batched_ordered_purge_rewrite(
         .parquet(out_dir)
     )
     out: dict[str, tuple[list[dict], tuple]] = {}
-    new_paths_by_canon: dict[str, str] = {}
-    for i, canon in enumerate(canon_sorted):
-        entry = entry_by_canon[canon]
-        purged = ords_by_canon.get(canon, [])
-        part_dir = os.path.join(out_dir, f"{mor.SEQ}={i}")
-        paths = [
-            pth
-            for pth in sorted(
-                _glob.glob(os.path.join(part_dir, "*.parquet"))
-            )
-            if file_row_count(pth) > 0
+    for i, entry in enumerate(entries):
+        paths = _nonempty_parquet(os.path.join(out_dir, f"{mor.SEQ}={i}"))
+        assert len(paths) <= 1, (entry["path"], paths)
+        reps = [
+            {
+                "path": p,
+                "partition": dict(entry.get("partition") or {}),
+                "rows": file_row_count(p),
+                "stats": collect_file_stats(p),
+            }
+            for p in paths
         ]
-        if not paths:
-            out[entry["path"]] = ([], (purged, None))
-            continue
-        assert len(paths) == 1, (canon, paths)
-        new_path = paths[0]
-        rep = {
-            "path": new_path,
-            "partition": dict(entry.get("partition") or {}),
-            "rows": file_row_count(new_path),
-            "stats": collect_file_stats(new_path),
-        }
-        out[entry["path"]] = ([rep], (purged, new_path))
-        new_paths_by_canon[canon] = new_path
+        out[entry["path"]] = (
+            reps, (ords.get(entry["path"], []), paths[0] if paths else None)
+        )
     # one bloom pass over every replacement
     add_table_blooms(table, [r for reps, _ in out.values() for r in reps])
-    # observe the URI form a future scan reports for every new file
-    # (one footer-scale job over all replacements)
-    if new_paths_by_canon:
-        uri_rows = (
-            table.spark.read.parquet(*new_paths_by_canon.values())
-            .select(
-                F.col("_metadata.file_path").alias("u")
-            ).distinct().collect()
-        )
-        uri_of = {_canon(r["u"]): r["u"] for r in uri_rows}
-        for canon, np_ in new_paths_by_canon.items():
-            ent = out[entry_by_canon[canon]["path"]]
-            new_uri = uri_of.get(os.path.abspath(np_))
-            if new_uri is None:
-                raise ValueError(
-                    f"rewritten file {np_} did not surface in the"
-                    " URI-observation scan"
-                )
-            out[entry_by_canon[canon]["path"]] = (
-                ent[0], (ent[1][0], new_uri)
-            )
     return out
 
 
@@ -1056,14 +942,15 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
 
     Scale: one distributed match-count scan over the historical file set
     plans the rewrite (only files PROVEN to hold matches rewrite); the
-    rewrites themselves cost one file-scoped write job each. Merge-on-read
+    rewrites themselves cost one file-scoped write job each, overlapped in
+    one thread pool. Merge-on-read
     delete files (which store deleted rows' KEY VALUES — PII for a keyed
     subject) are scrubbed too when the predicate is evaluable on their key
     columns; dropping a matching key is safe because every data row it
     could un-delete is purged in the same operation. POSITION-delete
-    history (r17, VERDICT r16 task #8) is handled by identity
-    remapping: a data file that position deletes point at rewrites
-    ORDER-PRESERVING (ordinals are row identity), and every
+    history is handled by identity
+    remapping: the data files that position deletes point at rewrite
+    ORDER-PRESERVING in one job (ordinals are row identity), and every
     referencing delete row moves to the new path with its ordinal
     shifted by the purged rows before it — entries whose target row
     was purged retire, an entirely-purged data file retires all its
@@ -1079,14 +966,15 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
     ``shared_files_kept``, and a nonzero value means the OWNING table must
     be purged too before the bytes are truly gone.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     log = table.log
     if table.branches():
         raise RuntimeError(
             f"table has branches {table.branches()}; purge after landing/"
             "dropping them"
         )
-    # merge-on-read delete files split by kind (r17 closes the old
-    # position-delete refusal):
+    # merge-on-read delete files split by kind:
     # - KEY (equality) delete files hold the deleted rows' KEY VALUES —
     #   for a keyed subject those values are exactly the PII being
     #   erased, so they are scrubbed by the predicate below. That is
@@ -1096,8 +984,8 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
     #   honest gate.
     # - POSITION delete files hold (file_path, ordinal) — no subject
     #   values, so no predicate scrub; instead, when a data file they
-    #   reference is rewritten, the rewrite is ORDER-PRESERVING (one
-    #   sorted single-file write) and every referencing delete row is
+    #   reference is rewritten, the rewrite is ORDER-PRESERVING
+    #   (``_ordered_purge_rewrite``) and every referencing delete row is
     #   remapped old-ordinal -> new-ordinal (entries whose target row
     #   was itself purged retire with it).
     delete_refs: dict[str, list[dict]] = {}
@@ -1131,12 +1019,16 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
     for s in log.snapshots:
         for f in s.added_files:
             by_path.setdefault(f["path"], f)
+    # change-data files carry full inline rows — scanned like key deletes
+    cdf_refs: dict[str, list] = {}
+    for s in log.snapshots:
+        for f in s.summary.get("change-data-files") or []:
+            cdf_refs.setdefault(f["path"], []).append(f)
+
     # plan: the four planning scans (data-file match counts, change-data
     # matches, key-delete matches, position-referenced census) touch
     # disjoint file sets and feed independent decisions — run them
     # concurrently (guide §2.6) instead of four sequential job launches
-    from concurrent.futures import ThreadPoolExecutor
-
     def _scan_matched() -> dict[str, int]:
         """One distributed scan proves which files hold matching rows."""
         if not by_path:
@@ -1149,16 +1041,12 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
         )
-        return {_canon(r["_pf"]): int(r["n"]) for r in counts}
+        return {mor.plain_path(r["_pf"]): int(r["n"]) for r in counts}
 
-    # change-data files carry full inline rows — scan them the same way
-    cdf_refs: dict[str, list] = {}
-    for s in log.snapshots:
-        for f in s.summary.get("change-data-files") or []:
-            cdf_refs.setdefault(f["path"], []).append(f)
-
-    def _scan_cdf() -> set[str]:
-        existing = [p for p in cdf_refs if os.path.exists(p)]
+    def _scan_hits(paths: list[str]) -> set[str]:
+        """The files of ``paths`` (parquet the predicate can evaluate on)
+        that hold a matching row."""
+        existing = [p for p in paths if os.path.exists(p)]
         if not existing:
             return set()
         rows = (
@@ -1169,23 +1057,7 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
             .distinct()
             .collect()
         )
-        return {_canon(r["_pf"]) for r in rows}
-
-    key_del_paths = [p for p in delete_refs if p not in pos_refs]
-
-    def _scan_key_dels() -> set[str]:
-        existing = [p for p in key_del_paths if os.path.exists(p)]
-        if not existing:
-            return set()
-        rows = (
-            table.spark.read.parquet(*existing)
-            .withColumn("_pf", F.input_file_name())
-            .filter(hit)
-            .select("_pf")
-            .distinct()
-            .collect()
-        )
-        return {_canon(r["_pf"]) for r in rows}
+        return {mor.plain_path(r["_pf"]) for r in rows}
 
     def _scan_pos_referenced() -> set[str]:
         """Data files any position-delete file points at (metadata-scale:
@@ -1194,15 +1066,15 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
         if not existing:
             return set()
         return {
-            _canon(r["file_path"])
+            mor.plain_path(r["file_path"])
             for r in table.spark.read.parquet(*existing)
             .select("file_path").distinct().collect()
         }
 
     with ThreadPoolExecutor(max_workers=4) as pool:
         f_matched = pool.submit(_scan_matched)
-        f_cdf = pool.submit(_scan_cdf)
-        f_del = pool.submit(_scan_key_dels)
+        f_cdf = pool.submit(_scan_hits, list(cdf_refs))
+        f_del = pool.submit(_scan_hits, [p for p in delete_refs if p not in pos_refs])
         f_pos = pool.submit(_scan_pos_referenced)
         matched = f_matched.result()
         cdf_matched = f_cdf.result()
@@ -1211,202 +1083,118 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
     if not matched and not cdf_matched and not del_matched:
         return {"files_rewritten": 0, "files_dropped": 0, "rows_purged": 0}
 
-    # rewrite each matching data file without the rows; _write_data
-    # re-derives partition values, stats and blooms for the replacements.
-    # Files that position-delete entries point at take the ORDER-
-    # PRESERVING path instead: ordinals are row identity there, so the
-    # rewrite must keep survivor order (one locally-sorted single-file
-    # write, partition values carried from the original entry) and
-    # record the purged-ordinal set that remaps the delete rows below.
+    # Files that position-delete entries point at rewrite ORDER-PRESERVING
+    # (``_ordered_purge_rewrite``), which records the purged-ordinal sets
+    # that remap the delete rows below; every other matching data file
+    # rewrites through _write_data, which re-derives partition values,
+    # stats and blooms for the replacements. The cap is checked on the
+    # planning counts, before any rewrite writes a file.
     _POS_CAP = 2_000_000  # purged ordinals per file, driver-collected
-    replacements: dict[str, list[dict]] = {}
-    ordinal_maps: dict[str, tuple] = {}  # canon path -> (ords, new_uri)
-    pos_paths = [
-        p for p in sorted(matched) if _canon(p) in pos_referenced
-    ]
-    if len(pos_paths) > 1:
-        # many position-referenced files: ONE batched job (r18) —
-        # per-file sequential rewrites would serialize a spread-out
-        # subject
-        batched = _batched_ordered_purge_rewrite(
-            table, [by_path[p] for p in pos_paths], hit, _POS_CAP
-        )
-        for p in pos_paths:
-            replacements[p], ordinal_maps[_canon(p)] = batched[p]
-    # remaining per-file rewrites are independent single-file jobs — run
-    # them concurrently (guide §2.6: overlap independent jobs) instead of
-    # one Spark job launch after another
-    from concurrent.futures import ThreadPoolExecutor
+    pos_paths = [p for p in sorted(matched) if p in pos_referenced]
+    _check_purge_cap([matched[p] for p in pos_paths], _POS_CAP)
 
-    def _plain_rewrite(entry: dict) -> list[dict]:
-        return table._write_data(table._read_files([entry]).filter(~hit))
-
-    rewrite_futs = {}
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for path in sorted(matched):
-            if path in replacements:
-                continue
-            entry = by_path[path]
-            if _canon(path) in pos_referenced:
-                rewrite_futs[path] = (
-                    "ordered",
-                    pool.submit(
-                        _ordered_purge_rewrite, table, entry, hit, _POS_CAP
-                    ),
-                )
-            else:
-                rewrite_futs[path] = ("plain", pool.submit(_plain_rewrite, entry))
-        for path, (kind, fut) in rewrite_futs.items():
-            if kind == "ordered":
-                replacements[path], ordinal_maps[_canon(path)] = fut.result()
-            else:
-                replacements[path] = fut.result()
-    # rewrite matching change-data files in place-equivalent new files
-    import glob as _glob
-    import uuid as _uuid
-
-    from pyiceberg_lakehouse_spark.lakehouse.stats import file_row_count
+    def _plain_rewrite(path: str) -> list[dict]:
+        return table._write_data(table._read_files([by_path[path]]).filter(~hit))
 
     def _cdf_rewrite(path: str) -> list[dict]:
-        out_dir = os.path.join(
-            table.table_dir, "_change_data", f"purge-{_uuid.uuid4().hex[:8]}"
-        )
-        (
-            table.spark.read.parquet(path)
-            .filter(~hit)
-            .coalesce(1)
-            .write.mode("error")
-            .option("compression", "zstd")
-            .parquet(out_dir)
-        )
         return [
             {"path": p, "rows": file_row_count(p)}
-            for p in sorted(_glob.glob(os.path.join(out_dir, "*.parquet")))
-            if file_row_count(p) > 0
-        ]
-
-    cdf_replacements: dict[str, list[dict]] = {}
-    if cdf_matched:
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            cdf_replacements = dict(
-                zip(sorted(cdf_matched), pool.map(_cdf_rewrite, sorted(cdf_matched)))
+            for p in _write_purged(
+                table, table.spark.read.parquet(path).filter(~hit),
+                "_change_data", "zstd",
             )
+        ]
 
     # rewrite matching delete files without the subject's keys. Dropping a
     # key K is safe ONLY because every data row matching the predicate is
     # being purged in the same operation: a key-column predicate matching
     # K's delete row matches ALL data rows with key K, so nothing remains
-    # for the dropped delete entry to un-delete.
+    # for the dropped delete entry to un-delete. Replacement PATHS only:
+    # each snapshot's entry keeps its own key_cols/snapshot_id metadata.
     def _del_rewrite(path: str) -> list[str]:
-        out_dir = os.path.join(
-            table.table_dir, "deletes", f"purge-{_uuid.uuid4().hex[:8]}"
+        return _write_purged(
+            table, table.spark.read.parquet(path).filter(~hit), "deletes"
         )
-        (
-            table.spark.read.parquet(path)
-            .filter(~hit)
-            .coalesce(1)
-            .write.mode("error")
-            .parquet(out_dir)
-        )
-        # replacement PATHS only: each snapshot's entry keeps its own
-        # key_cols/snapshot_id metadata when remapped below
-        return [
-            p
-            for p in sorted(_glob.glob(os.path.join(out_dir, "*.parquet")))
-            if file_row_count(p) > 0
-        ]
 
-    del_replacements: dict[str, list[dict]] = {}
-    if del_matched:
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            del_replacements = dict(
-                zip(sorted(del_matched), pool.map(_del_rewrite, sorted(del_matched)))
-            )
-
-    # position-delete remap (r17): every delete row pointing at a
-    # rewritten data file moves to the new path with its ordinal
+    # position-delete remap: every delete row pointing at a rewritten
+    # data file moves to the replacement's log path with its ordinal
     # shifted by the purged rows before it; rows whose TARGET row was
     # purged retire with it (nothing remains for them to un-delete).
     # Arrow-batched mapInPandas — numpy searchsorted per file, no
     # row-at-a-time Python.
-    if ordinal_maps and pos_refs:
+    def _remap_batches(it):
         import numpy as _np
+        import pandas as _pd
 
-        def _remap_batches(it):
-            import pandas as _pd
+        for pdf in it:
+            canon = pdf["file_path"].map(mor.plain_path)
+            keep_mask = _np.ones(len(pdf), dtype=bool)
+            pos = pdf["pos"].to_numpy().copy()
+            fp = pdf["file_path"].to_numpy(dtype=object)
+            for old, (purged, new_path) in ordinal_maps.items():
+                sel = (canon == old).to_numpy()
+                if not sel.any():
+                    continue
+                if new_path is None:
+                    keep_mask &= ~sel  # whole data file purged away
+                    continue
+                parr = _np.asarray(purged, dtype=_np.int64)
+                p_sel = pos[sel]
+                hit_purged = (
+                    _np.searchsorted(parr, p_sel, side="right")
+                    - _np.searchsorted(parr, p_sel, side="left")
+                ) > 0
+                shift = _np.searchsorted(parr, p_sel, side="left")
+                pos[sel] = p_sel - shift
+                drop = sel.copy()
+                drop[sel] = hit_purged
+                keep_mask &= ~drop
+                fp[sel & ~drop] = new_path
+            yield _pd.DataFrame({"file_path": fp[keep_mask], "pos": pos[keep_mask]})
 
-            for pdf in it:
-                canon = pdf["file_path"].map(_canon)
-                keep_mask = _np.ones(len(pdf), dtype=bool)
-                pos = pdf["pos"].to_numpy().copy()
-                fp = pdf["file_path"].to_numpy(dtype=object)
-                for old, (purged, new_uri) in ordinal_maps.items():
-                    sel = (canon == old).to_numpy()
-                    if not sel.any():
-                        continue
-                    if new_uri is None:
-                        keep_mask &= ~sel  # whole data file purged away
-                        continue
-                    parr = _np.asarray(purged, dtype=_np.int64)
-                    p_sel = pos[sel]
-                    hit_purged = (
-                        _np.searchsorted(parr, p_sel, side="right")
-                        - _np.searchsorted(parr, p_sel, side="left")
-                    ) > 0
-                    shift = _np.searchsorted(parr, p_sel, side="left")
-                    pos[sel] = p_sel - shift
-                    drop = sel.copy()
-                    drop[sel] = hit_purged
-                    keep_mask &= ~drop
-                    fp[sel & ~drop] = new_uri
-                out = _pd.DataFrame(
-                    {"file_path": fp[keep_mask], "pos": pos[keep_mask]}
-                )
-                yield out
-
-        from concurrent.futures import ThreadPoolExecutor as _TPE
-
-        from pyiceberg_lakehouse_spark.lakehouse.stats import (
-            file_row_count as _frc,
+    def _remap_one(path: str) -> list[str] | None:
+        """Remap one position-delete file; None when it points at no
+        rewritten data file."""
+        src = table.spark.read.parquet(path)
+        touched = {
+            mor.plain_path(r["file_path"])
+            for r in src.select("file_path").distinct().collect()
+        }
+        if not touched & ordinal_maps.keys():
+            return None
+        return _write_purged(
+            table,
+            src.select("file_path", F.col("pos").cast("long"))
+            .mapInPandas(_remap_batches, "file_path string, pos long"),
+            "deletes",
         )
 
-        def _remap_one(path: str):
-            """Remap one delete file; each is an independent two-job
-            sequence (touched probe + rewrite), so the per-file calls
-            overlap in a thread pool (guide §2.6)."""
-            src = table.spark.read.parquet(path)
-            touched = {
-                _canon(r["file_path"])
-                for r in src.select("file_path").distinct().collect()
-            }
-            if not (touched & set(ordinal_maps)):
-                return None
-            out_dir = os.path.join(
-                table.table_dir, "deletes",
-                f"purge-pd-{_uuid.uuid4().hex[:8]}",
-            )
-            (
-                src.select("file_path", F.col("pos").cast("long"))
-                .mapInPandas(_remap_batches, "file_path string, pos long")
-                .coalesce(1)
-                .write.mode("error")
-                .parquet(out_dir)
-            )
-            return [
-                p
-                for p in sorted(
-                    _glob.glob(os.path.join(out_dir, "*.parquet"))
-                )
-                if _frc(p) > 0
-            ]
-
-        live_pd = [p for p in sorted(pos_refs) if os.path.exists(p)]
-        with _TPE(max_workers=8) as _pool:
-            for path, reps_ in zip(live_pd, _pool.map(_remap_one, live_pd)):
-                if reps_ is None:
-                    continue
-                del_replacements[path] = reps_
-                del_matched.add(_canon(path))
+    # every per-file rewrite is an independent Spark job: overlap them in
+    # one pool instead of one job launch after another. The ordered
+    # rewrite runs on this thread meanwhile; the remaps need its result.
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        plain = {
+            p: pool.submit(_plain_rewrite, p)
+            for p in sorted(matched) if p not in pos_referenced
+        }
+        cdf = {p: pool.submit(_cdf_rewrite, p) for p in sorted(cdf_matched)}
+        dels = {p: pool.submit(_del_rewrite, p) for p in sorted(del_matched)}
+        ordered = _ordered_purge_rewrite(
+            table, [by_path[p] for p in pos_paths], hit, _POS_CAP
+        ) if pos_paths else {}
+        replacements = {p: reps for p, (reps, _) in ordered.items()}
+        ordinal_maps = {p: m for p, (_, m) in ordered.items()}  # (ords, new path)
+        remaps = {
+            p: pool.submit(_remap_one, p)
+            for p in sorted(pos_refs) if ordinal_maps and os.path.exists(p)
+        }
+    replacements.update((p, f.result()) for p, f in plain.items())
+    cdf_replacements = {p: f.result() for p, f in cdf.items()}
+    del_replacements = {p: f.result() for p, f in dels.items()}
+    for p, f in remaps.items():
+        if f.result() is not None:
+            del_replacements[p] = f.result()
+            del_matched.add(p)
 
     # remap every snapshot in place, preserving ids and sequencing
     dropped = 0

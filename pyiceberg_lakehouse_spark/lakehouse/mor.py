@@ -22,6 +22,7 @@ from __future__ import annotations
 import base64
 import os
 from functools import reduce
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,6 +42,21 @@ def norm_path(name: str = "_metadata.file_path", decode: bool = True) -> Column:
     metadata records; a raw string must not be decoded."""
     out = f"regexp_replace({name}, '^file:/+', '/')"
     return F.expr(f"url_decode(replace({out}, '+', '%2B'))" if decode else out)
+
+
+def plain_path(p: str) -> str:
+    """A data-file path as the log records it. A ``file:`` URI (what
+    ``_metadata.file_path`` and ``input_file_name`` report, and what
+    position-delete files written before they stored log paths hold)
+    loses its scheme and is percent-decoded; any other string is
+    already plain and must not be decoded."""
+    return unquote(urlparse(p).path) if p.startswith("file:") else p
+
+
+def stored_path(name: str) -> Column:
+    """``plain_path`` over column ``name``: a position-delete file's
+    ``file_path`` normalised like the scan's ``PATH``."""
+    return F.when(F.col(name).startswith("file:"), norm_path(name)).otherwise(F.col(name))
 
 
 def with_sequence(df: DataFrame, seqs: dict[str, int], path: str = PATH) -> DataFrame:

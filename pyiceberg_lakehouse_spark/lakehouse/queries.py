@@ -226,8 +226,8 @@ def lh_delete_positions(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows they mean to. Deleted metadata-only (no rewrite); the scan
     anti-joins on the scan's own row identity; rows appended AFTER the
     delete are visible even when identical (sequencing). ``compact``
-    materializes; ``purge_rows`` refuses while positions are pending
-    (ordinals would shift) — both pytest-pinned."""
+    materializes; ``purge_rows`` rewrites a referenced file in row order
+    and remaps the ordinals — both pytest-pinned."""
     lh = Lakehouse(spark, _warehouse())
     t = lh.create_table(
         "ns.orders_posdel", SCHEMAS["orders"],
@@ -1867,11 +1867,11 @@ def lh_purge_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def lh_purge_mor_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten purge OVER POSITION-DELETE HISTORY
-    (VERDICT r16 task #8; lakehouse/maintenance.py::purge_rows +
-    _ordered_purge_rewrite): the table carries a merge-on-read
-    position-delete snapshot (row identity = (file, ordinal)) when the
-    purge lands, so every affected data file rewrites ORDER-PRESERVING
-    and the delete rows remap to the new (path, shifted ordinal) —
+    (lakehouse/maintenance.py::purge_rows + _ordered_purge_rewrite):
+    the table carries a merge-on-read position-delete snapshot (row
+    identity = (file, ordinal)) when the purge lands, so the affected
+    data files rewrite ORDER-PRESERVING in one job and the delete rows
+    remap to the new (log path, shifted ordinal) —
     entries whose target row was itself purged retire. The driver
     hashes two time-travel reads side by side: the PRE-DELETE snapshot
     (everything minus the subject — history rewritten, ids preserved)

@@ -308,7 +308,7 @@ class Lakehouse:
                         pos_delete_paths.add(d["path"])
             log._write()
         # Position-delete parquet CONTENT stores absolute data-file paths
-        # (the scan anti-joins on _metadata.file_path): left at the old
+        # (each data file's log path): left at the old
         # prefix they would match nothing and every deleted row would
         # silently resurrect (ADVICE r14). Rewrite the file_path column of
         # each delete file to the new prefix — metadata-sized work, done
@@ -318,17 +318,11 @@ class Lakehouse:
             import pyarrow.parquet as pq
 
             def _repoint(p: str) -> str:
-                # Spark's _metadata.file_path carries a file: URI scheme;
-                # the snapshot log stores plain paths — handle both
-                scheme = ""
-                rest = p
-                for sch in ("file://", "file:"):
-                    if p.startswith(sch):
-                        scheme, rest = sch, p[len(sch):]
-                        break
-                if rest.startswith(prefix):
-                    rest = os.path.join(dst_dir, rest[len(prefix):])
-                return scheme + rest
+                # older delete files hold file: URIs; write the plain path
+                p = mor.plain_path(p)
+                if p.startswith(prefix):
+                    return os.path.join(dst_dir, p[len(prefix):])
+                return p
 
             for dpath in sorted(pos_delete_paths):
                 tbl = pq.read_table(dpath)
@@ -1143,8 +1137,9 @@ class LakehouseTable:
         data files committed strictly BEFORE it, so later appends —
         including rows identical to deleted ones — stay visible.
         ``compact()`` materializes position deletes away like equality
-        ones. ``purge_rows`` refuses while position deletes are pending
-        (a history rewrite would shift the ordinals they point at).
+        ones; ``purge_rows`` rewrites a file they point at in row order and
+        remaps their ordinals. Each row stores its data file's path as the
+        log records it (the Iceberg spec's ``file_path``).
         """
         import uuid
 
@@ -1153,7 +1148,7 @@ class LakehouseTable:
             self._read_files(files, with_pos=True)
             .filter(condition)
             .select(
-                F.col("__lh_fp").alias("file_path"),
+                mor.norm_path("__lh_fp").alias("file_path"),
                 F.col("__lh_pos").alias("pos"),
             )
         )
@@ -1286,11 +1281,11 @@ class LakehouseTable:
             {f["path"]: f.get("added_in", 0) for f in files},
         )
         pos = [d for d in deletes if d.get("kind") == "position"]
-        # (file_path, pos) rows, paths as the scan's _metadata reported them
+        # (file_path, pos) rows: log paths, or the file: URIs older files hold
         positions = small(
             read(
                 pos,
-                [mor.norm_path("file_path").alias(mor.PATH), F.col("pos").alias(mor.POS)],
+                [mor.stored_path("file_path").alias(mor.PATH), F.col("pos").alias(mor.POS)],
                 self.spark.read.schema("file_path string, pos bigint"),
             ),
             pos,
@@ -1860,37 +1855,25 @@ class LakehouseTable:
                 *extra,
             )
 
-        parts = self.partition_names
-        if not parts:
-            # unpartitioned: every file (including externally registered
-            # add_files paths) carries the full schema — one scan per rename
-            # epoch (a single multi-file scan when no renames exist)
-            by_epoch: dict[int, list[str]] = {}
-            for f in files:
-                epoch = f.get("added_in", 0) if per_epoch else 0
-                by_epoch.setdefault(epoch, []).append(f["path"])
-            dfs = []
-            for epoch, paths in sorted(by_epoch.items()):
-                hist = hist_for(epoch)
-                read_schema = T.StructType(
+        data_fields = self._data_schema().fields
+
+        def reader(hist: dict[str, str]):
+            # explicit schema (historical names): no per-group footer
+            # inference job; files missing a column read it as NULL
+            return self.spark.read.schema(
+                T.StructType(
                     [
                         T.StructField(hist.get(f.name, f.name), f.dataType, True)
-                        for f in schema.fields
+                        for f in data_fields
                     ]
                 )
-                dfs.append(
-                    conform(
-                        attach(
-                            self.spark.read.schema(read_schema).parquet(
-                                *paths
-                            )
-                        ),
-                        hist,
-                        nulls_for(epoch),
-                    )
-                )
-            return reduce(DataFrame.unionByName, dfs)
+            )
+
+        parts = self.partition_names
         data_dir = os.path.join(self.table_dir, "data")
+        # unpartitioned: no file is hive, and the flat grouping below
+        # reduces to one scan per rename epoch (a single multi-file scan
+        # when no renames exist)
         hive = [f for f in files if _is_hive(f, parts, data_dir)]
         flat = [f for f in files if not _is_hive(f, parts, data_dir)]
         dfs: list[DataFrame] = []
@@ -1900,22 +1883,16 @@ class LakehouseTable:
             # dir is a single snapshot, so it is also a single rename epoch
             by_commit: dict[str, list[dict]] = {}
             for f in hive:
-                rel = os.path.relpath(f["path"], os.path.join(self.table_dir, "data"))
+                rel = os.path.relpath(f["path"], data_dir)
                 commit = rel.replace(os.sep, "/").split("/", 1)[0]
                 by_commit.setdefault(commit, []).append(f)
             for commit in sorted(by_commit):
                 group = by_commit[commit]
                 epoch = group[0].get("added_in", 0)
                 hist = hist_for(epoch)
-                read_schema = T.StructType(
-                    [
-                        T.StructField(hist.get(f.name, f.name), f.dataType, True)
-                        for f in self._data_schema().fields
-                    ]
-                )
                 df = attach(
-                    self.spark.read.schema(read_schema)
-                    .option("basePath", os.path.join(self.table_dir, "data", commit))
+                    reader(hist)
+                    .option("basePath", os.path.join(data_dir, commit))
                     .parquet(*[f["path"] for f in group])
                 )
                 dfs.append(conform(df, hist, nulls_for(epoch)))
@@ -1935,7 +1912,7 @@ class LakehouseTable:
                 ident = tuple(
                     sorted(
                         (k, v)
-                        for k, v in f["partition"].items()
+                        for k, v in (f.get("partition") or {}).items()
                         if k in identity_fields
                     )
                 )
@@ -1943,20 +1920,7 @@ class LakehouseTable:
             for (ident, epoch), group in sorted(by_group.items()):
                 pvals = dict(ident)
                 hist = hist_for(epoch)
-                # explicit schema (historical names): no per-group footer
-                # inference job; files missing a column read it as NULL,
-                # exactly like the hive path's schema projection
-                read_schema = T.StructType(
-                    [
-                        T.StructField(hist.get(f.name, f.name), f.dataType, True)
-                        for f in self._data_schema().fields
-                    ]
-                )
-                df = attach(
-                    self.spark.read.schema(read_schema).parquet(
-                        *[f["path"] for f in group]
-                    )
-                )
+                df = attach(reader(hist).parquet(*[f["path"] for f in group]))
                 # only identity partition values materialize as columns;
                 # transform sources already live in the data files
                 for col, pf in identity_fields.items():
@@ -2003,7 +1967,10 @@ def _partitions_of(files: list[dict[str, Any]]) -> list[dict[str, str]]:
 
 def _is_hive(f: dict[str, Any], parts: list[str], data_dir: str) -> bool:
     """Hive-readable = lives under this table's data dir AND encodes every
-    partition column in its path; anything else is metadata-only."""
+    partition column in its path; anything else is metadata-only. With no
+    partition columns there is nothing to derive: no file is hive."""
+    if not parts:
+        return False
     path = f["path"].replace(os.sep, "/")
     if not path.startswith(data_dir.replace(os.sep, "/") + "/"):
         return False

@@ -245,3 +245,37 @@ def test_streaming_feed_raises_on_rewrite_without_change_files(spark, warehouse)
             {"snapshot_id": 0},
             {"snapshot_id": t.log.current_snapshot_id()},
         )
+
+
+def _change_files_on_disk(t):
+    return set(glob.glob(os.path.join(t.table_dir, "_change_data", "**", "*.parquet"), recursive=True))
+
+
+def test_expire_unlinks_change_files_only_dropped_snapshots_name(spark, warehouse):
+    from pyiceberg_lakehouse_spark.lakehouse.maintenance import expire_snapshots
+
+    t = _cdf_table(spark, warehouse, partitioned=False)
+    t.delete_where(F.col("k") == 0)
+    dropped = {f["path"] for f in t.log.snapshots[-1].summary["change-data-files"]}
+    t.delete_where(F.col("k") == 1)
+    kept = {f["path"] for f in t.log.snapshots[-1].summary["change-data-files"]}
+    assert dropped and kept and _change_files_on_disk(t) == dropped | kept
+    removed = set(expire_snapshots(t, keep_last=1))
+    assert dropped <= removed and not kept & removed
+    assert _change_files_on_disk(t) == kept
+    assert t.scan().count() == 28
+
+
+def test_remove_orphan_files_sweeps_unreferenced_change_files(spark, warehouse):
+    from pyiceberg_lakehouse_spark.lakehouse.maintenance import remove_orphan_files
+
+    t = _cdf_table(spark, warehouse, partitioned=False)
+    t.delete_where(F.col("k") == 0)
+    kept = _change_files_on_disk(t)
+    assert kept
+    # a CDF commit that crashed after writing its change files
+    crashed = os.path.join(t.table_dir, "_change_data", "commit-9-crashed")
+    _rows(spark, 3).withColumn("_change_type", F.lit("delete")).write.parquet(crashed)
+    deleted = remove_orphan_files(t, older_than_s=0.0)
+    assert deleted and all("commit-9-crashed" in p for p in deleted)
+    assert _change_files_on_disk(t) == kept

@@ -352,3 +352,18 @@ def test_expired_history_keeps_delete_sequencing(spark, warehouse):
         assert _rows(
             I.read_iceberg_table(spark, mp, snapshot_id=s.snapshot_id), ("k", "v")
         ) == _rows(t.scan(snapshot_id=s.snapshot_id), ("k", "v")), s.snapshot_id
+
+
+def test_position_deletes_roundtrip_under_a_path_with_a_space(spark, tmp_path):
+    """A position delete names its data file by the path the manifests
+    record, so the export's deletes match under a warehouse path that a
+    URI would escape (a space is ``%20`` in ``_metadata.file_path``)."""
+    lh = Lakehouse(spark, str(tmp_path / "with space" / "warehouse"))
+    t = lh.create_table("ns.exp_space", KV)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], KV))
+    t.delete_where_positions(F.col("k") < 3)
+    t.delete_keys(spark.createDataFrame([(5,)], "k long"), ["k"])
+    want = _rows(t.scan(), ("k", "v"))
+    assert {k for k, _ in want} == {3, 4, 6, 7, 8, 9}
+    got = _rows(I.read_iceberg_table(spark, export_iceberg_table(t)), ("k", "v"))
+    assert got == want

@@ -2,6 +2,9 @@
 form): lifecycle, sequencing, composition with equality deletes, and
 the purge gate."""
 
+import os
+from urllib.parse import quote, unquote
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -193,3 +196,50 @@ def test_rename_table_rewrites_branch_logs_too(spark, lh):
 
     br2 = LakehouseTable(spark, t2.table_dir, branch="dev")
     assert br2.scan().count() == dev_count
+
+
+def _space_table(spark, name):
+    """A 10-row table under a warehouse path holding a space, with rows
+    k < 3 position-deleted."""
+    lh = Lakehouse(spark, os.path.join(session_tmpdir(prefix="posdel_"), "with space"))
+    df = spark.createDataFrame([(i, f"v{i}") for i in range(10)], "k long, v string")
+    t = lh.create_table(name, df.schema)
+    t.append(df)
+    t.delete_where_positions(F.col("k") < 3)
+    return lh, t
+
+
+def _keys(t):
+    return sorted(r.k for r in t.scan().select("k").collect())
+
+
+def test_rename_table_keeps_position_deletes_under_a_path_with_a_space(spark):
+    lh, t = _space_table(spark, "ns.sp")
+    assert _keys(t) == list(range(3, 10))
+    lh.rename_table("ns.sp", "ns.sp2")
+    assert _keys(lh.load_table("ns.sp2")) == list(range(3, 10))
+
+
+def test_position_delete_file_holding_file_uris_still_applies(spark):
+    """Position-delete files once stored Spark's ``file:`` URI of each
+    data file (a space as ``%20``); the scan still decodes that form."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, t = _space_table(spark, "ns.uri")
+    n_uris = 0
+    for d in t.log.live_deletes():
+        tbl = pq.read_table(d["path"])
+        uris = [
+            "file:" + quote(unquote(p[len("file:"):]) if p.startswith("file:") else p)
+            for p in tbl.column("file_path").to_pylist()
+        ]
+        assert all("%20" in u for u in uris)
+        n_uris += len(uris)
+        i = tbl.schema.get_field_index("file_path")
+        pq.write_table(tbl.set_column(i, "file_path", pa.array(uris, pa.string())), d["path"])
+        crc = os.path.join(os.path.dirname(d["path"]), f".{os.path.basename(d['path'])}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+    assert n_uris == 3
+    assert _keys(t) == list(range(3, 10))

@@ -389,10 +389,8 @@ def test_batched_ordered_rewrite_many_files(spark, warehouse):
 
 
 def test_over_cap_purge_leaves_no_orphan_files(spark, warehouse):
-    """r19 (VERDICT r18 what's-wrong #4): the over-cap refusal fires
-    AFTER the survivor write now that the two jobs overlap, so the
-    error path must remove the already-written, never-committed
-    purge-* directory from the table's data dir."""
+    """The over-cap refusal must leave no never-committed purge-*
+    directory in the table's data dir."""
     import glob
 
     from pyiceberg_lakehouse_spark.lakehouse.maintenance import (
@@ -403,7 +401,7 @@ def test_over_cap_purge_leaves_no_orphan_files(spark, warehouse):
     entry = t.log.live_files()[0]
     with pytest.raises(NotImplementedError):
         _ordered_purge_rewrite(
-            t, entry, F.col("o_orderkey") % 2 == 0, cap=1
+            t, [entry], F.col("o_orderkey") % 2 == 0, cap=1
         )
     leaked = glob.glob(os.path.join(t.table_dir, "data", "purge-*"))
     assert leaked == [], leaked
