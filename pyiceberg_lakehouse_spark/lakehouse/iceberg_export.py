@@ -28,7 +28,9 @@ Scale posture: export is a metadata-scale lifecycle operation — one
 parquet FOOTER read per data file (the same cost Iceberg's add_files
 pays), no row data touched; manifests stream through the from-scratch
 Avro encoder. A 100 TB table with 100k files exports in file-count
-time, not data-size time.
+time, not data-size time. Export and commit share one footer read
+path (``stats.footer_stats``), so a manifest's bounds and the log's
+follow the same rule.
 """
 
 from __future__ import annotations
@@ -46,6 +48,10 @@ from pyiceberg_lakehouse_spark.lakehouse.iceberg_interop import (
 )
 from pyiceberg_lakehouse_spark.lakehouse.iceberg_transforms import (
     serialize_single_value,
+)
+from pyiceberg_lakehouse_spark.lakehouse.stats import (
+    file_row_count,
+    footer_stats,
 )
 
 _EPOCH_DATE = datetime.date(1970, 1, 1)
@@ -109,69 +115,33 @@ def _stat_value(v: Any, ice_type: str) -> Any:
 
 
 def _file_stats(path: str, fields: list[dict]) -> dict[str, dict]:
-    """One footer read -> the manifest's four stats maps
+    """``stats.footer_stats`` -> the manifest's four stats maps
     (field-id keyed): lower/upper bounds as Appendix-D bytes plus
-    value/null counts. Columns whose physical stats pyarrow cannot
-    surface (or whose type has no single-value serialization) are
-    simply absent — pruning stays conservative for them."""
-    import pyarrow.parquet as pq
-
-    meta = pq.ParquetFile(path).metadata
-    by_name = {f["name"]: f for f in fields}
-    mins: dict[int, Any] = {}
-    maxs: dict[int, Any] = {}
-    vals: dict[int, int] = {}
-    nulls: dict[int, int] = {}
-    statless: set[int] = set()
-    for rg in range(meta.num_row_groups):
-        n_rows = meta.row_group(rg).num_rows
-        for ci in range(meta.num_columns):
-            col = meta.row_group(rg).column(ci)
-            fld = by_name.get(col.path_in_schema)
-            if fld is None:
-                continue
-            fid, ice_t = int(fld["id"]), fld["type"]
-            vals[fid] = vals.get(fid, 0) + n_rows
-            try:
-                st = col.statistics
-            except NotImplementedError:
-                st = None
-            if st is not None and st.null_count is not None:
-                nulls[fid] = nulls.get(fid, 0) + st.null_count
-            else:
-                statless.add(fid)
-            if ice_t.startswith("decimal(") or ice_t == "binary":
-                statless.add(fid)  # no bounds serde for these here
-                continue
-            if st is None or not st.has_min_max:
-                statless.add(fid)
-                continue
-            try:
-                lo = _stat_value(st.min, ice_t)
-                hi = _stat_value(st.max, ice_t)
-            except (UnicodeDecodeError, TypeError, ValueError):
-                statless.add(fid)
-                continue
-            mins[fid] = lo if fid not in mins else min(mins[fid], lo)
-            maxs[fid] = hi if fid not in maxs else max(maxs[fid], hi)
-    lower: dict[int, bytes] = {}
-    upper: dict[int, bytes] = {}
-    for fid in mins:
-        if fid in statless or fid not in maxs:
-            continue
-        ice_t = next(
-            f["type"] for f in fields if int(f["id"]) == fid
-        )
-        lower[fid] = serialize_single_value(mins[fid], ice_t)
-        upper[fid] = serialize_single_value(maxs[fid], ice_t)
-    return {
-        "lower_bounds": lower,
-        "upper_bounds": upper,
-        "value_counts": dict(vals),
-        "null_value_counts": {
-            k: v for k, v in nulls.items() if k not in statless
-        },
+    value/null counts. A column without bounds (none in the footer, or
+    a type with no bounds serde here) exports no null count either —
+    pruning stays conservative for it."""
+    cols = footer_stats(path)[1]
+    out: dict[str, dict] = {
+        "lower_bounds": {}, "upper_bounds": {},
+        "value_counts": {}, "null_value_counts": {},
     }
+    for fld in fields:
+        c = cols.get(fld["name"])
+        if c is None:
+            continue
+        fid, ice_t = int(fld["id"]), fld["type"]
+        out["value_counts"][fid] = c["values"]
+        if (c["bounds"] is None or c["nulls"] is None
+                or ice_t.startswith("decimal(") or ice_t == "binary"):
+            continue
+        try:
+            lo, hi = (_stat_value(v, ice_t) for v in c["bounds"])
+        except (UnicodeDecodeError, TypeError, ValueError):
+            continue
+        out["lower_bounds"][fid] = serialize_single_value(lo, ice_t)
+        out["upper_bounds"][fid] = serialize_single_value(hi, ice_t)
+        out["null_value_counts"][fid] = c["nulls"]
+    return out
 
 
 def _typed_partition(
@@ -203,14 +173,14 @@ def _typed_partition(
 def _collect_stats_distributed(
     spark, paths: list[str], fields: list[dict]
 ) -> dict[str, dict]:
-    """One Spark job: executor-side footer reads -> the per-file
+    """One Spark job: executor-side ``_file_stats`` -> the per-file
     manifest stats maps. Result rows are metadata-scale (files x
     stat-bearing columns)."""
-    import base64
-
+    keys = ("lower_bounds", "upper_bounds", "value_counts",
+            "null_value_counts")
     schema = (
-        "path string, fid int, lower string, upper string,"
-        " value_count long, null_count long"
+        "path string, fid int, lower_bounds binary, upper_bounds binary,"
+        " value_counts long, null_value_counts long"
     )
 
     def _batches(it):
@@ -220,47 +190,21 @@ def _collect_stats_distributed(
             rows = []
             for path in pdf["path"]:
                 st = _file_stats(str(path), fields)
-                fids = (set(st["lower_bounds"])
-                        | set(st["value_counts"])
-                        | set(st["null_value_counts"]))
-                for fid in sorted(fids):
-                    lo = st["lower_bounds"].get(fid)
-                    up = st["upper_bounds"].get(fid)
-                    rows.append((
-                        str(path), fid,
-                        base64.b64encode(lo).decode() if lo is not None
-                        else None,
-                        base64.b64encode(up).decode() if up is not None
-                        else None,
-                        st["value_counts"].get(fid),
-                        st["null_value_counts"].get(fid),
-                    ))
-            yield pd.DataFrame(rows, columns=[
-                "path", "fid", "lower", "upper",
-                "value_count", "null_count",
-            ])
+                for fid in sorted(st["value_counts"]):
+                    rows.append((str(path), fid,
+                                 *(st[k].get(fid) for k in keys)))
+            yield pd.DataFrame(rows, columns=["path", "fid", *keys])
 
     src = local_rows_df(
         spark, [(p,) for p in paths], "path string"
     ).repartition(min(len(paths), 256))
-    out: dict[str, dict] = {
-        p: {"lower_bounds": {}, "upper_bounds": {},
-            "value_counts": {}, "null_value_counts": {}}
-        for p in paths
-    }
-    import base64
-
+    out: dict[str, dict] = {p: {k: {} for k in keys} for p in paths}
     for r in src.mapInPandas(_batches, schema).collect():
-        st = out[r["path"]]
-        fid = int(r["fid"])
-        if r["lower"] is not None:
-            st["lower_bounds"][fid] = base64.b64decode(r["lower"])
-        if r["upper"] is not None:
-            st["upper_bounds"][fid] = base64.b64decode(r["upper"])
-        if r["value_count"] is not None:
-            st["value_counts"][fid] = int(r["value_count"])
-        if r["null_count"] is not None:
-            st["null_value_counts"][fid] = int(r["null_count"])
+        for k in keys:
+            if r[k] is not None:
+                out[r["path"]][k][int(r["fid"])] = (
+                    bytes(r[k]) if "bounds" in k else int(r[k])
+                )
     return out
 
 
@@ -384,12 +328,10 @@ def export_iceberg_table(
             )
 
     def _entry(f: dict) -> dict:
-        import pyarrow.parquet as pq
-
         path = f["path"]
         rows = f.get("rows")
         if rows is None:
-            rows = pq.ParquetFile(path).metadata.num_rows
+            rows = file_row_count(path)
         out = {"path": path, "records": int(rows)}
         if part_cols:
             out["partition"] = _typed_partition(
@@ -438,12 +380,7 @@ def export_iceberg_table(
         ]
         pos, eq = [], []
         for d in s.added_deletes:
-            import pyarrow.parquet as pq
-
-            out = {
-                "path": d["path"],
-                "records": pq.ParquetFile(d["path"]).metadata.num_rows,
-            }
+            out = {"path": d["path"], "records": file_row_count(d["path"])}
             if d.get("kind") == "position":
                 pos.append(_sequenced(out, d["snapshot_id"], s.snapshot_id))
                 continue

@@ -75,6 +75,50 @@ _MANIFEST_LIST_SCHEMA = {
     ],
 }
 
+# the data_file's field-id keyed stats maps: name -> (field id, key
+# field id, value type); the value's field id is the key's plus one
+_STATS_MAPS = {
+    "lower_bounds": (125, 126, "bytes"),
+    "upper_bounds": (128, 129, "bytes"),
+    "value_counts": (109, 119, "long"),
+    "null_value_counts": (110, 121, "long"),
+}
+_AVRO_PY = {"bytes": bytes, "long": int}
+
+
+def _id_map(name: str, fid: int, key_id: int, value_type: str) -> dict:
+    """A spec map field in its array<record{key,value}> encoding, with
+    the documented kNNN_vNNN record name and per-key/value field-ids."""
+    return {"name": name, "field-id": fid, "type": ["null", {
+        "type": "array", "items": {
+            "type": "record", "name": f"k{key_id}_v{key_id + 1}",
+            "fields": [{"name": "key", "type": "int",
+                        "field-id": key_id},
+                       {"name": "value", "type": value_type,
+                        "field-id": key_id + 1}],
+        }}]}
+
+
+def _encode_stats(f: dict) -> dict:
+    """File ``f``'s {field id: value} stats maps -> the spec's sorted
+    [{key, value}] arrays (None when absent)."""
+    return {
+        name: [{"key": int(k), "value": _AVRO_PY[t](v)}
+               for k, v in sorted(f[name].items())] if f.get(name) else None
+        for name, (_fid, _kid, t) in _STATS_MAPS.items()
+    }
+
+
+def _decode_stats(df: dict) -> dict:
+    """A manifest ``data_file``'s [{key, value}] stats arrays -> plain
+    {field id: value} dicts (None when the writer recorded none)."""
+    return {
+        name: {int(e["key"]): _AVRO_PY[t](e["value"]) for e in df[name]}
+        if df.get(name) else None
+        for name, (_fid, _kid, t) in _STATS_MAPS.items()
+    }
+
+
 _MANIFEST_SCHEMA = {
     # field-id props per the spec's manifest-entry / data_file tables;
     # map-shaped fields use the spec's array<record{key,value}>
@@ -103,53 +147,24 @@ _MANIFEST_SCHEMA = {
                  "type": ["null", {"type": "array", "items": "int",
                                    "element-id": 136}]},
                 # spec fields 125/128: per-column value bounds as
-                # field-id -> single-value-serialized bytes, stored in
-                # the spec's array<record{key,value}> map encoding
-                # (the k126_v127 / k129_v130 shapes real manifests use)
-                {"name": "lower_bounds", "field-id": 125,
-                 "type": ["null", {
-                    "type": "array", "items": {
-                        "type": "record", "name": "k126_v127",
-                        "fields": [{"name": "key", "type": "int",
-                                    "field-id": 126},
-                                   {"name": "value", "type": "bytes",
-                                    "field-id": 127}],
-                    }}]},
-                {"name": "upper_bounds", "field-id": 128,
-                 "type": ["null", {
-                    "type": "array", "items": {
-                        "type": "record", "name": "k129_v130",
-                        "fields": [{"name": "key", "type": "int",
-                                    "field-id": 129},
-                                   {"name": "value", "type": "bytes",
-                                    "field-id": 130}],
-                    }}]},
-                # spec fields 109/110: per-column row / null-row counts
-                # (field-id -> long) — IS NULL / IS NOT NULL pruning
-                {"name": "value_counts", "field-id": 109,
-                 "type": ["null", {
-                    "type": "array", "items": {
-                        "type": "record", "name": "k119_v120",
-                        "fields": [{"name": "key", "type": "int",
-                                    "field-id": 119},
-                                   {"name": "value", "type": "long",
-                                    "field-id": 120}],
-                    }}]},
-                {"name": "null_value_counts", "field-id": 110,
-                 "type": ["null", {
-                    "type": "array", "items": {
-                        "type": "record", "name": "k121_v122",
-                        "fields": [{"name": "key", "type": "int",
-                                    "field-id": 121},
-                                   {"name": "value", "type": "long",
-                                    "field-id": 122}],
-                    }}]},
+                # field-id -> single-value-serialized bytes; 109/110:
+                # per-column row / null-row counts (field-id -> long) —
+                # IS NULL / IS NOT NULL pruning
+                *(_id_map(name, *ids) for name, ids in _STATS_MAPS.items()),
             ],
         }},
     ],
 }
 
 _STATUS_EXISTING, _STATUS_ADDED, _STATUS_DELETED = 0, 1, 2
+
+
+def _manifest_entry(
+    status: int, snapshot_id: int, seq: int | None, data_file: dict
+) -> dict:
+    return {"status": status, "snapshot_id": snapshot_id,
+            "sequence_number": seq, "file_sequence_number": seq,
+            "data_file": data_file}
 
 
 def _manifest_schema(
@@ -285,6 +300,29 @@ def write_iceberg_metadata(
     seq = 0
     prev_snap_id: int | None = None
 
+    def _data_file(f: dict, content: int, **fields) -> dict:
+        """The manifest ``data_file`` record of data or delete file
+        ``f``; ``fields`` set the content-specific ones."""
+        df = {
+            "content": content,
+            "file_path": os.path.abspath(f["path"]),
+            "file_format": "PARQUET",
+            "record_count": int(f["records"]),
+            "file_size_in_bytes": int(
+                f["size"] if "size" in f else os.path.getsize(f["path"])
+            ),
+            "equality_ids": None,
+            **_encode_stats(f),
+        }
+        if has_dv:
+            df.update(referenced_data_file=None, content_offset=None,
+                      content_size_in_bytes=None)
+        df.update(fields)
+        if partition_fields:
+            part = f.get("partition", {})
+            df["partition"] = {n: part.get(n) for n, _t in partition_fields}
+        return df
+
     def _list(f: dict, df: dict, live_map: dict, key: str, out: list) -> None:
         """Make ``df`` live under ``key`` and list it in this
         snapshot: ADDED, inheriting the manifest's sequence number,
@@ -295,16 +333,20 @@ def write_iceberg_metadata(
         fsnap = int(f["snapshot_id"]) if relisted else snap_id
         live_map[key] = {"df": df, "seq": fseq, "snap_id": fsnap,
                          "listed": seq}
-        out.append(
-            {
-                "status": _STATUS_EXISTING if relisted else _STATUS_ADDED,
-                "snapshot_id": fsnap,
-                # null: inherited from the manifest
-                "sequence_number": fseq if relisted else None,
-                "file_sequence_number": fseq if relisted else None,
-                "data_file": df,
-            }
-        )
+        out.append(_manifest_entry(
+            _STATUS_EXISTING if relisted else _STATUS_ADDED, fsnap,
+            # null: inherited from the manifest
+            fseq if relisted else None, df,
+        ))
+
+    def _carry(live_map: dict, out: list) -> None:
+        """EXISTING entries for the live files this snapshot did not
+        list; ``snapshot_id`` stays the one that ADDED the file (spec)."""
+        out += [
+            _manifest_entry(_STATUS_EXISTING, prev["snap_id"], prev["seq"],
+                            prev["df"])
+            for prev in live_map.values() if prev["listed"] != seq
+        ]
 
     for si, snap in enumerate(snapshots):
         seq = int(snap.get("sequence_number", seq + 1))
@@ -318,156 +360,37 @@ def write_iceberg_metadata(
                 prev, out = live_del.pop(path), del_entries
             else:
                 raise ValueError(f"snapshot {si} deletes unknown {path}")
-            out.append(
-                {
-                    "status": _STATUS_DELETED,
-                    "snapshot_id": snap_id,
-                    "sequence_number": prev["seq"],
-                    "file_sequence_number": prev["seq"],
-                    "data_file": prev["df"],
-                }
-            )
+            out.append(_manifest_entry(
+                _STATUS_DELETED, snap_id, prev["seq"], prev["df"]
+            ))
         for f in snap.get("files", []):
-            df = {
-                "content": 0,
-                "file_path": os.path.abspath(f["path"]),
-                "file_format": f.get("file_format", "PARQUET"),
-                "record_count": int(f["records"]),
-                "file_size_in_bytes": int(
-                    f["size"] if "size" in f
-                    else os.path.getsize(f["path"])
-                ),
-                "equality_ids": None,
-                "lower_bounds": (
-                    [{"key": int(k), "value": bytes(v)}
-                     for k, v in sorted(f["lower_bounds"].items())]
-                    if f.get("lower_bounds") else None
-                ),
-                "upper_bounds": (
-                    [{"key": int(k), "value": bytes(v)}
-                     for k, v in sorted(f["upper_bounds"].items())]
-                    if f.get("upper_bounds") else None
-                ),
-                "value_counts": (
-                    [{"key": int(k), "value": int(v)}
-                     for k, v in sorted(f["value_counts"].items())]
-                    if f.get("value_counts") else None
-                ),
-                "null_value_counts": (
-                    [{"key": int(k), "value": int(v)}
-                     for k, v in sorted(f["null_value_counts"].items())]
-                    if f.get("null_value_counts") else None
-                ),
-            }
-            if has_dv:
-                df.update(referenced_data_file=None,
-                          content_offset=None,
-                          content_size_in_bytes=None)
-            if partition_fields:
-                part = f.get("partition", {})
-                df["partition"] = {
-                    n: part.get(n) for n, _t in partition_fields
-                }
+            df = _data_file(
+                f, 0, file_format=f.get("file_format", "PARQUET")
+            )
             _list(f, df, live, f["path"], entries)
-        for path, prev in live.items():
-            if prev["listed"] != seq:  # carried forward
-                entries.append(
-                    {
-                        "status": _STATUS_EXISTING,
-                        # spec: the snapshot that ADDED the file
-                        "snapshot_id": prev["snap_id"],
-                        "sequence_number": prev["seq"],
-                        "file_sequence_number": prev["seq"],
-                        "data_file": prev["df"],
-                    }
-                )
+        _carry(live, entries)
         # ---- content=1 delete manifest (position + equality files) ----
         for f in snap.get("pos_deletes", []):
-            df = {
-                "content": 1,
-                "file_path": os.path.abspath(f["path"]),
-                "file_format": "PARQUET",
-                "record_count": int(f["records"]),
-                "file_size_in_bytes": int(
-                    f["size"] if "size" in f
-                    else os.path.getsize(f["path"])
-                ),
-                "equality_ids": None,
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "value_counts": None,
-                "null_value_counts": None,
-            }
-            if has_dv:
-                df.update(referenced_data_file=None,
-                          content_offset=None,
-                          content_size_in_bytes=None)
-            if partition_fields:
-                df["partition"] = {n: None for n, _t in partition_fields}
-            _list(f, df, live_del, f["path"], del_entries)
+            _list(f, _data_file(f, 1), live_del, f["path"], del_entries)
         for f in snap.get("dv_deletes", []):
             # v3 deletion vector: content=1, PUFFIN, blob range +
             # referenced data file; record_count = DV cardinality
-            df = {
-                "content": 1,
-                "file_path": os.path.abspath(f["path"]),
-                "file_format": "PUFFIN",
-                "record_count": int(f["records"]),
-                "file_size_in_bytes": int(
-                    f["size"] if "size" in f
-                    else os.path.getsize(f["path"])
-                ),
-                "equality_ids": None,
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "value_counts": None,
-                "null_value_counts": None,
-                "referenced_data_file": os.path.abspath(
+            df = _data_file(
+                f, 1, file_format="PUFFIN",
+                referenced_data_file=os.path.abspath(
                     f["referenced_data_file"]
                 ),
-                "content_offset": int(f["content_offset"]),
-                "content_size_in_bytes": int(
-                    f["content_size_in_bytes"]
-                ),
-            }
-            if partition_fields:
-                df["partition"] = {n: None for n, _t in partition_fields}
+                content_offset=int(f["content_offset"]),
+                content_size_in_bytes=int(f["content_size_in_bytes"]),
+            )
             _list(f, df, live_del,
                   f["path"] + "#" + df["referenced_data_file"], del_entries)
         for f in snap.get("eq_deletes", []):
-            df = {
-                "content": 2,
-                "file_path": os.path.abspath(f["path"]),
-                "file_format": "PARQUET",
-                "record_count": int(f["records"]),
-                "file_size_in_bytes": int(
-                    f["size"] if "size" in f
-                    else os.path.getsize(f["path"])
-                ),
-                "equality_ids": [int(i) for i in f["equality_ids"]],
-                "lower_bounds": None,
-                "upper_bounds": None,
-                "value_counts": None,
-                "null_value_counts": None,
-            }
-            if has_dv:
-                df.update(referenced_data_file=None,
-                          content_offset=None,
-                          content_size_in_bytes=None)
-            if partition_fields:
-                df["partition"] = {n: None for n, _t in partition_fields}
+            df = _data_file(
+                f, 2, equality_ids=[int(i) for i in f["equality_ids"]]
+            )
             _list(f, df, live_del, f["path"], del_entries)
-        for path, prev in live_del.items():
-            if prev["listed"] != seq:  # carried forward
-                del_entries.append(
-                    {
-                        "status": _STATUS_EXISTING,
-                        "snapshot_id": prev["snap_id"],
-                        "sequence_number": prev["seq"],
-                        "file_sequence_number": prev["seq"],
-                        "data_file": prev["df"],
-                    }
-                )
+        _carry(live_del, del_entries)
 
         def _mlist_entry(ents: list[dict], content: int) -> dict:
             mpath = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
@@ -710,29 +633,7 @@ def iceberg_live_files(
                 "seq": eseq,
                 "partition": df.get("partition"),
                 "spec_id": m_spec_id,
-                # spec map encoding: array of {key: field-id, value:
-                # single-value bytes} -> plain dicts (None when the
-                # writer recorded no stats)
-                "lower_bounds": (
-                    {int(e["key"]): bytes(e["value"])
-                     for e in df["lower_bounds"]}
-                    if df.get("lower_bounds") else None
-                ),
-                "upper_bounds": (
-                    {int(e["key"]): bytes(e["value"])
-                     for e in df["upper_bounds"]}
-                    if df.get("upper_bounds") else None
-                ),
-                "value_counts": (
-                    {int(e["key"]): int(e["value"])
-                     for e in df["value_counts"]}
-                    if df.get("value_counts") else None
-                ),
-                "null_value_counts": (
-                    {int(e["key"]): int(e["value"])
-                     for e in df["null_value_counts"]}
-                    if df.get("null_value_counts") else None
-                ),
+                **_decode_stats(df),
             }
             if fc == 0:
                 files.append(rec)

@@ -488,6 +488,23 @@ class SnapshotLog:
             on_disk._write()
             self.load()
 
+    def target_file_bytes(self) -> int:
+        """``write.target-file-size-bytes``: the size compaction and the
+        write path aim each data file at (default 512 MB, the reference's
+        main-daft.py:106)."""
+        return int(self.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024))
+
+    def records_per_file(self) -> int:
+        """Rows per written file: ``write.target-records-per-file``, else
+        the target file size over ``write.estimated-row-bytes`` (Spark
+        sizes output files by records, not bytes)."""
+        records = self.properties.get("write.target-records-per-file")
+        if records is None:
+            records = self.target_file_bytes() // int(
+                self.properties.get("write.estimated-row-bytes", 64)
+            )
+        return int(records)
+
     # ------------------------------------------------------------ commits --
 
     def init_table(

@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
-from pyiceberg_lakehouse_spark.lakehouse.stats import collect_file_stats, file_row_count
-from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
+from pyiceberg_lakehouse_spark.lakehouse.stats import data_file_entry, file_row_count
+from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable, files_in_partitions
 
 
 def compact(
@@ -43,19 +43,10 @@ def compact(
     INCLUDED in the rewrite (they may hold matching rows).
     """
     if target_file_bytes is None:
-        target_file_bytes = int(
-            table.log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
-        )
+        target_file_bytes = table.log.target_file_bytes()
     files = table.log.live_files()
     if partition_filter:
-        files = [
-            f
-            for f in files
-            if all(
-                k not in f["partition"] or f["partition"][k] == v
-                for k, v in partition_filter.items()
-            )
-        ]
+        files = files_in_partitions(files, [partition_filter])
     if not files:
         return None
     total = sum(os.path.getsize(f["path"]) for f in files if os.path.exists(f["path"]))
@@ -144,9 +135,7 @@ def cluster_zorder(
     path needed. Same commit protocol as ``compact``.
     """
     if target_file_bytes is None:
-        target_file_bytes = int(
-            table.log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
-        )
+        target_file_bytes = table.log.target_file_bytes()
     files = table.log.live_files()
     if not files:
         return None
@@ -566,9 +555,7 @@ def refresh_ann_indexes(
     # bytes (same sizing rule as compact) so a small append yields a few
     # tight-cell-range files, not k near-empty ones
     if target_file_bytes is None:
-        target_file_bytes = int(
-            table.log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
-        )
+        target_file_bytes = table.log.target_file_bytes()
     total = sum(
         os.path.getsize(f["path"]) for f in stale if os.path.exists(f["path"])
     )
@@ -900,19 +887,14 @@ def _ordered_purge_rewrite(
     )
     out: dict[str, tuple[list[dict], tuple]] = {}
     for i, entry in enumerate(entries):
-        paths = _nonempty_parquet(os.path.join(out_dir, f"{mor.SEQ}={i}"))
-        assert len(paths) <= 1, (entry["path"], paths)
         reps = [
-            {
-                "path": p,
-                "partition": dict(entry.get("partition") or {}),
-                "rows": file_row_count(p),
-                "stats": collect_file_stats(p),
-            }
-            for p in paths
+            data_file_entry(p, dict(entry.get("partition") or {}))
+            for p in sorted(glob.glob(os.path.join(out_dir, f"{mor.SEQ}={i}", "*.parquet")))
         ]
+        reps = [r for r in reps if r["rows"] > 0]
+        assert len(reps) <= 1, (entry["path"], reps)
         out[entry["path"]] = (
-            reps, (ords.get(entry["path"], []), paths[0] if paths else None)
+            reps, (ords.get(entry["path"], []), reps[0]["path"] if reps else None)
         )
     # one bloom pass over every replacement
     add_table_blooms(table, [r for reps, _ in out.values() for r in reps])

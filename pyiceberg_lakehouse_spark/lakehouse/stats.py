@@ -8,6 +8,16 @@ from the parquet FOOTER at commit time (row-group statistics — no data pages
 touched), and ``prune_files`` evaluates simple predicates against them
 before Spark ever sees the file list.
 
+``footer_stats`` is the one footer walker: the log's entries
+(``data_file_entry``) and the Iceberg export's manifests both project from
+it, so both follow one rule. Bounds must cover every non-null value of the
+file, so a column gets bounds only when every row group holding a non-null
+value reports min and max — one row group without them (parquet-mr writes
+none for a row group holding a >4 KB string; Spark's INT96 timestamps have
+none at all) leaves the column unbounded and never pruned on. An all-null
+row group has no values to bound and adds nothing. Bounds already in a log
+stay as written until ``compact()`` rewrites the file.
+
 Stats collection is driver-side footer reads — O(files), not O(rows) — the
 same cost class as the reference's schema probe (main-daft.py:45).
 """
@@ -28,34 +38,74 @@ def file_row_count(path: str) -> int:
     return pq.ParquetFile(path).metadata.num_rows
 
 
-def collect_file_stats(path: str, columns: list[str] | None = None) -> dict[str, list]:
-    """Column -> [min, max] from the parquet footer's row-group statistics."""
+def footer_stats(path: str) -> tuple[int, dict[str, dict[str, Any]]]:
+    """One footer read -> (row count, {column: {"bounds": (min, max) or
+    None, "values": rows, "nulls": null count or None}}).
+
+    Bounds are the footer's typed values, present only when every row
+    group holding a non-null value reports min and max; ``nulls`` only
+    when every row group reports a null count. ``values`` counts nulls
+    too, as Iceberg's value_counts do."""
     meta = pq.ParquetFile(path).metadata
-    mins: dict[str, Any] = {}
-    maxs: dict[str, Any] = {}
-    for rg in range(meta.num_row_groups):
-        for ci in range(meta.num_columns):
-            col = meta.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if columns is not None and name not in columns:
-                continue
-            try:
-                st = col.statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo_raw, hi_raw = st.min, st.max
-            except NotImplementedError:
-                # pyarrow can't surface stats for some physical types
-                # (e.g. decimals); a statless column just can't be pruned
-                # on — it must never fail the COMMIT (skipping is an
-                # optimization, not a requirement)
-                continue
-            lo, hi = _jsonable(lo_raw), _jsonable(hi_raw)
-            if lo is None or hi is None:
-                continue
-            mins[name] = lo if name not in mins else min(mins[name], lo)
-            maxs[name] = hi if name not in maxs else max(maxs[name], hi)
-    return {c: [mins[c], maxs[c]] for c in mins if c in maxs}
+    groups = [meta.row_group(i) for i in range(meta.num_row_groups)]
+    cols: dict[str, dict[str, Any]] = {}
+    for ci in range(meta.num_columns):
+        bounds: list[tuple | None] = []
+        nulls: int | None = 0
+        for rg in groups:
+            n, min_max = _chunk_stats(rg.column(ci))
+            nulls = None if n is None or nulls is None else nulls + n
+            if n != rg.num_rows:  # holds a non-null value, or may
+                bounds.append(min_max)
+        bounded = bounds and all(b is not None for b in bounds)
+        cols[meta.schema.column(ci).path] = {
+            "bounds": (
+                (min(b[0] for b in bounds), max(b[1] for b in bounds))
+                if bounded else None
+            ),
+            "values": meta.num_rows,
+            "nulls": nulls,
+        }
+    return meta.num_rows, cols
+
+
+def _chunk_stats(chunk) -> tuple[int | None, tuple | None]:
+    """(null count, (min, max)) of one column chunk, None where the
+    footer doesn't say."""
+    try:
+        st = chunk.statistics
+        if st is None:
+            return None, None
+        return (
+            st.null_count if st.has_null_count else None,
+            (st.min, st.max) if st.has_min_max else None,
+        )
+    except NotImplementedError:
+        # pyarrow can't surface stats for some physical types; such a
+        # column just can't be pruned on — it must never fail the COMMIT
+        return None, None
+
+
+def collect_file_stats(path: str) -> dict[str, list]:
+    """Column -> [min, max] for the log, JSON-safe (see ``footer_stats``)."""
+    return _log_stats(footer_stats(path)[1])
+
+
+def data_file_entry(path: str, partition: dict[str, str]) -> dict[str, Any]:
+    """A data file's log entry — footer-exact row count (metadata-only
+    COUNT(*)) and column bounds (file-level skipping) — from one footer
+    read."""
+    rows, cols = footer_stats(path)
+    return {"path": path, "partition": partition, "rows": rows, "stats": _log_stats(cols)}
+
+
+def _log_stats(cols: dict[str, dict[str, Any]]) -> dict[str, list]:
+    out = {}
+    for name, c in cols.items():
+        lo, hi = (_jsonable(v) for v in c["bounds"] or (None, None))
+        if lo is not None and hi is not None:
+            out[name] = [lo, hi]
+    return out
 
 
 def _jsonable(v: Any):

@@ -1196,35 +1196,12 @@ class LakehouseTable:
 
         files = self.log.live_files(snapshot_id)
         if partition_filter_any:
-            # IN-list over COMPOSITE partition values: keep a file if any
-            # candidate dict fully matches. One metadata prune, one read node
-            # — plan size stays constant no matter how many partitions the
-            # caller touches (vs. a per-partition scan+union loop). Missing
-            # keys (older spec) keep the file, same conservative rule as
-            # partition_filter.
-            files = [
-                f
-                for f in files
-                if any(
-                    all(
-                        k not in f["partition"] or f["partition"][k] == v
-                        for k, v in pv.items()
-                    )
-                    for pv in partition_filter_any
-                )
-            ]
+            # IN-list over COMPOSITE partition values: one metadata prune, one
+            # read node — plan size stays constant no matter how many
+            # partitions the caller touches (vs. a per-partition scan+union)
+            files = files_in_partitions(files, partition_filter_any)
         if partition_filter:
-            # conservative: a file written under an OLDER partition spec may
-            # lack the key — keep it (skipping is an optimization; the
-            # query's residual filter owns correctness)
-            files = [
-                f
-                for f in files
-                if all(
-                    k not in f["partition"] or f["partition"][k] == v
-                    for k, v in partition_filter.items()
-                )
-            ]
+            files = files_in_partitions(files, [partition_filter])
         if stat_filter:
             files = prune_files(files, stat_filter)
         if bloom_filter:
@@ -1707,42 +1684,26 @@ class LakehouseTable:
         )
         writer = df.write.mode("error").option("compression", "zstd")
         # enforce the reference's write.target-file-size-bytes table property
-        # (main-daft.py:106): Spark sizes output files by records, so the
-        # property converts via an estimated row width. At 100 TB this is
-        # what keeps files near 512 MB instead of one-per-task shards.
-        records = records_per_file
-        if records is None:
-            records = self.log.properties.get("write.target-records-per-file")
-        if records is None:
-            target = int(
-                self.log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
-            )
-            est_row_bytes = int(self.log.properties.get("write.estimated-row-bytes", 64))
-            records = target // est_row_bytes
-        writer = writer.option("maxRecordsPerFile", int(records))
+        # (main-daft.py:106). At 100 TB this is what keeps files near 512 MB
+        # instead of one-per-task shards.
+        if records_per_file is None:
+            records_per_file = self.log.records_per_file()
+        writer = writer.option("maxRecordsPerFile", int(records_per_file))
         if self.log.partition_by:
             writer = writer.partitionBy(*self.partition_names)
         writer.parquet(out_dir)
-        from pyiceberg_lakehouse_spark.lakehouse.stats import (
-            collect_file_stats,
-            file_row_count,
-        )
+        from pyiceberg_lakehouse_spark.lakehouse.stats import data_file_entry
 
         paths = sorted(
             _glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True)
         )
 
         def _entry(path: str) -> dict[str, Any]:
-            rel = os.path.relpath(path, out_dir)
-            return {
-                "path": path,
-                "partition": _parse_hive_partition(rel),
-                # footer-exact row count: powers metadata-only COUNT(*)
-                "rows": file_row_count(path),
-                # per-file column bounds from the footer: O(files) driver
-                # reads that buy file-level data skipping at scan time
-                "stats": collect_file_stats(path),
-            }
+            # O(files) driver footer reads that buy metadata-only COUNT(*)
+            # and file-level data skipping at scan time
+            return data_file_entry(
+                path, _parse_hive_partition(os.path.relpath(path, out_dir))
+            )
 
         # footer probes are tiny independent IO — a commit of hundreds of
         # files collects stats concurrently instead of one footer at a time
@@ -1775,14 +1736,11 @@ class LakehouseTable:
         # FULL table schema (unlike data files, identity partition columns
         # are kept inline — change files are not hive-partitioned)
         cols = [*self.schema().fieldNames(), "_change_type"]
-        records = int(
-            self.log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024)
-        ) // int(self.log.properties.get("write.estimated-row-bytes", 64))
         (
             changes.select(*cols)
             .write.mode("error")
             .option("compression", "zstd")
-            .option("maxRecordsPerFile", records)
+            .option("maxRecordsPerFile", self.log.records_per_file())
             .parquet(out_dir)
         )
         from pyiceberg_lakehouse_spark.lakehouse.stats import file_row_count
@@ -1949,6 +1907,23 @@ class LakehouseTable:
             retry_conflicts,
             touched_partitions=touched_partitions,
         )
+
+
+def files_in_partitions(
+    files: list[dict[str, Any]], partitions: list[dict[str, str]]
+) -> list[dict[str, Any]]:
+    """The files that may hold rows of any of ``partitions`` ({column:
+    value} dicts). Conservative: a file written under an OLDER partition
+    spec may lack a key — it is kept (skipping is an optimization; the
+    query's residual filter owns correctness)."""
+    return [
+        f
+        for f in files
+        if any(
+            all(k not in f["partition"] or f["partition"][k] == v for k, v in pv.items())
+            for pv in partitions
+        )
+    ]
 
 
 def _partitions_of(files: list[dict[str, Any]]) -> list[dict[str, str]]:

@@ -247,18 +247,11 @@ def merge_into(
     ``apply_changes`` (merge-on-read: no table rewrite).
     """
     cols = table.schema().fieldNames()
-    changes = None
-    if table.cdf_enabled:
-        merged, changes = _merge_clauses(
-            table.scan(), source, cols, on,
-            matched_update, matched_delete, not_matched_insert,
-            with_changes=True,
-        )
-    else:
-        merged = _merge_clauses(
-            table.scan(), source, cols, on,
-            matched_update, matched_delete, not_matched_insert,
-        )
+    merged, changes = _merge_clauses(
+        table.scan(), source, cols, on,
+        matched_update, matched_delete, not_matched_insert,
+        with_changes=table.cdf_enabled,
+    )
     return table.overwrite(
         merged, summary={"op": "merge_into", "keys": list(on)},
         change_rows=changes,
@@ -301,18 +294,11 @@ def merge_into_partitioned(
         if touched
         else table.scan().limit(0)
     )
-    changes = None
-    if table.cdf_enabled:
-        merged, changes = _merge_clauses(
-            cur, source, cols, on,
-            matched_update, matched_delete, not_matched_insert,
-            with_changes=True,
-        )
-    else:
-        merged = _merge_clauses(
-            cur, source, cols, on,
-            matched_update, matched_delete, not_matched_insert,
-        )
+    merged, changes = _merge_clauses(
+        cur, source, cols, on,
+        matched_update, matched_delete, not_matched_insert,
+        with_changes=table.cdf_enabled,
+    )
     return table.replace_partitions(merged, touched, change_rows=changes)
 
 
@@ -366,9 +352,10 @@ def _merge_clauses(
 ):
     """The MERGE INTO row-disposition frame shared by the full-table and
     partition-scoped variants: full-outer join target vs source on the
-    key, then apply DELETE > UPDATE > INSERT clause precedence.
-    ``with_changes=True`` additionally returns the merge's row-level delta
-    (``_change_type``-tagged) for change-data-feed commits."""
+    key, then apply DELETE > UPDATE > INSERT clause precedence. Returns
+    (merged, changes): ``changes`` is the merge's row-level delta
+    (``_change_type``-tagged) for change-data-feed commits when
+    ``with_changes``, else None."""
     src = source.select(*cols)
     src_named = src.select(
         *[F.col(c).alias(f"_src_{c}") for c in cols]
@@ -403,7 +390,7 @@ def _merge_clauses(
     ]
     out = joined.filter(keep_target | update_hit | insert_hit).select(*out_cols)
     if not with_changes:
-        return out
+        return out, None
     # Row-level delta of the merge for the change-data feed: DELETEd rows
     # and changed-UPDATE pre-images tag 'delete'; INSERTs and changed-UPDATE
     # post-images tag 'insert'. An UPDATE that assigns identical values

@@ -384,15 +384,11 @@ def _writer_state(options: dict) -> dict:
                 f"partition spec {spec!r} is a hidden-partitioning transform; "
                 "write through LakehouseTable.append(), which derives it"
             )
-    records = log.properties.get("write.target-records-per-file")
-    if records is None:
-        target = int(log.properties.get("write.target-file-size-bytes", 512 * 1024 * 1024))
-        records = target // int(log.properties.get("write.estimated-row-bytes", 64))
     return {
         "table_dir": table_dir,
         "partition_by": list(log.partition_by),
         "columns": [f.name for f in log.schema().fields],
-        "records_per_file": int(records),
+        "records_per_file": log.records_per_file(),
     }
 
 
@@ -409,10 +405,7 @@ def _write_task_batches(batches, state: dict, subdir: str) -> FilesWritten:
     import pyarrow as pa
     import pyarrow.dataset as pads
 
-    from pyiceberg_lakehouse_spark.lakehouse.stats import (
-        collect_file_stats,
-        file_row_count,
-    )
+    from pyiceberg_lakehouse_spark.lakehouse.stats import data_file_entry
 
     batches = [b for b in batches if b.num_rows > 0]
     if not batches:
@@ -445,14 +438,7 @@ def _write_task_batches(batches, state: dict, subdir: str) -> FilesWritten:
         rel = os.path.relpath(path, out_dir).replace(os.sep, "/")
         partition = dict(re.findall(r"([^/=]+)=([^/]+)(?=/)", rel + "/"))
         partition = {k: v for k, v in partition.items() if k in state["partition_by"]}
-        entries.append(
-            {
-                "path": path,
-                "partition": partition,
-                "rows": file_row_count(path),
-                "stats": collect_file_stats(path),
-            }
-        )
+        entries.append(data_file_entry(path, partition))
     return FilesWritten(entries)
 
 

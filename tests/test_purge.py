@@ -14,8 +14,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pyiceberg_lakehouse_spark.lakehouse import Lakehouse
+from pyiceberg_lakehouse_spark.lakehouse import Lakehouse, mor
 from pyiceberg_lakehouse_spark.lakehouse.maintenance import purge_rows
+from pyiceberg_lakehouse_spark.lakehouse.stats import file_row_count
 from pyiceberg_lakehouse_spark.sources.testdata import SCHEMAS, load_table
 
 SF = "/root/testdata/sf0.001"
@@ -199,7 +200,6 @@ def _rows(df):
     return {(r.o_orderkey, r.o_custkey) for r in df.collect()}
 
 
-@pytest.mark.slow
 def test_purge_over_position_delete_history(spark, warehouse):
     """r17 (VERDICT r16 task #8): purge with POSITION-delete files in
     history. The rewrite preserves survivor order, delete rows remap to
@@ -237,18 +237,22 @@ def test_purge_over_position_delete_history(spark, warehouse):
     ) == all_rows - pos_deleted - subject
     # remapped delete files reference only LIVE files with valid
     # ordinals (every stored (path, pos) resolves inside the file)
-    for s in t.log.snapshots:
-        for d in s.added_deletes:
-            if d.get("kind") != "position":
-                continue
-            for r in spark.read.parquet(d["path"]).collect():
-                import re
-                from urllib.parse import unquote
-
-                path = unquote(re.sub("^file:/+", "/", r["file_path"]))
-                assert os.path.exists(path), path
-                n = spark.read.parquet(path).count()
-                assert 0 <= r["pos"] < n, (r["pos"], n)
+    pos_files = [
+        d["path"]
+        for s in t.log.snapshots
+        for d in s.added_deletes
+        if d.get("kind") == "position"
+    ]
+    refs = [
+        (mor.plain_path(r["file_path"]), r["pos"])
+        for r in spark.read.parquet(*pos_files).collect()
+    ]
+    assert refs
+    for path in {p for p, _ in refs}:
+        assert os.path.exists(path), path
+    n_rows = {p: file_row_count(p) for p, _ in refs}
+    for path, pos in refs:
+        assert 0 <= pos < n_rows[path], (path, pos, n_rows[path])
 
 
 @pytest.mark.slow
@@ -314,7 +318,6 @@ def test_purge_position_history_then_expire(spark, warehouse):
     assert _rows(t.scan().select("o_orderkey", "o_custkey")) == want
 
 
-@pytest.mark.slow
 def test_purge_null_predicate_over_position_history(spark, warehouse):
     """r18 ADVICE pin: _ordered_purge_rewrite under three-valued logic.
     A nullable predicate column where some rows evaluate NULL must KEEP
