@@ -2,10 +2,31 @@
 
 Min/max bounds (stats.py) prune range predicates, but an equality probe on a
 high-cardinality key (``o_orderkey = 4242``) defeats them: every file's
-[min, max] spans the key space, so nothing skips. Iceberg solves this with
-per-file bloom filters in the manifest; we store the same thing in the
-snapshot log: ``bloom: {col: {m, k, bits}}`` per file entry, built in ONE
-distributed pass over the freshly written files at commit time.
+[min, max] spans the key space, so nothing skips. A bloom filter per file
+and column proves a key absent; the filters of a commit's files are built
+in ONE distributed pass over the freshly written files.
+
+Layout: a data file's bitmaps live beside it, not in the snapshot log. One
+hidden sidecar, ``<dir>/.<file name>.bloom``, holds the raw bitmaps of the
+file's bloom columns concatenated in sorted-column order. The file's log
+entry keeps only the descriptors, ``bloom: {col: {m, k, type, off}}``,
+``off`` being the bitmap's byte offset in the sidecar (its length is m/8
+rounded up). The sidecar path derives from the data path, so the log names
+no sidecar: an entry copied verbatim (shallow clone) or a table directory
+moved whole (rename) still finds it. A table log holds file metadata and
+leaves bulky per-file payloads outside it, as Delta Lake's does (Armbrust
+et al., VLDB 2020); Iceberg's Parquet bloom filters likewise live in the
+data files, not in its manifests. Logs written before sidecars hold each
+bitmap inline as base64 ``bits``, and those descriptors probe unchanged.
+
+Lifetime: ``add_table_blooms`` writes the sidecar before the commit naming
+its file publishes, and the sidecar leaves with its file: maintenance
+unlinks every table file through ``remove_table_file``, which also drops
+its sidecars, this one and Hadoop's ``.<name>.crc`` checksum (the leading
+dot is Hadoop's convention, so Spark's file listing skips both). A sidecar
+whose file is gone (a writer that died before its commit) is swept by
+``remove_orphan_files``. A bitmap that cannot be read keeps its file:
+skipping stays conservative.
 
 Hashing is Spark's ``xxhash64`` (JVM-side, whole-stage codegen) with the
 Kirsch-Mitzenmacher double-hashing scheme: position_i = (h1 + i*h2) mod m,
@@ -25,16 +46,17 @@ to ~800 distinct keys per file and saturates (FP -> 1, no pruning) past a
 few thousand, so raise ``write.bloom-bits`` to ~10x the distinct keys of a
 full-size file (and optionally ``write.bloom-hashes``). At 100 TB with
 512 MB files of ~500k distinct keys that's m ~ 5M bits = 640 KiB/file/
-column → ~120 GB of bloom metadata per column across 200k files, which no
-longer fits one driver JSON log comfortably — at that scale store blooms
-per-file-sidecar and load lazily; within this repo's metadata budget the
-dial covers the tested range honestly. Every descriptor records its own m,
-so filters written under another size rule probe unchanged.
+column, ~120 GB of bitmaps per column across 200k files: sidecars hold
+them and a probe reads only those of the files it is asked about, while
+the log carries a few dozen bytes of descriptor per file and column.
+Every descriptor records its own m, so filters written under another size
+rule probe unchanged.
 """
-
 from __future__ import annotations
 
 import base64
+import contextlib
+import os
 from functools import reduce
 from typing import Any
 from urllib.parse import unquote, urlparse
@@ -47,6 +69,23 @@ from pyspark.sql import functions as F
 DEFAULT_M = 8192
 DEFAULT_K = 4
 MIN_M = 64
+
+# the hidden sidecars a table file may have: its bloom bitmaps, and the
+# checksum Hadoop's local filesystem writes beside every file Spark writes
+SIDECARS = (".bloom", ".crc")
+
+
+def sidecar_path(path: str, suffix: str = ".bloom") -> str:
+    """The hidden file ``<dir>/.<name><suffix>`` beside ``path``."""
+    head, name = os.path.split(path)
+    return os.path.join(head, f".{name}{suffix}")
+
+
+def remove_table_file(path: str) -> None:
+    """Unlink a table file and its sidecars, each if present."""
+    for p in (path, *(sidecar_path(path, s) for s in SIDECARS)):
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(p)
 
 
 def bloom_bits(rows: int, max_m: int = DEFAULT_M) -> int:
@@ -74,7 +113,8 @@ def build_file_blooms(
     max_m: int = DEFAULT_M,
     k: int = DEFAULT_K,
 ) -> dict[str, dict[str, dict[str, Any]]]:
-    """path -> {col -> bloom descriptor} in one distributed pass.
+    """path -> {col -> bloom descriptor with its raw bitmap as ``bits``}
+    in one distributed pass.
 
     ``files`` are log entries (``path`` and footer-exact ``rows``); each
     file's m is ``bloom_bits(rows, max_m)``. Files of one size are read by
@@ -139,16 +179,17 @@ def build_file_blooms(
             "m": m,
             "k": k,
             "type": col_types[row["col"]],
-            "bits": base64.b64encode(bytes(bits)).decode("ascii"),
+            "bits": bytes(bits),
         }
     return out
 
 
 def add_table_blooms(table: Any, entries: list[dict[str, Any]]) -> None:
-    """Attach the table's configured blooms to freshly written file
-    entries, in place: ``write.bloom-columns`` names the columns (those
-    that are data columns), ``write.bloom-bits`` caps m and
-    ``write.bloom-hashes`` sets k."""
+    """Build the table's configured blooms for freshly written file
+    entries: ``write.bloom-columns`` names the columns (those that are data
+    columns), ``write.bloom-bits`` caps m and ``write.bloom-hashes`` sets
+    k. Each file's bitmaps go to its sidecar, and its entry gets their
+    descriptors, in place."""
     props = table.log.properties
     data_cols = {f.name for f in table._data_schema().fields}
     columns = [
@@ -164,8 +205,30 @@ def add_table_blooms(table: Any, entries: list[dict[str, Any]]) -> None:
         k=int(props.get("write.bloom-hashes", DEFAULT_K)),
     )
     for e in entries:
-        if e["path"] in blooms:
-            e["bloom"] = blooms[e["path"]]
+        if e["path"] not in blooms:
+            continue
+        descs, off = {}, 0
+        with open(sidecar_path(e["path"]), "wb") as fh:
+            for col, d in sorted(blooms[e["path"]].items()):
+                bits = d.pop("bits")
+                fh.write(bits)
+                descs[col] = {**d, "off": off}
+                off += len(bits)
+        e["bloom"] = descs
+
+
+def _bitmap(path: str, bloom: dict[str, Any]) -> bytes | None:
+    """The bitmap ``bloom`` describes for data file ``path``: its slice of
+    the file's sidecar, or the inline base64 ``bits`` of a log written
+    before sidecars; None when the sidecar is gone."""
+    if "bits" in bloom:
+        return base64.b64decode(bloom["bits"])
+    try:
+        with open(sidecar_path(path), "rb") as fh:
+            fh.seek(bloom["off"])
+            return fh.read((bloom["m"] + 7) // 8)
+    except FileNotFoundError:
+        return None
 
 
 def _probe_positions(h1: int, h2: int, m: int, k: int) -> list[int]:
@@ -197,10 +260,10 @@ def probe_positions(
     return {(m, k): _probe_positions(h1, h2, m, k) for m, k in shapes}
 
 
-def might_contain(bloom: dict[str, Any], positions: list[int]) -> bool:
-    """True unless some probed bit is unset (definite absence)."""
-    bits = base64.b64decode(bloom["bits"])
-    return all(bits[p // 8] & (1 << (p % 8)) for p in positions)
+def might_contain(bits: bytes | None, positions: list[int]) -> bool:
+    """True unless some probed bit is unset (definite absence); a bitmap
+    that could not be read proves nothing."""
+    return bits is None or all(bits[p // 8] & (1 << (p % 8)) for p in positions)
 
 
 def _shapes_by_type(
@@ -235,7 +298,9 @@ def prune_files_bloom(
     for f in files:
         blooms = f.get("bloom") or {}
         if all(
-            might_contain(b, positions[(col, b["m"], b["k"], b.get("type"))])
+            might_contain(
+                _bitmap(f["path"], b), positions[(col, b["m"], b["k"], b.get("type"))]
+            )
             for col, b in blooms.items()
             if col in probes
         ):
@@ -291,8 +356,12 @@ def prune_files_bloom_any(
     out = []
     for f in files:
         b = (f.get("bloom") or {}).get(col)
-        if b is None or any(
-            might_contain(b, pos)
+        if b is None:
+            out.append(f)
+            continue
+        bits = _bitmap(f["path"], b)
+        if any(
+            might_contain(bits, pos)
             for pos in positions[(b["m"], b["k"], b.get("type"))].values()
         ):
             out.append(f)

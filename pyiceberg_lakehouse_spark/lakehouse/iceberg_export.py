@@ -9,7 +9,7 @@ Iceberg v2 metadata — vN.metadata.json, snap-*.avro manifest lists,
 value/null counts, r102 partition structs through an identity spec,
 and content=1/2 delete manifests for merge-on-read history — around
 the table's EXISTING parquet data files (metadata-only: no data
-bytes are rewritten or copied, exactly like Iceberg's own
+file is rewritten or copied, exactly like Iceberg's own
 ``register_table`` / ``add_files`` flows).
 
 Reference parity: the reference project queries its tables through
@@ -43,6 +43,7 @@ from pyspark.sql import types as T
 
 from pyiceberg_lakehouse_spark.localdf import local_rows_df
 
+from pyiceberg_lakehouse_spark.lakehouse import mor
 from pyiceberg_lakehouse_spark.lakehouse.iceberg_interop import (
     write_iceberg_metadata,
 )
@@ -244,11 +245,14 @@ def export_iceberg_table(
     merge-on-read ordering. Merge-on-read history maps to the
     spec's delete files: position-delete files (already (file_path,
     pos) parquet, the spec's own column names) become content=1
-    entries; key deletes become content=2 equality deletes with
-    ``equality_ids`` resolved from the key columns. Schema-evolution
-    history (renames / type changes) is gated: Iceberg tracks columns
-    by field-id across evolution and this log's history predates the
-    mapping, so exporting it would silently mis-bind old manifests —
+    entries — one written before delete files stored log paths holds
+    ``file:`` URIs and exports as a plain-path copy under
+    ``<dest>/metadata/position-deletes/``; key deletes become content=2
+    equality deletes with ``equality_ids`` resolved from the key
+    columns. Schema-evolution history (renames / type changes) is
+    gated: Iceberg tracks columns by field-id across evolution and this
+    log's history predates the mapping, so exporting it would silently
+    mis-bind old manifests —
     ``compact()`` + ``expire_snapshots`` past the evolution point
     first."""
     log = table.log
@@ -370,6 +374,19 @@ def export_iceberg_table(
             out.update(sequence_number=written_in, snapshot_id=written_in)
         return out
 
+    # position-delete files written before they stored log paths hold
+    # Spark's file: URIs, which an Iceberg reader takes as raw strings:
+    # such a file exports as a plain-path copy under the destination
+    dest = dest_dir or table.table_dir
+    exported_as: dict[str, str] = {}
+
+    def _position_delete_path(path: str) -> str:
+        if path not in exported_as:
+            copy = os.path.join(dest, "metadata", "position-deletes", os.path.basename(path))
+            plain = mor.rewrite_position_paths(path, copy, mor.plain_path)
+            exported_as[path] = copy if plain else path
+        return exported_as[path]
+
     snapshots: list[dict] = []
     exported_paths: set[str] = set()
     exported_deletes: set[str] = set()
@@ -382,6 +399,7 @@ def export_iceberg_table(
         for d in s.added_deletes:
             out = {"path": d["path"], "records": file_row_count(d["path"])}
             if d.get("kind") == "position":
+                out["path"] = _position_delete_path(d["path"])
                 pos.append(_sequenced(out, d["snapshot_id"], s.snapshot_id))
                 continue
             try:
@@ -417,7 +435,6 @@ def export_iceberg_table(
             snap["eq_deletes"] = eq
         snapshots.append(snap)
 
-    dest = dest_dir or table.table_dir
     return write_iceberg_metadata(
         dest,
         snapshots=snapshots,

@@ -189,7 +189,11 @@ class Snapshot:
     parent_id: int | None
     operation: str  # create | append | overwrite | add_files | replace | delete | schema_change
     timestamp_ms: int
-    added_files: list[dict[str, Any]]  # {"path": str, "partition": {col: str}, "rows": int|None}
+    added_files: list[dict[str, Any]]
+    # ^ data files: {"path": str, "partition": {col: str}, "rows": int|None,
+    #   "stats": {col: [min, max]}}, and for bloom columns "bloom": {col:
+    #   {"m", "k", "type", "off"}} — the bitmaps are in the file's sidecar
+    #   (bloom.py); older logs hold each inline as base64 "bits"
     removed_paths: list[str] = field(default_factory=list)  # for replace
     added_deletes: list[dict[str, Any]] = field(default_factory=list)
     # ^ merge-on-read delete files: equality form {"path", "key_cols",

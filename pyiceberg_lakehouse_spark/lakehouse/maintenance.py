@@ -8,6 +8,7 @@ in via a ``replace`` snapshot, so readers never see a partial state.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import math
 import os
@@ -17,7 +18,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse import mor
-from pyiceberg_lakehouse_spark.lakehouse.bloom import add_table_blooms
+from pyiceberg_lakehouse_spark.lakehouse.bloom import (
+    SIDECARS,
+    add_table_blooms,
+    remove_table_file,
+)
 from pyiceberg_lakehouse_spark.lakehouse.stats import data_file_entry, file_row_count
 from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable, files_in_partitions
 
@@ -591,15 +596,18 @@ def _referenced_paths(snapshots) -> set[str]:
 
 def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> list[str]:
     """Delete data, delete and change-data files under the table dir that
-    no snapshot references, and the snapshot log's temp files (``.snaplog.*``, beside a base or in
-    an entry directory) a writer that died before publishing left behind.
+    no snapshot references, each with its sidecars (``bloom.SIDECARS``);
+    sidecars whose file is gone; and the snapshot log's temp files
+    (``.snaplog.*``, beside a base or in an entry directory) a writer that
+    died before publishing left behind.
 
     Orphans come from crashed writers (files written, commit never issued)
     and failed tasks. The age guard keeps in-flight writes safe: a writer
     that has produced files but not yet committed is younger than
-    ``older_than_s``. Returns the deleted paths. O(files-on-disk) driver
-    work, no data reads — same maintenance posture as Iceberg's
-    remove_orphan_files action.
+    ``older_than_s``. Returns the deleted paths (a deleted file's own
+    sidecars are not listed). O(files-on-disk) driver work, no data
+    reads — same maintenance posture as Iceberg's remove_orphan_files
+    action.
     """
     import time as _time
 
@@ -610,27 +618,39 @@ def remove_orphan_files(table: LakehouseTable, older_than_s: float = 3600.0) -> 
     # deletes/ holds merge-on-read delete files and _change_data/ the
     # change feed's files — they orphan the same way data files do
     # (crashed delete_keys or CDF commit, dropped by overwrite)
+    dirs = [os.path.join(table.table_dir, d) for d in ("data", "deletes", "_change_data")]
+
+    def _old(path: str) -> bool:
+        try:
+            return os.path.getmtime(path) <= cutoff
+        except FileNotFoundError:
+            return False
+
     candidates = [
-        p
-        for d in ("data", "deletes", "_change_data")
-        for p in glob.glob(
-            os.path.join(table.table_dir, d, "**", "*.parquet"), recursive=True
-        )
+        p for d in dirs for p in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True)
     ] + glob.glob(
         os.path.join(table.table_dir, ".snaplog.*")
     ) + glob.glob(
         os.path.join(table.table_dir, "_snaplog*.d", ".snaplog.*")
     )
     for path in candidates:
-        if path in referenced:
-            continue
-        try:
-            if os.path.getmtime(path) > cutoff:
-                continue
-            os.unlink(path)
+        if path not in referenced and _old(path):
+            remove_table_file(path)
             deleted.append(path)
-        except FileNotFoundError:
-            continue
+    # a sidecar ``.<name>.parquet<suffix>`` belongs to ``<name>.parquet``
+    sidecars = [
+        p
+        for d in dirs
+        for suffix in SIDECARS
+        for p in glob.glob(os.path.join(d, "**", f".*.parquet{suffix}"), recursive=True)
+    ]
+    for path in sidecars:
+        head, name = os.path.split(path)
+        owner = os.path.join(head, name[1:].rsplit(".", 1)[0])
+        if not os.path.exists(owner) and _old(path):
+            with contextlib.suppress(FileNotFoundError):
+                os.unlink(path)
+                deleted.append(path)
     return sorted(deleted)
 
 
@@ -735,8 +755,7 @@ def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
     log.snapshots = log.snapshots[keep_from:]
     log._write()
     for p in orphaned:
-        if os.path.exists(p):
-            os.unlink(p)
+        remove_table_file(p)
     return orphaned
 
 
@@ -1233,8 +1252,7 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
         if not os.path.abspath(p).startswith(own):
             skipped_shared += 1
             continue
-        if os.path.exists(p):
-            os.unlink(p)
+        remove_table_file(p)
     rows_purged = sum(matched.values())
     table._commit(
         "replace",

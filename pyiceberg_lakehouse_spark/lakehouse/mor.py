@@ -20,12 +20,16 @@ shallow clone keep both numbers.
 from __future__ import annotations
 
 import base64
+import contextlib
 import os
 from functools import reduce
+from typing import Callable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pyiceberg_lakehouse_spark.lakehouse.bloom import sidecar_path
 
 PATH, POS, SEQ = "__mor_path", "__mor_pos", "__mor_seq"
 
@@ -57,6 +61,31 @@ def stored_path(name: str) -> Column:
     """``plain_path`` over column ``name``: a position-delete file's
     ``file_path`` normalised like the scan's ``PATH``."""
     return F.when(F.col(name).startswith("file:"), norm_path(name)).otherwise(F.col(name))
+
+
+def rewrite_position_paths(src: str, dst: str, repoint: Callable[[str], str]) -> bool:
+    """Write position-delete file ``src`` to ``dst`` with ``repoint``
+    applied to each ``file_path``, driver-side with pyarrow (delete files
+    are metadata-sized); write nothing and return False when no path
+    changes. The write is atomic (a temp file, then ``os.replace``) and
+    drops the Hadoop checksum beside ``dst``: it hashes the old bytes and
+    would fail every later read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(src)
+    old = tbl.column("file_path").to_pylist()
+    new = [repoint(p) for p in old]
+    if new == old:
+        return False
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    tmp = f"{dst}.tmp-repoint"
+    i = tbl.schema.get_field_index("file_path")
+    pq.write_table(tbl.set_column(i, "file_path", pa.array(new, pa.string())), tmp)
+    os.replace(tmp, dst)
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(sidecar_path(dst, ".crc"))
+    return True
 
 
 def with_sequence(df: DataFrame, seqs: dict[str, int], path: str = PATH) -> DataFrame:

@@ -311,39 +311,16 @@ class Lakehouse:
         # (each data file's log path): left at the old
         # prefix they would match nothing and every deleted row would
         # silently resurrect (ADVICE r14). Rewrite the file_path column of
-        # each delete file to the new prefix — metadata-sized work, done
-        # driver-side with pyarrow, atomic per file via tmp + replace.
-        if pos_delete_paths:
-            import pyarrow as pa
-            import pyarrow.parquet as pq
+        # each delete file to the new prefix, in place.
+        def _repoint(p: str) -> str:
+            # older delete files hold file: URIs; write the plain path
+            p = mor.plain_path(p)
+            if p.startswith(prefix):
+                return os.path.join(dst_dir, p[len(prefix):])
+            return p
 
-            def _repoint(p: str) -> str:
-                # older delete files hold file: URIs; write the plain path
-                p = mor.plain_path(p)
-                if p.startswith(prefix):
-                    return os.path.join(dst_dir, p[len(prefix):])
-                return p
-
-            for dpath in sorted(pos_delete_paths):
-                tbl = pq.read_table(dpath)
-                col = [
-                    _repoint(p) for p in tbl.column("file_path").to_pylist()
-                ]
-                idx = tbl.schema.get_field_index("file_path")
-                tbl = tbl.set_column(
-                    idx, "file_path", pa.array(col, pa.string())
-                )
-                tmp = f"{dpath}.tmp-rename"
-                pq.write_table(tbl, tmp)
-                os.replace(tmp, dpath)
-                # drop Spark's Hadoop checksum sidecar: it hashes the OLD
-                # bytes and would fail every later read of the new file
-                crc = os.path.join(
-                    os.path.dirname(dpath),
-                    f".{os.path.basename(dpath)}.crc",
-                )
-                if os.path.exists(crc):
-                    os.unlink(crc)
+        for dpath in sorted(pos_delete_paths):
+            mor.rewrite_position_paths(dpath, dpath, _repoint)
 
     @staticmethod
     def _split(identifier: str) -> tuple[str, str]:

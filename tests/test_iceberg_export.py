@@ -367,3 +367,45 @@ def test_position_deletes_roundtrip_under_a_path_with_a_space(spark, tmp_path):
     assert {k for k, _ in want} == {3, 4, 6, 7, 8, 9}
     got = _rows(I.read_iceberg_table(spark, export_iceberg_table(t)), ("k", "v"))
     assert got == want
+
+
+def test_legacy_uri_position_deletes_export_as_plain_path_copies(spark, tmp_path):
+    """Position-delete files written before they stored log paths hold
+    Spark's ``file:`` URI of each data file (a space as ``%20``); an
+    Iceberg reader takes ``file_path`` as a raw string, so the export
+    writes a plain-path copy under the destination and names that."""
+    from urllib.parse import quote
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lh = Lakehouse(spark, str(tmp_path / "with space" / "warehouse"))
+    t = lh.create_table("ns.exp_uri", KV)
+    t.append(spark.createDataFrame([(i, f"v{i}") for i in range(10)], KV))
+    t.delete_where_positions(F.col("k") < 3)
+    written = {}
+    for d in t.log.live_deletes():
+        tbl = pq.read_table(d["path"])
+        uris = ["file:" + quote(p) for p in tbl.column("file_path").to_pylist()]
+        assert all("%20" in u for u in uris)
+        written[d["path"]] = uris
+        i = tbl.schema.get_field_index("file_path")
+        pq.write_table(tbl.set_column(i, "file_path", pa.array(uris, pa.string())), d["path"])
+        crc = os.path.join(os.path.dirname(d["path"]), f".{os.path.basename(d['path'])}.crc")
+        if os.path.exists(crc):
+            os.unlink(crc)
+    assert sum(map(len, written.values())) == 3
+    want = _rows(t.scan(), ("k", "v"))
+    assert {k for k, _ in want} == set(range(3, 10))
+    dest = str(tmp_path / "export")
+    got = _rows(I.read_iceberg_table(spark, export_iceberg_table(t, dest)), ("k", "v"))
+    assert got == want
+    copies = os.path.join(dest, "metadata", "position-deletes")
+    # a delete file holding no row has no path to rewrite
+    assert len(os.listdir(copies)) == sum(1 for uris in written.values() if uris)
+    for name in os.listdir(copies):
+        paths = pq.read_table(os.path.join(copies, name)).column("file_path").to_pylist()
+        assert paths and not any(p.startswith("file:") for p in paths)
+    # the table's own delete files are left as written
+    for path, uris in written.items():
+        assert pq.read_table(path).column("file_path").to_pylist() == uris
