@@ -25,19 +25,32 @@ entries keep theirs). ``Snapshot.from_json`` restores every one, so the
 snapshots in memory and ``to_json()`` have the full form. Logs written in
 the full form, or mixing both, load unchanged.
 
+Every non-empty base and entry is stored as zlib-compressed UTF-8 JSON
+(stdlib ``zlib``, default level): keys, path prefixes and stats names
+repeat in every file entry, so a folded base shrinks about tenfold.
+Delta Lake's checkpoints and Iceberg's deflate manifests compress their
+metadata too. ``decode_log`` is the one reader: bytes that start with the
+zlib header's ``x`` are decompressed, anything else is read as plain JSON
+(no JSON text starts with ``x``), so plain logs of earlier versions, and
+tails mixing both, load unchanged. The names stay ``.json``. The fold
+rule below counts decoded bytes, so a compressed base folds as often as a
+plain one. To read a log file by hand::
+
+    python3 -c "import sys, zlib; print(zlib.decompress(sys.stdin.buffer.read()).decode())" <_snaplog.json
+
 Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
 that its head's entry exists, the next id's does not, and the base is the
 file it last read. It then publishes one entry: a temp file in the same
 directory, fsynced and ``os.replace``d into place (atomic on POSIX), then
 the directory fsynced, so the publish survives a power loss. It reads no
-snapshot content and writes only its own snapshot. When the tail's bytes
-reach the base's, the commit first *folds*: it rewrites the base with every
-snapshot and deletes the entries the base now covers, so fold writes sum to
-at most about twice the final log. Every whole-log rewrite (expiry, refs,
-properties, rename, fast-forward) is such a fold and leaves an empty
-marker entry under the head's id. A handle that fails the check falls back
-to a full load and the optimistic concurrency rules of
-``SnapshotLog.commit``.
+snapshot content and writes only its own snapshot. When the tail's
+decoded bytes reach the base's, the commit first *folds*: it rewrites the
+base with every snapshot and deletes the entries the base now covers, so
+fold writes sum to at most about twice the final log. Every whole-log
+rewrite (expiry, refs, properties, rename, fast-forward) is such a fold
+and leaves an empty marker entry under the head's id. A handle that fails
+the check falls back to a full load and the optimistic concurrency rules
+of ``SnapshotLog.commit``.
 
 Mirrors: snapshot history read_history.py:10-11; metadata location
 read_history.py:8; one-snapshot-per-append vs transactional batching
@@ -53,6 +66,7 @@ import json
 import os
 import tempfile
 import time
+import zlib
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -109,17 +123,18 @@ def _commit_lock(table_dir: str, timeout_s: float = 30.0):
         os.close(fd)
 
 
-def _replace(path: str, data: str) -> None:
-    """Write ``data`` to a temp file beside ``path``, then ``os.replace``
-    it onto ``path`` — readers see the old file or the new one, never a
+def _replace(path: str, text: str) -> None:
+    """Write ``text`` zlib-compressed (empty stays empty: the head marker
+    is 0 bytes) to a temp file beside ``path``, then ``os.replace`` it
+    onto ``path`` — readers see the old file or the new one, never a
     partial write. The temp file is fsynced before the replace and the
     directory after it, so after a power loss the name holds the old or
     the new bytes, never an empty file, and the publish itself survives."""
     dirname = os.path.dirname(path)
     fd, tmp = tempfile.mkstemp(prefix=".snaplog.", dir=dirname)
     try:
-        with os.fdopen(fd, "w") as f:
-            f.write(data)
+        with os.fdopen(fd, "wb") as f:
+            f.write(zlib.compress(text.encode()) if text else b"")
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp, path)  # atomic on POSIX
@@ -132,6 +147,20 @@ def _replace(path: str, data: str) -> None:
         os.fsync(dfd)
     finally:
         os.close(dfd)
+
+
+def decode_log(raw: bytes, path: str) -> bytes:
+    """The JSON text of a log file (base or entry) whose bytes are ``raw``:
+    decompressed if they start with the zlib header's ``x``, else as stored
+    (a plain log of an earlier version, or the empty head marker).
+    Compressed bytes that do not decompress raise ``ValueError`` naming
+    ``path``."""
+    if raw[:1] != b"x":
+        return raw
+    try:
+        return zlib.decompress(raw)
+    except zlib.error as e:
+        raise ValueError(f"malformed snapshot log file {path}: {e}") from None
 
 
 def _winners_touch(
@@ -271,9 +300,11 @@ class SnapshotLog:
         self.snapshots: list[Snapshot] = []
         self.refs: dict[str, int] = {}  # named tags -> snapshot_id
         # what this handle last read from or wrote to disk: the base's
-        # (inode, size, mtime_ns), its format version, the bytes of the
-        # entries above it, and the table metadata as persisted
+        # (inode, size, mtime_ns), its decoded length and format version,
+        # the decoded bytes of the entries above it, and the table metadata
+        # as persisted
         self._base_stat: tuple[int, int, int] | None = None
+        self._base_len = 0
         self._base_version = 2
         self._tail_bytes = 0
         self._synced_meta: dict[str, Any] = {}
@@ -311,8 +342,9 @@ class SnapshotLog:
         if "refs" in meta:
             self.refs = {k: int(v) for k, v in meta["refs"].items()}
 
-    def _mark_synced(self, base_stat: os.stat_result, tail_bytes: int) -> None:
+    def _mark_synced(self, base_stat: os.stat_result, base_len: int, tail_bytes: int) -> None:
         self._base_stat = (base_stat.st_ino, base_stat.st_size, base_stat.st_mtime_ns)
+        self._base_len = base_len
         self._tail_bytes = tail_bytes
         self._synced_meta = {k: copy.copy(v) for k, v in self._meta().items()}
 
@@ -330,31 +362,31 @@ class SnapshotLog:
         then no longer matches the open file's, and the read starts over.
         """
         while True:
-            with open(self.path) as f:
+            with open(self.path, "rb") as f:
                 base = os.fstat(f.fileno())
-                d = json.load(f)
-                self._load_base(d)
+                text = decode_log(f.read(), self.path)
+                self._load_base(json.loads(text))
                 sid = self.current_snapshot_id() or 0
                 tail_bytes = 0
                 while True:
                     sid += 1
+                    path = os.path.join(self.entry_dir, self._entry_name(sid))
                     try:
-                        with open(
-                            os.path.join(self.entry_dir, self._entry_name(sid))
-                        ) as ef:
+                        with open(path, "rb") as ef:
                             raw = ef.read()
                     except FileNotFoundError:
                         break
                     if not raw:  # a newer base's marker: a fold is racing us
                         break
-                    entry = json.loads(raw)
+                    entry_text = decode_log(raw, path)
+                    entry = json.loads(entry_text)
                     self._set_meta(entry)
                     self.snapshots.append(Snapshot.from_json(entry["snapshot"]))
-                    tail_bytes += len(raw)
+                    tail_bytes += len(entry_text)
                 with contextlib.suppress(FileNotFoundError):
                     if os.stat(self.path).st_ino == base.st_ino:
                         break
-        self._mark_synced(base, tail_bytes)
+        self._mark_synced(base, len(text), tail_bytes)
         return self
 
     def _load_base(self, d: dict[str, Any]) -> None:
@@ -683,15 +715,18 @@ class SnapshotLog:
     def _fold_due(self) -> bool:
         """Fold the tail into the base once it is as large as the base (or
         the base predates format v2): the base then at least doubles per
-        fold, so fold writes sum to about twice the final log."""
+        fold, so fold writes sum to about twice the final log. Both sides
+        are decoded bytes, so a compressed base folds no more often than a
+        plain one."""
         assert self._base_stat is not None
-        return self._base_version < 2 or self._tail_bytes >= self._base_stat[1]
+        return self._base_version < 2 or self._tail_bytes >= self._base_len
 
     def _adopt(self, other: "SnapshotLog") -> None:
         """Take ``other``'s state (a fresh load of this same log)."""
         self._set_meta(other._meta())
         self.snapshots = other.snapshots
         self._base_stat = other._base_stat
+        self._base_len = other._base_len
         self._base_version = other._base_version
         self._tail_bytes = other._tail_bytes
         self._synced_meta = other._synced_meta
@@ -715,7 +750,8 @@ class SnapshotLog:
         for name in names:
             if name > head:
                 os.unlink(os.path.join(self.entry_dir, name))
-        _replace(self.path, json.dumps(payload))
+        text = json.dumps(payload)
+        _replace(self.path, text)
         base = os.stat(self.path)
         # the base holds the head's content; its entry stays as an empty
         # marker so a commit can check the head by name
@@ -725,4 +761,4 @@ class SnapshotLog:
                 with contextlib.suppress(FileNotFoundError):
                     os.unlink(os.path.join(self.entry_dir, name))
         self._base_version = 2
-        self._mark_synced(base, 0)
+        self._mark_synced(base, len(text), 0)

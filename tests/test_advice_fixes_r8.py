@@ -29,6 +29,7 @@ import os
 from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse import Lakehouse
+from pyiceberg_lakehouse_spark.lakehouse.log import decode_log
 from pyiceberg_lakehouse_spark.lakehouse.maintenance import (
     ann_index_health,
     build_ivf_index,
@@ -142,8 +143,8 @@ def test_v1_snapshot_log_partitions_decode_on_load(spark, warehouse):
     assert [r.id for r in got] == [1]
     # a commit upgrades the log to v2 in place; values survive round-trip
     t2.append(spark.createDataFrame([(3, "a/b=c")], df.schema))
-    with open(t2.log.path) as f:
-        assert json.load(f)["format_version"] == 2
+    with open(t2.log.path, "rb") as f:
+        assert json.loads(decode_log(f.read(), t2.log.path))["format_version"] == 2
     t3 = lh.load_table("ns.oldlog")
     assert {r.id for r in t3.scan(partition_filter={"cat": "a/b=c"}).collect()} == {1, 3}
 

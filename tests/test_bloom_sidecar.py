@@ -22,6 +22,7 @@ from pyiceberg_lakehouse_spark.lakehouse.bloom import (
     prune_files_bloom_any,
     sidecar_path,
 )
+from pyiceberg_lakehouse_spark.lakehouse.log import decode_log
 from pyiceberg_lakehouse_spark.lakehouse.maintenance import (
     expire_snapshots,
     purge_rows,
@@ -99,11 +100,10 @@ def test_entries_carry_descriptors_and_each_file_its_sidecar(spark, warehouse):
         assert b["off"] == 0
         assert os.path.getsize(sidecar_path(f["path"])) == (b["m"] + 7) // 8
     # the log itself holds no bitmap
-    with open(t.log.path) as fh:
-        assert '"bits"' not in fh.read()
-    for name in os.listdir(t.log.entry_dir):
-        with open(os.path.join(t.log.entry_dir, name)) as fh:
-            assert '"bits"' not in fh.read()
+    entries = [os.path.join(t.log.entry_dir, n) for n in os.listdir(t.log.entry_dir)]
+    for path in [t.log.path, *entries]:
+        with open(path, "rb") as fh:
+            assert b'"bits"' not in decode_log(fh.read(), path)
     _assert_prunes(spark, files)
     # the pruned scan reads the kept files only and returns the key's row
     assert t.scan(bloom_filter={"k": 105}).filter(F.col("k") == 105).count() == 1

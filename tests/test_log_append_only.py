@@ -40,12 +40,22 @@ def _entry_ids(log: SnapshotLog) -> dict[int, str]:
     }
 
 
+def _text(path: str) -> bytes:
+    """A log file's JSON text, through the log's own reader."""
+    with open(path, "rb") as f:
+        return log_mod.decode_log(f.read(), path)
+
+
+def _size(path: str) -> int:
+    """A log file's decoded bytes: the size the fold rule counts."""
+    return len(_text(path))
+
+
 def _tail_bytes(log: SnapshotLog) -> int:
-    """Bytes of the entries above the base's last snapshot id."""
-    with open(log.path) as f:
-        base_last = json.load(f)["snapshots"][-1]["snapshot_id"]
+    """Decoded bytes of the entries above the base's last snapshot id."""
+    base_last = json.loads(_text(log.path))["snapshots"][-1]["snapshot_id"]
     return sum(
-        os.path.getsize(os.path.join(log.entry_dir, n))
+        _size(os.path.join(log.entry_dir, n))
         for sid, n in _entry_ids(log).items()
         if sid > base_last
     )
@@ -62,7 +72,7 @@ def test_fresh_commit_writes_one_entry_and_reads_no_snapshot(tmp_path, monkeypat
         log.commit("append", _files(i))
     assert len(log.snapshots) == 300
     i = 299
-    while _tail_bytes(log) >= os.path.getsize(log.path):  # a fold is due
+    while _tail_bytes(log) >= _size(log.path):  # a fold is due
         log.commit("append", _files(i))
         i += 1
 
@@ -88,7 +98,7 @@ def test_fresh_commit_writes_one_entry_and_reads_no_snapshot(tmp_path, monkeypat
     assert set(after) - set(before) == {snap.snapshot_id}
     assert set(before) <= set(after)  # nothing deleted
     assert _sig(log.path) == base_before  # base untouched
-    size = os.path.getsize(os.path.join(log.entry_dir, after[snap.snapshot_id]))
+    size = _size(os.path.join(log.entry_dir, after[snap.snapshot_id]))
     one_snapshot = len(json.dumps(snap.packed()))
     assert one_snapshot <= size < one_snapshot + 64
     assert SnapshotLog(log.table_dir).load().current_snapshot_id() == snap.snapshot_id
@@ -99,25 +109,22 @@ def test_fold_only_when_tail_reaches_base_and_deletes_only_covered(tmp_path):
     written = 0
     folds = 0
     for i in range(300):
-        tail, base_before = _tail_bytes(log), _sig(log.path)
+        tail, base_before, base_len = _tail_bytes(log), _sig(log.path), _size(log.path)
         entries_before = _entry_ids(log)
         snap = log.commit("append", _files(i))
         entries_after = _entry_ids(log)
-        written += os.path.getsize(
-            os.path.join(log.entry_dir, entries_after[snap.snapshot_id])
-        )
+        written += _size(os.path.join(log.entry_dir, entries_after[snap.snapshot_id]))
         folded = _sig(log.path)[0] != base_before[0]
-        assert folded == (tail >= base_before[1])
+        assert folded == (tail >= base_len)
         if folded:
             folds += 1
-            written += os.path.getsize(log.path)
-            with open(log.path) as f:
-                base_last = json.load(f)["snapshots"][-1]["snapshot_id"]
+            written += _size(log.path)
+            base_last = json.loads(_text(log.path))["snapshots"][-1]["snapshot_id"]
             assert base_last == snap.snapshot_id - 1
             deleted = set(entries_before) - set(entries_after)
             assert deleted and max(deleted) < base_last  # covered by the base
             assert set(entries_after) == {base_last, snap.snapshot_id}
-    final = os.path.getsize(log.path) + _tail_bytes(log)
+    final = _size(log.path) + _tail_bytes(log)
     # each fold at least doubles the base: a few folds, and the bytes they
     # write stay within a small multiple of the final log (a rewrite per
     # commit would write ~150x)
@@ -182,8 +189,8 @@ def test_metadata_edit_rides_in_the_entry(tmp_path):
     assert fresh.properties["cursor"] == "7"
     # an unchanged handle's next entry carries its snapshot only
     snap = log.commit("append", _files(0, 1))
-    with open(os.path.join(log.entry_dir, _entry_ids(log)[snap.snapshot_id])) as f:
-        assert set(json.load(f)) == {"snapshot"}
+    entry = os.path.join(log.entry_dir, _entry_ids(log)[snap.snapshot_id])
+    assert set(json.loads(_text(entry))) == {"snapshot"}
 
 
 def test_rewrite_drops_entries_above_its_head(tmp_path):
@@ -242,16 +249,16 @@ def test_load_racing_a_fold_starts_over(tmp_path, monkeypatch):
     log.commit("append", _files(0, 30))  # one entry as large as the base
     assert log._fold_due()
     want = [1, 2, 3]
-    real_load = json.load
+    real_decode = log_mod.decode_log
     raced = []
 
-    def load_then_fold(f):
-        d = real_load(f)
+    def decode_then_fold(raw, path):
+        text = real_decode(raw, path)
         if not raced:  # the reader holds the old base; now the fold lands
             raced.append(True)
             log.commit("append", _files(1, 1))
-        return d
+        return text
 
-    monkeypatch.setattr(log_mod.json, "load", load_then_fold)
+    monkeypatch.setattr(log_mod, "decode_log", decode_then_fold)
     reader = SnapshotLog(log.table_dir).load()
     assert raced and [s.snapshot_id for s in reader.snapshots] == want

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyiceberg_lakehouse_spark.lakehouse import Lakehouse
-from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog
+from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog, decode_log
 from pyiceberg_lakehouse_spark.lakehouse.maintenance import expire_snapshots
 
 SCHEMA = T.StructType(
@@ -39,8 +39,9 @@ def _state(log: SnapshotLog) -> tuple:
 
 
 def _entry(log: SnapshotLog, snapshot_id: int) -> dict:
-    with open(os.path.join(log.entry_dir, log._entry_name(snapshot_id))) as f:
-        return json.load(f)["snapshot"]
+    path = os.path.join(log.entry_dir, log._entry_name(snapshot_id))
+    with open(path, "rb") as f:
+        return json.loads(decode_log(f.read(), path))["snapshot"]
 
 
 def test_mixed_history_reloads_equal(spark, warehouse, tmp_path):
