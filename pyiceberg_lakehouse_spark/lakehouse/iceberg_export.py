@@ -256,7 +256,7 @@ def export_iceberg_table(
     ``compact()`` + ``expire_snapshots`` past the evolution point
     first."""
     log = table.log
-    if table._rename_events() or table._column_events():
+    if log.schema_events():
         raise NotImplementedError(
             "iceberg export across schema-evolution history: field-id"
             " continuity cannot be reconstructed — expire_snapshots"

@@ -38,6 +38,24 @@ plain one. To read a log file by hand::
 
     python3 -c "import sys, zlib; print(zlib.decompress(sys.stdin.buffer.read()).decode())" <_snaplog.json
 
+Schema history: ``add_column``, ``drop_column`` and ``rename_column`` are
+metadata-only commits whose summaries record the event. Files carry no
+field ids, so which name a file holds a column under follows from when the
+file was added (``added_in``) against those events, and this module is the
+one place that reads them. ``SnapshotLog.column_resolver`` maps a file's
+``added_in`` to ``{current column: its name in the file, or None}``; None
+means the column reads NULL there, because it was added after the file
+(a re-add, after a drop or a rename away, must not serve the old bytes).
+The table read path and the ``lakehouse`` data source (batch and stream)
+resolve through it; ``schema_events`` gates what cannot cross the history
+(Iceberg export, purge, the change-data shortcut), and ``forward_names``
+maps a delete file's key columns forward. Snapshot expiry drops the event
+snapshots but keeps their events on the new base, under ``rename_history``
+({snapshot_id, from, to}) and ``column_history`` ({snapshot_id, op,
+name}): ``stash_schema_history``. The log also owns partition-path
+decoding: ``parse_hive_partition`` turns a written file's hive segments
+into the partition values every writer logs.
+
 Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
 that its head's entry exists, the next id's does not, and the base is the
 file it last read. It then publishes one entry: a temp file in the same
@@ -64,11 +82,12 @@ import copy
 import fcntl
 import json
 import os
+import re
 import tempfile
 import time
 import zlib
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable, NamedTuple
 
 from pyspark.sql import types as T
 
@@ -93,6 +112,29 @@ def _v1_safe_unquote(v: str) -> str:
         f"%{ord(ch):02X}" if ch in _V1_PATH_ESCAPED else ch for ch in dec
     )
     return dec if reenc == v else v
+
+
+_HIVE_SEG = re.compile(r"([^/=]+)=([^/]+)")
+
+
+def parse_hive_partition(rel_path: str) -> dict[str, str]:
+    """key=value partition segments from a path, PERCENT-DECODED.
+
+    Spark's and pyarrow's writers escape special characters in partition
+    path segments — in the KEY as well as the value (``a/b=c`` ->
+    ``a%2Fb%3Dc``); the log must store the DECODED pair or a
+    ``partition_filter={"cat": "a/b=c"}`` prunes away the matching file.
+    Logs written before this decode (format_version < 2) are decoded once
+    at load (see ``SnapshotLog.load``). NULL partitions keep the writer's
+    sentinel string as-is. (Empty-string partition values are a Hive-layout
+    limitation: Spark writes ``cat=`` and reads it back as NULL.)
+    """
+    from urllib.parse import unquote
+
+    return {
+        unquote(k): unquote(v)
+        for k, v in _HIVE_SEG.findall(rel_path.replace(os.sep, "/"))
+    }
 
 
 @contextlib.contextmanager
@@ -210,6 +252,41 @@ def _delete_defaults(snapshot_id: int) -> dict[str, Any]:
 def _without(d: dict[str, Any], omit: dict[str, Any]) -> dict[str, Any]:
     """``d`` less the keys of ``omit`` whose value equals ``omit``'s."""
     return {k: v for k, v in d.items() if k not in omit or v != omit[k]}
+
+
+def _with(d: dict[str, Any], defaults: dict[str, Any]) -> dict[str, Any]:
+    """``d`` plus the keys of ``defaults`` it lacks, appended after its own
+    (so ``packed`` drops them and keeps ``d``'s key order)."""
+    return {**d, **{k: v for k, v in defaults.items() if k not in d}}
+
+
+class SchemaEvent(NamedTuple):
+    """One add/drop/rename column commit: ``name`` is the column (for a
+    rename, its old name) and ``to`` a rename's new name."""
+
+    snapshot_id: int
+    op: str  # add | drop | rename
+    name: str
+    to: str | None = None
+
+
+def _schema_events(snapshots: list[Snapshot]) -> list[SchemaEvent]:
+    """The schema events the summaries of ``snapshots`` record, live and
+    stashed by expiry, in commit order."""
+    out = []
+    for s in snapshots:
+        sm = s.summary
+        for h in sm.get("rename_history", ()):
+            out.append(SchemaEvent(h["snapshot_id"], "rename", h["from"], h["to"]))
+        for h in sm.get("column_history", ()):
+            out.append(SchemaEvent(h["snapshot_id"], h["op"], h["name"]))
+        if "rename_column" in sm:
+            rc = sm["rename_column"]
+            out.append(SchemaEvent(s.snapshot_id, "rename", rc["from"], rc["to"]))
+        for op in ("add", "drop"):
+            if f"{op}_column" in sm:
+                out.append(SchemaEvent(s.snapshot_id, op, sm[f"{op}_column"]))
+    return sorted(out, key=lambda e: e.snapshot_id)
 
 
 @dataclass
@@ -541,6 +618,81 @@ class SnapshotLog:
             )
         return int(records)
 
+    # ---------------------------------------------------- schema history --
+
+    def schema_events(self, since: int = 0) -> list[SchemaEvent]:
+        """Add/drop/rename column events committed after snapshot ``since``
+        (default: all), including those expiry stashed; empty when the
+        table's schema never changed by name."""
+        return [e for e in _schema_events(self.snapshots) if e.snapshot_id > since]
+
+    def column_resolver(self) -> Callable[[int], dict[str, str | None]]:
+        """The resolver: a file's ``added_in`` -> {current column: the name
+        the file holds it under, or None when it reads NULL there}.
+
+        Walks the events committed after the file newest-first: a rename
+        maps the column back to its old name; an add means the column did
+        not exist when the file was written, so whatever the file holds
+        under that name (a dropped or renamed-away column's bytes) is not
+        its data. Memoized per ``added_in``; callers do not mutate the
+        maps."""
+        events = self.schema_events()
+        names = [f["name"] for f in json.loads(self.schema_json)["fields"]]
+        maps: dict[int, dict[str, str | None]] = {}
+
+        def resolve(added_in: int) -> dict[str, str | None]:
+            if added_in not in maps:
+                later = [e for e in reversed(events) if e.snapshot_id > added_in]
+                out: dict[str, str | None] = {}
+                for name in names:
+                    cur: str | None = name
+                    for e in later:
+                        if e.op == "rename" and cur == e.to:
+                            cur = e.name
+                        elif e.op == "add" and cur == e.name:
+                            cur = None
+                            break
+                    out[name] = cur
+                maps[added_in] = out
+            return maps[added_in]
+
+        return resolve
+
+    def forward_names(self, names: list[str], since: int) -> list[str]:
+        """Map column names recorded at snapshot ``since`` (a delete file's
+        key columns) forward through every later rename to current names."""
+        renames = [e for e in self.schema_events(since) if e.op == "rename"]
+        out = []
+        for cur in names:
+            for e in renames:
+                if cur == e.name:
+                    cur = e.to
+            out.append(cur)
+        return out
+
+    def stash_schema_history(self, keep_from: int) -> None:
+        """Before expiry drops ``snapshots[:keep_from]``, keep their schema
+        events on ``snapshots[keep_from]`` (the new base): retained files
+        keep their ``added_in``, so reading them still depends on those
+        events. Writes ``rename_history`` / ``column_history`` only when
+        there is something to keep."""
+        base = self.snapshots[keep_from].summary
+        events = _schema_events(self.snapshots[:keep_from])
+        renames = [
+            {"snapshot_id": e.snapshot_id, "from": e.name, "to": e.to}
+            for e in events
+            if e.op == "rename"
+        ]
+        columns = [
+            {"snapshot_id": e.snapshot_id, "op": e.op, "name": e.name}
+            for e in events
+            if e.op != "rename"
+        ]
+        if renames:
+            base["rename_history"] = renames + base.get("rename_history", [])
+        if columns:
+            base["column_history"] = columns + base.get("column_history", [])
+
     # ------------------------------------------------------------ commits --
 
     def init_table(
@@ -642,9 +794,12 @@ class SnapshotLog:
                         operation=operation,
                         timestamp_ms=int(time.time() * 1000),
                         added_files=[
-                            {"added_in": snap_id, **f}
-                            if preserve_sequencing
-                            else {**f, "added_in": snap_id}
+                            _with(
+                                {"added_in": snap_id, **f}
+                                if preserve_sequencing
+                                else {**f, "added_in": snap_id},
+                                _file_defaults(snap_id),
+                            )
                             for f in added_files
                         ],
                         removed_paths=list(removed_paths or []),

@@ -79,7 +79,7 @@ def compact(
     }
     if partition_filter:
         summary["partitions"] = [partition_filter]
-    return table._commit(
+    return table.log.commit(
         "replace",
         new_files,
         removed_paths=removed,
@@ -166,7 +166,7 @@ def cluster_zorder(
     new_files = table._write_data(
         clustered, records_per_file=max(1, math.ceil(rows / n_files))
     )
-    return table._commit(
+    return table.log.commit(
         "replace",
         new_files,
         removed_paths=removed,
@@ -262,7 +262,7 @@ def build_ivf_index(
     new_files = table._write_data(clustered)
     table.log.properties["ivf.centroids"] = _json.dumps(cents)
     table.log.properties["ivf.vec-col"] = vec_col
-    return table._commit(
+    return table.log.commit(
         "replace",
         new_files,
         removed_paths=[f["path"] for f in files],
@@ -339,7 +339,7 @@ def build_pq_index(
     table.log.properties["pq.codebooks"] = _json.dumps(books)
     table.log.properties["pq.vec-col"] = vec_col
     table.log.properties["pq.residual"] = "true" if cents is not None else "false"
-    return table._commit(
+    return table.log.commit(
         "replace",
         new_files,
         removed_paths=[f["path"] for f in files],
@@ -569,7 +569,7 @@ def refresh_ann_indexes(
         "ivf_cell"
     )
     new_files = table._write_data(clustered)
-    return table._commit(
+    return table.log.commit(
         "replace",
         new_files,
         removed_paths=[f["path"] for f in stale],
@@ -702,34 +702,9 @@ def expire_snapshots(table: LakehouseTable, keep_last: int = 1) -> list[str]:
     base_files = log.live_files(retained_ids[0])
     base_deletes = log.live_deletes(retained_ids[0])
     base = log.snapshots[keep_from]
-    # rename history must survive expiry: retained files keep their original
-    # added_in, so reading them still depends on renames recorded in the
-    # snapshots being dropped — stash those events on the base snapshot
-    dropped_renames = []
-    for s in log.snapshots[:keep_from]:
-        if "rename_column" in s.summary:
-            dropped_renames.append(
-                {"snapshot_id": s.snapshot_id, **s.summary["rename_column"]}
-            )
-        dropped_renames.extend(s.summary.get("rename_history", []))
-    if dropped_renames:
-        base.summary["rename_history"] = dropped_renames + base.summary.get(
-            "rename_history", []
-        )
-    # same for add/drop column events: the re-add null guard needs them
-    dropped_cols = []
-    for s in log.snapshots[:keep_from]:
-        for op in ("add", "drop"):
-            key = f"{op}_column"
-            if key in s.summary:
-                dropped_cols.append(
-                    {"snapshot_id": s.snapshot_id, "op": op, "name": s.summary[key]}
-                )
-        dropped_cols.extend(s.summary.get("column_history", []))
-    if dropped_cols:
-        base.summary["column_history"] = dropped_cols + base.summary.get(
-            "column_history", []
-        )
+    # retained files keep their original added_in, so reading them still
+    # depends on schema events in the snapshots being dropped
+    log.stash_schema_history(keep_from)
     # ANN-index epoch must survive expiry too: refresh_ann_indexes keys off
     # the last index commit's id, and the squash may drop that snapshot
     dropped_epochs = [
@@ -1008,7 +983,7 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
                 "key VALUES are what must be erased); otherwise compact + "
                 "expire_snapshots first"
             ) from None
-    if table._rename_events() or table._column_events():
+    if log.schema_events():
         raise NotImplementedError(
             "purge across schema-evolution history: expire_snapshots past "
             "the evolution point first"
@@ -1254,7 +1229,7 @@ def purge_rows(table: LakehouseTable, predicate: F.Column) -> dict:
             continue
         remove_table_file(p)
     rows_purged = sum(matched.values())
-    table._commit(
+    table.log.commit(
         "replace",
         [],
         summary={

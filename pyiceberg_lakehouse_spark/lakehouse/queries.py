@@ -54,7 +54,7 @@ def _overlapped_appends(table, *dfs):
     for df in dfs:
         table._validate_constraints(df)
     file_sets = _overlap(*[lambda d=df: table._write_data(d) for df in dfs])
-    return [table._commit("append", files) for files in file_sets]
+    return [table.log.commit("append", files) for files in file_sets]
 
 
 @register(

@@ -26,7 +26,6 @@ from __future__ import annotations
 import glob as _glob
 import json
 import os
-import re
 import shutil
 from functools import reduce
 from typing import Any
@@ -42,6 +41,7 @@ from pyiceberg_lakehouse_spark.lakehouse.log import (
     SnapshotLog,
     Snapshot,
     _commit_lock,
+    parse_hive_partition,
 )
 from pyiceberg_lakehouse_spark.lakehouse.transforms import (
     PartitionField,
@@ -49,8 +49,6 @@ from pyiceberg_lakehouse_spark.lakehouse.transforms import (
     parse_fields,
     probe_value,
 )
-
-_HIVE_SEG = re.compile(r"([^/=]+)=([^/]+)")
 
 # analysed-plan nodes that fix an input's distribution or order
 _LAYOUT_NODES = {"Sort", "RepartitionByExpression", "RebalancePartitions"}
@@ -67,28 +65,6 @@ def _has_caller_layout(df: DataFrame) -> bool:
         node = node.child()
     name = node.nodeName()
     return name in _LAYOUT_NODES or (name == "Repartition" and not node.shuffle())
-
-
-def _parse_hive_partition(rel_path: str) -> dict[str, str]:
-    """key=value partition segments from a path, PERCENT-DECODED.
-
-    Spark escapes special characters in partition path segments — in the
-    KEY as well as the value (``a/b=c`` -> ``a%2Fb%3Dc``); the log must
-    store the DECODED pair or a ``partition_filter={"cat": "a/b=c"}``
-    prunes away the matching file — a wrong-answer bug, since pruning is
-    supposed to be a pure optimization. Logs written before this decode
-    (format_version < 2) are decoded once at load (see SnapshotLog.load).
-    NULL partitions keep Spark's sentinel string as-is.
-    (Empty-string partition values are a Hive-layout limitation: Spark
-    writes ``cat=`` and reads it back as NULL — same semantics as plain
-    ``partitionBy`` parquet; avoid "" as a partition value.)
-    """
-    from urllib.parse import unquote
-
-    return {
-        unquote(k): unquote(v)
-        for k, v in _HIVE_SEG.findall(rel_path.replace(os.sep, "/"))
-    }
 
 
 class Lakehouse:
@@ -652,79 +628,6 @@ class LakehouseTable:
             },
         )
 
-    def _rename_events(self) -> list[tuple[int, str, str]]:
-        """(snapshot_id, old, new) for every committed rename, in order —
-        including events stashed as ``rename_history`` by snapshot expiry
-        (the rename's own snapshot may no longer exist)."""
-        out = []
-        for s in self.log.snapshots:
-            for h in s.summary.get("rename_history", []):
-                out.append((h["snapshot_id"], h["from"], h["to"]))
-            rc = s.summary.get("rename_column")
-            if rc:
-                out.append((s.snapshot_id, rc["from"], rc["to"]))
-        return sorted(out)
-
-    def _column_events(self) -> list[tuple[int, str, str]]:
-        """(snapshot_id, op, name) for add/drop column commits — including
-        events stashed as ``column_history`` by snapshot expiry."""
-        out = []
-        for s in self.log.snapshots:
-            for h in s.summary.get("column_history", []):
-                out.append((h["snapshot_id"], h["op"], h["name"]))
-            if "add_column" in s.summary:
-                out.append((s.snapshot_id, "add", s.summary["add_column"]))
-            if "drop_column" in s.summary:
-                out.append((s.snapshot_id, "drop", s.summary["drop_column"]))
-        return sorted(out)
-
-    def _readded_null_cols(self, added_in: int) -> set[str]:
-        """Columns that must read as NULL from files of epoch ``added_in``:
-        a drop-then-re-add of the same name after the file was written means
-        the file's bytes for that name are STALE (pre-drop data), not the
-        re-added column's values — without field ids, name-based resolution
-        would silently resurrect them."""
-        events = self._column_events()
-        nulls = set()
-        for f in self.schema().fields:
-            drop_after = [
-                sid for sid, op, n in events if op == "drop" and n == f.name and sid > added_in
-            ]
-            if not drop_after:
-                continue
-            readd = [
-                sid for sid, op, n in events if op == "add" and n == f.name and sid > drop_after[0]
-            ]
-            if readd:
-                nulls.add(f.name)
-        return nulls
-
-    def _forward_names(self, names: list[str], since_snapshot: int) -> list[str]:
-        """Map column names recorded at ``since_snapshot`` forward through
-        every rename committed after it, yielding current-schema names."""
-        renames = self._rename_events()
-        out = []
-        for n in names:
-            cur = n
-            for sid, old, new in renames:
-                if sid > since_snapshot and cur == old:
-                    cur = new
-            out.append(cur)
-        return out
-
-    def _historical_names(self, added_in: int) -> dict[str, str]:
-        """current column name -> the name it had when a file committed in
-        snapshot ``added_in`` was written (walk renames newest-first)."""
-        renames = self._rename_events()
-        mapping = {}
-        for f in self.schema().fields:
-            name = f.name
-            for sid, old, new in reversed(renames):
-                if sid > added_in and name == new:
-                    name = old
-            mapping[f.name] = name
-        return mapping
-
     def update_partition_spec(self, new_specs: list[str]) -> Snapshot:
         """Partition evolution (metadata-only): future writes use the new
         spec; existing files keep theirs and stay readable.
@@ -802,7 +705,7 @@ class LakehouseTable:
         """
         self._validate_constraints(df)
         files = self._write_data(df)
-        return self._commit("append", files, summary=summary, retry_conflicts=retries)
+        return self.log.commit("append", files, summary=summary, retry_conflicts=retries)
 
     def append_many(self, dfs: list[DataFrame]) -> Snapshot:
         """Transactional multi-append: N writes, ONE snapshot (W7,
@@ -810,7 +713,7 @@ class LakehouseTable:
         df = reduce(DataFrame.unionByName, dfs)
         self._validate_constraints(df)
         files = self._write_data(df)
-        return self._commit("append", files, summary={"batches": len(dfs)})
+        return self.log.commit("append", files, summary={"batches": len(dfs)})
 
     def overwrite(
         self,
@@ -829,7 +732,7 @@ class LakehouseTable:
         if change_rows is not None and self.cdf_enabled:
             summary["change-data-files"] = self._write_change_data(change_rows)
         files = self._write_data(df)
-        return self._commit("overwrite", files, summary=summary)
+        return self.log.commit("overwrite", files, summary=summary)
 
     def replace_partitions(
         self,
@@ -856,7 +759,7 @@ class LakehouseTable:
         if change_rows is not None and self.cdf_enabled:
             summary["change-data-files"] = self._write_change_data(change_rows)
         files = self._write_data(df)
-        return self._commit("replace", files, removed_paths=removed,
+        return self.log.commit("replace", files, removed_paths=removed,
                             summary=summary,
                             retry_conflicts=retries,
                             touched_partitions=partitions)
@@ -879,7 +782,7 @@ class LakehouseTable:
                 for p in batch
             ]
             snaps.append(
-                self._commit(
+                self.log.commit(
                     "add_files",
                     files,
                     summary={"batch": i // batch_size},
@@ -938,7 +841,7 @@ class LakehouseTable:
         files = self.log.live_files()
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
-            return self._commit("replace", [], summary={"op": "delete_where"})
+            return self.log.commit("replace", [], summary={"op": "delete_where"})
         rows = self._read_files_with_deletes(touched)
         # SQL DELETE removes rows where the predicate is TRUE; a NULL
         # predicate keeps the row (filter(~pred) would silently drop it)
@@ -956,7 +859,7 @@ class LakehouseTable:
             )
             summary["change-data-files"] = self._write_change_data(deleted)
         new_files = self._write_data(kept_rows)
-        return self._commit(
+        return self.log.commit(
             "replace",
             new_files,
             removed_paths=[f["path"] for f in touched],
@@ -995,7 +898,7 @@ class LakehouseTable:
         files = self.log.live_files()
         touched = prune_files(files, stat_filter) if stat_filter else files
         if not touched:
-            return self._commit("replace", [], summary={"op": "update_where"})
+            return self.log.commit("replace", [], summary={"op": "update_where"})
         rows = self._read_files_with_deletes(touched)
         cols = []
         for name in schema.fieldNames():
@@ -1047,7 +950,7 @@ class LakehouseTable:
                 pre.unionByName(post)
             )
         new_files = self._write_data(updated)
-        return self._commit(
+        return self.log.commit(
             "replace",
             new_files,
             removed_paths=[f["path"] for f in touched],
@@ -1095,7 +998,7 @@ class LakehouseTable:
         )
         keys.write.mode("error").parquet(del_dir)
         paths = sorted(_glob.glob(os.path.join(del_dir, "*.parquet")))
-        return self._commit(
+        return self.log.commit(
             "delete",
             files,
             added_deletes=[{"path": p, "key_cols": key_cols} for p in paths],
@@ -1136,7 +1039,7 @@ class LakehouseTable:
         )
         hits.write.mode("error").parquet(del_dir)
         paths = sorted(_glob.glob(os.path.join(del_dir, "*.parquet")))
-        return self._commit(
+        return self.log.commit(
             "delete",
             [],
             added_deletes=[{"path": p, "kind": "position"} for p in paths],
@@ -1249,7 +1152,7 @@ class LakehouseTable:
         by_keys: dict[tuple, dict[tuple, list]] = {}
         for d in deletes:
             if d.get("kind") != "position":
-                cur = tuple(self._forward_names(d["key_cols"], d["snapshot_id"]))
+                cur = tuple(self.log.forward_names(d["key_cols"], d["snapshot_id"]))
                 by_keys.setdefault(cur, {}).setdefault(tuple(d["key_cols"]), []).append(d)
         equality = []
         for cur, by_hist in by_keys.items():
@@ -1402,10 +1305,7 @@ class LakehouseTable:
             return None
         if any(s.added_deletes for s in snaps):
             return None
-        if any(
-            sid > from_snapshot
-            for sid, _, _ in (*self._rename_events(), *self._column_events())
-        ):
+        if self.log.schema_events(from_snapshot):
             return None
         ins_files: list[dict[str, Any]] = []
         cdf_paths: list[str] = []
@@ -1568,7 +1468,7 @@ class LakehouseTable:
         # bug (misspelled/dropped field) and raises, instead of silently
         # landing an all-NULL column.
         present = set(df.columns)
-        evolved = {n for _, op, n in self._column_events() if op == "add"}
+        evolved = {e.name for e in self.log.schema_events() if e.op == "add"}
         missing_core = [
             f.name
             for f in schema.fields
@@ -1679,7 +1579,7 @@ class LakehouseTable:
             # O(files) driver footer reads that buy metadata-only COUNT(*)
             # and file-level data skipping at scan time
             return data_file_entry(
-                path, _parse_hive_partition(os.path.relpath(path, out_dir))
+                path, parse_hive_partition(os.path.relpath(path, out_dir))
             )
 
         # footer probes are tiny independent IO — a commit of hundreds of
@@ -1734,11 +1634,12 @@ class LakehouseTable:
         basePath (Spark re-derives partition columns); metadata-only files
         (add_files/flat layout) get partition columns attached from the log.
 
-        When renames have committed, files are additionally grouped by the
-        snapshot they were added in, read under their HISTORICAL column
-        names, and aliased forward — rename-without-rewrite. With no
-        renames the grouping collapses and the original single-scan paths
-        apply unchanged.
+        Each file is read under the column names the log's resolver
+        (``SnapshotLog.column_resolver``) gives for the snapshot it was
+        added in, aliased forward to the current names, and a column the
+        resolver maps to None reads NULL — rename, drop and re-add without
+        a rewrite. Files whose maps agree share a scan, so with no schema
+        history the grouping is the plain single-scan one.
 
         ``with_pos`` appends ``__lh_fp``/``__lh_pos`` (Spark's native
         ``_metadata.file_path`` / ``_metadata.row_index``) to every leaf
@@ -1753,19 +1654,10 @@ class LakehouseTable:
                     "__lh_fp", F.lit(None).cast("string")
                 ).withColumn("__lh_pos", F.lit(None).cast("bigint"))
             return empty
-        has_renames = bool(self._rename_events())
-        events = self._column_events()
-        dropped = {n for _, op, n in events if op == "drop"}
-        has_readds = any(op == "add" and n in dropped for _, op, n in events)
-        # epoch grouping activates for renames AND for drop-then-re-add
-        # (stale-byte resurrection guard); otherwise single-scan paths apply
-        per_epoch = has_renames or has_readds
+        resolve = self.log.column_resolver()
 
-        def hist_for(added_in: int) -> dict[str, str]:
-            return self._historical_names(added_in) if has_renames else {}
-
-        def nulls_for(added_in: int) -> set:
-            return self._readded_null_cols(added_in) if has_readds else set()
+        def columns_of(f: dict[str, Any]) -> dict[str, str | None]:
+            return resolve(f.get("added_in", 0))
 
         def attach(df: DataFrame) -> DataFrame:
             if not with_pos:
@@ -1774,17 +1666,15 @@ class LakehouseTable:
                 "__lh_fp", F.col("_metadata.file_path")
             ).withColumn("__lh_pos", F.col("_metadata.row_index"))
 
-        def conform(
-            df: DataFrame, hist: dict[str, str], nulls: set = frozenset()
-        ) -> DataFrame:
+        def conform(df: DataFrame, cols: dict[str, str | None]) -> DataFrame:
             extra = (
                 [F.col("__lh_fp"), F.col("__lh_pos")] if with_pos else []
             )
             return df.select(
                 *[
                     F.lit(None).cast(f.dataType).alias(f.name)
-                    if f.name in nulls
-                    else F.col(hist.get(f.name, f.name)).cast(f.dataType).alias(f.name)
+                    if cols[f.name] is None
+                    else F.col(cols[f.name]).cast(f.dataType).alias(f.name)
                     for f in schema.fields
                 ],
                 *extra,
@@ -1792,14 +1682,15 @@ class LakehouseTable:
 
         data_fields = self._data_schema().fields
 
-        def reader(hist: dict[str, str]):
-            # explicit schema (historical names): no per-group footer
+        def reader(cols: dict[str, str | None]):
+            # explicit schema (the file's names): no per-group footer
             # inference job; files missing a column read it as NULL
             return self.spark.read.schema(
                 T.StructType(
                     [
-                        T.StructField(hist.get(f.name, f.name), f.dataType, True)
+                        T.StructField(cols[f.name], f.dataType, True)
                         for f in data_fields
+                        if cols[f.name] is not None
                     ]
                 )
             )
@@ -1807,15 +1698,15 @@ class LakehouseTable:
         parts = self.partition_names
         data_dir = os.path.join(self.table_dir, "data")
         # unpartitioned: no file is hive, and the flat grouping below
-        # reduces to one scan per rename epoch (a single multi-file scan
-        # when no renames exist)
+        # reduces to one scan per distinct column map (a single multi-file
+        # scan without schema history)
         hive = [f for f in files if _is_hive(f, parts, data_dir)]
         flat = [f for f in files if not _is_hive(f, parts, data_dir)]
         dfs: list[DataFrame] = []
         if hive:
             # one scan per commit dir (basePath anchors partition discovery
             # below the commit dir, so hive segments parse cleanly); a commit
-            # dir is a single snapshot, so it is also a single rename epoch
+            # dir is a single snapshot, so it has a single column map
             by_commit: dict[str, list[dict]] = {}
             for f in hive:
                 rel = os.path.relpath(f["path"], data_dir)
@@ -1823,18 +1714,17 @@ class LakehouseTable:
                 by_commit.setdefault(commit, []).append(f)
             for commit in sorted(by_commit):
                 group = by_commit[commit]
-                epoch = group[0].get("added_in", 0)
-                hist = hist_for(epoch)
+                cols = columns_of(group[0])
                 df = attach(
-                    reader(hist)
+                    reader(cols)
                     .option("basePath", os.path.join(data_dir, commit))
                     .parquet(*[f["path"] for f in group])
                 )
-                dfs.append(conform(df, hist, nulls_for(epoch)))
+                dfs.append(conform(df, cols))
         if flat:
             # group ONLY by the identity partition values that must be
-            # re-attached as literal columns (plus rename epoch) — NOT by the
-            # full partition tuple. Transform-partitioned files (e.g. a
+            # re-attached as literal columns (plus the column map) — NOT by
+            # the full partition tuple. Transform-partitioned files (e.g. a
             # month-spec generation after evolving to day) need no attached
             # columns at all, so they collapse into ONE multi-file scan
             # instead of one scan per historical partition value.
@@ -1843,7 +1733,6 @@ class LakehouseTable:
             }
             by_group: dict[tuple, list[dict]] = {}
             for f in flat:
-                epoch = f.get("added_in", 0) if per_epoch else 0
                 ident = tuple(
                     sorted(
                         (k, v)
@@ -1851,39 +1740,20 @@ class LakehouseTable:
                         if k in identity_fields
                     )
                 )
-                by_group.setdefault((ident, epoch), []).append(f)
-            for (ident, epoch), group in sorted(by_group.items()):
+                key = (ident, tuple(columns_of(f).items()))
+                by_group.setdefault(key, []).append(f)
+            for (ident, _), group in sorted(by_group.items(), key=lambda kv: kv[0][0]):
                 pvals = dict(ident)
-                hist = hist_for(epoch)
-                df = attach(reader(hist).parquet(*[f["path"] for f in group]))
+                cols = columns_of(group[0])
+                df = attach(reader(cols).parquet(*[f["path"] for f in group]))
                 # only identity partition values materialize as columns;
                 # transform sources already live in the data files
                 for col, pf in identity_fields.items():
                     if col not in df.columns:
                         ftype = schema[pf.source].dataType
                         df = df.withColumn(col, F.lit(pvals.get(col)).cast(ftype))
-                dfs.append(conform(df, hist, nulls_for(epoch)))
+                dfs.append(conform(df, cols))
         return reduce(DataFrame.unionByName, dfs)
-
-    def _commit(
-        self,
-        operation,
-        files,
-        removed_paths=None,
-        summary=None,
-        added_deletes=None,
-        retry_conflicts=0,
-        touched_partitions=None,
-    ) -> Snapshot:
-        return self.log.commit(
-            operation,
-            files,
-            removed_paths,
-            summary,
-            added_deletes,
-            retry_conflicts,
-            touched_partitions=touched_partitions,
-        )
 
 
 def files_in_partitions(
@@ -1926,5 +1796,5 @@ def _is_hive(f: dict[str, Any], parts: list[str], data_dir: str) -> bool:
     path = f["path"].replace(os.sep, "/")
     if not path.startswith(data_dir.replace(os.sep, "/") + "/"):
         return False
-    found = dict(_HIVE_SEG.findall(path))
+    found = parse_hive_partition(path)
     return all(p in found for p in parts)

@@ -35,7 +35,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
-from typing import Any, Iterator, Sequence
+from typing import Any, Callable, Iterator, Sequence
 from urllib.parse import unquote
 
 from pyspark.sql import types as T
@@ -56,9 +56,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog
+from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog, parse_hive_partition
 from pyiceberg_lakehouse_spark.lakehouse.stats import prune_files
-from pyiceberg_lakehouse_spark.lakehouse.transforms import canon_part_str
 
 
 @dataclass
@@ -66,8 +65,9 @@ class FileSlice(InputPartition):
     """One data file + its identity partition values (hive-path columns are
     stripped from the file by Spark's writer, so the reader re-attaches
     them as constants from log metadata — flat and hive layouts unify).
-    ``column_map`` carries current-name -> historical-name for files written
-    before a rename_column commit."""
+    ``column_map`` is the log's resolver map for the file's ``added_in``:
+    current name -> the name the file holds it under, or None for a column
+    that reads NULL there (``SnapshotLog.column_resolver``)."""
 
     path: str
     partition: dict = field(default_factory=dict)
@@ -89,32 +89,6 @@ def _change_feed_schema(schema: T.StructType) -> T.StructType:
     )
 
 
-def _rename_events(log: SnapshotLog) -> list[tuple[int, str, str]]:
-    out = []
-    for s in log.snapshots:
-        for h in s.summary.get("rename_history", []):
-            out.append((h["snapshot_id"], h["from"], h["to"]))
-        rc = s.summary.get("rename_column")
-        if rc:
-            out.append((s.snapshot_id, rc["from"], rc["to"]))
-    return sorted(out)
-
-
-def _historical_map(
-    current_names: list[str], renames: list[tuple[int, str, str]], added_in: int
-) -> dict[str, str]:
-    """current name -> name at the time snapshot ``added_in`` was written."""
-    mapping = {}
-    for cur in current_names:
-        name = cur
-        for sid, old, new in reversed(renames):
-            if sid > added_in and name == new:
-                name = old
-        if name != cur:
-            mapping[cur] = name
-    return mapping
-
-
 def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
     """Yield Arrow record batches for one file, conformed to the table
     schema (column order, types, attached partition constants)."""
@@ -129,7 +103,7 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
     target = to_arrow_schema(schema)
     pf = pq.ParquetFile(slice_.path)
     file_cols = set(pf.schema_arrow.names)
-    cmap = slice_.column_map  # current -> historical (usually empty)
+    cmap = slice_.column_map  # current -> name in the file, or None
     read_cols = [
         cmap.get(f.name, f.name)
         for f in target
@@ -152,18 +126,11 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
         yield pa.RecordBatch.from_arrays(arrays, schema=target)
 
 
-def _to_slice(
-    f: dict[str, Any],
-    renames: list[tuple[int, str, str]] | None = None,
-    names: list[str] | None = None,
-) -> FileSlice:
-    cmap = (
-        _historical_map(names, renames, f.get("added_in", 0)) if renames else {}
-    )
+def _to_slice(f: dict[str, Any], resolve: Callable[[int], dict]) -> FileSlice:
     return FileSlice(
         path=f["path"],
         partition={k: unquote(str(v)) for k, v in (f.get("partition") or {}).items()},
-        column_map=cmap,
+        column_map=resolve(f.get("added_in", 0)),
     )
 
 
@@ -206,68 +173,33 @@ class LakehouseBatchReader(DataSourceReader):
                 self.files.extend(s.added_files)
         else:
             self.files = log.live_files(self.snapshot_id)
-        self.renames = _rename_events(log)
-        self.names = [f.name for f in log.schema().fields]
-        # col -> list of (op, value) conjuncts for stats pruning
+        self.resolve = log.column_resolver()
+        # col -> list of (op, value) conjuncts for ``prune_files``, which
+        # prunes on per-file stats and identity partition values
         self.stat_preds: dict[str, list] = {}
-        # col -> allowed string values for identity-partition pruning
-        self.part_preds: dict[str, set] = {}
+
+    _OPS = {
+        EqualTo: "=",
+        LessThan: "<",
+        LessThanOrEqual: "<=",
+        GreaterThan: ">",
+        GreaterThanOrEqual: ">=",
+        In: "in",
+    }
 
     def pushFilters(self, filters: list[Filter]):
-        ops = {
-            EqualTo: "=",
-            LessThan: "<",
-            LessThanOrEqual: "<=",
-            GreaterThan: ">",
-            GreaterThanOrEqual: ">=",
-        }
         for flt in filters:
-            if len(getattr(flt, "attribute", ())) != 1:
-                continue
-            col = flt.attribute[0]
-            op = ops.get(type(flt))
-            # partition-value pruning compares str(value) against the hive
-            # path segment — reliable only for types with one canonical
-            # string form (floats may format differently than Spark wrote
-            # them, which would prune a matching file)
-            exact_str = (str, int, bool)
-            if op is not None:
-                self.stat_preds.setdefault(col, []).append((op, flt.value))
-                if op == "=" and isinstance(flt.value, exact_str):
-                    self.part_preds.setdefault(col, set()).add(
-                        canon_part_str(flt.value)
-                    )
-            elif isinstance(flt, In) and flt.value:
-                vals = list(flt.value)
-                try:
-                    conj = [(">=", min(vals)), ("<=", max(vals))]
-                except TypeError:
-                    continue
-                self.stat_preds.setdefault(col, []).extend(conj)
-                if all(isinstance(v, exact_str) for v in vals):
-                    self.part_preds.setdefault(col, set()).update(
-                        canon_part_str(v) for v in vals
-                    )
+            op = self._OPS.get(type(flt))
+            if op is not None and len(flt.attribute) == 1:
+                self.stat_preds.setdefault(flt.attribute[0], []).append((op, flt.value))
         # skipping is file-granular — Spark still evaluates every filter
         # against the rows, so partially-pruned files stay correct
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:
-        files = self.files
-        if self.stat_preds:
-            files = prune_files(files, self.stat_preds)
-        for col, allowed in self.part_preds.items():
-            # conservative: files missing the partition key are kept
-            files = [
-                f
-                for f in files
-                if col not in (f.get("partition") or {})
-                or unquote(str(f["partition"][col])) in allowed
-            ]
+        files = prune_files(self.files, self.stat_preds)
         # Spark requires >=1 partition; an empty path reads as no rows
-        return [_to_slice(f, self.renames, self.names) for f in files] or [
-            FileSlice(path="")
-        ]
+        return [_to_slice(f, self.resolve) for f in files] or [FileSlice(path="")]
 
     def read(self, partition: FileSlice) -> Iterator[Any]:
         return _read_slice(partition, self.schema_json)
@@ -311,8 +243,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         lo, hi = start["snapshot_id"], end["snapshot_id"]
         log = SnapshotLog(self.table_dir, self.branch).load()
-        renames = _rename_events(log)
-        names = [x.name for x in log.schema().fields]
+        resolve = log.column_resolver()
         slices: list[FileSlice] = []
         for snap in log.snapshots:
             if not (lo < snap.snapshot_id <= hi):
@@ -325,7 +256,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
                 meta = {"_commit_snapshot_id": str(snap.snapshot_id)}
                 if snap.operation in ("append", "add_files"):
                     for f in snap.added_files:
-                        s = _to_slice(f, renames, names)
+                        s = _to_slice(f, resolve)
                         s.partition.update({**meta, "_change_type": "insert"})
                         slices.append(s)
                 elif snap.summary.get("change-data-files"):
@@ -351,9 +282,7 @@ class LakehouseStreamReader(DataSourceStreamReader):
                         "streaming source covers append-only history — restart "
                         "from a fresh checkpoint past the rewrite"
                     )
-                slices.extend(
-                    _to_slice(f, renames, names) for f in snap.added_files
-                )
+                slices.extend(_to_slice(f, resolve) for f in snap.added_files)
         return slices or [FileSlice(path="")]
 
     def read(self, partition: FileSlice) -> Iterator[Any]:
@@ -399,7 +328,6 @@ def _write_task_batches(batches, state: dict, subdir: str) -> FilesWritten:
     Unique basenames make concurrent tasks (and streaming epochs) collision
     free in the shared directory; stats collection is executor-local footer
     reads, so at 100 TB the driver never touches a data file."""
-    import re
     import uuid
 
     import pyarrow as pa
@@ -435,8 +363,7 @@ def _write_task_batches(batches, state: dict, subdir: str) -> FilesWritten:
     )
     entries = []
     for path in sorted(written):
-        rel = os.path.relpath(path, out_dir).replace(os.sep, "/")
-        partition = dict(re.findall(r"([^/=]+)=([^/]+)(?=/)", rel + "/"))
+        partition = parse_hive_partition(os.path.relpath(path, out_dir))
         partition = {k: v for k, v in partition.items() if k in state["partition_by"]}
         entries.append(data_file_entry(path, partition))
     return FilesWritten(entries)

@@ -145,3 +145,27 @@ def test_rollback_entry_keeps_original_sequencing(spark, warehouse):
     assert sorted(tuple(r) for r in t.scan().select("k").collect()) == [
         (0,), (2,), (3,), (4,), (5,)
     ]
+
+
+def test_committing_handle_holds_the_defaults_a_reload_restores(tmp_path):
+    """``commit`` fills the entry defaults ``from_json`` restores, so the
+    committing handle and a fresh load agree; rollback-style commits keep
+    the sequencing they carry, and the stored entry stays packed."""
+    log = SnapshotLog(str(tmp_path / "t"))
+    log.init_table(SCHEMA, [])
+    log.commit("append", [{"path": "/x/a.parquet", "rows": 3}])
+    snap = log.commit(
+        "replace",
+        [{"path": "/x/b.parquet", "added_in": 2}],
+        added_deletes=[{"path": "/x/d.parquet", "key_cols": ["k"], "snapshot_id": 2}],
+        preserve_sequencing=True,
+    )
+    assert log.live_files()[0] == {
+        "path": "/x/a.parquet", "partition": {}, "rows": 3, "added_in": 2
+    }
+    assert snap.added_files == [
+        {"path": "/x/b.parquet", "partition": {}, "rows": None, "added_in": 2}
+    ]
+    assert _entry(log, 2)["added_files"] == [{"path": "/x/a.parquet", "rows": 3}]
+    again = SnapshotLog(log.table_dir).load()
+    assert [s.to_json() for s in again.snapshots] == [s.to_json() for s in log.snapshots]
