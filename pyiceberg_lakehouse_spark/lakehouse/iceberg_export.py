@@ -50,6 +50,7 @@ from pyiceberg_lakehouse_spark.lakehouse.iceberg_interop import (
 from pyiceberg_lakehouse_spark.lakehouse.iceberg_transforms import (
     serialize_single_value,
 )
+from pyiceberg_lakehouse_spark.lakehouse.log import HIVE_NULL
 from pyiceberg_lakehouse_spark.lakehouse.stats import (
     file_row_count,
     footer_stats,
@@ -154,7 +155,7 @@ def _typed_partition(
     out: dict[str, Any] = {}
     for name, ice_t in part_cols:
         v = raw.get(name)
-        if v is None or v == "__HIVE_DEFAULT_PARTITION__":
+        if v is None or v == HIVE_NULL:
             out[name] = None
         elif ice_t in ("int", "long"):
             out[name] = int(v)

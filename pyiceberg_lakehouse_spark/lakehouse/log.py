@@ -44,17 +44,22 @@ field ids, so which name a file holds a column under follows from when the
 file was added (``added_in``) against those events, and this module is the
 one place that reads them. ``SnapshotLog.column_resolver`` maps a file's
 ``added_in`` to ``{current column: its name in the file, or None}``; None
-means the column reads NULL there, because it was added after the file
-(a re-add, after a drop or a rename away, must not serve the old bytes).
-The table read path and the ``lakehouse`` data source (batch and stream)
-resolve through it; ``schema_events`` gates what cannot cross the history
-(Iceberg export, purge, the change-data shortcut), and ``forward_names``
-maps a delete file's key columns forward. Snapshot expiry drops the event
+means the column reads NULL there because the file may hold another
+column's bytes under its name (a re-add after a drop or a rename away
+must not serve the old bytes). A plain add keeps the name: the file lacks
+it and reads NULL by name, and its map stays equal to a newer file's.
+``commit_schema_event`` writes the event summaries. The table read path
+and the ``lakehouse`` data source (batch and stream) resolve through it;
+``schema_events`` gates what cannot cross the history (Iceberg export,
+purge, the change-data shortcut), and ``forward_names`` maps a delete
+file's key columns forward. Snapshot expiry drops the event
 snapshots but keeps their events on the new base, under ``rename_history``
 ({snapshot_id, from, to}) and ``column_history`` ({snapshot_id, op,
 name}): ``stash_schema_history``. The log also owns partition-path
 decoding: ``parse_hive_partition`` turns a written file's hive segments
-into the partition values every writer logs.
+into the partition values every writer logs, and load decodes the values
+older logs hold encoded (``_decode_raw_segments``, and the format v1 note
+in ``_load_base``), so every reader takes a logged value as it is.
 
 Commit protocol: under an ``flock`` on ``.commit.lock``, a commit checks
 that its head's entry exists, the next id's does not, and the base is the
@@ -88,6 +93,7 @@ import time
 import zlib
 from dataclasses import dataclass, field
 from typing import Any, Callable, NamedTuple
+from urllib.parse import unquote
 
 from pyspark.sql import types as T
 
@@ -103,8 +109,6 @@ def _v1_safe_unquote(v: str) -> str:
     Spark path encoder — re-encoding the decoded string must reproduce the
     stored one. Anything else (already-decoded user data with literal
     ``%XX``) is returned unchanged. See the load() migration note."""
-    from urllib.parse import unquote
-
     dec = unquote(v)
     if dec == v:
         return v
@@ -115,6 +119,9 @@ def _v1_safe_unquote(v: str) -> str:
 
 
 _HIVE_SEG = re.compile(r"([^/=]+)=([^/]+)")
+# the path segment Spark and pyarrow write for a NULL partition value; the
+# log stores it as written, so readers of logged values map it to NULL
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def parse_hive_partition(rel_path: str) -> dict[str, str]:
@@ -124,17 +131,36 @@ def parse_hive_partition(rel_path: str) -> dict[str, str]:
     path segments — in the KEY as well as the value (``a/b=c`` ->
     ``a%2Fb%3Dc``); the log must store the DECODED pair or a
     ``partition_filter={"cat": "a/b=c"}`` prunes away the matching file.
-    Logs written before this decode (format_version < 2) are decoded once
-    at load (see ``SnapshotLog.load``). NULL partitions keep the writer's
-    sentinel string as-is. (Empty-string partition values are a Hive-layout
+    Values older logs hold encoded are decoded once at load (format v1:
+    ``SnapshotLog._load_base``; earlier data-source writes:
+    ``_decode_raw_segments``). NULL partitions keep the writer's sentinel
+    string, ``HIVE_NULL``. (Empty-string partition values are a Hive-layout
     limitation: Spark writes ``cat=`` and reads it back as NULL.)
     """
-    from urllib.parse import unquote
-
     return {
         unquote(k): unquote(v)
         for k, v in _HIVE_SEG.findall(rel_path.replace(os.sep, "/"))
     }
+
+
+def _decode_raw_segments(snap: Snapshot) -> None:
+    """Decode the partition values a ``lakehouse`` data-source write of an
+    earlier version logged as pyarrow wrote the path segment (``x%2Fy``).
+
+    Such a value still equals its file's path segment, and a decoded value
+    holding a ``%`` cannot: both writers encode ``%`` as ``%25``. So this
+    decodes exactly those values, once, whatever commit re-listed the
+    file, and leaves every decoded value as it is; a rewritten base holds
+    the decoded form and is not decoded again."""
+    for f in snap.added_files:
+        part = f.get("partition")
+        if part and any(isinstance(v, str) and "%" in v for v in part.values()):
+            f["partition"] = {
+                k: unquote(v)
+                if isinstance(v, str) and "%" in v and f"/{k}={v}/" in f["path"]
+                else v
+                for k, v in part.items()
+            }
 
 
 @contextlib.contextmanager
@@ -458,7 +484,9 @@ class SnapshotLog:
                     entry_text = decode_log(raw, path)
                     entry = json.loads(entry_text)
                     self._set_meta(entry)
-                    self.snapshots.append(Snapshot.from_json(entry["snapshot"]))
+                    snap = Snapshot.from_json(entry["snapshot"])
+                    _decode_raw_segments(snap)
+                    self.snapshots.append(snap)
                     tail_bytes += len(entry_text)
                 with contextlib.suppress(FileNotFoundError):
                     if os.stat(self.path).st_ino == base.st_ino:
@@ -487,8 +515,6 @@ class SnapshotLog:
         # remains formally ambiguous between the two generations; we take
         # the decode, matching the dominant v1 population.
         if self._base_version < 2:
-            from urllib.parse import unquote
-
             for snap in self.snapshots:
                 for fentry in snap.added_files:
                     part = fentry.get("partition")
@@ -497,6 +523,9 @@ class SnapshotLog:
                             unquote(k): _v1_safe_unquote(v)
                             for k, v in part.items()
                         }
+        else:
+            for snap in self.snapshots:
+                _decode_raw_segments(snap)
 
     def schema(self) -> T.StructType:
         assert self.schema_json is not None
@@ -632,10 +661,12 @@ class SnapshotLog:
 
         Walks the events committed after the file newest-first: a rename
         maps the column back to its old name; an add means the column did
-        not exist when the file was written, so whatever the file holds
-        under that name (a dropped or renamed-away column's bytes) is not
-        its data. Memoized per ``added_in``; callers do not mutate the
-        maps."""
+        not exist when the file was written. After a plain add the file
+        lacks the name and reads NULL under it, so the name stays and the
+        map equals the one of a file written after the add. After a drop
+        or a rename away of that name, whatever the file holds under it is
+        another column's bytes: None. Memoized per ``added_in``; callers
+        do not mutate the maps."""
         events = self.schema_events()
         names = [f["name"] for f in json.loads(self.schema_json)["fields"]]
         maps: dict[int, dict[str, str | None]] = {}
@@ -646,11 +677,13 @@ class SnapshotLog:
                 out: dict[str, str | None] = {}
                 for name in names:
                     cur: str | None = name
-                    for e in later:
+                    for i, e in enumerate(later):
                         if e.op == "rename" and cur == e.to:
                             cur = e.name
                         elif e.op == "add" and cur == e.name:
-                            cur = None
+                            older = later[i + 1 :]
+                            if any(o.op != "add" and o.name == cur for o in older):
+                                cur = None
                             break
                     out[name] = cur
                 maps[added_in] = out
@@ -669,6 +702,19 @@ class SnapshotLog:
                     cur = e.to
             out.append(cur)
         return out
+
+    def commit_schema_event(
+        self, op: str, name: str, to: str | None = None
+    ) -> Snapshot:
+        """Commit the schema this handle holds as one ``SchemaEvent`` (op
+        add, drop or rename; ``to`` a rename's new name), under the summary
+        keys ``schema_events`` reads back."""
+        summary = (
+            {"rename_column": {"from": name, "to": to}}
+            if op == "rename"
+            else {f"{op}_column": name}
+        )
+        return self.commit("schema_change", [], summary=summary)
 
     def stash_schema_history(self, keep_from: int) -> None:
         """Before expiry drops ``snapshots[:keep_from]``, keep their schema

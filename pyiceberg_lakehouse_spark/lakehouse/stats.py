@@ -149,14 +149,12 @@ def prune_files(
                 # would lie for numerics).
                 pv = (f.get("partition") or {}).get(col)
                 if pv is not None:
-                    from urllib.parse import unquote
-
                     from pyiceberg_lakehouse_spark.lakehouse.transforms import (
                         canon_part_str,
                     )
 
                     exact = (str, int, bool)
-                    pv_s = unquote(str(pv))
+                    pv_s = str(pv)
                     for op, value in (
                         [preds] if isinstance(preds, tuple) else preds
                     ):

@@ -532,7 +532,7 @@ class LakehouseTable:
         self.log.schema_json = T.StructType(
             [*schema.fields, T.StructField(name, dtype, True)]
         ).json()
-        self.log.commit("schema_change", [], summary={"add_column": name})
+        self.log.commit_schema_event("add", name)
 
     def drop_column(self, name: str) -> None:
         """Schema evolution: drop a column (metadata-only projection change).
@@ -547,7 +547,7 @@ class LakehouseTable:
         self.log.schema_json = T.StructType(
             [f for f in schema.fields if f.name != name]
         ).json()
-        self.log.commit("schema_change", [], summary={"drop_column": name})
+        self.log.commit_schema_event("drop", name)
 
     def rename_column(self, old: str, new: str) -> None:
         """Schema evolution: rename a column without rewriting any data
@@ -574,9 +574,7 @@ class LakehouseTable:
                 for f in schema.fields
             ]
         ).json()
-        self.log.commit(
-            "schema_change", [], summary={"rename_column": {"from": old, "to": new}}
-        )
+        self.log.commit_schema_event("rename", old, new)
 
     def promote_column(self, name: str, new_type: T.DataType) -> None:
         """Schema evolution: widen a column's type (metadata-only), the
@@ -1639,7 +1637,8 @@ class LakehouseTable:
         added in, aliased forward to the current names, and a column the
         resolver maps to None reads NULL — rename, drop and re-add without
         a rewrite. Files whose maps agree share a scan, so with no schema
-        history the grouping is the plain single-scan one.
+        history, or only plain adds, the grouping is the plain single-scan
+        one.
 
         ``with_pos`` appends ``__lh_fp``/``__lh_pos`` (Spark's native
         ``_metadata.file_path`` / ``_metadata.row_index``) to every leaf

@@ -36,7 +36,6 @@ import json
 import os
 from dataclasses import dataclass, field
 from typing import Any, Callable, Iterator, Sequence
-from urllib.parse import unquote
 
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
@@ -56,7 +55,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from pyiceberg_lakehouse_spark.lakehouse.log import SnapshotLog, parse_hive_partition
+from pyiceberg_lakehouse_spark.lakehouse.log import (
+    HIVE_NULL,
+    SnapshotLog,
+    parse_hive_partition,
+)
 from pyiceberg_lakehouse_spark.lakehouse.stats import prune_files
 
 
@@ -118,9 +121,9 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
             if fname in file_cols:
                 arrays.append(tbl.column(fname).cast(f.type).combine_chunks())
             elif f.name in slice_.partition:
-                arrays.append(
-                    pa.array([slice_.partition[f.name]] * n, pa.string()).cast(f.type)
-                )
+                v = slice_.partition[f.name]
+                v = None if v == HIVE_NULL else v
+                arrays.append(pa.array([v] * n, pa.string()).cast(f.type))
             else:
                 arrays.append(pa.nulls(n, f.type))
         yield pa.RecordBatch.from_arrays(arrays, schema=target)
@@ -129,7 +132,7 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
 def _to_slice(f: dict[str, Any], resolve: Callable[[int], dict]) -> FileSlice:
     return FileSlice(
         path=f["path"],
-        partition={k: unquote(str(v)) for k, v in (f.get("partition") or {}).items()},
+        partition=dict(f.get("partition") or {}),
         column_map=resolve(f.get("added_in", 0)),
     )
 
