@@ -214,8 +214,9 @@ def _iceberg_operation(s) -> str:
     """The Iceberg snapshot operation of one log snapshot. The spec's
     ``replace`` promises unchanged data, so a rewrite keeps it only when
     it is data-change=false (compaction, z-order); a rewrite that changed
-    rows (partition-scoped upsert, ``delete_where``, ``update_where``) and
-    a ``delete`` that also adds data files (``apply_changes``) are
+    rows (``merge_into_partitioned``, ``delete_where``, ``update_where``)
+    and a ``delete`` that also adds data files (``upsert_partitioned``,
+    ``apply_changes``) are
     ``overwrite``s. Metadata-only commits stay ``replace``."""
     if s.operation in ("create", "append", "add_files"):
         return "append"

@@ -6,7 +6,7 @@ files it ADDED (with per-file partition values, so flat layouts — partition
 info only in metadata, main-polars.py:2-5 — work identically to hive
 layouts). The live file set at any snapshot is derived by replay: ``append``
 and ``add_files`` accumulate, ``overwrite`` resets, ``replace`` swaps a
-subset (used by partition-scoped upsert/compaction).
+subset (used by partition-scoped merges and compaction).
 
 On disk the log is a *base*, ``_snaplog.json`` (format v2: the table
 metadata and every snapshot up to some id), and a sibling directory
@@ -792,13 +792,13 @@ class SnapshotLog:
         everything else raises.
 
         ``touched_partitions`` narrows the conflict check for ``replace``
-        commits (Iceberg-style overwrite validation): the replace was
-        planned from ONLY those partitions' state, so a concurrent commit
+        and ``delete`` commits (Iceberg-style overwrite validation): the
+        commit is scoped to ONLY those partitions, so a concurrent commit
         that touched none of them — hourly-partition ingest, a disjoint
         backfill, another partition-scoped upsert elsewhere — is no
         conflict at all; the commit refreshes to the winner's state and
         retries (up to ``retry_conflicts``). A winner that added to or
-        removed from a touched partition still raises: our file swap was
+        removed from a touched partition still raises: our commit was
         computed against state it just changed. This is what lets many
         writers land partition-scoped merges concurrently instead of
         serializing through failures.
@@ -870,7 +870,7 @@ class SnapshotLog:
                     return snap
             # conflict: another writer advanced the log since we loaded it
             retryable = operation in self.COMMUTATIVE_OPS or (
-                operation == "replace"
+                operation in ("replace", "delete")
                 and touched_partitions is not None
                 and not _winners_touch(
                     on_disk, self.current_snapshot_id() or 0, touched_partitions

@@ -102,7 +102,7 @@ def lh_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lh_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2: keyed last-wins upsert, partition-scoped rewrite variant.
+    """Q2: keyed last-wins upsert, partitioned merge-on-read variant.
 
     Base = orders with key%3!=0; batch = orders with key%5==0 at +100000
     price. Matched keys take the new price, unmatched insert — verified

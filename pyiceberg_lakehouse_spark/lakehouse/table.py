@@ -740,7 +740,8 @@ class LakehouseTable:
         change_rows: DataFrame | None = None,
     ) -> Snapshot:
         """Swap only the listed partitions' files for ``df``'s data — the
-        partition-scoped rewrite used by upsert at scale (SURVEY.md §7 step 4).
+        partition-scoped rewrite used by ``merge_into_partitioned``
+        (SURVEY.md §7 step 4).
 
         Conflict detection is partition-scoped (Iceberg-style overwrite
         validation): a concurrent commit that touched NONE of the listed
@@ -977,6 +978,7 @@ class LakehouseTable:
         key_cols: list[str],
         summary: dict[str, Any],
         rows: DataFrame | None = None,
+        retries: int = 0,
     ) -> Snapshot:
         """One ``delete`` snapshot: ``keys`` (one row per key) as an
         equality-delete file, plus ``rows`` as data files when given.
@@ -984,7 +986,9 @@ class LakehouseTable:
         The added rows carry the snapshot's own id as ``added_in``, so the
         sequencing rule (a delete applies to files added strictly before
         it) exempts them from the commit's own delete: deleting a key and
-        adding its new row is one atomic merge-on-read upsert."""
+        adding its new row is one atomic merge-on-read upsert. With
+        ``retries``, a concurrent commit outside the added rows' partitions
+        rebase-retries (as in ``replace_partitions``); others raise."""
         import uuid
 
         files: list[dict[str, Any]] = []
@@ -1001,6 +1005,8 @@ class LakehouseTable:
             files,
             added_deletes=[{"path": p, "key_cols": key_cols} for p in paths],
             summary=summary,
+            retry_conflicts=retries,
+            touched_partitions=_partitions_of(files) if retries else None,
         )
 
     def delete_where_positions(self, condition) -> Snapshot:

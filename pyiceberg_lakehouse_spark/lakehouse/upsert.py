@@ -6,25 +6,23 @@ THEN INSERT *``. The reference's "last wins" depends on pandas concat file
 order (upsert.py:53); we make it deterministic with an explicit source
 priority column ordered in a row_number window (SURVEY.md §7 hard-part 1).
 
-Three physical strategies:
+Three strategies:
 
-- ``upsert``: full-table merge + overwrite. One shuffle on the key. Fine for
-  small tables; at 100 TB it rewrites everything.
-- ``upsert_partitioned``: partition-scoped rewrite — only partitions whose
-  keys appear in the new batch are read, merged, and replaced; everything
-  else is untouched metadata. The partition list comes from the (small) new
-  batch via distinct+collect, so the rewrite cost is proportional to the
-  touched data, not the table.
-- ``apply_changes`` (op-tagged CDC batches): merge-on-read. One snapshot
-  adds the batch's upsert rows and an equality-delete file of every batch
-  key; nothing in the table is rewritten, and reads anti-join the keys
-  until ``compact()``.
+- ``upsert``: full-table merge + overwrite. The table side reaches the
+  merge through a broadcast anti-join on the batch keys
+  (``merge_keep_last``), so it is never shuffled, but every file is
+  rewritten. Fine for small tables; at 100 TB it rewrites everything.
+- ``upsert_partitioned``: merge-on-read. The batch reduces to one
+  last-wins row per key and lands as ONE ``delete`` snapshot: those rows
+  as data files plus an equality-delete file of their keys. No table
+  file is read, removed or rewritten, so the write cost tracks the
+  batch, not the partitions it touches, and a key may move partition
+  (the delete hides its older row wherever it lives).
+- ``apply_changes`` (op-tagged CDC batches): the same merge-on-read
+  commit, with deletes among the batch keys.
 
-The copy-on-write merge never shuffles the table side
-(``merge_keep_last``). On a partitioned table the rewritten rows then pass
-through one write exchange: the table's default hash distribution
-rebalances them by the partition columns, so each rewritten partition
-lands as a few full files instead of one small file per merge task.
+Reads anti-join the keys of merge-on-read commits until ``compact()``
+folds the deletes into rewritten files.
 """
 
 from __future__ import annotations
@@ -36,6 +34,21 @@ from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse.mor import anti_join_keys
 from pyiceberg_lakehouse_spark.lakehouse.table import LakehouseTable
+
+
+def keep_last(
+    rows: DataFrame, key_cols: list[str], order_col: str | None, *tiebreak: F.Column
+) -> DataFrame:
+    """One row per key of ``rows``: the highest ``order_col``, then the
+    first under ``tiebreak`` (an arbitrary one among what still ties).
+    The NULL-key rows are one key."""
+    order = ([F.desc(order_col)] if order_col else []) + list(tiebreak)
+    w = Window.partitionBy(*key_cols).orderBy(*(order or [F.lit(1)]))
+    return (
+        rows.withColumn("_keep_rn", F.row_number().over(w))
+        .filter(F.col("_keep_rn") == 1)
+        .drop("_keep_rn")
+    )
 
 
 def merge_keep_last(
@@ -74,14 +87,7 @@ def merge_keep_last(
     per partition.
     """
     cols = current.columns
-    order = [F.desc(order_col)] if order_col else [F.lit(1)]
-    w = Window.partitionBy(*key_cols).orderBy(*order)
-    new_one = (
-        new.select(*cols)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    new_one = keep_last(new, key_cols, order_col).select(*cols)
     # the reduced batch feeds BOTH the anti-join keys and the union;
     # cut the lineage so its source is scanned once, not per branch
     # (checkpointing the small side only — never the table side)
@@ -107,49 +113,30 @@ def upsert_partitioned(
     key_cols: list[str],
     order_col: str | None = None,
 ):
-    """Partition-scoped upsert: rewrite only partitions touched by ``new``.
-
-    Requires the table to be partitioned. The distinct partition values of
-    the new batch are collected driver-side (low cardinality by construction
-    — identity partition columns, main-polars.py:113) and drive both the
-    pruned scan and the replace commit.
-    """
+    """Merge-on-read keyed upsert into a partitioned table: ``new``
+    reduces to one row per key (``keep_last``) and lands as ONE
+    ``delete`` snapshot, the rows plus an equality-delete file of their
+    keys. The delete hides each key's older rows wherever they live, so
+    a key may move partition. No table file is read, removed or
+    rewritten; reads anti-join the keys until ``compact()`` folds them
+    away. A concurrent commit outside the rows' partitions rebase-retries
+    (up to 3 times); one inside them raises. Refuses an unpartitioned
+    table and live files of an older partition spec."""
     pfs = table.partition_fields
     if not pfs:
         raise ValueError("table is not partitioned; use upsert()")
     _guard_single_spec(table, [pf.name for pf in pfs])
-    # derive partition values (identity or transform) of the new batch —
-    # hidden partitioning keeps this transparent to the caller
-    touched = _touched_partitions(table, new)
-    merged, touched = _merged_for_upsert(
-        table, new, key_cols, order_col, touched
-    )
-    return table.replace_partitions(merged, touched)
-
-
-def _merged_for_upsert(
-    table: LakehouseTable,
-    new: DataFrame,
-    key_cols: list[str],
-    order_col: str | None,
-    touched: list[dict[str, str]],
-):
-    """Build the replacement frame for a partition-scoped upsert.
-
-    ONE pruned scan with a composite partition IN-list — plan size (and
-    read-node count) is constant in the number of touched partitions; the
-    exactness guard in ``upsert_partitioned`` (all live files carry all
-    current partition keys) makes the conservative missing-key rule exact.
-    """
-    current = (
-        table.scan(partition_filter_any=touched)
-        if touched
-        else table.scan().limit(0)
-    )
-    return (
-        merge_keep_last(current, new, key_cols, order_col),
-        touched,
-    )
+    rows = keep_last(new, key_cols, order_col).cache()
+    try:
+        return table._commit_key_deletes(
+            rows.select(*key_cols).coalesce(1),
+            key_cols,
+            {"op": "upsert", "key_cols": key_cols},
+            rows=rows,
+            retries=3,
+        )
+    finally:
+        rows.unpersist()
 
 
 def apply_changes(
@@ -175,14 +162,8 @@ def apply_changes(
     the keys until ``compact()`` folds them away. Returns the committed
     snapshots: one, or none for a batch with no upserts or deletes.
     """
-    order = [F.desc(order_col)] if order_col else []
-    w = Window.partitionBy(*key_cols).orderBy(
-        *order, F.desc(F.col(op_col) == "delete")
-    )
     latest = (
-        changes.withColumn("_cdc_rn", F.row_number().over(w))
-        .filter(F.col("_cdc_rn") == 1)
-        .drop("_cdc_rn")
+        keep_last(changes, key_cols, order_col, F.desc(F.col(op_col) == "delete"))
         .filter(F.col(op_col).isin("upsert", "delete"))
         .cache()
     )
@@ -274,8 +255,7 @@ def merge_into_partitioned(
     difference between a partition swap and rewriting 100 TB).
 
     The touched-partition list comes from the source batch's (derived)
-    partition values, exactly like ``upsert_partitioned`` — and it shares
-    that function's contract: a key's partition value must be stable (the
+    partition values. Contract: a key's partition value must be stable (the
     MATCHED target row lives in the same partition as its source row), the
     usual property of identity/time-bucket partitioning where the
     partition column is immutable per key. Keys outside the touched

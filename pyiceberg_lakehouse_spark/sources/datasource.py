@@ -145,14 +145,14 @@ class LakehouseBatchReader(DataSourceReader):
         snap = options.get("snapshot_id")
         self.snapshot_id = int(snap) if snap is not None else None
         log = SnapshotLog(self.table_dir, options.get("branch")).load()
-        # apply_changes leaves live deletes too, even for an upsert-only
-        # batch (its keys' older rows), until compact() folds them away
+        # upsert_partitioned and apply_changes leave live deletes too (their
+        # keys' older rows), until compact() folds them away
         if log.live_deletes(self.snapshot_id):
             raise ValueError(
                 "table has merge-on-read deletes (delete_keys, "
-                "delete_where_positions or apply_changes); read it via "
-                "LakehouseTable.scan(), which applies them, or compact() "
-                "it first"
+                "delete_where_positions, upsert_partitioned or apply_changes); "
+                "read it via LakehouseTable.scan(), which applies them, or "
+                "compact() it first"
             )
         self.schema_json = log.schema_json
         from_snap = options.get("from_snapshot")

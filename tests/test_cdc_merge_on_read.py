@@ -4,6 +4,7 @@ deletes, and the Iceberg operation each kind of commit exports as."""
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -105,12 +106,23 @@ def test_key_moving_partition_keeps_one_row(spark, warehouse):
     assert t.scan().count() == 3
 
 
+def _plan_reads(t):
+    """(data reads, delete reads) the head scan plans; a delete file holds
+    the key column only."""
+    plan = t.scan()._jdf.queryExecution().executedPlan().toString()
+    deletes = len(re.findall(r"ReadSchema: struct<k:int>$", plan, re.M))
+    return plan.count("FileScan ") - deletes, deletes
+
+
 def test_scan_plan_does_not_grow_with_cdc_batches(spark, warehouse):
     """Every batch adds a data file and an equality delete newer than the
-    older files, yet the scan plans one data read and one delete read."""
-    t = _table(spark, warehouse, "cdc_plan", [(i, "a", f"v{i}") for i in range(20)])
+    older files, yet the scan plans one delete read, and the data reads of
+    a twin table that received the same rows by append: one on an
+    unpartitioned table, one per commit directory on a partitioned one
+    (``compact()`` folds those). Inputs: ``apply_changes`` batches on an
+    unpartitioned table and ``upsert_partitioned`` batches."""
 
-    def batch(b):
+    def cdc(t, b):
         apply_changes(
             t,
             spark.createDataFrame(
@@ -119,16 +131,30 @@ def test_scan_plan_does_not_grow_with_cdc_batches(spark, warehouse):
             ),
             key_cols=["k"],
         )
-        return t.scan()._jdf.queryExecution().executedPlan().toString().count("FileScan ")
 
-    assert batch(0) == 2
-    for b in range(1, 5):
-        batch(b)
-    assert batch(5) == 2
-    assert _rows(t.scan()) == sorted(
-        [(k, "a", f"u{k}") for k in range(6)]
-        + [(k, "a", f"v{k}") for k in (*range(6, 10), *range(16, 20))]
-    )
+    def upsert(t, b):
+        upsert_partitioned(
+            t, spark.createDataFrame([(b, "a", f"u{b}")], SCHEMA), ["k"]
+        )
+
+    base = [(i, "a", f"v{i}") for i in range(20)]
+    for name, write, partition_by, data_reads, gone in (
+        ("cdc_plan", cdc, None, (1, 1), range(10, 16)),
+        ("up_plan", upsert, ["p"], (2, 7), ()),
+    ):
+        t = _table(spark, warehouse, name, base, partition_by)
+        twin = _table(spark, warehouse, f"{name}_twin", base, partition_by)
+        reads = []
+        for b in range(6):
+            write(t, b)
+            twin.append(spark.createDataFrame([(b, "a", f"u{b}")], SCHEMA))
+            if b in (0, 5):
+                reads.append((_plan_reads(t), _plan_reads(twin)[0]))
+        assert reads == [((n, 1), n) for n in data_reads], name
+        assert _rows(t.scan()) == sorted(
+            [(k, "a", f"u{k}") for k in range(6)]
+            + [(k, "a", f"v{k}") for k in range(6, 20) if k not in gone]
+        )
 
 
 def test_null_key_upsert_replaces_the_null_key_row(spark, warehouse):

@@ -100,7 +100,7 @@ def test_upsert_on_transform_partitioned_table(spark, warehouse, sf_dir):
         "o_totalprice", F.col("o_totalprice") + 5.0
     )
     snap = upsert_partitioned(t, batch, key_cols=["o_orderkey"])
-    assert snap.operation == "replace"
+    assert snap.operation == "delete"
     assert t.scan().count() == orders.count()
     got = t.scan().filter(F.col("o_orderkey") % 7 == 0).agg(
         F.sum("o_totalprice").alias("s")

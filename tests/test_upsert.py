@@ -2,7 +2,7 @@
 
 For any key overlap: |result| = |keys(old) ∪ keys(new)|, new values win,
 and upserting the same batch twice changes nothing (idempotence). The
-partition-scoped variant must leave untouched partitions' files alone.
+partition-scoped variant is merge-on-read: it leaves every file alone.
 """
 
 import pytest
@@ -65,16 +65,21 @@ def test_partition_scoped_upsert_leaves_untouched_partitions(spark, warehouse, o
         orders.filter((F.col("o_orderstatus") == "O") & (F.col("o_orderkey") % 7 == 0))
         .withColumn("o_totalprice", F.col("o_totalprice") + F.lit(5.0))
     )
-    upsert_partitioned(t, batch, ["o_orderkey"])
+    deletes_before = len(t.log.live_deletes())
+    snap = upsert_partitioned(t, batch, ["o_orderkey"])
     files_after = {f["path"]: f["partition"] for f in t.log.live_files()}
-    untouched_before = {p for p, pv in files_before.items() if pv.get("o_orderstatus") != "O"}
-    untouched_after = {p for p, pv in files_after.items() if pv.get("o_orderstatus") != "O"}
-    # non-'O' partitions: exact same physical files (no rewrite)
-    assert untouched_before == untouched_after
-    # 'O' partition: replaced
-    o_before = {p for p, pv in files_before.items() if pv.get("o_orderstatus") == "O"}
-    o_after = {p for p, pv in files_after.items() if pv.get("o_orderstatus") == "O"}
-    assert o_before.isdisjoint(o_after)
+    # merge-on-read: every file live before is still live, in every
+    # partition ('O' included), and only the batch's rows were added
+    assert snap.removed_paths == []
+    assert files_before.items() <= files_after.items()
+    assert set(files_after) - set(files_before) == {
+        f["path"] for f in snap.added_files
+    }
+    assert {pv.get("o_orderstatus") for pv in files_before.values()} > {"O"}
+    # ...plus exactly one equality-delete file of the batch keys
+    assert len(snap.added_deletes) == 1
+    assert snap.added_deletes[0]["key_cols"] == ["o_orderkey"]
+    assert len(t.log.live_deletes()) == deletes_before + 1
     # and the merge is correct
     assert t.scan().count() == orders.count()
     changed = t.scan().filter(
@@ -146,11 +151,10 @@ def test_apply_changes_cdc(spark, warehouse, sf_dir):
 
 
 def test_partition_scoped_upsert_constant_plan_size(spark, warehouse, orders):
-    """The merge plan must contain ONE table read regardless of how many
-    partitions the batch touches (no per-partition scan+union loop)."""
+    """A copy-on-write merge over a partition-pruned scan must contain ONE
+    table read regardless of how many partitions the batch touches (no
+    per-partition scan+union loop)."""
     import re
-
-    from pyiceberg_lakehouse_spark.lakehouse.upsert import _merged_for_upsert
 
     lh = Lakehouse(spark, warehouse)
     t = lh.create_table("ns.o_plan", SCHEMAS["orders"], partition_by=["o_orderstatus"])
@@ -161,7 +165,9 @@ def test_partition_scoped_upsert_constant_plan_size(spark, warehouse, orders):
         for r in batch.select("o_orderstatus").distinct().collect()
     ]
     assert len(touched) >= 2
-    merged, _ = _merged_for_upsert(t, batch, ["o_orderkey"], None, touched)
+    merged = merge_keep_last(
+        t.scan(partition_filter_any=touched), batch, ["o_orderkey"]
+    )
     plan = merged._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )

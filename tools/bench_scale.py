@@ -18,9 +18,10 @@ data) and measures:
    verify on candidates only) + the signature-checkpoint trade, measured
    both ways at both scales (VERDICT r4 task #3).
 3. **clean-corpus pipeline linear** (single dedup-window shuffle).
-4. **Partitioned upsert cost tracks touched partitions, not table size**
-   at the reference's own 10M-row mock workload (mock_dataset_gen.py:9-14):
-   a batch confined to one of four partitions should cost ~1/4 of a batch
+4. **Partitioned upsert cost tracks the batch, not table size** at the
+   reference's own 10M-row mock workload (mock_dataset_gen.py:9-14): the
+   merge-on-read upsert writes only its batch, so a batch confined to one
+   of four partitions (a quarter of the rows) should cost ~1/4 of a batch
    spread over all four.
 
 Run:   python tools/bench_scale.py [section ...]   (writes BENCH_SCALE.json)
@@ -445,8 +446,9 @@ def bench_mock_upsert(spark, b: Bench, tmp: str) -> None:
         ),
         reps=REPS,
     )
-    # 10% batch confined to ONE of four partitions vs spread over all four:
-    # partition-scoped rewrite should make the confined upsert ~4x cheaper
+    # 10% of ONE of four partitions vs 10% spread over all four: the
+    # merge-on-read upsert writes only its batch, so the confined (4x
+    # smaller) batch should cost ~4x less
     one = mock.filter((F.col("group") == "A") & (F.col("id") % 10 == 0)).withColumn(
         "value2", F.col("value2") + 1
     )
