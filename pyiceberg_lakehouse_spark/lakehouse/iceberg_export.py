@@ -251,7 +251,10 @@ def export_iceberg_table(
     ``file:`` URIs and exports as a plain-path copy under
     ``<dest>/metadata/position-deletes/``; key deletes become content=2
     equality deletes with ``equality_ids`` resolved from the key
-    columns. Schema-evolution history (renames / type changes) is
+    columns. Every delete file lists under an unpartitioned spec, which
+    Iceberg applies to every partition: a key delete hides a key's
+    older row wherever it lives (an upsert may move a key), and one
+    position-delete file names files of many partitions. Schema-evolution history (renames / type changes) is
     gated: Iceberg tracks columns by field-id across evolution and this
     log's history predates the mapping, so exporting it would silently
     mis-bind old manifests —
@@ -443,4 +446,5 @@ def export_iceberg_table(
         schema_fields=fields,
         partition_specs=partition_specs,
         partition_fields=partition_fields or None,
+        global_deletes=True,
     )

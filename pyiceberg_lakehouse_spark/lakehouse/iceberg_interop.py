@@ -171,17 +171,19 @@ def _manifest_schema(
     partition_fields: list[tuple[str, str]],
     part_field_ids: list[int] | None = None,
     with_dv_fields: bool = False,
+    empty_partition: bool = False,
 ) -> dict:
     """The manifest-entry schema with the spec's r102 partition struct
     typed per the table's partition spec (identity transforms); the
     container embeds this writer schema, so readers stay
     self-describing. ``part_field_ids`` carries the partition spec's
     field-ids into the r102 struct (default 1000+i, matching the
-    default identity spec this module derives)."""
+    default identity spec this module derives). ``empty_partition``
+    writes the struct with no fields, an unpartitioned spec's."""
     import copy
 
     schema = copy.deepcopy(_MANIFEST_SCHEMA)
-    if partition_fields:
+    if partition_fields or empty_partition:
         ids = part_field_ids or [
             1000 + i for i in range(len(partition_fields))
         ]
@@ -217,6 +219,7 @@ def write_iceberg_metadata(
     partition_fields: list[tuple[str, str]] | None = None,
     extra_refs: dict[str, dict] | None = None,
     format_version: int = 2,
+    global_deletes: bool = False,
 ) -> str:
     """Fixture-grade Iceberg v2 metadata around existing parquet files.
 
@@ -241,6 +244,13 @@ def write_iceberg_metadata(
     ``truncate[2]``) with ``partition_fields`` naming the SPEC field
     names — per-file values arrive pre-transformed in
     f["partition"], the way a real writer stores them.
+
+    Delete files take the table spec and their own ``partition``, so the
+    spec applies each only to data files of that partition. With
+    ``global_deletes`` every delete file lists instead under an added
+    unpartitioned spec (no fields, an empty partition struct), which the
+    spec applies to every partition: the form a delete that may match
+    rows anywhere needs.
 
     Data files may carry ``lower_bounds``/``upper_bounds``:
     {field_id: single-value-serialized bytes}
@@ -292,6 +302,18 @@ def write_iceberg_metadata(
                 for i, (n, _t) in enumerate(partition_fields)
             ],
         }]
+    partition_specs = partition_specs or [{"spec-id": 0, "fields": []}]
+    delete_spec = partition_specs[0]
+    delete_schema = manifest_schema
+    if global_deletes and partition_fields:
+        delete_spec = {
+            "spec-id": 1 + max(int(sp["spec-id"]) for sp in partition_specs),
+            "fields": [],
+        }
+        partition_specs = [*partition_specs, delete_spec]
+        delete_schema = _manifest_schema(
+            [], with_dv_fields=has_dv, empty_partition=True
+        )
     meta_dir = os.path.join(table_dir, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
     snap_objs = []
@@ -318,7 +340,9 @@ def write_iceberg_metadata(
             df.update(referenced_data_file=None, content_offset=None,
                       content_size_in_bytes=None)
         df.update(fields)
-        if partition_fields:
+        if content and delete_spec is not partition_specs[0]:
+            df["partition"] = {}
+        elif partition_fields:
             part = f.get("partition", {})
             df["partition"] = {n: part.get(n) for n, _t in partition_fields}
         return df
@@ -392,22 +416,21 @@ def write_iceberg_metadata(
             _list(f, df, live_del, f["path"], del_entries)
         _carry(live_del, del_entries)
 
-        def _mlist_entry(ents: list[dict], content: int) -> dict:
+        def _mlist_entry(
+            ents: list[dict], content: int, spec: dict, schema: dict
+        ) -> dict:
             mpath = os.path.join(meta_dir, f"{uuid.uuid4().hex}-m0.avro")
             # the spec's required Avro container metadata: a foreign
             # engine reads the manifest's own copy of the table schema
             # and partition spec rather than re-parsing metadata.json
-            blob = encode_avro(ents, manifest_schema, extra_meta={
+            blob = encode_avro(ents, schema, extra_meta={
                 "schema": json.dumps({
                     "type": "struct", "schema-id": 0,
                     "fields": schema_fields,
                 }).encode(),
                 "schema-id": b"0",
-                "partition-spec": json.dumps(
-                    (partition_specs or [{"spec-id": 0, "fields": []}])
-                    [0]["fields"]
-                ).encode(),
-                "partition-spec-id": b"0",
+                "partition-spec": json.dumps(spec["fields"]).encode(),
+                "partition-spec-id": str(spec["spec-id"]).encode(),
                 "format-version": str(format_version).encode(),
                 "content": b"data" if content == 0 else b"deletes",
             })
@@ -419,7 +442,7 @@ def write_iceberg_metadata(
             return {
                 "manifest_path": os.path.abspath(mpath),
                 "manifest_length": len(blob),
-                "partition_spec_id": 0,
+                "partition_spec_id": int(spec["spec-id"]),
                 "content": content,
                 "sequence_number": seq,
                 "min_sequence_number": min(
@@ -441,9 +464,9 @@ def write_iceberg_metadata(
                 ),
             }
 
-        mlist = [_mlist_entry(entries, 0)]
+        mlist = [_mlist_entry(entries, 0, partition_specs[0], manifest_schema)]
         if del_entries:
-            mlist.append(_mlist_entry(del_entries, 1))
+            mlist.append(_mlist_entry(del_entries, 1, delete_spec, delete_schema))
         lpath = os.path.join(
             meta_dir, f"snap-{snap_id}-1-{uuid.uuid4().hex}.avro"
         )
@@ -494,8 +517,7 @@ def write_iceberg_metadata(
             {"type": "struct", "schema-id": 0, "fields": schema_fields}
         ],
         "default-spec-id": 0,
-        "partition-specs": partition_specs
-        or [{"spec-id": 0, "fields": []}],
+        "partition-specs": partition_specs,
         "last-partition-id": last_part_id,
         "default-sort-order-id": 0,
         "sort-orders": [{"order-id": 0, "fields": []}],
@@ -988,7 +1010,9 @@ def read_iceberg_table(
     - equality deletes (content=2; parquet rows of the equality
       columns, resolved from equality_ids via the table schema) remove
       matching rows from STRICTLY OLDER data files (delete seq > data
-      seq), null-safe per the spec's NaN/null-matching rule.
+      seq), null-safe per the spec's NaN/null-matching rule, and only
+      of data files in the delete's own partition (spec id and values)
+      unless the delete's spec is unpartitioned.
 
     Scale posture: the delete sides carry manifest record counts, so a
     small delete set (the overwhelmingly common case) is broadcast; the
@@ -1092,8 +1116,34 @@ def read_iceberg_table(
         )
     if not resolved["delete_files"]:
         return base.drop(mor.PATH, mor.POS).select(*schema_order)
+
+    # an equality delete under a partitioned spec removes rows of data
+    # files with its own spec id and partition values only; one under an
+    # unpartitioned spec, rows of every partition
+    def scope(f: dict) -> str:
+        return json.dumps(
+            [f.get("spec_id", 0), f.get("partition") or {}], sort_keys=True, default=str
+        )
+
+    id_to_name = {int(f["id"]): f["name"] for f in resolved["schema_fields"]}
+    by_cols: dict[tuple[tuple[str, ...], bool], list[dict]] = {}
+    for d in resolved["delete_files"]:
+        if d["content"] != 2:
+            continue
+        try:
+            cols = tuple(id_to_name[int(i)] for i in d["equality_ids"])
+        except KeyError as exc:
+            raise ValueError(
+                f"equality_ids {d['equality_ids']} not in the table"
+                " schema"
+            ) from exc
+        scoped = bool(resolved["partition_specs"].get(d.get("spec_id", 0)))
+        by_cols.setdefault((cols, scoped), []).append(d)
     data = mor.with_sequence(
-        base, {f["path"]: int(f["seq"]) for f in resolved["files"]}
+        base,
+        {f["path"]: int(f["seq"]) for f in resolved["files"]},
+        scopes={f["path"]: scope(f) for f in resolved["files"]}
+        if any(scoped for _c, scoped in by_cols) else None,
     )
 
     def small(df, group):
@@ -1176,26 +1226,14 @@ def read_iceberg_table(
         )
     positions = small(union(parts), pos_files + dv_files) if parts else None
 
-    id_to_name = {int(f["id"]): f["name"] for f in resolved["schema_fields"]}
-    by_cols: dict[tuple[str, ...], list[dict]] = {}
-    for d in resolved["delete_files"]:
-        if d["content"] != 2:
-            continue
-        try:
-            cols = tuple(id_to_name[int(i)] for i in d["equality_ids"])
-        except KeyError as exc:
-            raise ValueError(
-                f"equality_ids {d['equality_ids']} not in the table"
-                " schema"
-            ) from exc
-        by_cols.setdefault(cols, []).append(d)
     equality = [
-        (list(cols), small(mor.read_sequenced(
+        ([*cols, mor.SCOPE] if scoped else list(cols), small(mor.read_sequenced(
             spark.read,
             {d["path"]: int(d["seq"]) for d in group},
             [F.col(c) for c in cols],
+            {d["path"]: scope(d) for d in group} if scoped else None,
         ), group))
-        for cols, group in by_cols.items()
+        for (cols, scoped), group in by_cols.items()
     ]
     data = mor.apply_deletes(data, positions, equality)
     return data.select(*schema_order) if missing else data

@@ -764,7 +764,8 @@ class SnapshotLog:
 
     # ops safe to auto-retry after refreshing to the winner's state: they
     # only ADD files, so their outcome doesn't depend on the state they were
-    # planned against. overwrite/replace/delete computed file sets against a
+    # planned against (as do key-delete commits, see ``commit``).
+    # overwrite/replace/position deletes computed file sets against a
     # now-stale snapshot and must surface the conflict to the caller.
     COMMUTATIVE_OPS = ("append", "add_files", "schema_change")
 
@@ -791,14 +792,20 @@ class SnapshotLog:
         up to ``retry_conflicts`` times — the multi-writer append story;
         everything else raises.
 
+        A ``delete`` commit whose deletes are all equality (key) deletes
+        retries like an append: it adds data files and key deletes, and a
+        key delete applies by sequence number to whatever is live below
+        it, so no part of it was computed from the state it read. A
+        position delete names rows of live files and is not retried.
+
         ``touched_partitions`` narrows the conflict check for ``replace``
-        and ``delete`` commits (Iceberg-style overwrite validation): the
-        commit is scoped to ONLY those partitions, so a concurrent commit
+        commits (Iceberg-style overwrite validation): the replace was
+        planned from ONLY those partitions' state, so a concurrent commit
         that touched none of them — hourly-partition ingest, a disjoint
-        backfill, another partition-scoped upsert elsewhere — is no
+        backfill, another partition-scoped merge elsewhere — is no
         conflict at all; the commit refreshes to the winner's state and
         retries (up to ``retry_conflicts``). A winner that added to or
-        removed from a touched partition still raises: our commit was
+        removed from a touched partition still raises: our file swap was
         computed against state it just changed. This is what lets many
         writers land partition-scoped merges concurrently instead of
         serializing through failures.
@@ -869,11 +876,19 @@ class SnapshotLog:
                     )
                     return snap
             # conflict: another writer advanced the log since we loaded it
-            retryable = operation in self.COMMUTATIVE_OPS or (
-                operation in ("replace", "delete")
-                and touched_partitions is not None
-                and not _winners_touch(
-                    on_disk, self.current_snapshot_id() or 0, touched_partitions
+            retryable = (
+                operation in self.COMMUTATIVE_OPS
+                or (
+                    operation == "delete"
+                    and bool(added_deletes)
+                    and all(d.get("kind") != "position" for d in added_deletes)
+                )
+                or (
+                    operation == "replace"
+                    and touched_partitions is not None
+                    and not _winners_touch(
+                        on_disk, self.current_snapshot_id() or 0, touched_partitions
+                    )
                 )
             )
             if attempts >= retry_conflicts or not retryable:

@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 
 from pyiceberg_lakehouse_spark.lakehouse.bloom import sidecar_path
 
-PATH, POS, SEQ = "__mor_path", "__mor_pos", "__mor_seq"
+PATH, POS, SEQ, SCOPE = "__mor_path", "__mor_pos", "__mor_seq", "__mor_scope"
 
 # A delete set of at most this many rows broadcasts (hash anti-join, the
 # data side never shuffles); a larger one takes Spark's shuffle strategy —
@@ -88,19 +88,30 @@ def rewrite_position_paths(src: str, dst: str, repoint: Callable[[str], str]) ->
     return True
 
 
-def with_sequence(df: DataFrame, seqs: dict[str, int], path: str = PATH) -> DataFrame:
+def _quoted(s: str) -> str:
+    return f"cast(unbase64('{base64.b64encode(s.encode()).decode()}') as string)"
+
+
+def with_sequence(
+    df: DataFrame,
+    seqs: dict[str, int],
+    path: str = PATH,
+    scopes: dict[str, str] | None = None,
+) -> DataFrame:
     """``df`` plus ``SEQ``, the number ``seqs`` (keyed by paths as metadata
     records them) gives the file named by ``df``'s normalised ``path``
-    column, joined by broadcast. A path missing from ``seqs`` fails the
-    query: a NULL sequence number would silently bring deleted rows back.
-    The map is an inline table (paths base64-quoted), built in one call
-    whatever its size."""
+    column, joined by broadcast; with ``scopes`` (same keys) also
+    ``SCOPE``, the file's partition scope. A path missing from ``seqs``
+    fails the query: a NULL sequence number would silently bring deleted
+    rows back. The map is an inline table (strings base64-quoted), built
+    in one call whatever its size."""
     rows = ", ".join(
-        f"(cast(unbase64('{base64.b64encode(os.path.abspath(p).encode()).decode()}')"
-        f" as string), {int(s)}L)"
+        f"({_quoted(os.path.abspath(p))}, {int(s)}L"
+        + (f", {_quoted(scopes[p])})" if scopes else ")")
         for p, s in seqs.items()
     )
-    seq_df = df.sparkSession.sql(f"VALUES {rows} AS m({path}, {SEQ})")
+    names = f"{path}, {SEQ}" + (f", {SCOPE}" if scopes else "")
+    seq_df = df.sparkSession.sql(f"VALUES {rows} AS m({names})")
     return df.join(F.broadcast(seq_df), path, "left").withColumn(
         SEQ,
         F.expr(
@@ -110,13 +121,17 @@ def with_sequence(df: DataFrame, seqs: dict[str, int], path: str = PATH) -> Data
     )
 
 
-def read_sequenced(reader, seqs: dict[str, int], cols: list[Column]) -> DataFrame:
+def read_sequenced(
+    reader, seqs: dict[str, int], cols: list[Column], scopes: dict[str, str] | None = None
+) -> DataFrame:
     """``cols`` of every row of the delete files ``seqs`` names, read in
-    one parquet scan by ``reader``, plus each row's file's ``SEQ``."""
+    one parquet scan by ``reader``, plus each row's file's ``SEQ`` (and
+    ``SCOPE``, with ``scopes``)."""
     return with_sequence(
         reader.parquet(*seqs).select(*cols, norm_path().alias("__mor_file")),
         seqs,
         "__mor_file",
+        scopes,
     ).drop("__mor_file")
 
 
@@ -152,7 +167,9 @@ def apply_deletes(
     ``PATH`` (the referenced data file, normalised like ``data``'s),
     ``POS`` and ``SEQ``; each ``equality`` entry is a key-column list and
     a frame of those columns plus ``SEQ``. One anti-join per kind and
-    key-column set, by the rules in the module docstring."""
+    key-column set, by the rules in the module docstring. A key-column
+    list may include ``SCOPE``, which ``data`` then carries too: such a
+    delete removes only rows of files in its own partition."""
     if positions is not None:
         dpos = positions.select(*[F.col(c).alias(f"_d{c}") for c in (PATH, POS, SEQ)])
         data = data.join(
@@ -164,4 +181,4 @@ def apply_deletes(
         )
     for key_cols, keys in equality:
         data = anti_join_keys(data, keys, key_cols, seq=SEQ)
-    return data.drop(PATH, POS, SEQ)
+    return data.drop(PATH, POS, SEQ, SCOPE)

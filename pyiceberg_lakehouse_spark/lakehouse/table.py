@@ -698,8 +698,9 @@ class LakehouseTable:
         log refreshes to the winner's state and retries BY DEFAULT — the
         optimistic multi-writer story (data files are already on disk under
         a unique commit dir; only the metadata commit re-runs). Conflicting
-        overwrite/replace/delete commits still error (COMMUTATIVE_OPS in
-        lakehouse/log.py); set ``retries=0`` for strict single-writer mode.
+        overwrite/replace/position-delete commits still error
+        (``SnapshotLog.commit``); set ``retries=0`` for strict single-writer
+        mode.
         """
         self._validate_constraints(df)
         files = self._write_data(df)
@@ -978,7 +979,6 @@ class LakehouseTable:
         key_cols: list[str],
         summary: dict[str, Any],
         rows: DataFrame | None = None,
-        retries: int = 0,
     ) -> Snapshot:
         """One ``delete`` snapshot: ``keys`` (one row per key) as an
         equality-delete file, plus ``rows`` as data files when given.
@@ -986,9 +986,10 @@ class LakehouseTable:
         The added rows carry the snapshot's own id as ``added_in``, so the
         sequencing rule (a delete applies to files added strictly before
         it) exempts them from the commit's own delete: deleting a key and
-        adding its new row is one atomic merge-on-read upsert. With
-        ``retries``, a concurrent commit outside the added rows' partitions
-        rebase-retries (as in ``replace_partitions``); others raise."""
+        adding its new row is one atomic merge-on-read upsert. The commit
+        reads no table state, so after a concurrent commit it rebases onto
+        the winner like an append (``SnapshotLog.commit``): its keys then
+        hide the winner's rows for them too, as if it had landed second."""
         import uuid
 
         files: list[dict[str, Any]] = []
@@ -1005,8 +1006,7 @@ class LakehouseTable:
             files,
             added_deletes=[{"path": p, "key_cols": key_cols} for p in paths],
             summary=summary,
-            retry_conflicts=retries,
-            touched_partitions=_partitions_of(files) if retries else None,
+            retry_conflicts=3,
         )
 
     def delete_where_positions(self, condition) -> Snapshot:

@@ -119,21 +119,23 @@ def upsert_partitioned(
     keys. The delete hides each key's older rows wherever they live, so
     a key may move partition. No table file is read, removed or
     rewritten; reads anti-join the keys until ``compact()`` folds them
-    away. A concurrent commit outside the rows' partitions rebase-retries
-    (up to 3 times); one inside them raises. Refuses an unpartitioned
-    table and live files of an older partition spec."""
+    away. The commit reads no table state, so after a concurrent commit
+    it rebases onto the winner and its rows win (``SnapshotLog.commit``).
+    An empty batch commits nothing and returns None. Refuses an
+    unpartitioned table and live files of an older partition spec."""
     pfs = table.partition_fields
     if not pfs:
         raise ValueError("table is not partitioned; use upsert()")
     _guard_single_spec(table, [pf.name for pf in pfs])
     rows = keep_last(new, key_cols, order_col).cache()
     try:
+        if rows.isEmpty():
+            return None
         return table._commit_key_deletes(
             rows.select(*key_cols).coalesce(1),
             key_cols,
             {"op": "upsert", "key_cols": key_cols},
             rows=rows,
-            retries=3,
         )
     finally:
         rows.unpersist()

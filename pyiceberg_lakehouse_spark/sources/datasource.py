@@ -11,6 +11,10 @@ Spark's own planning instead of living behind helper functions:
   as ``LakehouseTable.scan(stat_filter=...)``, but driven by the query's own
   WHERE clause — no side-channel argument). Every filter is handed back to
   Spark for row-level evaluation: log-based skipping is file-granular.
+  Equality (key) deletes apply in each task, to its own file, by the
+  scan's sequence rule (a delete removes rows of files committed before
+  it; key equality is NULL-safe); a table with live position deletes is
+  refused until ``compact()``.
 - **streaming**: ``spark.readStream.format("lakehouse").load(table_dir)`` —
   offsets ARE snapshot ids. Each micro-batch reads the files committed in
   ``(start, end]`` append/add_files snapshots, so partitioned tables stream
@@ -35,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any, Callable, Iterator, Sequence
 
 from pyspark.sql import types as T
@@ -70,11 +75,15 @@ class FileSlice(InputPartition):
     them as constants from log metadata — flat and hive layouts unify).
     ``column_map`` is the log's resolver map for the file's ``added_in``:
     current name -> the name the file holds it under, or None for a column
-    that reads NULL there (``SnapshotLog.column_resolver``)."""
+    that reads NULL there (``SnapshotLog.column_resolver``). ``deletes``
+    are the equality-delete files committed after the file, which apply to
+    it: ``{"path", "seq", "keys": {current name: the name the delete file
+    holds it under}}``."""
 
     path: str
     partition: dict = field(default_factory=dict)
     column_map: dict = field(default_factory=dict)
+    deletes: list = field(default_factory=list)
 
 
 def _opt_true(options: dict, key: str) -> bool:
@@ -92,10 +101,76 @@ def _change_feed_schema(schema: T.StructType) -> T.StructType:
     )
 
 
+def _key_matcher(dcols: list) -> Callable[[list], Any]:
+    """NULL-safe key-tuple membership, as the lakehouse scan applies
+    equality deletes: a function of a batch's key arrays (one per key
+    column) marking the rows whose tuple is among the rows of ``dcols``.
+    A column value maps to its index among that delete column's distinct
+    values (NULL to NULL's); each further column's (code, index) pair maps
+    to its index among the delete rows' pairs, so codes stay below the
+    delete row count and a value absent on the delete side leaves NULL."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def pair(code, idx, n):
+        return pc.add(pc.multiply(code.cast(pa.int64()), n), idx.cast(pa.int64()))
+
+    steps, code = [], None
+    for dc in dcols:
+        uniq = pc.unique(dc)
+        idx = pc.index_in(dc, value_set=uniq, skip_nulls=False)
+        if code is None:
+            code, pairs = idx, None
+        else:
+            both = pair(code, idx, len(uniq))
+            pairs = pc.unique(both)
+            code = pc.index_in(both, value_set=pairs)
+        steps.append((uniq, pairs))
+
+    def match(bcols: list):
+        code = None
+        for bc, (uniq, pairs) in zip(bcols, steps):
+            idx = pc.index_in(bc, value_set=uniq, skip_nulls=False)
+            code = idx if pairs is None else pc.index_in(pair(code, idx, len(uniq)), value_set=pairs)
+        return pc.is_valid(code)
+
+    return match
+
+
+def _delete_matcher(slice_: FileSlice, target) -> Callable[[Any], Any]:
+    """A function of a conformed batch of ``slice_``'s file marking the
+    rows ``slice_.deletes`` remove. Delete files are metadata-sized: each
+    task reads the ones that apply to its file whole, with pyarrow."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keys: dict[tuple, list] = {}
+    for d in slice_.deletes:
+        tbl = pq.read_table(d["path"], columns=list(d["keys"].values()))
+        keys.setdefault(tuple(d["keys"]), []).append(
+            pa.table({c: tbl.column(h).cast(target.field(c).type) for c, h in d["keys"].items()})
+        )
+    matchers = [
+        (cols, _key_matcher([pa.concat_tables(group).column(c).combine_chunks() for c in cols]))
+        for cols, group in keys.items()
+    ]
+
+    def hit(batch):
+        return reduce(pc.or_, [
+            match([batch.column(batch.schema.get_field_index(c)) for c in cols])
+            for cols, match in matchers
+        ])
+
+    return hit
+
+
 def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
     """Yield Arrow record batches for one file, conformed to the table
-    schema (column order, types, attached partition constants)."""
+    schema (column order, types, attached partition constants), less the
+    rows its merge-on-read deletes remove."""
     import pyarrow as pa
+    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -112,6 +187,7 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
         for f in target
         if cmap.get(f.name, f.name) in file_cols
     ]
+    hit = _delete_matcher(slice_, target) if slice_.deletes else None
     for batch in pf.iter_batches(batch_size=1 << 16, columns=read_cols):
         tbl = pa.Table.from_batches([batch])
         n = len(tbl)
@@ -126,14 +202,21 @@ def _read_slice(slice_: FileSlice, schema_json: str) -> Iterator[Any]:
                 arrays.append(pa.array([v] * n, pa.string()).cast(f.type))
             else:
                 arrays.append(pa.nulls(n, f.type))
-        yield pa.RecordBatch.from_arrays(arrays, schema=target)
+        out = pa.RecordBatch.from_arrays(arrays, schema=target)
+        yield out if hit is None else out.filter(pc.invert(hit(out)))
 
 
-def _to_slice(f: dict[str, Any], resolve: Callable[[int], dict]) -> FileSlice:
+def _to_slice(
+    f: dict[str, Any], resolve: Callable[[int], dict], deletes: Sequence[dict] = ()
+) -> FileSlice:
+    """``f``'s slice, carrying those of ``deletes`` committed after it
+    (``seq``: the delete's ``snapshot_id``)."""
+    added = f.get("added_in", 0)
     return FileSlice(
         path=f["path"],
         partition=dict(f.get("partition") or {}),
-        column_map=resolve(f.get("added_in", 0)),
+        column_map=resolve(added),
+        deletes=[d for d in deletes if added < d["seq"]],
     )
 
 
@@ -145,17 +228,28 @@ class LakehouseBatchReader(DataSourceReader):
         snap = options.get("snapshot_id")
         self.snapshot_id = int(snap) if snap is not None else None
         log = SnapshotLog(self.table_dir, options.get("branch")).load()
-        # upsert_partitioned and apply_changes leave live deletes too (their
-        # keys' older rows), until compact() folds them away
-        if log.live_deletes(self.snapshot_id):
-            raise ValueError(
-                "table has merge-on-read deletes (delete_keys, "
-                "delete_where_positions, upsert_partitioned or apply_changes); "
-                "read it via LakehouseTable.scan(), which applies them, or "
-                "compact() it first"
-            )
         self.schema_json = log.schema_json
         from_snap = options.get("from_snapshot")
+        deletes = log.live_deletes(self.snapshot_id)
+        if any(d.get("kind") == "position" for d in deletes):
+            raise ValueError(
+                "table has merge-on-read position deletes "
+                "(delete_where_positions); read it via LakehouseTable.scan(), "
+                "which applies them, or compact() it first"
+            )
+        # equality deletes apply executor-side, by the scan's sequence rule;
+        # an incremental read covers append-only history, so none of them
+        # applies to its files
+        self.deletes = [] if from_snap is not None else [
+            {
+                "path": d["path"],
+                "seq": d["snapshot_id"],
+                # a delete file holds its keys under their names AS OF its
+                # commit; a later rename_column maps them forward
+                "keys": dict(zip(log.forward_names(d["key_cols"], d["snapshot_id"]), d["key_cols"])),
+            }
+            for d in deletes
+        ]
         if from_snap is not None:
             # batch incremental read: only files APPENDED in
             # (from_snapshot, to_snapshot] — Iceberg's incremental scan
@@ -202,7 +296,9 @@ class LakehouseBatchReader(DataSourceReader):
     def partitions(self) -> Sequence[InputPartition]:
         files = prune_files(self.files, self.stat_preds)
         # Spark requires >=1 partition; an empty path reads as no rows
-        return [_to_slice(f, self.resolve) for f in files] or [FileSlice(path="")]
+        return [_to_slice(f, self.resolve, self.deletes) for f in files] or [
+            FileSlice(path="")
+        ]
 
     def read(self, partition: FileSlice) -> Iterator[Any]:
         return _read_slice(partition, self.schema_json)

@@ -139,6 +139,7 @@ def test_manifest_structure_spec_exact(spark, exported):
     assert mlist["meta"]["format-version"] == b"2"
     contents = {e["content"] for e in mlist["records"]}
     assert contents == {0, 1}, "data + delete manifests expected"
+    assert meta["partition-specs"][1] == {"spec-id": 1, "fields": []}
     for entry in mlist["records"]:
         man = decode_avro(open(entry["manifest_path"], "rb").read())
         m = man["meta"]
@@ -146,15 +147,23 @@ def test_manifest_structure_spec_exact(spark, exported):
         assert m["content"] == (
             b"data" if entry["content"] == 0 else b"deletes"
         )
-        assert m["partition-spec-id"] == b"0"
+        # delete files list under the unpartitioned spec 1, which
+        # Iceberg applies to every partition
+        spec_id = 0 if entry["content"] == 0 else 1
+        assert entry["partition_spec_id"] == spec_id
+        assert m["partition-spec-id"] == str(spec_id).encode()
         emb_schema = json.loads(m["schema"])
         assert emb_schema["type"] == "struct"
         assert [f["name"] for f in emb_schema["fields"]] == [
             f.name for f in t.schema().fields
         ]
         spec_fields = json.loads(m["partition-spec"])
-        assert [f["name"] for f in spec_fields] == ["o_orderstatus"]
-        assert spec_fields[0]["transform"] == "identity"
+        if spec_id == 0:
+            assert [f["name"] for f in spec_fields] == ["o_orderstatus"]
+            assert spec_fields[0]["transform"] == "identity"
+        else:
+            assert spec_fields == []
+            assert all(e["data_file"]["partition"] == {} for e in man["records"])
         # manifest-entry schema field-ids (status=0, data_file=2)
         ids = {
             f["name"]: f.get("field-id")

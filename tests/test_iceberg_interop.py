@@ -321,3 +321,41 @@ def test_mor_delete_application_broadcasts(spark, mor_table):
 
     anti = re.findall(r"BroadcastHashJoin.+LeftAnti", plan)
     assert len(anti) >= 2, plan[:800]  # position + equality joins
+
+
+def test_equality_delete_applies_within_its_partition_spec(spark, tmp_path):
+    """An equality delete under a partitioned spec removes matching rows
+    of data files in its own partition only; under an unpartitioned spec
+    (``global_deletes``), of every partition."""
+    files = {}
+    for b in (0, 1):
+        d = str(tmp_path / f"d{b}")
+        spark.range(0, 10).withColumn("v", F.col("id") + 100 * b) \
+            .coalesce(1).write.parquet(d)
+        files[b] = _one_parquet(d)
+    ed = str(tmp_path / "eq")
+    spark.createDataFrame([(1,), (2,)], "id long").coalesce(1).write.parquet(ed)
+
+    def read(name, global_deletes):
+        mp = I.write_iceberg_metadata(
+            str(tmp_path / name),
+            snapshots=[
+                {"files": [
+                    {"path": files[b], "records": 10, "partition": {"bucket": b}}
+                    for b in (0, 1)
+                ]},
+                {"eq_deletes": [
+                    {"path": _one_parquet(ed), "records": 2,
+                     "equality_ids": [1], "partition": {"bucket": 0}},
+                ]},
+            ],
+            schema_fields=SCHEMA_FIELDS
+            + [{"id": 3, "name": "bucket", "required": False, "type": "long"}],
+            partition_fields=[("bucket", "long")],
+            global_deletes=global_deletes,
+        )
+        return sorted(r.v for r in I.read_iceberg_table(spark, mp).collect())
+
+    every = [*range(10), *range(100, 110)]
+    assert read("scoped", False) == [v for v in every if v not in (1, 2)]
+    assert read("global", True) == [v for v in every if v % 100 not in (1, 2)]
